@@ -11,11 +11,15 @@ Prints exactly ONE JSON line:
     {"queries": {name: sec, ...}, "metric": "...", "value": <total sec>,
      "unit": "sec", "sf": <sf>, "summary_file": "BENCH_SUMMARY.json"}
 
-The full summary (medians, isolated canaries, curation-cold, pagerank,
-corpus throughput, dedup/graph scaling probes) is written to
-``BENCH_SUMMARY.json`` next to this file and committed each round — the
-driver's stdout tail capture truncates from the front, and the r5 summary
-outgrew it (VERDICT r5 #3), so stdout now carries only the contract line.
+The full summary (medians, curation-cold, pagerank, corpus throughput,
+dedup/graph scaling probes and a ``config`` stamp of the run) is written to
+``BENCH_SUMMARY.json`` next to this file — the driver's stdout tail capture
+truncates from the front, and the r5 summary outgrew it (VERDICT r5 #3), so
+stdout carries only the contract line.
+
+This harness records one run; it does not judge host noise. A/B comparisons
+of code changes go through ``perfbench/run.py`` and ``perfbench/compare.py``,
+whose records carry config stamps and refuse mismatched comparisons.
 """
 
 from __future__ import annotations
@@ -218,19 +222,13 @@ def _dedup_scaling_probe(spark) -> dict:
         return time.perf_counter() - t0
 
     run_once(1)  # untimed shape warm-up (codegen compile)
-    # probe-gated min-of-3 per multiplier (judge-r11 #3): single-shot
-    # timings at this duration were GC/scheduling-noisy enough to come
-    # out non-monotonic, contradicting the linearity claim the probe
-    # exists to make; a point timed on a non-quiet machine is withheld
+    # min-of-3 per multiplier (judge-r11 #3): single-shot timings at this
+    # duration were GC/scheduling-noisy enough to come out non-monotonic
     out: dict = {}
-    time.sleep(2)  # let preceding suite work drain before calibrating
-    _calibrate_ladder_bar(out)
     for m in (1, 4, 16, 64):
-        _ladder_point(out, f"x{m}", lambda m=m: run_once(m))
-    if "x16" in out and "x1" in out:
-        out["x16_over_x1"] = round(out["x16"] / out["x1"], 2)
-    if "x64" in out and "x16" in out:
-        out["x64_over_x16"] = round(out["x64"] / out["x16"], 2)
+        out[f"x{m}"] = _min_of(lambda m=m: run_once(m))
+    out["x16_over_x1"] = round(out["x16"] / out["x1"], 2)
+    out["x64_over_x16"] = round(out["x64"] / out["x16"], 2)
 
     # full pairs+survivors at x16: the corpus size where tokenize dominates,
     # so the single-scan signature rewrite's saved re-scan is visible in
@@ -259,14 +257,9 @@ def _dedup_scaling_probe(spark) -> dict:
         return time.perf_counter() - t0
 
     run_survivors()  # codegen warm-up
-    # the survivors point carries its own bracket probe (recorded, not
-    # withheld: the Observation's routing metrics must land in the record
-    # regardless of machine state — they count rows, not seconds)
-    p0 = _cpu_probe()
     obs = Observation("bench_lsh_route_x16")
     first = run_survivors(obs)
     out["survivors_x16"] = round(min(first, run_survivors()), 3)
-    out["survivors_x16_probe"] = max(p0, _cpu_probe())
     metrics = obs.get
     out["x16_max_bucket"] = metrics["max_bucket"]
     out["x16_routed_members"] = metrics["routed_members"]
@@ -374,11 +367,8 @@ def _graph_scaling_probe(spark) -> dict:
                 # accumulate into the next one's memory (judge-r15 ADVICE
                 # #2 — the copurchase/pagerank ladders already did this)
                 _release_checkpoints()
-                _ladder_point(out, f"census_x{m}", lambda m=m: census_once(m))
-        if "census_x16" in out and "census_x1" in out:
-            out["census_x16_over_x1"] = round(
-                out["census_x16"] / out["census_x1"], 2
-            )
+                out[f"census_x{m}"] = _min_of(lambda m=m: census_once(m))
+        out["census_x16_over_x1"] = round(out["census_x16"] / out["census_x1"], 2)
         # the near-dup graph is tiny at sf0.1 (a few hundred edges), so the
         # curve above measures the overhead FLOOR (expect ~flat). For a real
         # exponent, run the same census plan over a dense substrate: the
@@ -438,14 +428,10 @@ def _graph_scaling_probe(spark) -> dict:
 
         with _no_broadcast():
             cop_census_once(1)  # warm-up
-            # probe-gated min-of-3 (judge-r11 #3): this x16 point has been
-            # noise-dominated in r8 AND r11 — the wedge counts prove the
-            # work is linear, and the time axis is now equally trustworthy
-            # because a drift-contaminated point is withheld, not recorded
             for m in (1, 4, 16):
                 _release_checkpoints()
-                _ladder_point(
-                    out, f"copurchase_census_x{m}", lambda m=m: cop_census_once(m)
+                out[f"copurchase_census_x{m}"] = _min_of(
+                    lambda m=m: cop_census_once(m)
                 )
                 rep = rep_edges(cop, ["lo", "hi"], m)
                 out[f"copurchase_max_oriented_degree_x{m}"] = max_deg(rep)
@@ -453,14 +439,12 @@ def _graph_scaling_probe(spark) -> dict:
                 # m * wedges_x1 — recorded anyway so the "growth is data"
                 # claim is checkable from the summary alone
                 out[f"copurchase_wedges_x{m}"] = oriented_wedges(rep)
-        if "copurchase_census_x4" in out and "copurchase_census_x1" in out:
-            out["copurchase_census_x4_over_x1"] = round(
-                out["copurchase_census_x4"] / out["copurchase_census_x1"], 2
-            )
-        if "copurchase_census_x16" in out and "copurchase_census_x4" in out:
-            out["copurchase_census_x16_over_x4"] = round(
-                out["copurchase_census_x16"] / out["copurchase_census_x4"], 2
-            )
+        out["copurchase_census_x4_over_x1"] = round(
+            out["copurchase_census_x4"] / out["copurchase_census_x1"], 2
+        )
+        out["copurchase_census_x16_over_x4"] = round(
+            out["copurchase_census_x16"] / out["copurchase_census_x4"], 2
+        )
 
         # --- PageRank over the purchase graph (3 iterations: the exponent is
         # per-iteration cost; fewer rounds keep the probe inside the bench
@@ -488,17 +472,15 @@ def _graph_scaling_probe(spark) -> dict:
             "spark.sql.autoBroadcastJoinThreshold"
         )
         pr_once(1)  # codegen warm-up
-        # probe-gated min-of-3 up to x16; the x64 point runs min-of-2 (each
-        # rep is already 3 internally-sequenced shuffle rounds over 64x
-        # edges — 3 reps would put the whole subprocess near its timeout).
-        # The top point degrades to an error note rather than killing the
-        # whole probe if the ladder outgrows the JVM.
+        # min-of-3 up to x16; the x64 point runs min-of-2 (each rep is
+        # already 3 internally-sequenced shuffle rounds over 64x edges — 3
+        # reps would put the whole subprocess near its timeout). The top
+        # point degrades to an error note rather than killing the whole
+        # probe if the ladder outgrows the JVM.
         for m, reps_n in ((1, 3), (4, 3), (16, 3), (64, 2)):
             _release_checkpoints()
             try:
-                _ladder_point(
-                    out, f"pagerank3_x{m}", lambda m=m: pr_once(m), reps=reps_n
-                )
+                out[f"pagerank3_x{m}"] = _min_of(lambda m=m: pr_once(m), reps_n)
             except Exception as ex:  # noqa: BLE001 - record the point
                 out[f"pagerank3_x{m}_error"] = str(ex)[:200]
                 break
@@ -519,117 +501,10 @@ def _graph_scaling_probe(spark) -> dict:
                 base.unpersist()
 
 
-_LADDER_BAR_FLOOR = 0.05
-# calibrated per process by _calibrate_ladder_bar(); the floor stands in
-# until calibration runs
-_LADDER_BAR = {"value": _LADDER_BAR_FLOOR}
-
-
-def _calibrate_ladder_bar(out: dict | None = None) -> float:
-    """Set the ladder quiet bar from THIS host's measured idle probe.
-
-    The r12 inaugural runs showed a fixed 0.05 bar is ~coin-flip on a
-    host whose IDLE probe floats at 0.046-0.053 (measured three times on
-    an unloaded machine): every ladder point then randomly self-withheld
-    regardless of actual drift. The bar becomes
-    max(0.05, 1.3 x median-of-3 idle probes), measured before any ladder
-    work and RECORDED (ladder_quiet_bar / ladder_idle_probe) so the
-    judge can audit the gate itself — a genuinely drifting machine still
-    fails it (r11's driver-run probes read 0.17-0.65).
-
-    r13 (judge-r12 ADVICE #1): the bar is CAPPED at 2x the floor. An
-    uncapped 1.3x-idle bar inflates when the host is under sustained
-    load during the three calibration probes, silently letting noisy
-    ladder points pass as "quiet" — the exact failure the gate exists
-    to stop. When the measured idle would push past the cap, the cap
-    stands and ``ladder_calibration_invalid`` records the evidence:
-    points gated under a load-contaminated calibration are then
-    WITHHELD (conservative), never waved through."""
-    import statistics
-
-    idle = statistics.median(_cpu_probe() for _ in range(3))
-    raw_bar = max(_LADDER_BAR_FLOOR, round(1.3 * idle, 4))
-    cap = 2 * _LADDER_BAR_FLOOR
-    _LADDER_BAR["value"] = min(raw_bar, cap)
-    if out is not None:
-        out["ladder_idle_probe"] = idle
-        out["ladder_quiet_bar"] = _LADDER_BAR["value"]
-        if raw_bar > cap:
-            out["ladder_calibration_invalid"] = (
-                f"idle probe {idle} implies bar {raw_bar} > cap {cap}; "
-                "host loaded during calibration — cap stands, expect "
-                "withheld points until the host quiets"
-            )
-    return _LADDER_BAR["value"]
-
-
-def _ladder_point(out: dict, key: str, run_once, reps: int = 3, retries: int = 1) -> bool:
-    """One probe-gated ladder point (judge-r11 next-round #3): min-of-N
-    reps bracketed by cpu probes; the point enters the record ONLY when
-    the machine was quiet for the whole bracket (max probe <= the
-    idle-calibrated quiet bar, floor 0.05 — see _calibrate_ladder_bar).
-    A noisy point gets one settle-and-retry, then is recorded as
-    ``<key>_invalid`` with its probe instead of polluting the ladder —
-    the r8 and r11 copurchase x16 points were single-shot timings on a
-    drifting machine that manufactured 16.63x and 0.52x "ratios" the
-    wedge counts prove are really ~4x. Each attempt starts with a short
-    settle so the bracket's leading probe doesn't time the JVM's OWN
-    post-point housekeeping (System.gc from _release_checkpoints and
-    ContextCleaner churn were being counted as machine noise — measured
-    probe 1.01 on an otherwise idle host). Per-point ``_probe``/
-    ``_reps``/``_bar`` siblings make every recorded point auditable from
-    the summary alone. Returns True when the point was recorded.
-
-    r13 (judge-r12 ADVICE #2): probes are INTERLEAVED between reps, not
-    just bracketed around all of them — a burst that starts and ends
-    inside one long rep (x64 pagerank reps run minutes) was invisible
-    to two point-in-time endpoint probes. The gate is the max over
-    reps+1 probes, so the bracket granularity matches rep duration."""
-    bar = _LADDER_BAR["value"]
-    probe = None
-    for attempt in range(retries + 1):
-        time.sleep(1.5)  # let JVM housekeeping from the previous point drain
-        probes = [_cpu_probe()]
-        times = []
-        for _ in range(reps):
-            times.append(run_once())
-            probes.append(_cpu_probe())
-        probe = max(probes)
-        out[f"{key}_probe"] = probe
-        out[f"{key}_reps"] = reps
-        out[f"{key}_bar"] = bar
-        if probe <= bar:
-            out[key] = round(min(times), 3)
-            out.pop(f"{key}_invalid", None)
-            return True
-        if attempt < retries:
-            time.sleep(5)
-    out[f"{key}_invalid"] = (
-        f"cpu probe {probe} > {bar} quiet bar after "
-        f"{retries + 1} attempts; point withheld"
-    )
-    return False
-
-
-def _cpu_probe() -> float:
-    """Fixed-work CPU spin (single 512x512 matmul chain, min-of-5): times
-    the MACHINE, not the engine. Recorded at the start and end of each
-    bench process so round-over-round deltas can be drift-ADJUSTED instead
-    of drift-suspected (judge-r8 next-round #5: two rounds of ±20% canary
-    drift made per-query deltas unreadable; this probe makes the drift a
-    measured number in the same summary)."""
-    import numpy as np
-
-    rng = np.random.default_rng(0)
-    a = rng.random((512, 512))
-    best = float("inf")
-    for _ in range(5):
-        t0 = time.perf_counter()
-        m = a
-        for _ in range(20):
-            m = (m @ a) * 1e-3
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
+def _min_of(run_once, reps: int = 3) -> float:
+    """One ladder point: the min over ``reps`` timed runs (steady-state
+    cost; single-shot timings at these durations are GC-noisy)."""
+    return round(min(run_once() for _ in range(reps)), 3)
 
 
 def _graph_scaling_main() -> None:
@@ -647,14 +522,7 @@ def _graph_scaling_main() -> None:
         app_name="bench_graph", extra_conf={"spark.driver.memory": "48g"}
     )
     try:
-        bar_info: dict = {}
-        _calibrate_ladder_bar(bar_info)  # fresh JVM, nothing running yet
-        probe_start = _cpu_probe()
-        out = _graph_scaling_probe(spark)
-        out.update(bar_info)
-        out["cpu_probe_sec_start"] = probe_start
-        out["cpu_probe_sec_end"] = _cpu_probe()
-        print("GRAPH_JSON:" + json.dumps(out))
+        print("GRAPH_JSON:" + json.dumps(_graph_scaling_probe(spark)))
     finally:
         spark.stop()
 
@@ -668,7 +536,7 @@ def _run_graph_scaling() -> dict:
             [sys.executable, os.path.abspath(__file__), "--graph-scaling"],
             capture_output=True,
             text=True,
-            timeout=2700,  # min-of-3 + per-point probes grew the ladders (r12)
+            timeout=2700,  # min-of-3 ladders, min-of-2 at pagerank x64
             env=os.environ.copy(),
         )
         for ln in proc.stdout.splitlines():
@@ -679,33 +547,18 @@ def _run_graph_scaling() -> dict:
         return {"error": str(ex)[:300]}
 
 
-# the 5 STANDING canaries (registry._PRIORITY_WINDOW head): the machine
-# factor is the MEDIAN of their per-canary isolated-min ratios, and a
-# median needs >2 points to discard an outlier — with only wordcount+q1
-# (through r10) the bar failed by construction whenever the two disagreed
-# by >10% (judge-r10 next-round #3 / "what's wrong" #3)
-CANARY_NAMES = (
-    "wordcount",
-    "q1_pricing_summary",
-    "dedup_minhash_pairs",
-    "window_running_spend",
-    "events_sessionize",
-)
-
-
 def _warmup_dir() -> str | None:
     """Smallest strictly-smaller-SF sibling of SF_DIR for JVM/codegen
     warm-up runs.
 
     Derived from the SF_DIR env convention instead of a hard-coded path
-    (judge-r6 ADVICE: a host without /root/testdata/sf0.001 silently
-    skipped the isolated-canary warm-up, folding scan/codegen cold-start
-    into exactly the timings the subprocess exists to stabilize). The SF
-    is parsed NUMERICALLY and only a sibling with a strictly smaller SF
-    qualifies (judge-r7 ADVICE: lexicographic order mis-sorts sf10 before
+    (judge-r6 ADVICE: a host without a hard-coded warm-up dataset silently
+    skipped the warm-up, folding scan/codegen cold-start into the timings).
+    The SF is parsed NUMERICALLY and only a sibling with a strictly smaller
+    SF qualifies (judge-r7 ADVICE: lexicographic order mis-sorts sf10 before
     sf2, and when SF_DIR is itself the smallest the old code warmed up on
     a LARGER dataset). Returns None when no strictly smaller sibling
-    exists — callers must record that the warm-up was skipped.
+    exists; main() then warms the JVM on a synthetic range instead.
     """
 
     def sf_of(d: str) -> float | None:
@@ -730,67 +583,34 @@ def _warmup_dir() -> str | None:
     return min(smaller)[1] if smaller else None
 
 
-def _isolated_canary_main() -> None:
-    """Fresh-JVM canary timings (VERDICT r5 #6): the in-suite canary
-    medians run 20-40% above their isolated numbers from 33-query
-    shared-JVM GC/codegen-cache pressure, which blurs round-over-round
-    attribution at the ±10% level. This subprocess times the standing
-    canaries in a JVM that has run nothing else."""
-    specs = all_specs()
-    spark = get_spark(app_name="bench_canary")
-    try:
-        warm_dir = _warmup_dir()
-        out: dict = {}
-        if warm_dir is None:
-            # cold-start is now part of the timings below — say so, or the
-            # round-over-round comparison quietly degrades (judge-r6 ADVICE)
-            out["note"] = "warmup_skipped: no smaller sf sibling of SF_DIR"
-        for name in CANARY_NAMES:
-            if warm_dir is not None:
-                specs[name].fn(spark, warm_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            runs = []
-            for _ in range(3):
-                df = specs[name].fn(spark, SF_DIR)
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            out[name] = {
-                "min": round(min(runs), 3),
-                "median": round(sorted(runs)[1], 3),
-            }
-        print("CANARY_JSON:" + json.dumps(out))
-    finally:
-        spark.stop()
-
-
-def _run_isolated_canaries() -> dict:
-    """Run the canary section in its own process (own JVM) and parse the
-    result; a failure degrades to an error note, never kills the bench."""
+def _config_stamp(spark, sf) -> dict:
+    """The config a run was measured under, recorded with its numbers so
+    that records taken on different core counts, partitionings, Spark
+    versions, scales or revisions are not mistaken for one another."""
     import subprocess
 
+    root = os.path.dirname(os.path.abspath(__file__))
     try:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--isolated-canary"],
+        rev = subprocess.run(
+            ["git", "-C", root, "rev-parse", "HEAD"],
             capture_output=True,
             text=True,
-            timeout=600,
-            env=os.environ.copy(),
-        )
-        for ln in proc.stdout.splitlines():
-            if ln.startswith("CANARY_JSON:"):
-                return json.loads(ln[len("CANARY_JSON:"):])
-        return {"error": (proc.stderr or proc.stdout)[-300:]}
-    except Exception as ex:  # noqa: BLE001 - bench must survive canary loss
-        return {"error": str(ex)[:300]}
+            timeout=10,
+        ).stdout.strip() or None
+    except (OSError, subprocess.SubprocessError):
+        rev = None
+    return {
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
+        "spark.sql.shuffle.partitions": int(
+            spark.conf.get("spark.sql.shuffle.partitions")
+        ),
+        "spark_version": spark.version,
+        "sf": sf,
+        "git_rev": rev,
+    }
 
 
 def main() -> None:
-    cpu_probe_start = _cpu_probe()
-    # fresh-JVM canaries FIRST, before this process's own JVM exists — no
-    # UI-port clash, and the canary JVM is maximally cold
-    canaries_isolated = _run_isolated_canaries()
     specs = all_specs()
     spark = get_spark(app_name="bench")
     try:
@@ -822,13 +642,6 @@ def main() -> None:
         # FROZEN for comparability; r7 appended the two r6-new queries at
         # the END of HEADLINE (their r7 numbers are first-round baselines).
         REPS = 5
-        # bracket the median-of-5 block with ITS OWN cpu probes (judge-r10
-        # next-round #4): the r10 record had all-positive in-suite median
-        # deltas while suite, frozen-33, and isolated canaries all improved
-        # — unattributable because only suite start/end probes existed.
-        # With a per-block pair, a median-vs-suite contradiction is
-        # adjudicable from the summary alone.
-        probe_suite_block_start = _cpu_probe()
         runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
         for _ in range(REPS):
             for name in HEADLINE:
@@ -840,7 +653,6 @@ def main() -> None:
                     t0 = time.perf_counter()
                 df.write.format("noop").mode("overwrite").save()
                 runs[name].append(time.perf_counter() - t0)
-        probe_suite_block_end = _cpu_probe()
         timings = {n: round(min(r), 3) for n, r in runs.items()}
         medians = {n: round(sorted(r)[REPS // 2], 3) for n, r in runs.items()}
 
@@ -888,6 +700,12 @@ def main() -> None:
             else _text_throughput(spark, 1000)
         )
         dedup_scaling = _dedup_scaling_probe(spark)
+        sf = os.path.basename(SF_DIR.rstrip("/")).removeprefix("sf")
+        try:
+            sf_val: float | str = float(sf)
+        except ValueError:
+            sf_val = sf
+        config = _config_stamp(spark, sf_val)
         # stop the suite JVM BEFORE the graph subprocess: nothing after this
         # point touches the session, and the resident suite JVM (plus its
         # accumulated cache/checkpoint/shuffle state) measurably contaminates
@@ -898,164 +716,6 @@ def main() -> None:
         # isolated number is the real one; make the bench measure it.
         spark.stop()
         graph_scaling = _run_graph_scaling()
-
-        sf = os.path.basename(SF_DIR.rstrip("/")).removeprefix("sf")
-        try:
-            sf_val: float | str = float(sf)
-        except ValueError:
-            sf_val = sf
-
-        # round-over-round canary attribution (VERDICT r6 #4): carry the
-        # PREVIOUS committed summary's isolated-canary medians forward so
-        # the ±10% environment-noise bar is testable from this file alone.
-        # r13 (judge-r12 what's-wrong #2+#3): the anchor PREFERS the
-        # newest BENCH_QUIET_r*.json. Adjusting a quiet run against a
-        # burst-contaminated anchor is structurally unpassable when the
-        # contamination was UNEVEN across canaries (r12's record carried
-        # wordcount +32% but dedup +69% vs r11 on untouched code, so an
-        # honestly quiet r13 run reproduces that spread inverted and
-        # only a similarly-noisy run could land within ±0.05) — the bar
-        # is meaningful only against a quiet baseline, which is exactly
-        # what the BENCH_QUIET chain provides.
-        root_dir = os.path.dirname(os.path.abspath(__file__))
-        summary_file = os.path.join(root_dir, "BENCH_SUMMARY.json")
-        # numeric sort on (round, within-round sequence) (r14 ADVICE #4):
-        # the %02d pad only protects two digits, so a lexicographic sort
-        # would skip BENCH_QUIET_r100 in favor of r99 and silently anchor
-        # stale; the optional _K suffix is the within-round sequence (a
-        # second quiet run in the same round persists beside, not over,
-        # the first — the chain keeps every quiet record)
-        def _quiet_key(p):
-            m = re.match(r"BENCH_QUIET_r(\d+)(?:_(\d+))?\.json$", p)
-            return (int(m.group(1)), int(m.group(2) or 1))
-
-        quiet_files = sorted(
-            (
-                p
-                for p in os.listdir(root_dir)
-                if re.match(r"BENCH_QUIET_r\d+(?:_\d+)?\.json$", p)
-            ),
-            key=_quiet_key,
-        )
-        anchor_file = (
-            os.path.join(root_dir, quiet_files[-1]) if quiet_files else summary_file
-        )
-        canaries_prev = None
-        cpu_probe_prev = None
-        cpu_probe_prev_end = None
-        cpu_probe_suite_block_prev = None
-        queries_median_prev = None
-        try:
-            with open(anchor_file) as fh:
-                _prev_summary = json.load(fh)
-            canaries_prev = _prev_summary.get("canaries_isolated")
-            cpu_probe_prev = _prev_summary.get("cpu_probe_sec_start")
-            cpu_probe_prev_end = _prev_summary.get("cpu_probe_sec_end")
-            cpu_probe_suite_block_prev = _prev_summary.get(
-                "cpu_probe_sec_suite_block"
-            )
-            queries_median_prev = _prev_summary.get("queries_median")
-        except (OSError, ValueError):
-            pass
-        # both MEDIAN and MIN drift per canary (judge-r8 #5): the min is
-        # the noise-floor estimate — a median that moved while the min
-        # held is load jitter, a min that moved is the machine (or the
-        # engine, if the cpu probe below held)
-        canary_drift = {}
-        if isinstance(canaries_prev, dict):
-            for name in CANARY_NAMES:
-                cur = canaries_isolated.get(name, {})
-                prev = canaries_prev.get(name, {})
-                drifts = {
-                    f"{k}_drift": round(cur[k] / prev[k] - 1.0, 3)
-                    for k in ("median", "min")
-                    if isinstance(cur, dict)
-                    and isinstance(prev, dict)
-                    and cur.get(k)
-                    and prev.get(k)
-                }
-                if drifts:
-                    canary_drift[name] = drifts
-
-        # drift-ADJUSTED per-query deltas vs the previous committed summary
-        # (judge-r8 #5, recalibrated per judge-r9 #2 + ADVICE): the machine
-        # factor comes from the ISOLATED CANARIES — untouched engine code
-        # in a fresh JVM, so their round-over-round min ratio is machine by
-        # construction, and it tracks the 32-core JVM suite where the r9
-        # single-core numpy spin provably did not (it read the machine 29%
-        # faster and pushed every adjusted delta +0.2..+0.73, including
-        # canaries whose raw delta was negative). MEDIAN of the per-canary
-        # MIN ratios: min is each canary's noise floor, the median across
-        # the 5 discards an outlier canary. The numpy probe is only the
-        # FALLBACK when no canary history exists, and then uses the
-        # previous round's (start+end)/2 rather than its start probe alone
-        # (judge-r9 ADVICE: a previous round that drifted within-run would
-        # otherwise bias every adjusted delta).
-        cpu_end = _cpu_probe()
-        median_delta_adjusted = {}
-        machine = None
-        machine_src = None
-        if isinstance(canaries_prev, dict):
-            ratios = sorted(
-                canaries_isolated[n]["min"] / canaries_prev[n]["min"]
-                for n in CANARY_NAMES
-                if isinstance(canaries_isolated.get(n), dict)
-                and isinstance(canaries_prev.get(n), dict)
-                and canaries_isolated[n].get("min")
-                and canaries_prev[n].get("min")
-            )
-            if ratios:
-                mid = len(ratios) // 2
-                machine = (
-                    ratios[mid]
-                    if len(ratios) % 2
-                    else (ratios[mid - 1] + ratios[mid]) / 2.0
-                )
-                machine_src = "isolated_canary_min_median"
-        if machine is None and (cpu_probe_prev or cpu_probe_prev_end):
-            prev_probes = [p for p in (cpu_probe_prev, cpu_probe_prev_end) if p]
-            machine = ((cpu_probe_start + cpu_end) / 2.0) / (
-                sum(prev_probes) / len(prev_probes)
-            )
-            machine_src = "cpu_probe"
-        if isinstance(queries_median_prev, dict) and machine:
-            for name, cur in medians.items():
-                prev = queries_median_prev.get(name)
-                if prev:
-                    median_delta_adjusted[name] = {
-                        "raw": round(cur / prev - 1.0, 3),
-                        "drift_adjusted": round(cur / prev / machine - 1.0, 3),
-                    }
-            median_delta_adjusted["_machine_factor"] = round(machine, 3)
-            median_delta_adjusted["_machine_factor_source"] = machine_src
-        # self-check (judge-r9 #2 done-bar): untouched canaries must read
-        # ~0 after adjustment. Computed on the ISOLATED canary mins the
-        # factor was calibrated from — the median canary lands exactly 0
-        # by construction, the others expose residual per-canary spread.
-        # Recorded (and WARNED on violation), not hard-asserted: a bench
-        # artifact must still be written on a noisy machine so the drift
-        # is visible in the record.
-        canary_adjusted = {}
-        # the bar verdict is a SIBLING summary field, not a sentinel key
-        # inside the per-canary float map (judge-r10 ADVICE #4: consumers
-        # iterating canary names had to special-case the underscore key)
-        canary_adjusted_within_bar = None
-        if machine and isinstance(canaries_prev, dict):
-            for n in CANARY_NAMES:
-                cur = canaries_isolated.get(n) or {}
-                prev = canaries_prev.get(n) or {}
-                if cur.get("min") and prev.get("min"):
-                    canary_adjusted[n] = round(
-                        cur["min"] / prev["min"] / machine - 1.0, 3
-                    )
-            bad = {n: d for n, d in canary_adjusted.items() if abs(d) > 0.05}
-            canary_adjusted_within_bar = not bad
-            if bad:
-                print(
-                    f"WARNING: canary drift_adjusted outside +/-0.05: {bad} "
-                    "(machine factor unreliable this run)",
-                    file=sys.stderr,
-                )
 
         summary = {
             "metric": "headline_suite_wall_clock",
@@ -1069,91 +729,8 @@ def main() -> None:
             "queries": timings,
             "queries_median": medians,
             "suite_reps": REPS,
-            "canaries_isolated": canaries_isolated,
-            "canaries_isolated_prev_round": canaries_prev,
-            "canary_median_drift": canary_drift,
-            "canary_min_drift_adjusted": canary_adjusted,
-            "canary_adjusted_within_bar": canary_adjusted_within_bar,
-            "notes": [
-                "r6 re-baseline: text_ml_pipeline_tfidf and sim_brp_lsh_ml "
-                "(non-HEADLINE) carry a fixed isEmpty() guard cost since r6 "
-                "— their driver timings are not comparable to r5 and earlier",
-                "late-r8 re-run after the degenerate-input fix batches: the "
-                "cold-JVM canary medians ran 15-50% slower than the early-r8 "
-                "run on identical canary code, and per-query medians drifted "
-                "+6..28% on UNTOUCHED queries (two others -10..14%) — "
-                "environment drift dominates this delta. The four headline "
-                "queries that gained a zero-norm filter moved within that "
-                "same envelope (sim_ann_srp -3.9%, sim_ann_srp_banded +2.8%),"
-                " i.e. the guard predicate has no measurable cost",
-                "r10 calibration finding: the isolated-canary machine "
-                "factor zeroes the ISOLATED canaries by construction "
-                "(canary_min_drift_adjusted is the +/-0.05 self-check), but "
-                "cold-JVM and warm-suite drift are NOT the same number — on "
-                "the r10 machine the isolated canary mins ran 21% faster "
-                "than r9 while warm suite medians ran only ~9% faster, so "
-                "adjusted SUITE deltas skew positive by the difference. "
-                "Gate on raw suite medians plus the canary bar; treat "
-                "drift_adjusted suite deltas as attribution hints only",
-                "r9 census-superlinearity attribution (judge-r8 #4): "
-                "copurchase wedge counts are now recorded per ladder point "
-                "and are exactly linear (disjoint replicas: 3.39M/13.5M/"
-                "54.2M at x1/x4/x16). An isolated probe re-run at HEAD "
-                "measured copurchase_census_x16=8.2s, x16_over_x4=2.94 vs "
-                "the r8-recorded 33.1s/7.16 — the r8 point was machine "
-                "drift (the same round logged +24% canary drift), and "
-                "per-wedge cost FALLS with scale (0.60/0.21/0.15 us per "
-                "wedge at x1/x4/x16). x16 is min-of-2 from r9 so a "
-                "single-shot cannot manufacture a phantom exponent again; "
-                "the cpu_probe_sec_* fields make machine drift a measured "
-                "number rather than an inference",
-                "r12 record adjudication: three full runs on a machine "
-                "with an ambient idle probe of ~0.046-0.053 and periodic "
-                "host bursts — none achieved canary_adjusted_within_bar. "
-                "The committed run has the QUIETEST suite blocks "
-                "(cpu_probe_sec_suite_block ~0.047/0.050), so its raw "
-                "suite medians are the trustworthy axis (r10 rule); its "
-                "isolated-canary factor 0.78 was contaminated by a burst "
-                "during that phase (window_running_spend isolated +63%), "
-                "so drift_adjusted deltas skew ~+25% this round — "
-                "attribution hints only. Ladder points now carry "
-                "per-point probes with min-of-3 reps (judge-r11 #3) and "
-                "were mostly withheld under the bursts — an earlier run "
-                "recorded copurchase_census_x16=25.5s beside exactly "
-                "linear wedge counts, i.e. JVM-internal pressure the "
-                "python-side probe cannot see; withholding is the "
-                "designed outcome. json_event_props is genuinely "
-                "+~60% raw vs r11: the r12 duplicate-key law adds a "
-                "json_object_keys parse per row (law-bearing cost, "
-                "SCALING.md JSON typed-extraction laws)",
-                "r13 anchoring fix: canary adjustment now anchors to the "
-                "newest BENCH_QUIET_r*.json when one exists. The r12 "
-                "committed anchor was burst-contaminated UNEVENLY "
-                "(wordcount +32% vs dedup_minhash_pairs +69% vs r11 on "
-                "untouched code, judge-r12), so a genuinely quiet r13 run "
-                "reproduced that spread inverted (wordcount adj +0.28 "
-                "while the other four canaries sat within +/-0.06) and "
-                "the +/-0.05 bar was structurally unpassable against it — "
-                "only a run noisy in the same uneven pattern could have "
-                "'passed'. The probe_quiet criterion bootstraps the quiet "
-                "chain; from the next anchor on the bar is meaningful "
-                "again",
-            ],
             "sf": sf_val,
-            "prev_anchor": os.path.basename(anchor_file),
-            "cpu_probe_sec_start": cpu_probe_start,
-            "cpu_probe_sec_end": cpu_end,
-            "cpu_probe_sec_prev_round": cpu_probe_prev,
-            "cpu_probe_sec_prev_round_end": cpu_probe_prev_end,
-            # [start, end] machine probes bracketing the median-of-5 block
-            # itself (judge-r10 #4) — read THESE, not the suite-level pair,
-            # when adjudicating queries_median_delta_vs_prev
-            "cpu_probe_sec_suite_block": [
-                probe_suite_block_start,
-                probe_suite_block_end,
-            ],
-            "cpu_probe_sec_suite_block_prev_round": cpu_probe_suite_block_prev,
-            "queries_median_delta_vs_prev": median_delta_adjusted,
+            "config": config,
             "text_curation_cold_sec": curation_cold,
             "text_decontaminate_bloom_cold_sec": bloom_cold,
             "graph_pagerank_sec": pagerank_sec,
@@ -1162,99 +739,15 @@ def main() -> None:
             "dedup_lsh_scaling": dedup_scaling,
             "graph_scaling": graph_scaling,
         }
-        # quiet records survive artifact deposits (judge-r12 what's-wrong
-        # #3: the driver's post-commit BENCH_SUMMARY.json deposit
-        # overwrote the builder's quiet r11 record, so r12's prev_round
-        # comparisons anchored to a degraded run). A quiet run is ALSO
-        # persisted under a round-stamped name the driver never writes:
-        # BENCH_QUIET_r{N}.json. Two criteria, recorded in the file:
-        #   * canary_bar — the cross-round consistency bar passed AND the
-        #     run proved its own machine quiet (r14 ADVICE #1: the machine
-        #     factor is the median canary ratio, which absorbs UNIFORM
-        #     load, so a uniformly loaded run could pass the ±0.05
-        #     residual-spread bar alone and seed the chain with inflated
-        #     raw timings — the exact contaminated-anchor failure the
-        #     chain exists to prevent);
-        #   * probe_quiet — EVERY machine probe this run took (start, end,
-        #     suite-block pair, ladder idle, every per-ladder-point rep
-        #     probe including withheld points, survivors_x16) sat at or
-        #     under 2x the ladder floor (r14 ADVICE #3: ladder-point
-        #     probes were previously omitted, so a run hot only during
-        #     ladder work could still read as quiet). This BOOTSTRAPS the
-        #     chain when no quiet anchor exists yet.
-        # probe_quiet and the full probe list are recorded in the summary
-        # unconditionally so any record is auditable after the fact.
-        probes_taken = [
-            cpu_probe_start,
-            cpu_end,
-            probe_suite_block_start,
-            probe_suite_block_end,
-        ] + [
-            v
-            for d in (dedup_scaling, graph_scaling)
-            if isinstance(d, dict)
-            for k, v in d.items()
-            # every cpu probe the ladders record ends in `_probe`
-            # (`ladder_idle_probe`, per-point `<key>_probe` — written even
-            # when the point is withheld — and `survivors_x16_probe`); the
-            # graph subprocess also brackets itself with cpu_probe_sec_*
-            if (k.endswith("_probe") or k.startswith("cpu_probe_sec"))
-            and isinstance(v, (int, float))
-        ]
-        probe_quiet = all(p <= 2 * _LADDER_BAR_FLOOR for p in probes_taken)
-        summary["probe_quiet"] = probe_quiet
-        summary["probes_taken_max"] = max(probes_taken) if probes_taken else None
-        # the FULL summary goes to a committed repo file (VERDICT r5 #3:
-        # the driver's stdout tail capture truncates from the FRONT, and
-        # r5's summary outgrew it, eating the headline field) ...
+        # the FULL summary goes to a repo file (VERDICT r5 #3: the driver's
+        # stdout tail capture truncates from the FRONT, and r5's summary
+        # outgrew it, eating the headline field) ...
+        summary_file = os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), "BENCH_SUMMARY.json"
+        )
         with open(summary_file, "w") as fh:
             json.dump(summary, fh, indent=1)
             fh.write("\n")
-        quiet_criterion = (
-            "canary_bar"
-            if (canary_adjusted_within_bar and probe_quiet)
-            else ("probe_quiet" if probe_quiet else None)
-        )
-        if quiet_criterion:
-            # round stamp (r14 ADVICE #2): the old "newest CORRECTNESS
-            # round + 1" rule is order-dependent — a bench run AFTER the
-            # current round's CORRECTNESS deposit stamps the NEXT round.
-            # An explicit env override wins; otherwise the heuristic
-            # stands but the basis is recorded so the chain is auditable.
-            rounds = [
-                int(m.group(1))
-                for p in os.listdir(root_dir)
-                if (m := re.match(r"CORRECTNESS_r(\d+)\.json$", p))
-            ]
-            env_round = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
-            basis = max(rounds) if rounds else None
-            rnd = int(env_round) if env_round else ((basis + 1) if rounds else 0)
-            quiet_file = os.path.join(root_dir, f"BENCH_QUIET_r{rnd:02d}.json")
-            seq = 2
-            while os.path.exists(quiet_file):
-                # never overwrite an earlier quiet record (it may be a
-                # prior run's anchor, or a mis-by-one stamp from the old
-                # heuristic) — persist beside it with a sequence suffix
-                quiet_file = os.path.join(
-                    root_dir, f"BENCH_QUIET_r{rnd:02d}_{seq}.json"
-                )
-                seq += 1
-            with open(quiet_file, "w") as fh:
-                json.dump(
-                    {
-                        **summary,
-                        "quiet_criterion": quiet_criterion,
-                        "quiet_round_source": (
-                            "env:SPARK_GRAFT_BENCH_ROUND"
-                            if env_round
-                            else f"max_correctness_round({basis})+1"
-                        ),
-                    },
-                    fh,
-                    indent=1,
-                )
-                fh.write("\n")
-            print(f"quiet record persisted: {quiet_file}", file=sys.stderr)
         # ... and stdout stays compact: the contract line only. Keys are
         # ordered queries-first so if a tail capture still clips the front,
         # the headline scalars at the END survive.
@@ -1275,9 +768,7 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    if "--isolated-canary" in sys.argv:
-        _isolated_canary_main()
-    elif "--graph-scaling" in sys.argv:
+    if "--graph-scaling" in sys.argv:
         _graph_scaling_main()
     else:
         main()

@@ -33,6 +33,9 @@ from pyspark.sql import functions as F
 
 # maximal ASCII-letter runs over lowercased text (engine standard)
 WORD_PATTERN = "[a-z]+"
+# DuckDB spelling of tokens() over a ``text`` column, for oracle SQL (RE2 has
+# the same maximal-run semantics; see fold() for the casing law)
+SQL_TOKENS = f"regexp_extract_all(lower(text), '{WORD_PATTERN}')"
 # bit-exact reference parity: Unicode-aware word boundaries like Python re
 STRICT_PATTERN = r"(?U)\b[a-z]+\b"
 

@@ -39,12 +39,11 @@ from pyspark.sql import functions as F
 from mapreduce_docker_spark.functions.rounding import dround
 from mapreduce_docker_spark.functions.rounding import sql as rsql
 from mapreduce_docker_spark.functions import texthash as th
-from mapreduce_docker_spark.functions.tokenize import tokens
+from mapreduce_docker_spark.functions.tokenize import SQL_TOKENS, tokens
 from mapreduce_docker_spark.registry import register
 from mapreduce_docker_spark.sources.catalog import load_table, scatter
 
-_SQL_TOKS = "regexp_extract_all(lower(text), '[a-z]+')"
-_SQL_SHINGLES = th.sql_shingles(_SQL_TOKS)
+_SQL_SHINGLES = th.sql_shingles(SQL_TOKENS)
 JACCARD_THRESHOLD = 0.5
 COSINE_DUP_THRESHOLD = 0.40
 
@@ -93,25 +92,6 @@ def _dedup_srp_planes() -> list[list[float]]:
     ]
 
 
-def _dedup_planes_expr():
-    """The 144x64 SRP plane matrix as ONE jvm-parsed literal expression.
-
-    Building it from nested F.lit()/F.array() costs ~9.2k py4j round trips
-    (~5 s of DRIVER wall-clock per invocation, measured); the parser
-    ingests the same doubles (shortest-repr + D suffix round-trips
-    exactly) in <100 ms. Shared by the near-dup pipeline and the banded
-    ANN query so both block on identical geometry.
-    """
-    return F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{v!r}D" for v in p) + ")"
-            for p in _dedup_srp_planes()
-        )
-        + ")"
-    )
-
-
 def _sql_jaccard(a: str, b: str) -> str:
     return (
         f"CAST(len(list_intersect({a}, {b})) AS DOUBLE) / "
@@ -139,7 +119,7 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_exact_groups",
     f"""
-    WITH d AS (SELECT doc_id, md5(coalesce(array_to_string({_SQL_TOKS}, ' '), '')) AS fp FROM documents)
+    WITH d AS (SELECT doc_id, md5(coalesce(array_to_string({SQL_TOKENS}, ' '), '')) AS fp FROM documents)
     SELECT fp, count(*) AS n_docs, min(doc_id) AS keeper
     FROM d GROUP BY fp
     """,
@@ -158,7 +138,7 @@ def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_exact_survivors",
     f"""
-    WITH d AS (SELECT doc_id, md5(coalesce(array_to_string({_SQL_TOKS}, ' '), '')) AS fp FROM documents)
+    WITH d AS (SELECT doc_id, md5(coalesce(array_to_string({SQL_TOKENS}, ' '), '')) AS fp FROM documents)
     SELECT min(doc_id) AS doc_id FROM d GROUP BY fp
     """,
     section="U1",
@@ -496,7 +476,7 @@ def _sql_simhash_cte() -> str:
         f"CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END" for j in range(th.SIMHASH_BITS)
     )
     return f"""
-    WITH tok AS (SELECT doc_id, unnest({_SQL_TOKS}) AS w FROM documents),
+    WITH tok AS (SELECT doc_id, unnest({SQL_TOKENS}) AS w FROM documents),
     votes AS (
       SELECT doc_id,
              {sums}
@@ -872,9 +852,9 @@ def _fingerprint_batches(batches):
     """mapInArrow kernel: (vec_id, embedding) -> (vec_id, u, bits, f0..f2).
 
     Bit-for-bit identical to the interpreted-HOF expression path it
-    replaced (kept as ``_dedup_unit_fingerprints_jvm`` below as the
-    equivalence witness pinned in tests/test_dedup.py): every float op is
-    the SAME IEEE-754 double sequence —
+    replaced (kept as ``_dedup_unit_fingerprints_jvm`` in
+    tests/test_dedup.py, the equivalence witness pinned there): every
+    float op is the SAME IEEE-754 double sequence —
 
     * ``sq_sum``/each plane dot are STRICT LEFT FOLDS ``((0+x0*y0)+x1*y1)+…``
       in index order (a 64-step vectorized loop, never numpy's pairwise
@@ -988,58 +968,6 @@ def _dedup_unit_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = scatter(load_table(spark, sf_dir, "embeddings"))
     return emb.select("vec_id", "embedding").mapInArrow(
         _fingerprint_batches, _FP_SCHEMA
-    )
-
-
-def _dedup_unit_fingerprints_jvm(emb: DataFrame) -> DataFrame:
-    """The pre-r15 pure-expression twin of ``_fingerprint_batches``.
-
-    Kept as the equivalence WITNESS: tests/test_dedup.py asserts the Arrow
-    kernel's (u, bits, f0..f2) match this plan bit-for-bit on the fixture
-    plus crafted degenerate rows. Not used in any query path."""
-    planes = _dedup_planes_expr()
-    bit_arr = F.transform(
-        planes,
-        lambda p: F.when(
-            F.aggregate(
-                F.zip_with(F.col("embedding"), p, lambda x, y: x.cast("double") * y),
-                F.lit(0.0),
-                lambda a, b: a + b,
-            )
-            >= 0,
-            F.lit("1"),
-        ).otherwise(F.lit("0")),
-    )
-    sq_sum = F.aggregate(
-        F.transform(F.col("embedding"), lambda y: y.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    # zero-norm rows defined out (ANSI divide guard) — matches the oracle's
-    # filtered ed/unit CTEs, see _unit_vectors
-    # dimension law (r11) + finite-norm law (r10): see _unit_vectors
-    return emb.filter(
-        (F.size("embedding") == DEDUP_EMB_DIM)
-        & (sq_sum > 0)
-        & (sq_sum < F.lit(float("inf")))
-    ).select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double") / F.sqrt(sq_sum)).alias(
-            "u"
-        ),
-        F.concat_ws("", bit_arr).alias("bits"),
-    ).select(
-        "vec_id",
-        "u",
-        "bits",
-        # fingerprint packed as 3x48-bit longs: the Hamming pre-filter runs
-        # as codegen'd bit_count(xor), never a per-bit loop
-        *[
-            F.conv(F.substring("bits", s * 48 + 1, 48), 2, 10)
-            .cast("long")
-            .alias(f"f{s}")
-            for s in range(3)
-        ],
     )
 
 
@@ -1203,8 +1131,8 @@ SPAN_TILE_TOKENS = 3
     "dedup_span_tiles",
     f"""
     WITH d AS (
-      SELECT doc_id, {_SQL_TOKS} AS toks FROM documents
-      WHERE len({_SQL_TOKS}) > 0
+      SELECT doc_id, {SQL_TOKENS} AS toks FROM documents
+      WHERE len({SQL_TOKENS}) > 0
     ),
     tiled AS (
       SELECT doc_id,

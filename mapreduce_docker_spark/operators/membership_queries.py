@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from mapreduce_docker_spark.functions import texthash as th
 from mapreduce_docker_spark.functions.rounding import dround
 from mapreduce_docker_spark.functions.rounding import sql as rsql
-from mapreduce_docker_spark.functions.tokenize import tokens
+from mapreduce_docker_spark.functions.tokenize import SQL_TOKENS, tokens
 from mapreduce_docker_spark.registry import register
 from mapreduce_docker_spark.sources.catalog import load_table, scatter
 
@@ -60,8 +60,7 @@ BLOOM_B = tuple((97_531 * (j + 1) + 7) % _P for j in range(BLOOM_K))
 # Bloom paths answer the same question and tests can pin superset-ness
 BENCH_MAX_DOC = 20
 
-_SQL_TOKS = "regexp_extract_all(lower(text), '[a-z]+')"
-_SQL_SHINGLES = th.sql_shingles(_SQL_TOKS)
+_SQL_SHINGLES = th.sql_shingles(SQL_TOKENS)
 
 
 def bloom_positions(h_col) -> F.Column:

@@ -31,6 +31,7 @@ from mapreduce_docker_spark.functions.measures import finite, sql_finite
 from mapreduce_docker_spark.functions.rounding import dround
 from mapreduce_docker_spark.functions.rounding import spark_sql as rspark_sql
 from mapreduce_docker_spark.functions.rounding import sql as rsql
+from mapreduce_docker_spark.functions.tokenize import SQL_TOKENS
 from mapreduce_docker_spark.registry import register
 from mapreduce_docker_spark.sources.catalog import load_table
 
@@ -2720,7 +2721,7 @@ ZIPF_TOP_WORDS = 100
     "text_zipf_slope",
     f"""
     WITH toks AS (
-      SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w FROM documents
+      SELECT unnest({SQL_TOKENS}) AS w FROM documents
     ),
     wc AS (SELECT w, count(*) AS c FROM toks GROUP BY w),
     ranked AS (

@@ -23,14 +23,12 @@ from pyspark.sql.window import Window
 from mapreduce_docker_spark.functions.rounding import dround
 from mapreduce_docker_spark.functions.rounding import sql as rsql
 from mapreduce_docker_spark.functions import texthash as th
-from mapreduce_docker_spark.functions.tokenize import fold, tokens
+from mapreduce_docker_spark.functions.tokenize import SQL_TOKENS, fold, tokens
 from mapreduce_docker_spark.registry import register
 from mapreduce_docker_spark.sources.catalog import load_table, scatter
 
-# DuckDB twin of functions.tokenize.tokens()
-_SQL_TOKS = "regexp_extract_all(lower(text), '[a-z]+')"
 # DuckDB twin of texthash.shingles(tokens(...)) (3-gram word shingles)
-_SQL_SHINGLES_TA = th.sql_shingles(_SQL_TOKS)
+_SQL_SHINGLES_TA = th.sql_shingles(SQL_TOKENS)
 
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "for", "on")
 
@@ -47,7 +45,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_token_stats",
     f"""
-    WITH d AS (SELECT doc_id, {_SQL_TOKS} AS toks, text FROM documents)
+    WITH d AS (SELECT doc_id, {SQL_TOKENS} AS toks, text FROM documents)
     SELECT doc_id,
            CAST(len(toks) AS INTEGER)                 AS n_tokens,
            CAST(len(list_distinct(toks)) AS INTEGER)  AS n_distinct,
@@ -85,7 +83,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_quality_score",
     f"""
-    WITH d AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents)
+    WITH d AS (SELECT doc_id, {SQL_TOKENS} AS toks FROM documents)
     -- zero-token docs have no defined ratios: NULL on every metric (the
     -- curation layer treats NULL quality as reject), never a divide
     SELECT doc_id,
@@ -133,7 +131,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_langid_nb",
     f"""
     WITH toks AS (
-      SELECT doc_id, lang, unnest({_SQL_TOKS}) AS word FROM documents
+      SELECT doc_id, lang, unnest({SQL_TOKENS}) AS word FROM documents
     ),
     -- unlabeled-class law (r11 random-differential probe, seed 3): a NULL
     -- lang is NOT a trainable class — a classifier trains on LABELED docs;
@@ -253,7 +251,7 @@ def text_langid_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_bigrams_top30",
     f"""
-    WITH d AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
+    WITH d AS (SELECT doc_id, {SQL_TOKENS} AS toks FROM documents),
     grams AS (
       SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
                     i -> toks[i] || ' ' || toks[i + 1])) AS bigram
@@ -289,7 +287,7 @@ def text_bigrams_top30(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_tfidf_top_term",
     f"""
-    WITH toks AS (SELECT doc_id, unnest({_SQL_TOKS}) AS term FROM documents),
+    WITH toks AS (SELECT doc_id, unnest({SQL_TOKENS}) AS term FROM documents),
     tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term),
     n AS (SELECT count(*) AS n FROM documents),
     scored AS (
@@ -438,7 +436,7 @@ def text_tfidf_pair_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_fingerprint",
     f"""
-    WITH d AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents)
+    WITH d AS (SELECT doc_id, {SQL_TOKENS} AS toks FROM documents)
     SELECT doc_id,
            -- coalesce: array_to_string([]) is NULL in DuckDB, but the engine's
            -- concat_ws gives '' for zero-token docs -> md5('') on both
@@ -561,7 +559,7 @@ CHUNK_STRIDE = 24  # 8-token overlap between consecutive chunks
 @register(
     "text_chunk_windows",
     f"""
-    WITH d AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
+    WITH d AS (SELECT doc_id, {SQL_TOKENS} AS toks FROM documents),
     idx AS (
       SELECT doc_id, toks,
              unnest(generate_series(0,
@@ -649,7 +647,7 @@ REPETITION_MAX_RATIO = 0.3
     "text_repetition_filter",
     f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_SQL_TOKS}) AS w FROM documents
+      SELECT doc_id, unnest({SQL_TOKENS}) AS w FROM documents
     ),
     freq AS (SELECT doc_id, w, count(*) AS c FROM tok GROUP BY doc_id, w),
     stats AS (
@@ -707,7 +705,7 @@ _CMS_COEFS = list(zip(th.MINHASH_A, th.MINHASH_B))[:CMS_DEPTH]
 _SQL_CMS = f"""
     WITH wc AS (
       SELECT w AS word, CAST(count(*) AS BIGINT) AS cnt
-      FROM (SELECT unnest({_SQL_TOKS}) AS w FROM documents) t
+      FROM (SELECT unnest({SQL_TOKENS}) AS w FROM documents) t
       GROUP BY w
     ),
     coef AS (
@@ -967,7 +965,7 @@ from mapreduce_docker_spark.operators.dedup_queries import (  # noqa: E402
       WHERE {rsql(_sql_minhash_jaccard('da.hs', 'db.hs'), 4)} >= {_JACCARD_THRESHOLD}
     ),
     tok AS (
-      SELECT doc_id, lang, unnest({_SQL_TOKS}) AS w FROM documents
+      SELECT doc_id, lang, unnest({SQL_TOKENS}) AS w FROM documents
     ),
     freq AS (
       SELECT doc_id, lang, w, count(*) AS c FROM tok GROUP BY doc_id, lang, w
@@ -1170,7 +1168,7 @@ DECON_BENCH_MAX_DOC = 20  # fixture stand-in for the benchmark/eval set
     "text_pack_sequences",
     f"""
     WITH d AS (
-      SELECT doc_id, lang, CAST(len({_SQL_TOKS}) AS BIGINT) AS n_tokens
+      SELECT doc_id, lang, CAST(len({SQL_TOKENS}) AS BIGINT) AS n_tokens
       FROM documents
     ),
     o AS (
@@ -1215,7 +1213,7 @@ LENGTH_BUCKETS = 8
     "text_length_buckets",
     f"""
     WITH d AS (
-      SELECT doc_id, lang, CAST(len({_SQL_TOKS}) AS BIGINT) AS n_tokens
+      SELECT doc_id, lang, CAST(len({SQL_TOKENS}) AS BIGINT) AS n_tokens
       FROM documents
     ),
     b AS (
@@ -1446,7 +1444,7 @@ def text_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_unigram_surprisal",
     f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_SQL_TOKS}) AS word FROM documents
+      SELECT doc_id, unnest({SQL_TOKENS}) AS word FROM documents
     ),
     wc AS (SELECT word, count(*) AS c FROM toks GROUP BY word),
     tot AS (SELECT count(*) AS n FROM toks)
@@ -1666,7 +1664,7 @@ def sample_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_source_kl_divergence",
     f"""
     WITH toks AS (
-      SELECT source, unnest({_SQL_TOKS}) AS w FROM documents
+      SELECT source, unnest({SQL_TOKENS}) AS w FROM documents
     ),
     c AS (SELECT source, w, CAST(count(*) AS DOUBLE) AS c_sw FROM toks GROUP BY 1, 2),
     t AS (
@@ -1785,7 +1783,7 @@ BIGRAM_LM_ALPHA = 0.5
 @register(
     "text_bigram_surprisal",
     f"""
-    WITH d AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
+    WITH d AS (SELECT doc_id, {SQL_TOKENS} AS toks FROM documents),
     bg AS (
       SELECT doc_id,
              unnest(list_transform(generate_series(1, len(toks) - 1),

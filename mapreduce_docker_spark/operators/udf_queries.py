@@ -27,10 +27,9 @@ from pyspark.sql.functions import pandas_udf, udtf
 
 from mapreduce_docker_spark.functions.rounding import dround
 from mapreduce_docker_spark.functions.rounding import sql as rsql
+from mapreduce_docker_spark.functions.tokenize import SQL_TOKENS
 from mapreduce_docker_spark.registry import register
 from mapreduce_docker_spark.sources.catalog import load_table
-
-_SQL_TOKS = "regexp_extract_all(lower(text), '[a-z]+')"
 
 
 # ---------------------------------------------------------------------------
@@ -202,7 +201,7 @@ def _bigram_udtf():
     "udf_udtf_bigrams",
     f"""
     WITH d AS (
-      SELECT doc_id, {_SQL_TOKS} AS toks FROM documents WHERE doc_id < 100
+      SELECT doc_id, {SQL_TOKENS} AS toks FROM documents WHERE doc_id < 100
     ),
     g AS (
       SELECT doc_id,
@@ -324,7 +323,7 @@ def _ngram_udtf():
     "udf_udtf_analyze_trigrams",
     f"""
     WITH d AS (
-      SELECT doc_id, {_SQL_TOKS} AS toks FROM documents WHERE doc_id < 50
+      SELECT doc_id, {SQL_TOKENS} AS toks FROM documents WHERE doc_id < 50
     ),
     g AS (
       SELECT doc_id, unnest(generate_series(1, len(toks) - 2)) AS i, toks

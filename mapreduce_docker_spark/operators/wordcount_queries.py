@@ -10,15 +10,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduce_docker_spark.functions.tokenize import SQL_TOKENS
 from mapreduce_docker_spark.operators import wordcount as wc
 from mapreduce_docker_spark.registry import register
 from mapreduce_docker_spark.sources.catalog import load_table
 
 # DuckDB-side tokenization with identical semantics (maximal [a-z]+ runs over
 # lowercased text; no empty tokens).
-_TOKENS_CTE = """
+_TOKENS_CTE = f"""
 WITH toks AS (
-  SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
+  SELECT unnest({SQL_TOKENS}) AS word
   FROM documents
 )
 """
@@ -188,9 +189,9 @@ def q_wordcount_tsv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bootstrap_zip_wordcount",
-    """
+    f"""
     WITH toks AS (
-      SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
+      SELECT unnest({SQL_TOKENS}) AS word
       FROM documents WHERE doc_id < 100
     )
     SELECT word, count(*) AS cnt FROM toks GROUP BY word

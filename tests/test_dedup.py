@@ -2,10 +2,12 @@
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce_docker_spark.operators import dedup_queries as dq
-from tests.conftest import SF_SMOKE
+from mapreduce_docker_spark.sources.catalog import load_table
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 def test_minhash_finds_planted_near_dups(spark):
@@ -317,3 +319,112 @@ def test_chain_dedup_invariants_on_seeded_corpus(spark, tmp_path):
                 last_kept = us_
             else:
                 assert last_kept is not None and us_ <= last_kept + delay
+
+
+def _dedup_planes_expr():
+    """The 144x64 SRP plane matrix as ONE jvm-parsed literal expression.
+
+    Building it from nested F.lit()/F.array() costs ~9.2k py4j round trips
+    (~5 s of DRIVER wall-clock per invocation, measured); the parser
+    ingests the same doubles (shortest-repr + D suffix round-trips
+    exactly) in <100 ms.
+    """
+    return F.expr(
+        "array("
+        + ",".join(
+            "array(" + ",".join(f"{v!r}D" for v in p) + ")"
+            for p in dq._dedup_srp_planes()
+        )
+        + ")"
+    )
+
+
+def _dedup_unit_fingerprints_jvm(emb: DataFrame) -> DataFrame:
+    """The pure-expression twin of ``dq._fingerprint_batches``: the
+    interpreted-HOF plan the Arrow kernel replaced, kept here as its
+    equivalence witness (no query uses it)."""
+    dim = dq.DEDUP_EMB_DIM
+    bit_arr = F.transform(
+        _dedup_planes_expr(),
+        lambda p: F.when(
+            F.aggregate(
+                F.zip_with(F.col("embedding"), p, lambda x, y: x.cast("double") * y),
+                F.lit(0.0),
+                lambda a, b: a + b,
+            )
+            >= 0,
+            F.lit("1"),
+        ).otherwise(F.lit("0")),
+    )
+    sq_sum = F.aggregate(
+        F.transform(F.col("embedding"), lambda y: y.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda a, b: a + b,
+    )
+    # dimension law (r11) + finite-norm law (r10): see dq._unit_vectors
+    return emb.filter(
+        (F.size("embedding") == dim)
+        & (sq_sum > 0)
+        & (sq_sum < F.lit(float("inf")))
+    ).select(
+        "vec_id",
+        F.transform(F.col("embedding"), lambda x: x.cast("double") / F.sqrt(sq_sum)).alias(
+            "u"
+        ),
+        F.concat_ws("", bit_arr).alias("bits"),
+    ).select(
+        "vec_id",
+        "u",
+        "bits",
+        *[
+            F.conv(F.substring("bits", s * 48 + 1, 48), 2, 10)
+            .cast("long")
+            .alias(f"f{s}")
+            for s in range(3)
+        ],
+    )
+
+
+def test_fingerprint_kernel_matches_jvm_expression_path(spark):
+    """The mapInArrow SRP kernel and the expression plan it replaced give
+    bit-identical (u, bits, f0..f2) on the fixture embeddings, and drop the
+    same degenerate rows: a NULL element, a wrong length, a NULL vector, a
+    zero norm and +/-Inf or NaN components."""
+    dim = dq.DEDUP_EMB_DIM
+    ok = [((-1.0) ** k) * (k + 1) / 7.0 for k in range(dim)]
+    crafted = [
+        (-1, ok),
+        (-2, [0.5] * (dim - 1) + [None]),
+        (-3, [0.5] * (dim - 1)),
+        (-4, [0.5] * (dim + 1)),
+        (-5, None),
+        (-6, [0.0] * dim),
+        (-7, [float("inf")] + [0.5] * (dim - 1)),
+        (-8, [0.5] * (dim - 1) + [float("-inf")]),
+        (-9, [float("nan")] + [0.5] * (dim - 1)),
+        (-10, [-0.0] * (dim - 1) + [3.0]),
+    ]
+    emb = load_table(spark, SF_ORACLE, "embeddings").select("vec_id", "embedding")
+    emb = emb.unionByName(
+        spark.createDataFrame(crafted, "vec_id bigint, embedding array<float>")
+    )
+
+    def rows(df):
+        return {
+            r["vec_id"]: (
+                tuple(x.hex() for x in r["u"]),
+                r["bits"],
+                r["f0"],
+                r["f1"],
+                r["f2"],
+            )
+            for r in df.collect()
+        }
+
+    kernel = rows(emb.mapInArrow(dq._fingerprint_batches, dq._FP_SCHEMA))
+    jvm = rows(_dedup_unit_fingerprints_jvm(emb))
+    assert len(kernel) > 400  # the fixture vectors are kept
+    assert {v for v in kernel if v < 0} == {-1, -10}
+    assert kernel.keys() == jvm.keys()
+    bad = [v for v in kernel if kernel[v] != jvm[v]]
+    assert not bad, bad[:5]

@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 
 from mapreduce_docker_spark.functions import texthash as th
 from mapreduce_docker_spark.functions.tokenize import tokens
+from mapreduce_docker_spark.sources.catalog import load_table
+from tests.conftest import SF_ORACLE
 
 TEXTS = [
     "the quick brown fox jumps over the lazy dog",
@@ -112,6 +114,48 @@ def test_minhash_explode_path_matches_hof(spark):
     }
     for i, t in enumerate(TEXTS):
         assert got[i] == _py_minhash(_py_shingles(_py_tokens(t))), f"explode path differs for {t!r}"
+
+
+def test_shingle_hash_rows_matches_array_path(spark):
+    """The codegen ``shingle_hash_rows`` and the array path
+    ``shingle_hash(explode(shingles(tokens(text))))`` give every doc the
+    same SET of shingle hashes, on the fixture documents and on the
+    degenerate corners: empty and NULL text (no rows), 1, 2 and exactly 3
+    tokens, and repeated grams (kept as duplicate rows by the codegen path,
+    collapsed by the array path)."""
+    crafted = [
+        (-1, ""),
+        (-2, None),
+        (-3, "Word"),
+        (-4, "two words"),
+        (-5, "exactly three tokens"),
+        (-6, "a b c a b c a b c"),
+        (-7, "  42 !! "),
+    ]
+    docs = load_table(spark, SF_ORACLE, "documents").select("doc_id", "text")
+    docs = docs.unionByName(
+        spark.createDataFrame(crafted, "doc_id bigint, text string")
+    )
+
+    def hash_sets(df):
+        return {
+            r["doc_id"]: set(r["hs"])
+            for r in df.groupBy("doc_id").agg(F.collect_list("h").alias("hs")).collect()
+        }
+
+    rows = th.shingle_hash_rows(docs, ["doc_id"])
+    got = hash_sets(rows)
+    want = hash_sets(
+        docs.select("doc_id", F.explode(th.shingles(tokens("text"))).alias("s"))
+        .select("doc_id", th.shingle_hash(F.col("s")).alias("h"))
+    )
+    assert len(got) > 400  # the fixture docs have shingles
+    assert {d for d in got if d < 0} == {-3, -4, -5, -6}
+    assert got == want
+    for i, t in [(-3, "word"), (-4, "two words"), (-5, "exactly three tokens")]:
+        assert got[i] == {_py_shingle_hash(t)}
+    assert got[-6] == {_py_shingle_hash(s) for s in ("a b c", "b c a", "c a b")}
+    assert rows.filter(F.col("doc_id") == -6).count() == 7  # 9 - 3 + 1 grams
 
 
 def test_simhash(spark):
