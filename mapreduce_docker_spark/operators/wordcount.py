@@ -7,11 +7,14 @@ behavior (SURVEY.md §7 Phase 0). Reference trace -> Spark plan:
 reference (file:line)                     here
 ========================================  =====================================
 chunked text scan coordinator.py:47-60    FileSourceScan input splits
-lowercase          worker.py:13           F.lower inside tokens()
+lowercase          worker.py:13           fold() (guarded lower) in tokens()
 regex tokenize     worker.py:6,13         regexp_extract_all + explode
 per-chunk combiner worker.py:15           HashAggregate(partial) — automatic
 global merge       coordinator.py:71-83   Exchange(word) + HashAggregate(final)
-full desc sort     coordinator.py:133     orderBy(desc(count), word)
+full desc sort     coordinator.py:133     orderBy(desc(count), word): range
+                                          Exchange + Sort on every partition
+TSV file           coordinator.py:131-134 write_tsv: parallel part files,
+                                          concatenated in partition order
 top-20             coordinator.py:126     limit(k) -> TakeOrderedAndProject
 unique words       coordinator.py:106     count_distinct(word)
 ========================================  =====================================
@@ -25,6 +28,12 @@ in one driver-side Counter — the reference's scalability ceiling). Word keys
 are near-uniform after partial agg; AQE coalesces the reduce side. Ties in
 the ranking are broken by ``word`` ascending to make top-k deterministic
 (the reference's Counter tie order is arrival-dependent, SURVEY §2 T4).
+The full sort is a range exchange followed by a per-partition sort, and the
+TSV sink keeps it that way: each partition sorts and encodes its own range
+on its own core, and only the finished bytes are joined into one file
+(sources/text.py). The case fold runs ``translate`` only on rows that are
+invalid UTF-8 or hold İ/Σ; every other row is just lowered
+(functions/tokenize.py).
 """
 
 from __future__ import annotations

@@ -15,7 +15,10 @@ def spark():
     # independence, SURVEY §5.3)
     import os
 
-    master = os.environ.get("SPARK_GRAFT_TEST_MASTER", "local[8]")
+    # one task slot per core the host grants (SPARK_GRAFT_CPUS, as in
+    # session.get_spark); the shuffle partition count stays fixed
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    master = os.environ.get("SPARK_GRAFT_TEST_MASTER", f"local[{cpus}]")
     parts = int(os.environ.get("SPARK_GRAFT_TEST_SHUFFLE", "8"))
     s = get_spark(app_name="tests", master=master, shuffle_partitions=parts)
     yield s

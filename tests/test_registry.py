@@ -166,17 +166,36 @@ def test_rowsonly_pins_declared():
             assert not spec.pin, f"{name}: pin= is for rows-only queries only"
 
 
-def _stale_report():
+def _tool(name):
+    import importlib
     import os
     import sys
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, os.path.join(root, "tools"))
     try:
-        import stale_report
+        module = importlib.import_module(name)
     finally:
         sys.path.pop(0)
-    return root, stale_report
+    return root, module
+
+
+def _stale_report():
+    return _tool("stale_report")
+
+
+def test_queries_md_in_sync():
+    """QUERIES.md is GENERATED from the registry: fail on any drift of its
+    content (a changed note, section or check kind), not just its counts.
+    Regenerate with `python tools/dump_queries.py`."""
+    import os
+
+    root, dump_queries = _tool("dump_queries")
+    committed = open(os.path.join(root, "QUERIES.md")).read()
+    assert committed == dump_queries.render(), (
+        "QUERIES.md drifted from the registry — regenerate with "
+        "`python tools/dump_queries.py`"
+    )
 
 
 def test_rowsonly_md_in_sync():

@@ -73,3 +73,34 @@ def test_bpe_pieces_cross_engine_parity(spark, data):
         ).fetchone()[0]
         assert got[i] == duck, repr(s)
         assert "".join(got[i]) == s, repr(s)  # pieces tile the input exactly
+
+
+def test_fold_guard_matches_translate_fold(spark):
+    """fold() skips translate() on rows it cannot change; the result must
+    stay byte-identical to lower(translate(c, 'İΣ', 'iσ')) on every row,
+    compared as hex so a U+FFFD substitution cannot hide. Rows are built
+    from raw bytes (binary cast to string) to reach invalid UTF-8. The
+    last three cases break weaker guards: an İ after a stray lead byte is
+    invisible to instr(), and an encoded surrogate or overlong form is
+    replaced differently by translate()'s decode than by lower()'s."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_docker_spark.functions.tokenize import fold
+
+    cases = [
+        "İstanbul".encode(), "ΑΣ".encode(), "İΣ".encode(), "ΣİΣ".encode(),
+        "İabc".encode(), "abcİ".encode(), "Σabc".encode(), "abcΣ".encode(),
+        b"ab\xffcd", b"\xc4", b"ABC\xe2\x82", None, b"", b"HELLO, world",
+        "ΑΣ İİ ǅ ẞ".encode(),
+        b"\xe2\xc4\xb0", b"\xed\xa0\x80AB", b"\xc0\xafZ",
+    ]
+    df = spark.createDataFrame([(i, b) for i, b in enumerate(cases)], "id int, b binary")
+    c = F.col("b").cast("string")
+    got = df.select(
+        "id",
+        F.hex(fold(c)).alias("fold"),
+        F.hex(F.lower(F.translate(c, "İΣ", "iσ"))).alias("ref"),
+    ).collect()
+    assert len(got) == len(cases)
+    for r in got:
+        assert r["fold"] == r["ref"], repr(cases[r["id"]])

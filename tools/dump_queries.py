@@ -16,8 +16,9 @@ from mapreduce_docker_spark.registry import all_specs  # noqa: E402
 OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "QUERIES.md")
 
 
-def main() -> None:
-    specs = all_specs()
+def render(specs: dict | None = None) -> str:
+    """QUERIES.md's content for the registered queries."""
+    specs = all_specs() if specs is None else specs
     n_sql = sum(1 for s in specs.values() if s.sql is not None)
     by_sec: dict[str, list] = defaultdict(list)
     for s in specs.values():
@@ -36,8 +37,14 @@ def main() -> None:
         for s in sorted(by_sec[sec], key=lambda x: x.name):
             check = "oracle" if s.sql is not None else "rows-only"
             lines.append(f"| `{s.name}` | {sec} | {check} | {s.note} |")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    specs = all_specs()
+    n_sql = sum(1 for s in specs.values() if s.sql is not None)
     with open(OUT, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+        fh.write(render(specs))
     print(f"wrote {OUT} ({len(specs)} queries)")
 
     # keep COVERAGE.md's header counts in sync (they drifted in round 2 —
