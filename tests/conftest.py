@@ -23,3 +23,24 @@ def spark():
     s = get_spark(app_name="tests", master=master, shuffle_partitions=parts)
     yield s
     s.stop()
+
+
+_VANILLA_GATE = pytest.StashKey[tuple]()
+
+
+@pytest.hookimpl(trylast=True)  # after -k/-m deselection
+def pytest_collection_modifyitems(config, items):
+    # the bare-session gate is its own JVM: start it now so it runs beside
+    # the suite, and let its test join it
+    if config.option.collectonly:
+        return
+    for item in items:
+        if item.name == "test_vanilla_session_full_gate":
+            config.stash[_VANILLA_GATE] = item.module.start_gate()
+            break
+
+
+@pytest.fixture
+def vanilla_gate(request):
+    """(process, cwd) of the vanilla gate started at collection time."""
+    return request.config.stash[_VANILLA_GATE]

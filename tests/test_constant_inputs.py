@@ -40,6 +40,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from mapreduce_docker_spark import oracle
 from mapreduce_docker_spark.registry import all_specs
 from mapreduce_docker_spark.sources.catalog import TABLES
 
@@ -355,7 +356,7 @@ def test_corr_is_null_on_zero_variance_group(spark, constant_dir):
 # Cross-engine parity ON the degenerate fixtures: the per-round gate only
 # runs the oracles against the REAL fixture, so the degenerate branches of
 # the r8 CASE guards / WHERE filters would otherwise never be value-compared.
-# Same normalizer as the driver replica (tools/vanilla_gate.py).
+# Same comparator as every oracle gate (mapreduce_docker_spark.oracle).
 # ---------------------------------------------------------------------------
 
 _DEGEN_PARITY = {
@@ -385,33 +386,16 @@ _DEGEN_PARITY = {
 
 
 def _assert_oracle_parity_on(spark, fixture_dir, name):
-    import duckdb
-
-    from tools.vanilla_gate import normalize
-
     spec = all_specs()[name]
-    con = duckdb.connect()
+    con = oracle.connect(fixture_dir, TABLES)
     try:
-        for t in TABLES:
-            # the degenerate fixtures are Spark-written DIRECTORIES
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{fixture_dir}/{t}.parquet/*.parquet')"
-            )
         sdf = spec.fn(spark, fixture_dir)
-        srows, scols = sdf.collect(), sdf.columns
         ores = con.execute(spec.sql)
         ocols = [d[0] for d in ores.description]
-        orows = ores.fetchall()
+        mismatch = oracle.diff(sdf.columns, sdf.collect(), ocols, ores.fetchall())
     finally:
         con.close()
-    assert sorted(scols) == sorted(ocols), f"{name}: column names differ"
-    assert len(srows) == len(orows), (
-        f"{name}: rows {len(srows)} vs oracle {len(orows)}"
-    )
-    assert normalize([tuple(r) for r in srows], scols) == normalize(
-        orows, ocols
-    ), f"{name}: degenerate-branch values diverge from the oracle"
+    assert mismatch is None, f"{name}: degenerate branch diverges: {mismatch}"
 
 
 @pytest.mark.parametrize("name", _DEGEN_PARITY["constant_dir"])

@@ -18,6 +18,7 @@ import math
 
 from pyspark.sql import functions as F
 
+import crafted
 from mapreduce_docker_spark.operators.relational_queries import (
     agg_stats_quantity_price,
     orders_mom_revenue_growth,
@@ -29,17 +30,6 @@ from mapreduce_docker_spark.operators.funnel_queries import (
 from mapreduce_docker_spark.operators.textanalysis_queries import (
     text_tfidf_pair_cosine,
 )
-
-
-def _r(x: float, n: int) -> float:
-    """The engine's deterministic round-half-up (functions/rounding.py)."""
-    return math.floor(x * 10**n + 0.5) / 10**n
-
-
-def _write(df, tmp_path, table):
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
 
 
 def test_stats_co_moment_corr_hand_computed(spark, tmp_path):
@@ -59,13 +49,11 @@ def test_stats_co_moment_corr_hand_computed(spark, tmp_path):
         # group C: singleton -> every deviation moment is 0
         (3, 7.0, 3.0, "C"),
     ]
-    _write(
-        spark.createDataFrame(
-            rows, "l_orderkey long, l_quantity double, l_extendedprice double,"
-            " l_returnflag string"
-        ),
-        tmp_path,
-        "lineitem",
+    crafted.write(
+        spark, tmp_path, "lineitem",
+        rows,
+        "l_orderkey long, l_quantity double, l_extendedprice double,"
+        " l_returnflag string",
     )
     got = {
         r["l_returnflag"]: (r["qp_corr"], r["qp_covar"], r["q_stddev"], r["p_var"])
@@ -77,9 +65,9 @@ def test_stats_co_moment_corr_hand_computed(spark, tmp_path):
     var_p_a = (100.0 + 400.0 + 900.0) / 3.0 - 400.0
     assert got["A"] == (
         1.0,  # covar/(sd_q*sd_p) is algebraically 1; rounding keeps it
-        _r(covar_a, 4),
-        _r(sd_q_a, 6),
-        _r(var_p_a, 2),
+        crafted.r(covar_a, 4),
+        crafted.r(sd_q_a, 6),
+        crafted.r(var_p_a, 2),
     )
     # B) covar_pop = mean(5*p) - 5*mean(p) = 0 exactly; var_pop(p) = 25
     assert got["B"] == (None, 0.0, 0.0, 25.0)
@@ -99,12 +87,10 @@ def test_mom_growth_zero_base_hand_computed(spark, tmp_path):
         (4, d(3, 15), 0.0),    # Mar: 0.00 (the zero base)
         (5, d(4, 1), 50.0),    # Apr: prev = 0 -> NULL
     ]
-    _write(
-        spark.createDataFrame(
-            rows, "o_orderkey long, o_orderdate timestamp, o_totalprice double"
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        rows,
+        "o_orderkey long, o_orderdate timestamp, o_totalprice double",
     )
     got = {
         str(r["month"]): (r["n_orders"], r["revenue"], r["mom_growth"])
@@ -112,8 +98,8 @@ def test_mom_growth_zero_base_hand_computed(spark, tmp_path):
     }
     assert got == {
         "2024-01-01": (2, 100.0, None),          # no prior month
-        "2024-02-01": (1, 250.0, _r(1.5, 6)),    # (250-100)/100
-        "2024-03-01": (1, 0.0, _r(-1.0, 6)),     # (0-250)/250
+        "2024-02-01": (1, 250.0, crafted.r(1.5, 6)),    # (250-100)/100
+        "2024-03-01": (1, 0.0, crafted.r(-1.0, 6)),     # (0-250)/250
         "2024-04-01": (1, 50.0, None),           # zero base: undefined
     }
 
@@ -131,22 +117,19 @@ def test_abc_cut_lines_and_ties_hand_computed(spark, tmp_path):
         (103, 3, 15.0, 0.0),   # part 103: 15.00
         (104, 4, 5.0, 0.0),    # part 104: 5.00
     ]
-    _write(
-        spark.createDataFrame(
-            [(pk, ok, p, disc) for pk, ok, p, disc in rows],
-            "l_partkey long, l_orderkey long, l_extendedprice double,"
-            " l_discount double",
-        ),
-        tmp_path,
-        "lineitem",
+    crafted.write(
+        spark, tmp_path, "lineitem",
+        [(pk, ok, p, disc) for pk, ok, p, disc in rows],
+        "l_partkey long, l_orderkey long, l_extendedprice double,"
+        " l_discount double",
     )
     got = {
         r["abc"]: (r["n_parts"], r["class_revenue"], r["min_cum_share"], r["max_cum_share"])
         for r in parts_abc_classification(spark, str(tmp_path)).collect()
     }
     assert got == {
-        "A": (2, 80.0, _r(0.4, 6), _r(0.8, 6)),   # 0.8 <= 0.8 stays A
-        "B": (1, 15.0, _r(0.95, 6), _r(0.95, 6)),  # 0.95 <= 0.95 stays B
+        "A": (2, 80.0, crafted.r(0.4, 6), crafted.r(0.8, 6)),   # 0.8 <= 0.8 stays A
+        "B": (1, 15.0, crafted.r(0.95, 6), crafted.r(0.95, 6)),  # 0.95 <= 0.95 stays B
         "C": (1, 5.0, 1.0, 1.0),
     }
 
@@ -165,11 +148,7 @@ def test_tfidf_pair_cosine_hand_computed(spark, tmp_path):
         (12, "bb cc dd"),     # {S2}
         (13, "bb cc dd"),     # {S2}
     ]
-    _write(
-        spark.createDataFrame(docs, "doc_id long, text string"),
-        tmp_path,
-        "documents",
-    )
+    crafted.write(spark, tmp_path, "documents", docs, "doc_id long, text string")
     got = {
         (r["doc_a"], r["doc_b"]): r["cos_sim"]
         for r in text_tfidf_pair_cosine(spark, str(tmp_path)).collect()
@@ -177,12 +156,12 @@ def test_tfidf_pair_cosine_hand_computed(spark, tmp_path):
     w1, w2 = math.log(2.0), math.log(4.0 / 3.0)
     nrm10 = math.sqrt(w1 * w1 + w2 * w2)
     assert got == {
-        (10, 11): _r((w1 * w1) / (nrm10 * w1), 6),
+        (10, 11): crafted.r((w1 * w1) / (nrm10 * w1), 6),
         (12, 13): 1.0,
     }
     # the sub-threshold pair really was a candidate (shared S2) — its
     # absence is the threshold, not a join miss
-    assert _r(w2 / nrm10, 6) < 0.5
+    assert crafted.r(w2 / nrm10, 6) < 0.5
 
 
 def test_tfidf_boilerplate_corpus_is_pairless(spark, tmp_path):
@@ -191,11 +170,7 @@ def test_tfidf_boilerplate_corpus_is_pairless(spark, tmp_path):
     zero-norm vectors are defined out (oracle HAVING matches) and the
     result is EMPTY, not a divide-by-zero and not a flood of NaN pairs."""
     docs = [(i, "om om om") for i in range(1, 7)]
-    _write(
-        spark.createDataFrame(docs, "doc_id long, text string"),
-        tmp_path,
-        "documents",
-    )
+    crafted.write(spark, tmp_path, "documents", docs, "doc_id long, text string")
     assert text_tfidf_pair_cosine(spark, str(tmp_path)).collect() == []
 
 
@@ -220,31 +195,29 @@ def test_daily_zscores_hand_computed_and_rounded_cut(spark, tmp_path):
         (7, t0, "v", 5.0),
         (8, t0 + day, "v", 5.0),
     ]
-    _write(
-        spark.createDataFrame(
-            rows, "event_id long, ts timestamp, event_type string, value double"
-        ),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        rows,
+        "event_id long, ts timestamp, event_type string, value double",
     )
     got = {
         (r["event_type"], str(r["event_date"])): (r["zscore"], r["is_anomaly"])
         for r in events_daily_anomaly_zscores(spark, str(tmp_path)).collect()
     }
     # type t by hand: mu=20, sample std = sqrt(((10-20)^2+(0)^2+(10)^2)/2) = 10
-    assert got[("t", "2024-03-01")] == (_r(-1.0, 4), False)
+    assert got[("t", "2024-03-01")] == (crafted.r(-1.0, 4), False)
     assert got[("t", "2024-03-02")] == (0.0, False)
-    assert got[("t", "2024-03-03")] == (_r(1.0, 4), False)
+    assert got[("t", "2024-03-03")] == (crafted.r(1.0, 4), False)
     # type u: the engine computes var_num = sq - s^2/n on the ROUNDED
     # daily totals (100.0, 100.02); replicate the same float arithmetic
-    a, b = 100.0, _r(60.02 + 40.0, 2)
+    a, b = 100.0, crafted.r(60.02 + 40.0, 2)
     sq, s = a * a + b * b, a + b
     var_num = sq - s * s / 2.0
-    assert _r(var_num, 4) > 0  # the cut keeps this group
+    assert crafted.r(var_num, 4) > 0  # the cut keeps this group
     sd = math.sqrt(var_num / 1.0)
     mu = s / 2.0
-    assert got[("u", "2024-03-01")] == (_r((a - mu) / sd, 4), False)
-    assert got[("u", "2024-03-02")] == (_r((b - mu) / sd, 4), False)
+    assert got[("u", "2024-03-01")] == (crafted.r((a - mu) / sd, 4), False)
+    assert got[("u", "2024-03-02")] == (crafted.r((b - mu) / sd, 4), False)
     # type v: identical totals -> var_num identically 0 -> NULL z
     assert got[("v", "2024-03-01")] == (None, None)
     assert got[("v", "2024-03-02")] == (None, None)
@@ -280,12 +253,10 @@ def test_streaming_expiry_dedup_hand_computed(spark, tmp_path):
         (9, t0 + 4 * day, 3, "click"),
         (10, t0 + 5 * day, 4, "buy"),            # only on a skipped day
     ]
-    _write(
-        spark.createDataFrame(
-            rows, "event_id long, ts timestamp, user_id long, event_type string"
-        ),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string",
     )
     got = sorted(
         (r["user_id"], r["event_type"], str(r["day_ts"]))

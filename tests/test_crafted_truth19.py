@@ -19,6 +19,7 @@ import math
 
 from pyspark.sql import functions as F
 
+import crafted
 from mapreduce_docker_spark.operators.relational_queries import (
     sample_stratified_hash,
 )
@@ -34,20 +35,9 @@ from mapreduce_docker_spark.operators.tpch_queries import (
 )
 
 
-def _r(x: float, n: int) -> float:
-    """The engine's deterministic round-half-up (functions/rounding.py)."""
-    return math.floor(x * 10**n + 0.5) / 10**n
-
-
 def _md5_bucket(prefix: str, key: int, mod: int) -> int:
     """Pure-Python twin of the engines' md5-prefix hash bucket."""
     return int(hashlib.md5(f"{prefix}{key}".encode()).hexdigest()[:8], 16) % mod
-
-
-def _write(df, tmp_path, table):
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
 
 
 def test_stratified_hash_membership_recomputed_in_python(spark, tmp_path):
@@ -61,12 +51,10 @@ def test_stratified_hash_membership_recomputed_in_python(spark, tmp_path):
         (i, "error" if i % 3 == 0 else "click", dt.datetime(2024, 1, 1))
         for i in range(1, 301)
     ]
-    _write(
-        spark.createDataFrame(
-            rows, "event_id long, event_type string, ts timestamp"
-        ),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        rows,
+        "event_id long, event_type string, ts timestamp",
     )
     got = sorted(
         (r["event_id"], r["event_type"], r["rate_pct"])
@@ -95,13 +83,10 @@ def test_temperature_mix_rates_and_membership_hand_computed(spark, tmp_path):
         + [(i, "B") for i in range(200, 204)]
         + [(300, "C")]
     )
-    _write(
-        spark.createDataFrame(
-            [(d, s, f"text {d}") for d, s in docs],
-            "doc_id long, source string, text string",
-        ),
-        tmp_path,
-        "documents",
+    crafted.write(
+        spark, tmp_path, "documents",
+        [(d, s, f"text {d}") for d, s in docs],
+        "doc_id long, source string, text string",
     )
     got = sorted(
         (r["doc_id"], r["source"], r["thr"])
@@ -139,18 +124,16 @@ def test_salted_sums_count_rows_not_nonnull_keys(spark, tmp_path):
         (4, 1, 4.0, t),
         (5, 2, 7.25, t),
     ]
-    _write(
-        spark.createDataFrame(
-            rows, "event_id long, user_id long, value double, ts timestamp"
-        ),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        rows,
+        "event_id long, user_id long, value double, ts timestamp",
     )
     got = {
         r["user_id"]: (r["n_events"], r["total_value"])
         for r in skew_salted_user_value_sums(spark, str(tmp_path)).collect()
     }
-    assert got == {1: (4, _r(1.5 + 2.5 + 4.0, 2)), 2: (1, 7.25)}
+    assert got == {1: (4, crafted.r(1.5 + 2.5 + 4.0, 2)), 2: (1, 7.25)}
 
 
 def test_q21_sole_late_supplier_multiplicity_hand_scenario(spark, tmp_path):
@@ -162,23 +145,17 @@ def test_q21_sole_late_supplier_multiplicity_hand_scenario(spark, tmp_path):
     400 is not status F, order 500 credits s2 once. Both the three-scan
     EXISTS/NOT-EXISTS form and the one-pass window rewrite must emit the
     identical hand truth."""
-    _write(
-        spark.createDataFrame(
-            [(1, "Supp#1"), (2, "Supp#2"), (3, "Supp#3")],
-            "s_suppkey long, s_name string",
-        ),
-        tmp_path,
-        "supplier",
+    crafted.write(
+        spark, tmp_path, "supplier",
+        [(1, "Supp#1"), (2, "Supp#2"), (3, "Supp#3")],
+        "s_suppkey long, s_name string",
     )
-    _write(
-        spark.createDataFrame(
-            [
-                (100, "F"), (200, "F"), (300, "F"), (400, "O"), (500, "F"),
-            ],
-            "o_orderkey long, o_orderstatus string",
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        [
+            (100, "F"), (200, "F"), (300, "F"), (400, "O"), (500, "F"),
+        ],
+        "o_orderkey long, o_orderstatus string",
     )
     li = [
         (100, 1, "R"), (100, 1, "R"), (100, 2, "N"),  # s1 sole-R, twice
@@ -187,12 +164,10 @@ def test_q21_sole_late_supplier_multiplicity_hand_scenario(spark, tmp_path):
         (400, 1, "R"), (400, 2, "N"),                 # order not F
         (500, 2, "R"), (500, 3, "N"),                 # s2 sole-R once
     ]
-    _write(
-        spark.createDataFrame(
-            li, "l_orderkey long, l_suppkey long, l_returnflag string"
-        ),
-        tmp_path,
-        "lineitem",
+    crafted.write(
+        spark, tmp_path, "lineitem",
+        li,
+        "l_orderkey long, l_suppkey long, l_returnflag string",
     )
     want = [("Supp#1", 2), ("Supp#2", 1)]
     for fn in (q21_waiting_suppliers, q21_waiting_suppliers_onepass):
@@ -210,10 +185,10 @@ def test_langid_nb_posterior_and_tie_break_hand_computed(spark, tmp_path):
         (1, "aa", "x x y"),
         (2, "bb", "x z z"),
     ]
-    _write(
-        spark.createDataFrame(docs, "doc_id long, lang string, text string"),
-        tmp_path,
-        "documents",
+    crafted.write(
+        spark, tmp_path, "documents",
+        docs,
+        "doc_id long, lang string, text string",
     )
     got = {
         r["doc_id"]: (r["pred_lang"], r["score"], r["correct"])
@@ -223,18 +198,15 @@ def test_langid_nb_posterior_and_tie_break_hand_computed(spark, tmp_path):
     # lp(seen twice) = ln(3/6), lp(seen once) = ln(2/6), lp(unseen) = ln(1/6)
     prior = math.log(1.0 / 2.0)
     win = math.log(3.0 / 6.0) * 2 + math.log(2.0 / 6.0) + prior
-    assert got[1] == ("aa", _r(win, 6), True)
-    assert got[2] == ("bb", _r(win, 6), True)  # symmetric corpus
+    assert got[1] == ("aa", crafted.r(win, 6), True)
+    assert got[2] == ("bb", crafted.r(win, 6), True)  # symmetric corpus
 
     # the tie: both docs are the single token 'q' -> identical smoothed
     # posteriors under both languages -> row_number breaks by cand_lang asc
-    _write(
-        spark.createDataFrame(
-            [(1, "aa", "q"), (2, "bb", "q")],
-            "doc_id long, lang string, text string",
-        ),
-        tmp_path,
-        "documents",
+    crafted.write(
+        spark, tmp_path, "documents",
+        [(1, "aa", "q"), (2, "bb", "q")],
+        "doc_id long, lang string, text string",
     )
     tie = {
         r["doc_id"]: (r["pred_lang"], r["correct"])
@@ -249,12 +221,10 @@ def test_unigram_surprisal_hand_computed(spark, tmp_path):
     avg_nll = -(2 ln(1/2) + ln(1/4)) / 3 and doc 2 ('z') has exactly
     ln 4. No smoothing — every scored token is in the LM by
     construction."""
-    _write(
-        spark.createDataFrame(
-            [(1, "x x y"), (2, "z")], "doc_id long, text string"
-        ),
-        tmp_path,
-        "documents",
+    crafted.write(
+        spark, tmp_path, "documents",
+        [(1, "x x y"), (2, "z")],
+        "doc_id long, text string",
     )
     got = {
         r["doc_id"]: (r["n_tokens"], r["avg_nll"])
@@ -262,6 +232,6 @@ def test_unigram_surprisal_hand_computed(spark, tmp_path):
     }
     d1 = -(2 * math.log(2.0 / 4.0) + math.log(1.0 / 4.0)) / 3.0
     assert got == {
-        1: (3, _r(d1, 6)),
-        2: (1, _r(-math.log(1.0 / 4.0), 6)),
+        1: (3, crafted.r(d1, 6)),
+        2: (1, crafted.r(-math.log(1.0 / 4.0), 6)),
     }

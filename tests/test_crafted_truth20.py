@@ -11,6 +11,7 @@ from __future__ import annotations
 import datetime as dt
 import math
 
+import crafted
 from mapreduce_docker_spark.operators.relational_queries import (
     q3_shipping_priority,
 )
@@ -20,17 +21,6 @@ from mapreduce_docker_spark.operators.textanalysis_queries import (
     text_tfidf_top_term,
 )
 from mapreduce_docker_spark.operators.wordcount_queries import q_wordcount_rdd
-
-
-def _r(x: float, n: int) -> float:
-    """The engine's deterministic round-half-up (functions/rounding.py)."""
-    return math.floor(x * 10**n + 0.5) / 10**n
-
-
-def _write(df, tmp_path, table):
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
 
 
 # hand walk of BPE_PATTERN over "It's 2024,  naïve—test!":
@@ -51,12 +41,10 @@ _D2_PIECES = ["x", " y", " y", " "]
 
 
 def test_bpe_token_stats_hand_walked(spark, tmp_path):
-    _write(
-        spark.createDataFrame(
-            [(1, _D1), (2, _D2)], "doc_id long, text string"
-        ),
-        tmp_path,
-        "documents",
+    crafted.write(
+        spark, tmp_path, "documents",
+        [(1, _D1), (2, _D2)],
+        "doc_id long, text string",
     )
     got = {
         r["doc_id"]: (r["n_pieces"], r["n_distinct_pieces"], r["n_ws_tokens"])
@@ -73,12 +61,10 @@ def test_bpe_top_pieces_binary_collation_hand_ranked(spark, tmp_path):
     order by BINARY (UTF-8 codepoint) collation — single space before
     double space before ' 2024', ASCII punctuation before letters, and
     the multi-byte em-dash LAST."""
-    _write(
-        spark.createDataFrame(
-            [(1, _D1), (2, _D2)], "doc_id long, text string"
-        ),
-        tmp_path,
-        "documents",
+    crafted.write(
+        spark, tmp_path, "documents",
+        [(1, _D1), (2, _D2)],
+        "doc_id long, text string",
     )
     got = [
         (r["piece"], r["cnt"])
@@ -97,12 +83,10 @@ def test_tfidf_top_term_idf_zero_and_tie_hand_computed(spark, tmp_path):
     2·ln3; doc 2's best is 'c' (its 'b' has df=2, idf=ln(3/2) — lower);
     doc 3's 'd' and 'e' tie EXACTLY (same tf, same df) and the window
     resolves by term ascending."""
-    _write(
-        spark.createDataFrame(
-            [(1, "a a b"), (2, "b c"), (3, "d e")], "doc_id long, text string"
-        ),
-        tmp_path,
-        "documents",
+    crafted.write(
+        spark, tmp_path, "documents",
+        [(1, "a a b"), (2, "b c"), (3, "d e")],
+        "doc_id long, text string",
     )
     got = {
         r["doc_id"]: (r["term"], r["tfidf"])
@@ -110,9 +94,9 @@ def test_tfidf_top_term_idf_zero_and_tie_hand_computed(spark, tmp_path):
     }
     ln3 = math.log(3.0)
     assert got == {
-        1: ("a", _r(2 * ln3, 6)),
-        2: ("c", _r(ln3, 6)),
-        3: ("d", _r(ln3, 6)),  # tie with 'e' -> term asc
+        1: ("a", crafted.r(2 * ln3, 6)),
+        2: ("c", crafted.r(ln3, 6)),
+        3: ("d", crafted.r(ln3, 6)),  # tie with 'e' -> term asc
     }
 
 
@@ -121,13 +105,10 @@ def test_wordcount_rdd_null_text_hand_computed(spark, tmp_path):
     a NULL document contributes nothing — the Python flatMap must guard
     explicitly where explode(NULL) is free — and [a-z]+ tokenization of
     lowered text merges case variants."""
-    _write(
-        spark.createDataFrame(
-            [(1, "The cat the CAT"), (2, None), (3, "dog!")],
-            "doc_id long, text string",
-        ),
-        tmp_path,
-        "documents",
+    crafted.write(
+        spark, tmp_path, "documents",
+        [(1, "The cat the CAT"), (2, None), (3, "dog!")],
+        "doc_id long, text string",
     )
     got = {
         r["word"]: r["cnt"] for r in q_wordcount_rdd(spark, str(tmp_path)).collect()
@@ -140,43 +121,34 @@ def test_q3_predicate_branches_hand_scenario(spark, tmp_path):
     non-BUILDING customer, an order past the date cut, a lineitem shipped
     before the cut on a qualifying order, and two qualifying orders whose
     hand-computed revenues (200 > 140 = 100·0.9 + 50) fix the sort."""
-    _write(
-        spark.createDataFrame(
-            [(1, "BUILDING"), (2, "AUTOMOBILE")],
-            "c_custkey long, c_mktsegment string",
-        ),
-        tmp_path,
-        "customer",
+    crafted.write(
+        spark, tmp_path, "customer",
+        [(1, "BUILDING"), (2, "AUTOMOBILE")],
+        "c_custkey long, c_mktsegment string",
     )
     d = dt.datetime
-    _write(
-        spark.createDataFrame(
-            [
-                (10, 1, d(1997, 6, 1)),   # qualifies
-                (20, 1, d(1998, 6, 1)),   # orderdate past the cut
-                (30, 2, d(1997, 1, 1)),   # wrong segment
-                (40, 1, d(1997, 7, 1)),   # qualifies, higher revenue
-            ],
-            "o_orderkey long, o_custkey long, o_orderdate timestamp",
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        [
+            (10, 1, d(1997, 6, 1)),   # qualifies
+            (20, 1, d(1998, 6, 1)),   # orderdate past the cut
+            (30, 2, d(1997, 1, 1)),   # wrong segment
+            (40, 1, d(1997, 7, 1)),   # qualifies, higher revenue
+        ],
+        "o_orderkey long, o_custkey long, o_orderdate timestamp",
     )
-    _write(
-        spark.createDataFrame(
-            [
-                (10, 100.0, 0.1, d(1998, 5, 1)),   # 90.00
-                (10, 50.0, 0.0, d(1998, 2, 1)),    # 50.00
-                (10, 999.0, 0.0, d(1997, 12, 1)),  # shipped BEFORE the cut
-                (20, 77.0, 0.0, d(1999, 1, 1)),    # order fails the date cut
-                (30, 88.0, 0.0, d(1998, 5, 1)),    # wrong segment
-                (40, 200.0, 0.0, d(1998, 3, 1)),   # 200.00
-            ],
-            "l_orderkey long, l_extendedprice double, l_discount double,"
-            " l_shipdate timestamp",
-        ),
-        tmp_path,
-        "lineitem",
+    crafted.write(
+        spark, tmp_path, "lineitem",
+        [
+            (10, 100.0, 0.1, d(1998, 5, 1)),   # 90.00
+            (10, 50.0, 0.0, d(1998, 2, 1)),    # 50.00
+            (10, 999.0, 0.0, d(1997, 12, 1)),  # shipped BEFORE the cut
+            (20, 77.0, 0.0, d(1999, 1, 1)),    # order fails the date cut
+            (30, 88.0, 0.0, d(1998, 5, 1)),    # wrong segment
+            (40, 200.0, 0.0, d(1998, 3, 1)),   # 200.00
+        ],
+        "l_orderkey long, l_extendedprice double, l_discount double,"
+        " l_shipdate timestamp",
     )
     got = [
         (r["l_orderkey"], r["revenue"], r["o_orderdate"])
@@ -184,5 +156,5 @@ def test_q3_predicate_branches_hand_scenario(spark, tmp_path):
     ]
     assert got == [
         (40, 200.0, d(1997, 7, 1)),
-        (10, _r(100.0 * 0.9 + 50.0, 2), d(1997, 6, 1)),
+        (10, crafted.r(100.0 * 0.9 + 50.0, 2), d(1997, 6, 1)),
     ]

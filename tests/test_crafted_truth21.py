@@ -12,8 +12,8 @@ from __future__ import annotations
 
 import datetime as dt
 import hashlib
-import math
 
+import crafted
 from mapreduce_docker_spark.operators.funnel_queries import (
     events_rolling_7d_active_users,
 )
@@ -28,17 +28,6 @@ from mapreduce_docker_spark.operators.membership_queries import (
     q_bloom_benchmark_filter,
 )
 from mapreduce_docker_spark.functions.texthash import MINHASH_P
-
-
-def _r(x: float, n: int) -> float:
-    """The engine's deterministic round-half-up (functions/rounding.py)."""
-    return math.floor(x * 10**n + 0.5) / 10**n
-
-
-def _write(df, tmp_path, table):
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
 
 
 def test_rolling_7d_window_boundaries_hand_computed(spark, tmp_path):
@@ -56,12 +45,10 @@ def test_rolling_7d_window_boundaries_hand_computed(spark, tmp_path):
         (4, 3, t(2024, 1, 7, 12)),  # day 6
         (5, 4, t(2024, 1, 8, 12)),  # day 7
     ]
-    _write(
-        spark.createDataFrame(
-            rows, "event_id long, user_id long, ts timestamp"
-        ),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        rows,
+        "event_id long, user_id long, ts timestamp",
     )
     got = {
         str(r["event_date"]): (r["n_events"], r["dau"], r["wau_7d"])
@@ -79,25 +66,20 @@ def test_degree_distribution_hand_computed(spark, tmp_path):
     (customer, supplier) pairs, so customer 1 trading with supplier 1
     through TWO different orders is still one edge. Graph: c1-{s1,s2},
     c2-{s1} -> customer degrees {2:1, 1:1}, supplier degrees {2:1, 1:1}."""
-    _write(
-        spark.createDataFrame(
-            [(10, 1), (11, 1), (12, 2)], "o_orderkey long, o_custkey long"
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        [(10, 1), (11, 1), (12, 2)],
+        "o_orderkey long, o_custkey long",
     )
-    _write(
-        spark.createDataFrame(
-            [
-                (10, 100),  # c1-s1
-                (10, 200),  # c1-s2
-                (11, 100),  # c1-s1 AGAIN via another order: same edge
-                (12, 100),  # c2-s1
-            ],
-            "l_orderkey long, l_suppkey long",
-        ),
-        tmp_path,
-        "lineitem",
+    crafted.write(
+        spark, tmp_path, "lineitem",
+        [
+            (10, 100),  # c1-s1
+            (10, 200),  # c1-s2
+            (11, 100),  # c1-s1 AGAIN via another order: same edge
+            (12, 100),  # c2-s1
+        ],
+        "l_orderkey long, l_suppkey long",
     )
     got = sorted(
         (r["side"], r["degree"], r["n_nodes"])
@@ -120,13 +102,10 @@ def test_udtf_trigrams_positions_hand_computed(spark, tmp_path):
         udf_udtf_analyze_trigrams,
     )
 
-    _write(
-        spark.createDataFrame(
-            [(1, "a b c d"), (2, "x y"), (60, "p q r s")],
-            "doc_id long, text string",
-        ),
-        tmp_path,
-        "documents",
+    crafted.write(
+        spark, tmp_path, "documents",
+        [(1, "a b c d"), (2, "x y"), (60, "p q r s")],
+        "doc_id long, text string",
     )
     got = sorted(
         (r["doc_id"], r["pos"], r["w0"], r["w1"], r["w2"])
@@ -154,11 +133,7 @@ def test_bloom_build_recomputed_in_python(spark, tmp_path):
         (4, "Epsilon zeta ETA theta"),   # case-folds before tokenizing
         (25, "outside the bench cut"),   # doc_id >= 20: excluded
     ]
-    _write(
-        spark.createDataFrame(docs, "doc_id long, text string"),
-        tmp_path,
-        "documents",
-    )
+    crafted.write(spark, tmp_path, "documents", docs, "doc_id long, text string")
     got = q_bloom_benchmark_filter(spark, str(tmp_path)).collect()[0]
 
     def shingles(text):
@@ -182,7 +157,7 @@ def test_bloom_build_recomputed_in_python(spark, tmp_path):
     for _ in range(BLOOM_K):
         fp = fp * fill
     assert (got["n_keys"], got["n_bits_set"]) == (len(keys), len(bits))
-    assert got["fill_ratio"] == _r(fill, 6)
-    assert got["approx_fp_rate"] == _r(fp, 8)
+    assert got["fill_ratio"] == crafted.r(fill, 6)
+    assert got["approx_fp_rate"] == crafted.r(fp, 8)
     # sanity on the fixture itself: dedup and short-doc branches both fired
     assert len(keys) == 2 + 1 + 2  # doc1 pair (doc2 dup) + doc3 whole + doc4 pair

@@ -17,9 +17,9 @@ on both sides."""
 from __future__ import annotations
 
 import hashlib
-import math
 import re
 
+import crafted
 from mapreduce_docker_spark.functions.texthash import (
     BANDS,
     MINHASH_A,
@@ -33,10 +33,6 @@ from mapreduce_docker_spark.operators.dedup_queries import (
 )
 
 R = NUM_HASHES // BANDS
-
-
-def _r(x: float, n: int) -> float:
-    return math.floor(x * 10**n + 0.5) / 10**n
 
 
 def _shingles(text: str) -> set[str]:
@@ -77,7 +73,7 @@ def _python_pipeline(docs: dict[int, str]):
     }
     verified = {}
     for a, b in cands:
-        j = _r(len(hs[a] & hs[b]) / len(hs[a] | hs[b]), 4)
+        j = crafted.r(len(hs[a] & hs[b]) / len(hs[a] | hs[b]), 4)
         if j >= JACCARD_THRESHOLD:
             verified[(a, b)] = j
     return cands, verified
@@ -159,6 +155,6 @@ def test_minhash_lsh_pipeline_recomputed_in_python(spark, tmp_path):
     # the branches the fixture was engineered to exercise really fired:
     assert got[(10, 50)] == 1.0          # identical twin
     assert (10, 20) in got               # the searched similar pair
-    assert got[(10, 20)] == _r(0.5, 4)   # exactly on-threshold: kept (>=)
+    assert got[(10, 20)] == crafted.r(0.5, 4)   # exactly on-threshold: kept (>=)
     assert (30, 40) in cands and (30, 40) not in got  # threshold rejection
     assert all(60 not in pair for pair in got)

@@ -19,6 +19,7 @@ from __future__ import annotations
 import hashlib
 from collections import Counter
 
+import crafted
 from mapreduce_docker_spark.functions.texthash import (
     MINHASH_A,
     MINHASH_B,
@@ -39,12 +40,6 @@ from mapreduce_docker_spark.operators.textanalysis_queries import (
 _HIGH = set("89abcdef")
 
 
-def _write(df, tmp_path, table):
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
 def _simhash(tokens: list[str]) -> int:
     sums = [0] * SIMHASH_BITS
     for t in tokens:
@@ -62,11 +57,7 @@ def test_simhash_recomputed_in_python(spark, tmp_path):
         (4, "alpha beta gamma"),  # identical twin of doc 1
         (5, ""),                  # zero tokens: NO fingerprint row
     ]
-    _write(
-        spark.createDataFrame(docs, "doc_id long, text string"),
-        tmp_path,
-        "documents",
-    )
+    crafted.write(spark, tmp_path, "documents", docs, "doc_id long, text string")
     got = {
         r["doc_id"]: r["simhash"]
         for r in dedup_simhash(spark, str(tmp_path)).collect()
@@ -128,11 +119,7 @@ def test_cms_counters_and_point_queries_recomputed_in_python(spark, tmp_path):
         (d, " ".join(tokens[d * 40 : (d + 1) * 40]))
         for d in range((len(tokens) + 39) // 40)
     ]
-    _write(
-        spark.createDataFrame(docs, "doc_id long, text string"),
-        tmp_path,
-        "documents",
-    )
+    crafted.write(spark, tmp_path, "documents", docs, "doc_id long, text string")
     words = Counter(tokens)
     counters, est = _cms(words)
 

@@ -20,6 +20,7 @@ import math
 
 import numpy as np
 
+import crafted
 from mapreduce_docker_spark.operators.dedup_queries import (
     COSINE_DUP_THRESHOLD,
     DEDUP_EMB_DIM,
@@ -30,10 +31,6 @@ from mapreduce_docker_spark.operators.dedup_queries import (
 )
 
 N_PLANES = DEDUP_SRP_BANDS * DEDUP_SRP_BITS
-
-
-def _r(x: float, n: int) -> float:
-    return math.floor(x * 10**n + 0.5) / 10**n
 
 
 def _planes() -> list[list[float]]:
@@ -125,7 +122,7 @@ def test_srp_embedding_pairs_recomputed_in_python(spark, tmp_path):
         return (
             bool(_bands_of(bb) & _bands_of(bv))
             and _agreement(bb, bv) >= DEDUP_SRP_AGREE_MIN
-            and COSINE_DUP_THRESHOLD <= _r(_cos(base, v), 4) < 1.0
+            and COSINE_DUP_THRESHOLD <= crafted.r(_cos(base, v), 4) < 1.0
         )
 
     def band_but_no_hamming(v):
@@ -140,7 +137,7 @@ def test_srp_embedding_pairs_recomputed_in_python(spark, tmp_path):
         return (
             bool(_bands_of(bb) & _bands_of(bv))
             and _agreement(bb, bv) >= DEDUP_SRP_AGREE_MIN
-            and _r(_cos(base, v), 4) < COSINE_DUP_THRESHOLD
+            and crafted.r(_cos(base, v), 4) < COSINE_DUP_THRESHOLD
         )
 
     # mix the base into the candidate family so similar vectors exist to
@@ -196,9 +193,9 @@ def test_srp_embedding_pairs_recomputed_in_python(spark, tmp_path):
         p for p in band_pairs if _agreement(bits[p[0]], bits[p[1]]) >= DEDUP_SRP_AGREE_MIN
     }
     want = {
-        p: _r(_cos(live[p[0]], live[p[1]]), 4)
+        p: crafted.r(_cos(live[p[0]], live[p[1]]), 4)
         for p in ham_pairs
-        if _r(_cos(live[p[0]], live[p[1]]), 4) >= COSINE_DUP_THRESHOLD
+        if crafted.r(_cos(live[p[0]], live[p[1]]), 4) >= COSINE_DUP_THRESHOLD
     }
     assert got == want, (got, want)
 

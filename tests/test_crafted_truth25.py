@@ -20,8 +20,8 @@ branch provably fires BEFORE the driver window re-certifies the name.
 from __future__ import annotations
 
 import datetime as dt
-import math
 
+import crafted
 from mapreduce_docker_spark.operators.funnel_queries import (
     SESSION_GAP_US,
     events_daily_gapfill_locf,
@@ -30,17 +30,6 @@ from mapreduce_docker_spark.operators.funnel_queries import (
     events_retention_cohorts,
 )
 from mapreduce_docker_spark.operators.relational_queries import orders_cohort_ltv
-
-
-def _r(x: float, n: int) -> float:
-    """The engine's deterministic round-half-up (functions/rounding.py)."""
-    return math.floor(x * 10**n + 0.5) / 10**n
-
-
-def _write(df, tmp_path, table):
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
 
 
 def _us(t: dt.datetime) -> dt.datetime:
@@ -65,12 +54,10 @@ def test_first_touch_gap_equality_and_same_us_tie(spark, tmp_path):
         (5, 2, "view", t0),
         (6, 2, "purchase", t0 + dt.timedelta(hours=1)),
     ]
-    _write(
-        spark.createDataFrame(
-            rows, "event_id long, user_id long, event_type string, ts timestamp"
-        ),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        rows,
+        "event_id long, user_id long, event_type string, ts timestamp",
     )
     got = {
         r["first_touch"]: (r["n_sessions"], r["n_converted"], r["conversion_rate"])
@@ -103,12 +90,10 @@ def test_funnel_window_all_three_edges(spark, tmp_path):
         (8, 3, "click", t0),            # no view: contributes nothing
         (9, 3, "purchase", t0 + h),
     ]
-    _write(
-        spark.createDataFrame(
-            rows, "event_id long, user_id long, event_type string, ts timestamp"
-        ),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        rows,
+        "event_id long, user_id long, event_type string, ts timestamp",
     )
     out = events_funnel_within_window(spark, str(tmp_path)).collect()
     assert len(out) == 1
@@ -127,11 +112,7 @@ def test_retention_cohorts_monday_weeks_hand_computed(spark, tmp_path):
         (3, dt.datetime(2024, 1, 3, 12)),   # week of Jan 1, never returns
         (2, dt.datetime(2024, 1, 8, 15)),   # cohort Jan 8
     ]
-    _write(
-        spark.createDataFrame(rows, "user_id long, ts timestamp"),
-        tmp_path,
-        "events",
-    )
+    crafted.write(spark, tmp_path, "events", rows, "user_id long, ts timestamp")
     got = {
         (str(r["cohort_week"]), r["week_offset"]): (
             r["n_active"],
@@ -142,7 +123,7 @@ def test_retention_cohorts_monday_weeks_hand_computed(spark, tmp_path):
     }
     assert got == {
         ("2024-01-01", 0): (2, 2, 1.0),       # users 1 and 3
-        ("2024-01-01", 1): (1, 2, _r(1 / 2, 4)),  # only user 1 returned
+        ("2024-01-01", 1): (1, 2, crafted.r(1 / 2, 4)),  # only user 1 returned
         ("2024-01-08", 0): (1, 1, 1.0),       # user 2's own cohort
     }
 
@@ -160,10 +141,10 @@ def test_gapfill_locf_global_bounds_and_leading_gap(spark, tmp_path):
         (500, dt.datetime(2024, 1, 1, 1), 9.0),  # widens lo to Jan 1
         (500, dt.datetime(2024, 1, 5, 1), 9.0),  # widens hi to Jan 5
     ]
-    _write(
-        spark.createDataFrame(rows, "user_id long, ts timestamp, value double"),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        rows,
+        "user_id long, ts timestamp, value double",
     )
     got = {
         str(r["event_date"]): (r["v_raw"], r["v_filled"], r["was_gap"])
@@ -189,13 +170,10 @@ def test_cohort_ltv_skipped_offset_across_year_boundary(spark, tmp_path):
         (2, 1, 50.0, dt.datetime(2024, 2, 10)),
         (3, 2, 30.0, dt.datetime(2023, 11, 20)),
     ]
-    _write(
-        spark.createDataFrame(
-            rows,
-            "o_orderkey long, o_custkey long, o_totalprice double, o_orderdate timestamp",
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        rows,
+        "o_orderkey long, o_custkey long, o_totalprice double, o_orderdate timestamp",
     )
     got = {
         (str(r["cohort_month"]), r["month_offset"]): (

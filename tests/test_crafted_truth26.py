@@ -22,8 +22,8 @@ next-round #3), fixtures built at the cut lines:
 from __future__ import annotations
 
 import datetime as dt
-import math
 
+import crafted
 from mapreduce_docker_spark.operators.profile_queries import (
     SKEW_TOP_K,
     dq_key_skew_report,
@@ -37,17 +37,6 @@ from mapreduce_docker_spark.operators.relational_queries import (
 from mapreduce_docker_spark.operators.tpch_queries import q2_min_cost_supplier
 
 
-def _r(x: float, n: int) -> float:
-    """The engine's deterministic round-half-up (functions/rounding.py)."""
-    return math.floor(x * 10**n + 0.5) / 10**n
-
-
-def _write(df, tmp_path, table):
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
 def test_q2_min_cost_tie_and_region_scope(spark, tmp_path):
     """Part 1's EU minimum unit cost is 5.0, reached by BOTH s1 (10.0/2)
     and s2 (20.0/4) — two output rows, not an arbitrary survivor. The
@@ -55,46 +44,35 @@ def test_q2_min_cost_tie_and_region_scope(spark, tmp_path):
     AFTER the region join). s1's second, worse line (12.0/2 = 6.0) folds
     into the per-(part, supplier) min first. Part 4 checks the p_size 15
     inclusive edge; parts 2 (size 16) and 3 (type SMALL) never qualify."""
-    _write(
-        spark.createDataFrame(
-            [(0, "EUROPE"), (1, "ASIA")], "r_regionkey int, r_name string"
-        ),
-        tmp_path,
-        "region",
+    crafted.write(
+        spark, tmp_path, "region",
+        [(0, "EUROPE"), (1, "ASIA")],
+        "r_regionkey int, r_name string",
     )
-    _write(
-        spark.createDataFrame(
-            [(0, "GERMANY", 0), (1, "CHINA", 1)],
-            "n_nationkey int, n_name string, n_regionkey int",
-        ),
-        tmp_path,
-        "nation",
+    crafted.write(
+        spark, tmp_path, "nation",
+        [(0, "GERMANY", 0), (1, "CHINA", 1)],
+        "n_nationkey int, n_name string, n_regionkey int",
     )
-    _write(
-        spark.createDataFrame(
-            [
-                (1, "Supplier#1", 0, 1000.0),
-                (2, "Supplier#2", 0, 2000.0),
-                (3, "Supplier#3", 0, 1500.0),
-                (4, "Supplier#4", 1, 9000.0),  # ASIA: out of scope
-            ],
-            "s_suppkey long, s_name string, s_nationkey int, s_acctbal double",
-        ),
-        tmp_path,
-        "supplier",
+    crafted.write(
+        spark, tmp_path, "supplier",
+        [
+            (1, "Supplier#1", 0, 1000.0),
+            (2, "Supplier#2", 0, 2000.0),
+            (3, "Supplier#3", 0, 1500.0),
+            (4, "Supplier#4", 1, 9000.0),  # ASIA: out of scope
+        ],
+        "s_suppkey long, s_name string, s_nationkey int, s_acctbal double",
     )
-    _write(
-        spark.createDataFrame(
-            [
-                (1, "part one", "LARGE", 12),
-                (2, "part two", "LARGE", 16),   # size out of [10, 15]
-                (3, "part three", "SMALL", 10),  # type mismatch
-                (4, "part four", "LARGE", 15),   # inclusive upper edge
-            ],
-            "p_partkey long, p_name string, p_type string, p_size int",
-        ),
-        tmp_path,
-        "part",
+    crafted.write(
+        spark, tmp_path, "part",
+        [
+            (1, "part one", "LARGE", 12),
+            (2, "part two", "LARGE", 16),   # size out of [10, 15]
+            (3, "part three", "SMALL", 10),  # type mismatch
+            (4, "part four", "LARGE", 15),   # inclusive upper edge
+        ],
+        "p_partkey long, p_name string, p_type string, p_size int",
     )
     li = [
         # (orderkey, partkey, suppkey, quantity, extendedprice)
@@ -107,14 +85,11 @@ def test_q2_min_cost_tie_and_region_scope(spark, tmp_path):
         (7, 2, 1, 1.0, 1.0),    # part 2 never qualifies
         (8, 3, 1, 1.0, 1.0),    # part 3 never qualifies
     ]
-    _write(
-        spark.createDataFrame(
-            li,
-            "l_orderkey long, l_partkey long, l_suppkey long, "
-            "l_quantity double, l_extendedprice double",
-        ),
-        tmp_path,
-        "lineitem",
+    crafted.write(
+        spark, tmp_path, "lineitem",
+        li,
+        "l_orderkey long, l_partkey long, l_suppkey long, "
+        "l_quantity double, l_extendedprice double",
     )
     got = [
         (r["s_acctbal"], r["s_name"], r["n_name"], r["p_partkey"], r["unit_cost"])
@@ -145,17 +120,15 @@ def test_q22_threshold_exactly_at_average(spark, tmp_path):
         (7, "Customer#310000007", 280.0),   # has an order: anti-joined
         (8, "Customer#130000008", 240.0),   # kept, tag 13
     ]
-    _write(
-        spark.createDataFrame(
-            custs, "c_custkey long, c_name string, c_acctbal double"
-        ),
-        tmp_path,
-        "customer",
+    crafted.write(
+        spark, tmp_path, "customer",
+        custs,
+        "c_custkey long, c_name string, c_acctbal double",
     )
-    _write(
-        spark.createDataFrame([(100, 7)], "o_orderkey long, o_custkey long"),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        [(100, 7)],
+        "o_orderkey long, o_custkey long",
     )
     got = {
         r["name_tag"]: (r["n_custs"], r["total_bal"])
@@ -171,11 +144,7 @@ def test_winsorize_strict_inequality_at_the_cuts(spark, tmp_path):
     ((210 - 0 - 20 + 1 + 19) / 21). Type b: a two-row group where BOTH
     rows clamp to the interpolated cuts 4.2 / 7.8."""
     rows = [("a", float(v)) for v in range(21)] + [("b", 4.0), ("b", 8.0)]
-    _write(
-        spark.createDataFrame(rows, "event_type string, value double"),
-        tmp_path,
-        "events",
-    )
+    crafted.write(spark, tmp_path, "events", rows, "event_type string, value double")
     got = {
         r["event_type"]: (
             r["n"],
@@ -188,7 +157,7 @@ def test_winsorize_strict_inequality_at_the_cuts(spark, tmp_path):
     }
     assert got == {
         "a": (21, 2, 10.0, 1.0, 19.0),
-        "b": (2, 2, _r((4.2 + 7.8) / 2, 4), 4.2, 7.8),
+        "b": (2, 2, crafted.r((4.2 + 7.8) / 2, 4), 4.2, 7.8),
     }
 
 
@@ -200,36 +169,31 @@ def test_key_skew_rank5_cut_under_full_tie(spark, tmp_path):
     assert SKEW_TOP_K == 5
     t = dt.datetime(2024, 1, 1)
     ev = [(100 * u + i, u, t) for u in range(1, 7) for i in range(2)]
-    _write(
-        spark.createDataFrame(ev, "event_id long, user_id long, ts timestamp"),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        ev,
+        "event_id long, user_id long, ts timestamp",
     )
-    _write(
-        spark.createDataFrame(
-            [(1, 7), (2, 7), (3, 7)], "o_orderkey long, o_custkey long"
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        [(1, 7), (2, 7), (3, 7)],
+        "o_orderkey long, o_custkey long",
     )
-    _write(
-        spark.createDataFrame(
-            [(1, 11), (2, 11), (3, 11), (4, 12)],
-            "l_orderkey long, l_partkey long",
-        ),
-        tmp_path,
-        "lineitem",
+    crafted.write(
+        spark, tmp_path, "lineitem",
+        [(1, 11), (2, 11), (3, 11), (4, 12)],
+        "l_orderkey long, l_partkey long",
     )
     got = {
         (r["key_col"], r["rnk"]): (r["key"], r["n"], r["share"])
         for r in dq_key_skew_report(spark, str(tmp_path)).collect()
     }
     assert got == {
-        ("events.user_id", 1): (1, 2, _r(2 / 12, 6)),
-        ("events.user_id", 2): (2, 2, _r(2 / 12, 6)),
-        ("events.user_id", 3): (3, 2, _r(2 / 12, 6)),
-        ("events.user_id", 4): (4, 2, _r(2 / 12, 6)),
-        ("events.user_id", 5): (5, 2, _r(2 / 12, 6)),
+        ("events.user_id", 1): (1, 2, crafted.r(2 / 12, 6)),
+        ("events.user_id", 2): (2, 2, crafted.r(2 / 12, 6)),
+        ("events.user_id", 3): (3, 2, crafted.r(2 / 12, 6)),
+        ("events.user_id", 4): (4, 2, crafted.r(2 / 12, 6)),
+        ("events.user_id", 5): (5, 2, crafted.r(2 / 12, 6)),
         ("orders.o_custkey", 1): (7, 3, 1.0),
         ("lineitem.l_partkey", 1): (11, 3, 0.75),
         ("lineitem.l_partkey", 2): (12, 1, 0.25),
@@ -248,11 +212,7 @@ def test_basket_lift_distinct_collapse_and_pair_floor(spark, tmp_path):
         (2, 1), (2, 2),
         (3, 1), (3, 3),
     ]
-    _write(
-        spark.createDataFrame(li, "l_orderkey long, l_partkey long"),
-        tmp_path,
-        "lineitem",
-    )
+    crafted.write(spark, tmp_path, "lineitem", li, "l_orderkey long, l_partkey long")
     got = [
         (r["part_a"], r["part_b"], r["n_both"], r["n_a"], r["n_b"], r["lift"])
         for r in basket_part_pairs_lift(spark, str(tmp_path)).collect()

@@ -31,6 +31,7 @@ from __future__ import annotations
 import hashlib
 import math
 
+import crafted
 from mapreduce_docker_spark.operators.similarity_queries import (
     IVF_K,
     KMEANS_ITERS,
@@ -42,10 +43,6 @@ from mapreduce_docker_spark.operators.dedup_queries import _unit_vectors
 
 
 # --- the third engine: pure Python, engine constants only -----------------
-
-
-def _r(x: float, n: int) -> float:
-    return math.floor(x * 10**n + 0.5) / 10**n
 
 
 def _sqsum(v: list[float]) -> float:
@@ -69,7 +66,7 @@ def _dotp(a: list[float], b: list[float]) -> float:
 
 def _best(u: list[float], cents: dict[int, list[float]]) -> int:
     """Nearest centroid on the 4dp-ROUNDED score, cent_id tiebreak."""
-    return min(cents, key=lambda cid: (-_r(_dotp(u, cents[cid]), 4), cid))
+    return min(cents, key=lambda cid: (-crafted.r(_dotp(u, cents[cid]), 4), cid))
 
 
 def _ivf_third_engine(
@@ -99,7 +96,7 @@ def _ivf_third_engine(
                 s = 0.0
                 for mem in members:
                     s += mem[p]
-                m.append(_r(s / len(members), 6))  # dround(avg, 6)
+                m.append(crafted.r(s / len(members), 6))  # dround(avg, 6)
             if _sqsum(m) > 0:  # zero-direction centroid defined out
                 new[cid] = _unitize(m) if renormalize else m
         cents = new

@@ -27,6 +27,7 @@ import math
 
 import duckdb
 
+import crafted
 from mapreduce_docker_spark.operators.dedup_queries import (
     DEDUP_CHAIN_DELAY_US,
     dedup_chain_within_delay,
@@ -42,16 +43,6 @@ from mapreduce_docker_spark.streaming.window_queries import events_tumbling_10m
 from mapreduce_docker_spark.registry import all_specs
 
 
-def _r(x: float, n: int) -> float:
-    return math.floor(x * 10**n + 0.5) / 10**n
-
-
-def _write(df, tmp_path, table):
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
 def test_grouping_sets_null_key_vs_subtotal_flags(spark, tmp_path):
     """A REAL NULL o_orderpriority value produces a (NULL, NULL) output row
     in the (o_orderpriority) grouping set that is distinguishable from the
@@ -63,14 +54,11 @@ def test_grouping_sets_null_key_vs_subtotal_flags(spark, tmp_path):
         (2, "F", "1-URGENT", 20.0),
         (3, "O", "1-URGENT", 30.0),
     ]
-    _write(
-        spark.createDataFrame(
-            orders,
-            "o_orderkey long, o_orderstatus string, o_orderpriority string, "
-            "o_totalprice double",
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        orders,
+        "o_orderkey long, o_orderstatus string, o_orderpriority string, "
+        "o_totalprice double",
     )
     got = {
         (r["o_orderstatus"], r["o_orderpriority"], r["g_status"], r["g_priority"]): (
@@ -94,28 +82,20 @@ def test_grouping_sets_null_key_vs_subtotal_flags(spark, tmp_path):
 def test_rollup_three_levels_hand_computed(spark, tmp_path):
     """region -> nation -> grand total, sums walked by hand; the nation
     subtotal row carries the region name with a NULL nation."""
-    _write(
-        spark.createDataFrame(
-            [(0, "AMERICA"), (1, "ASIA")], "r_regionkey int, r_name string"
-        ),
-        tmp_path,
-        "region",
+    crafted.write(
+        spark, tmp_path, "region",
+        [(0, "AMERICA"), (1, "ASIA")],
+        "r_regionkey int, r_name string",
     )
-    _write(
-        spark.createDataFrame(
-            [(0, "BRAZIL", 0), (1, "JAPAN", 1), (2, "INDIA", 1)],
-            "n_nationkey int, n_name string, n_regionkey int",
-        ),
-        tmp_path,
-        "nation",
+    crafted.write(
+        spark, tmp_path, "nation",
+        [(0, "BRAZIL", 0), (1, "JAPAN", 1), (2, "INDIA", 1)],
+        "n_nationkey int, n_name string, n_regionkey int",
     )
-    _write(
-        spark.createDataFrame(
-            [(1, 0, 10.5), (2, 0, 20.0), (3, 1, 1.25), (4, 2, 4.0)],
-            "c_custkey long, c_nationkey int, c_acctbal double",
-        ),
-        tmp_path,
-        "customer",
+    crafted.write(
+        spark, tmp_path, "customer",
+        [(1, 0, 10.5), (2, 0, 20.0), (3, 1, 1.25), (4, 2, 4.0)],
+        "c_custkey long, c_nationkey int, c_acctbal double",
     )
     got = {
         (r["r_name"], r["n_name"]): (r["n_customers"], r["sum_bal"])
@@ -135,13 +115,10 @@ def test_stats_single_row_group_null_sample_stddev(spark, tmp_path):
     """stddev_samp of a 1-row group is NULL (n-1 = 0) on BOTH engines —
     never 0, never a divide; the 2-row group's stats are hand-derived
     (variance of {10, 20} = 50, stddev = sqrt(50))."""
-    _write(
-        spark.createDataFrame(
-            [(1, "A", 7.5), (2, "B", 10.0), (3, "B", 20.0)],
-            "c_custkey long, c_mktsegment string, c_acctbal double",
-        ),
-        tmp_path,
-        "customer",
+    crafted.write(
+        spark, tmp_path, "customer",
+        [(1, "A", 7.5), (2, "B", 10.0), (3, "B", 20.0)],
+        "c_custkey long, c_mktsegment string, c_acctbal double",
     )
     got = {
         r["c_mktsegment"]: (
@@ -156,7 +133,7 @@ def test_stats_single_row_group_null_sample_stddev(spark, tmp_path):
     }
     assert got == {
         "A": (1, 7.5, 7.5, 7.5, 7.5, None),
-        "B": (2, 30.0, 15.0, 10.0, 20.0, _r(math.sqrt(50.0), 4)),
+        "B": (2, 30.0, 15.0, 10.0, 20.0, crafted.r(math.sqrt(50.0), 4)),
     }
 
 
@@ -165,21 +142,15 @@ def test_anti_join_status_filter_and_null_key(spark, tmp_path):
     completed orders is KEPT (the filter precedes the anti join), and an
     order with a NULL o_custkey matches nobody (equality with NULL is
     never true) so it excludes no one."""
-    _write(
-        spark.createDataFrame(
-            [(1, "c one"), (2, "c two"), (3, "c three")],
-            "c_custkey long, c_name string",
-        ),
-        tmp_path,
-        "customer",
+    crafted.write(
+        spark, tmp_path, "customer",
+        [(1, "c one"), (2, "c two"), (3, "c three")],
+        "c_custkey long, c_name string",
     )
-    _write(
-        spark.createDataFrame(
-            [(10, 1, "O"), (11, 2, "P"), (12, None, "P")],
-            "o_orderkey long, o_custkey long, o_orderstatus string",
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        [(10, 1, "O"), (11, 2, "P"), (12, None, "P")],
+        "o_orderkey long, o_custkey long, o_orderstatus string",
     )
     got = sorted(
         r["c_custkey"]
@@ -198,12 +169,10 @@ def test_tumbling_window_half_open_boundary(spark, tmp_path):
         (2, "a", t(2024, 1, 1, 10, 9, 59, 999999), 2.0),
         (3, "a", t(2024, 1, 1, 10, 10, 0), 4.0),  # boundary: NEXT window
     ]
-    _write(
-        spark.createDataFrame(
-            rows, "event_id long, event_type string, ts timestamp, value double"
-        ),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        rows,
+        "event_id long, event_type string, ts timestamp, value double",
     )
     got = {
         (str(r["window_start"]), str(r["window_end"])): (
@@ -223,17 +192,15 @@ def test_approx_distinct_tolerance_guard_and_exactness(spark, tmp_path):
     exact_nd = 0 row is filtered before the relative-error divide (the
     ANSI DIVIDE_BY_ZERO guard) — while the 3-key orders side must report
     within_5pct TRUE (HLL++ is exact at tiny cardinalities)."""
-    _write(
-        spark.createDataFrame(
-            [(1, 7), (2, 7), (3, 8), (4, 9)], "o_orderkey long, o_custkey long"
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        [(1, 7), (2, 7), (3, 8), (4, 9)],
+        "o_orderkey long, o_custkey long",
     )
-    _write(
-        spark.createDataFrame([], "event_id long, user_id long, ts timestamp"),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        [],
+        "event_id long, user_id long, ts timestamp",
     )
     got = [
         (r["col_name"], r["exact_nd"], r["within_5pct"])
@@ -260,12 +227,10 @@ def test_chain_dedup_strict_24h_boundary_and_tie(spark, tmp_path):
         (4, 1, "view", t0 + 2 * h24),  # 24h - 1µs after event 3: NOT kept
         (6, 1, "view", t0 + 2 * h24 + 2 * us1),  # > 24h after 3: kept
     ]
-    _write(
-        spark.createDataFrame(
-            rows, "event_id long, user_id long, event_type string, ts timestamp"
-        ),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        rows,
+        "event_id long, user_id long, event_type string, ts timestamp",
     )
     got = sorted(
         (r["event_id"], str(r["ts"]))
@@ -297,7 +262,7 @@ def test_array_stats_degenerate_contract_both_engines(spark, tmp_path):
     spec = all_specs()["array_embedding_stats"]
     got = sorted(tuple(r) for r in spec.fn(spark, str(tmp_path)).collect())
     want = [
-        (1, 2, 0.5, _r(math.sqrt(0.25 + 2.25), 6)),
+        (1, 2, 0.5, crafted.r(math.sqrt(0.25 + 2.25), 6)),
         (2, 0, None, 0.0),
         (3, None, None, None),
     ]

@@ -23,8 +23,8 @@ re-certifies the names next round.
 from __future__ import annotations
 
 import datetime as dt
-import math
 
+import crafted
 from mapreduce_docker_spark.operators.relational_queries import (
     q12_shipmode_priority,
     q18_large_orders,
@@ -39,23 +39,11 @@ from mapreduce_docker_spark.operators.relational_queries import (
 )
 
 
-def _r(x: float, n: int) -> float:
-    return math.floor(x * 10**n + 0.5) / 10**n
-
-
-def _write(df, tmp_path, table):
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
 def _customers(spark, tmp_path, rows):
-    _write(
-        spark.createDataFrame(
-            rows, "c_custkey long, c_mktsegment string, c_acctbal double"
-        ),
-        tmp_path,
-        "customer",
+    crafted.write(
+        spark, tmp_path, "customer",
+        rows,
+        "c_custkey long, c_mktsegment string, c_acctbal double",
     )
 
 
@@ -93,12 +81,10 @@ def test_top3_rank_family_on_price_tie(spark, tmp_path):
         (13, 1, 90.0),
         (14, 1, 80.0),
     ]
-    _write(
-        spark.createDataFrame(
-            orders, "o_orderkey long, o_custkey long, o_totalprice double"
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        orders,
+        "o_orderkey long, o_custkey long, o_totalprice double",
     )
     got = {
         r["o_orderkey"]: (r["rn"], r["rnk"], r["drnk"])
@@ -122,14 +108,11 @@ def test_setop_semantics_quartet(spark, tmp_path):
         (7, 4, "O", "5-LOW"),
         (8, 4, "F", "2-HIGH"),
     ]
-    _write(
-        spark.createDataFrame(
-            orders,
-            "o_orderkey long, o_custkey long, o_orderstatus string, "
-            "o_orderpriority string",
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        orders,
+        "o_orderkey long, o_custkey long, o_orderstatus string, "
+        "o_orderpriority string",
     )
     got_except = sorted(
         r["o_custkey"] for r in setop_except_statuses(spark, str(tmp_path)).collect()
@@ -156,12 +139,10 @@ def test_setop_union_dedup_and_by_name(spark, tmp_path):
             (4, "MACHINERY", -5.0),    # neither; negative for by_name
         ],
     )
-    _write(
-        spark.createDataFrame(
-            [(7, -1.0), (8, 3.0)], "s_suppkey long, s_acctbal double"
-        ),
-        tmp_path,
-        "supplier",
+    crafted.write(
+        spark, tmp_path, "supplier",
+        [(7, -1.0), (8, 3.0)],
+        "s_suppkey long, s_acctbal double",
     )
     got_union = sorted(
         r["c_custkey"] for r in setop_union_segments(spark, str(tmp_path)).collect()
@@ -177,23 +158,17 @@ def test_setop_union_dedup_and_by_name(spark, tmp_path):
 def test_q18_having_strictly_greater(spark, tmp_path):
     """HAVING sum(l_quantity) > 300 on the RAW sum: a 300.0-exactly group
     is OUT, 300.5 is in (integer-exact halves, no float ambiguity)."""
-    _write(
-        spark.createDataFrame(
-            [(1, 10), (2, 10), (3, 11)], "o_orderkey long, o_custkey long"
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        [(1, 10), (2, 10), (3, 11)],
+        "o_orderkey long, o_custkey long",
     )
     li = [
         (1, 150.0), (1, 150.0),        # exactly 300 -> excluded
         (2, 150.0), (2, 150.5),        # 300.5 -> included
         (3, 299.0),                    # below -> excluded
     ]
-    _write(
-        spark.createDataFrame(li, "l_orderkey long, l_quantity double"),
-        tmp_path,
-        "lineitem",
-    )
+    crafted.write(spark, tmp_path, "lineitem", li, "l_orderkey long, l_quantity double")
     got = [
         (r["o_orderkey"], r["o_custkey"], r["total_qty"])
         for r in q18_large_orders(spark, str(tmp_path)).collect()
@@ -218,14 +193,11 @@ def test_q6_all_four_edges(spark, tmp_path):
         (d(1997, 6, 1), 10.0, 100.0, 0.046875),  # discount below: out
         (d(1997, 6, 1), 10.0, 100.0, 0.078125),  # discount above: out
     ]
-    _write(
-        spark.createDataFrame(
-            [(i, *row) for i, row in enumerate(li)],
-            "l_orderkey long, l_shipdate timestamp, l_quantity double, "
-            "l_extendedprice double, l_discount double",
-        ),
-        tmp_path,
-        "lineitem",
+    crafted.write(
+        spark, tmp_path, "lineitem",
+        [(i, *row) for i, row in enumerate(li)],
+        "l_orderkey long, l_shipdate timestamp, l_quantity double, "
+        "l_extendedprice double, l_discount double",
     )
     out = q6_forecast_revenue(spark, str(tmp_path)).collect()
     assert len(out) == 1 and out[0]["revenue"] == 18.75
@@ -237,13 +209,10 @@ def test_q12_not_in_with_null_priority(spark, tmp_path):
     both CASEs yield 0, so the line is counted in neither column while
     still contributing to the group's existence."""
     d = dt.datetime
-    _write(
-        spark.createDataFrame(
-            [(1, "1-URGENT"), (2, "5-LOW"), (3, None)],
-            "o_orderkey long, o_orderpriority string",
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        [(1, "1-URGENT"), (2, "5-LOW"), (3, None)],
+        "o_orderkey long, o_orderpriority string",
     )
     li = [
         (1, "F", d(1997, 3, 1)),
@@ -251,12 +220,10 @@ def test_q12_not_in_with_null_priority(spark, tmp_path):
         (3, "F", d(1997, 3, 1)),   # NULL priority: in neither count
         (1, "O", d(1998, 3, 1)),   # outside the date window: dropped
     ]
-    _write(
-        spark.createDataFrame(
-            li, "l_orderkey long, l_linestatus string, l_shipdate timestamp"
-        ),
-        tmp_path,
-        "lineitem",
+    crafted.write(
+        spark, tmp_path, "lineitem",
+        li,
+        "l_orderkey long, l_linestatus string, l_shipdate timestamp",
     )
     got = {
         r["l_linestatus"]: (r["high_line_count"], r["low_line_count"])

@@ -24,6 +24,7 @@ from __future__ import annotations
 import datetime as dt
 import math
 
+import crafted
 from mapreduce_docker_spark.operators.relational_queries import (
     distinct_customer_status_pairs,
     join_cross_region_priority_grid,
@@ -33,16 +34,6 @@ from mapreduce_docker_spark.operators.relational_queries import (
     scalar_math_lineitem,
 )
 from mapreduce_docker_spark.operators.udf_queries import udf_pandas_saturation
-
-
-def _r(x: float, n: int) -> float:
-    return math.floor(x * 10**n + 0.5) / 10**n
-
-
-def _write(df, tmp_path, table):
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
 
 
 def test_date_surface_conventions(spark, tmp_path):
@@ -57,10 +48,10 @@ def test_date_surface_conventions(spark, tmp_path):
         (4, d(2024, 4, 1)),    # Q2 first day
         (5, d(1994, 12, 31)),  # before the anchor
     ]
-    _write(
-        spark.createDataFrame(orders, "o_orderkey long, o_orderdate timestamp"),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        orders,
+        "o_orderkey long, o_orderdate timestamp",
     )
     got = {
         r["o_orderkey"]: (
@@ -92,11 +83,7 @@ def test_levenshtein_threshold_inclusive_at_7(spark, tmp_path):
         (2, "ALPHAAAAAAAA"),
         (3, "ZZZZZZZZZZZZZ"),
     ]
-    _write(
-        spark.createDataFrame(nations, "n_nationkey int, n_name string"),
-        tmp_path,
-        "nation",
-    )
+    crafted.write(spark, tmp_path, "nation", nations, "n_nationkey int, n_name string")
     got = sorted(
         (r["name_a"], r["name_b"], r["edit_dist"])
         for r in scalar_levenshtein_nations(spark, str(tmp_path)).collect()
@@ -117,14 +104,11 @@ def test_math_ceil_float_trap(spark, tmp_path):
         (7, 1, 4.0, 1000.0, 0.07, 0.0625),
         (8, 2, 9.0, 500.0, 0.0625, 0.25),
     ]
-    _write(
-        spark.createDataFrame(
-            li,
-            "l_orderkey long, l_linenumber int, l_quantity double, "
-            "l_extendedprice double, l_discount double, l_tax double",
-        ),
-        tmp_path,
-        "lineitem",
+    crafted.write(
+        spark, tmp_path, "lineitem",
+        li,
+        "l_orderkey long, l_linenumber int, l_quantity double, "
+        "l_extendedprice double, l_discount double, l_tax double",
     )
     got = {
         r["l_orderkey"]: (
@@ -141,21 +125,21 @@ def test_math_ceil_float_trap(spark, tmp_path):
     }
     assert got == {
         7: (
-            _r(1000.0 * (1 - 0.07), 2),   # 930.0
+            crafted.r(1000.0 * (1 - 0.07), 2),   # 930.0
             0.0,
             2.0,
             16.0,
-            _r(math.log(1000.0), 6),
+            crafted.r(math.log(1000.0), 6),
             8,                            # THE trap: ceil(7.000000000000001)
             6,                            # floor(6.25)
             0,
         ),
         8: (
-            _r(500.0 * (1 - 0.0625), 2),  # 468.75
+            crafted.r(500.0 * (1 - 0.0625), 2),  # 468.75
             500.0,
             3.0,
             81.0,
-            _r(math.log(500.0), 6),
+            crafted.r(math.log(500.0), 6),
             7,                            # dyadic: ceil(6.25) = 7
             25,                           # floor(25.0) exactly
             1,
@@ -168,38 +152,29 @@ def test_cross_grid_is_complete_with_zero_cells(spark, tmp_path):
     with n_orders 0; priority 9-GHOST exists only on an order whose
     custkey matches no customer, so it becomes a grid COLUMN with zero
     counts everywhere."""
-    _write(
-        spark.createDataFrame(
-            [(0, "AMERICA"), (1, "EUROPE")], "r_regionkey int, r_name string"
-        ),
-        tmp_path,
-        "region",
+    crafted.write(
+        spark, tmp_path, "region",
+        [(0, "AMERICA"), (1, "EUROPE")],
+        "r_regionkey int, r_name string",
     )
-    _write(
-        spark.createDataFrame(
-            [(0, "BRAZIL", 0)], "n_nationkey int, n_name string, n_regionkey int"
-        ),
-        tmp_path,
-        "nation",
+    crafted.write(
+        spark, tmp_path, "nation",
+        [(0, "BRAZIL", 0)],
+        "n_nationkey int, n_name string, n_regionkey int",
     )
-    _write(
-        spark.createDataFrame(
-            [(1, 0)], "c_custkey long, c_nationkey int"
-        ),
-        tmp_path,
-        "customer",
+    crafted.write(
+        spark, tmp_path, "customer",
+        [(1, 0)],
+        "c_custkey long, c_nationkey int",
     )
-    _write(
-        spark.createDataFrame(
-            [
-                (10, 1, "1-URGENT"),
-                (11, 1, "1-URGENT"),
-                (12, 999, "9-GHOST"),  # dangling custkey: axis only
-            ],
-            "o_orderkey long, o_custkey long, o_orderpriority string",
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        [
+            (10, 1, "1-URGENT"),
+            (11, 1, "1-URGENT"),
+            (12, 999, "9-GHOST"),  # dangling custkey: axis only
+        ],
+        "o_orderkey long, o_custkey long, o_orderpriority string",
     )
     got = {
         (r["r_name"], r["o_orderpriority"]): r["n_orders"]
@@ -218,27 +193,21 @@ def test_q14_promo_share_exact_halves(spark, tmp_path):
     October 1st promo line sits on the half-open end and must not move
     it."""
     d = dt.datetime
-    _write(
-        spark.createDataFrame(
-            [(1, "PROMO BURNISHED"), (2, "STANDARD PLATED")],
-            "p_partkey long, p_type string",
-        ),
-        tmp_path,
-        "part",
+    crafted.write(
+        spark, tmp_path, "part",
+        [(1, "PROMO BURNISHED"), (2, "STANDARD PLATED")],
+        "p_partkey long, p_type string",
     )
     li = [
         (1, 1, d(1997, 9, 15), 100.0, 0.0),   # promo net 100
         (2, 2, d(1997, 9, 20), 300.0, 0.5),   # other net 150
         (3, 1, d(1997, 10, 1), 900.0, 0.0),   # boundary: out
     ]
-    _write(
-        spark.createDataFrame(
-            li,
-            "l_orderkey long, l_partkey long, l_shipdate timestamp, "
-            "l_extendedprice double, l_discount double",
-        ),
-        tmp_path,
-        "lineitem",
+    crafted.write(
+        spark, tmp_path, "lineitem",
+        li,
+        "l_orderkey long, l_partkey long, l_shipdate timestamp, "
+        "l_extendedprice double, l_discount double",
     )
     out = q14_promo_revenue_share(spark, str(tmp_path)).collect()
     assert len(out) == 1 and out[0]["promo_share_pct"] == 40.0
@@ -249,11 +218,7 @@ def test_saturation_matches_math_tanh(spark, tmp_path):
     recomputed here from math.tanh for an empty, a 250-char and a
     1000-char document."""
     docs = [(1, ""), (2, "x" * 250), (3, "y" * 1000)]
-    _write(
-        spark.createDataFrame(docs, "doc_id long, text string"),
-        tmp_path,
-        "documents",
-    )
+    crafted.write(spark, tmp_path, "documents", docs, "doc_id long, text string")
     got = {
         r["doc_id"]: r["saturation"]
         for r in udf_pandas_saturation(spark, str(tmp_path)).collect()
@@ -268,13 +233,10 @@ def test_saturation_matches_math_tanh(spark, tmp_path):
 def test_distinct_pairs_dedup_null_status(spark, tmp_path):
     """DISTINCT treats NULL as one value: two NULL-status orders for
     customer 1 collapse to a single (1, NULL) pair beside (1, 'O')."""
-    _write(
-        spark.createDataFrame(
-            [(1, 1, None), (2, 1, None), (3, 1, "O"), (4, 2, "F")],
-            "o_orderkey long, o_custkey long, o_orderstatus string",
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        [(1, 1, None), (2, 1, None), (3, 1, "O"), (4, 2, "F")],
+        "o_orderkey long, o_custkey long, o_orderstatus string",
     )
     got = sorted(
         (

@@ -20,8 +20,8 @@ fixture can silently get wrong.
 
 from __future__ import annotations
 
-import math
 
+import crafted
 from mapreduce_docker_spark.operators.dedup_queries import dedup_exact_survivors
 from mapreduce_docker_spark.operators.relational_queries import (
     agg_percentiles_by_segment,
@@ -32,27 +32,14 @@ from mapreduce_docker_spark.operators.relational_queries import (
 )
 
 
-def _r(x: float, n: int) -> float:
-    return math.floor(x * 10**n + 0.5) / 10**n
-
-
-def _write(df, tmp_path, table):
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
 def test_percentiles_interpolate_on_even_counts(spark, tmp_path):
     """Two-row group: median = (10+20)/2 = 15 and p90 = 10 + 0.9*(20-10)
     = 19 — INTERPOLATED, not nearest-rank (which would report 20 for
     both). One-row group: both percentiles equal the value."""
-    _write(
-        spark.createDataFrame(
-            [(1, "A", 10.0), (2, "A", 20.0), (3, "B", 7.5)],
-            "c_custkey long, c_mktsegment string, c_acctbal double",
-        ),
-        tmp_path,
-        "customer",
+    crafted.write(
+        spark, tmp_path, "customer",
+        [(1, "A", 10.0), (2, "A", 20.0), (3, "B", 7.5)],
+        "c_custkey long, c_mktsegment string, c_acctbal double",
     )
     got = {
         r["c_mktsegment"]: (r["median_bal"], r["p90_bal"])
@@ -65,21 +52,15 @@ def test_pivot_zero_cell_not_null(spark, tmp_path):
     """BUILDING has F and O orders but no P: the P cell must be 0 (the
     explicit-value-list pivot with a zero-filled count), never NULL —
     the oracle's sum CASE arithmetic forces it."""
-    _write(
-        spark.createDataFrame(
-            [(1, "BUILDING"), (2, "MACHINERY")],
-            "c_custkey long, c_mktsegment string",
-        ),
-        tmp_path,
-        "customer",
+    crafted.write(
+        spark, tmp_path, "customer",
+        [(1, "BUILDING"), (2, "MACHINERY")],
+        "c_custkey long, c_mktsegment string",
     )
-    _write(
-        spark.createDataFrame(
-            [(10, 1, "F"), (11, 1, "F"), (12, 1, "O"), (13, 2, "P")],
-            "o_orderkey long, o_custkey long, o_orderstatus string",
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        [(10, 1, "F"), (11, 1, "F"), (12, 1, "O"), (13, 2, "P")],
+        "o_orderkey long, o_custkey long, o_orderstatus string",
     )
     got = {
         r["c_mktsegment"]: (r["F"], r["O"], r["P"])
@@ -92,27 +73,20 @@ def test_unpivot_emits_zero_rows_for_empty_nation(spark, tmp_path):
     """Nation 1 has neither customers nor suppliers: the left joins
     coalesce to 0.0 BEFORE the melt, so both kind rows exist at 0.0 —
     an unpivot that dropped NULLs before coalescing would lose them."""
-    _write(
-        spark.createDataFrame(
-            [(0, "A", 0), (1, "B", 0)],
-            "n_nationkey int, n_name string, n_regionkey int",
-        ),
-        tmp_path,
-        "nation",
+    crafted.write(
+        spark, tmp_path, "nation",
+        [(0, "A", 0), (1, "B", 0)],
+        "n_nationkey int, n_name string, n_regionkey int",
     )
-    _write(
-        spark.createDataFrame(
-            [(1, 0, 10.5), (2, 0, 4.5)], "c_custkey long, c_nationkey int, c_acctbal double"
-        ),
-        tmp_path,
-        "customer",
+    crafted.write(
+        spark, tmp_path, "customer",
+        [(1, 0, 10.5), (2, 0, 4.5)],
+        "c_custkey long, c_nationkey int, c_acctbal double",
     )
-    _write(
-        spark.createDataFrame(
-            [(7, 0, 2.25)], "s_suppkey long, s_nationkey int, s_acctbal double"
-        ),
-        tmp_path,
-        "supplier",
+    crafted.write(
+        spark, tmp_path, "supplier",
+        [(7, 0, 2.25)],
+        "s_suppkey long, s_nationkey int, s_acctbal double",
     )
     got = {
         (r["n_nationkey"], r["kind"]): r["bal"]
@@ -137,11 +111,7 @@ def test_exact_survivors_tokenized_fingerprint_min_id(spark, tmp_path):
         (5, "hello world"),
         (9, "different entirely"),
     ]
-    _write(
-        spark.createDataFrame(docs, "doc_id long, text string"),
-        tmp_path,
-        "documents",
-    )
+    crafted.write(spark, tmp_path, "documents", docs, "doc_id long, text string")
     got = sorted(
         r["doc_id"] for r in dedup_exact_survivors(spark, str(tmp_path)).collect()
     )
@@ -151,20 +121,15 @@ def test_exact_survivors_tokenized_fingerprint_min_id(spark, tmp_path):
 def test_theta_band_strict_edge_and_nation_scope(spark, tmp_path):
     """|s_acctbal - c_acctbal| < 10.0 STRICT: a 10.0 gap is out, 9.99 is
     in — and a 0.5 gap across DIFFERENT nations never joins."""
-    _write(
-        spark.createDataFrame(
-            [(1, 0, 100.0), (2, 0, 110.0), (3, 0, 109.99), (4, 1, 100.5)],
-            "c_custkey long, c_nationkey int, c_acctbal double",
-        ),
-        tmp_path,
-        "customer",
+    crafted.write(
+        spark, tmp_path, "customer",
+        [(1, 0, 100.0), (2, 0, 110.0), (3, 0, 109.99), (4, 1, 100.5)],
+        "c_custkey long, c_nationkey int, c_acctbal double",
     )
-    _write(
-        spark.createDataFrame(
-            [(7, 0, 100.0)], "s_suppkey long, s_nationkey int, s_acctbal double"
-        ),
-        tmp_path,
-        "supplier",
+    crafted.write(
+        spark, tmp_path, "supplier",
+        [(7, 0, 100.0)],
+        "s_suppkey long, s_nationkey int, s_acctbal double",
     )
     got = sorted(
         (r["s_suppkey"], r["c_custkey"], r["bal_gap"])
@@ -178,41 +143,31 @@ def test_q10_r_flag_filter_and_tie_order(spark, tmp_path):
     """Only returnflag 'R' lines lose revenue (customer 2's 'N' line is
     invisible), and the equal-revenue tie between customers 1 and 3
     orders by ascending custkey."""
-    _write(
-        spark.createDataFrame(
-            [(1, "c1", 0), (2, "c2", 0), (3, "c3", 0)],
-            "c_custkey long, c_name string, c_nationkey int",
-        ),
-        tmp_path,
-        "customer",
+    crafted.write(
+        spark, tmp_path, "customer",
+        [(1, "c1", 0), (2, "c2", 0), (3, "c3", 0)],
+        "c_custkey long, c_name string, c_nationkey int",
     )
-    _write(
-        spark.createDataFrame(
-            [(0, "GERMANY", 0)], "n_nationkey int, n_name string, n_regionkey int"
-        ),
-        tmp_path,
-        "nation",
+    crafted.write(
+        spark, tmp_path, "nation",
+        [(0, "GERMANY", 0)],
+        "n_nationkey int, n_name string, n_regionkey int",
     )
-    _write(
-        spark.createDataFrame(
-            [(10, 1), (20, 2), (30, 3)], "o_orderkey long, o_custkey long"
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        [(10, 1), (20, 2), (30, 3)],
+        "o_orderkey long, o_custkey long",
     )
     li = [
         (10, "R", 200.0, 0.5),   # c1: 100
         (20, "N", 500.0, 0.0),   # c2: not returned -> absent
         (30, "R", 100.0, 0.0),   # c3: 100 (tie with c1)
     ]
-    _write(
-        spark.createDataFrame(
-            li,
-            "l_orderkey long, l_returnflag string, l_extendedprice double, "
-            "l_discount double",
-        ),
-        tmp_path,
-        "lineitem",
+    crafted.write(
+        spark, tmp_path, "lineitem",
+        li,
+        "l_orderkey long, l_returnflag string, l_extendedprice double, "
+        "l_discount double",
     )
     got = [
         (r["c_custkey"], r["n_name"], r["lost_revenue"])

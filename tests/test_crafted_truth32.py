@@ -24,8 +24,7 @@ caught this round's second and third latent divergences):
 
 from __future__ import annotations
 
-import duckdb
-
+import crafted
 from mapreduce_docker_spark.operators.relational_queries import (
     array_hof_embeddings,
     join_semi_urgent_customers,
@@ -34,22 +33,6 @@ from mapreduce_docker_spark.operators.relational_queries import (
     map_hof_event_props,
 )
 from mapreduce_docker_spark.registry import all_specs
-
-
-def _write(df, tmp_path, table):
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
-def _oracle_rows(tmp_path, table, sql, key=None):
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW {table} AS SELECT * FROM read_parquet("
-        f"'{tmp_path}/{table}.parquet/*.parquet')"
-    )
-    rows = [tuple(r) for r in con.execute(sql).fetchall()]
-    return sorted(rows, key=key) if key else sorted(rows)
 
 
 def test_array_hof_degenerate_contract_both_engines(spark, tmp_path):
@@ -73,7 +56,7 @@ def test_array_hof_degenerate_contract_both_engines(spark, tmp_path):
     got = sorted(tuple(r) for r in array_hof_embeddings(spark, str(tmp_path)).collect())
     assert got == want
     spec = all_specs()["array_hof_embeddings"]
-    assert _oracle_rows(tmp_path, "embeddings", spec.sql) == want
+    assert sorted(crafted.oracle(tmp_path, ["embeddings"], spec.sql)) == want
 
 
 def test_map_hof_degenerate_contract_both_engines(spark, tmp_path):
@@ -86,10 +69,10 @@ def test_map_hof_degenerate_contract_both_engines(spark, tmp_path):
         (3, "b", "{}"),
         (4, "b", None),
     ]
-    _write(
-        spark.createDataFrame(rows, "event_id long, event_type string, props string"),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        rows,
+        "event_id long, event_type string, props string",
     )
     want = [
         (1, 2, 122, 1),
@@ -103,7 +86,8 @@ def test_map_hof_degenerate_contract_both_engines(spark, tmp_path):
     )
     assert got == want
     spec = all_specs()["map_hof_event_props"]
-    assert _oracle_rows(tmp_path, "events", spec.sql, key=lambda t: t[0]) == want
+    orows = crafted.oracle(tmp_path, ["events"], spec.sql)
+    assert sorted(orows, key=lambda t: t[0]) == want
 
 
 def test_json_props_missing_key_aggregation(spark, tmp_path):
@@ -118,10 +102,10 @@ def test_json_props_missing_key_aggregation(spark, tmp_path):
         (5, "c", '{"k": 10}'),
         (6, "c", '{"k": 20}'),
     ]
-    _write(
-        spark.createDataFrame(rows, "event_id long, event_type string, props string"),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        rows,
+        "event_id long, event_type string, props string",
     )
     got = {
         r["event_type"]: (r["n_events"], r["avg_k"], r["max_k"])
@@ -138,11 +122,7 @@ def test_variant_typed_get_and_missing_path(spark, tmp_path):
     """variant_get('$.k', int) is NULL when k is absent; try_variant_get
     on the always-missing path is NULL on every row."""
     rows = [(1, '{"k": 42}'), (2, '{"z": 1}')]
-    _write(
-        spark.createDataFrame(rows, "event_id long, props string"),
-        tmp_path,
-        "events",
-    )
+    crafted.write(spark, tmp_path, "events", rows, "event_id long, props string")
     got = {
         r["event_id"]: (r["k_typed"], r["k_missing"])
         for r in json_variant_events(spark, str(tmp_path)).collect()
@@ -153,20 +133,15 @@ def test_variant_typed_get_and_missing_path(spark, tmp_path):
 def test_semi_join_multiplicity(spark, tmp_path):
     """Two urgent orders produce ONE customer row (semi join), and the
     medium-priority customer never appears."""
-    _write(
-        spark.createDataFrame(
-            [(1, "c1"), (2, "c2")], "c_custkey long, c_name string"
-        ),
-        tmp_path,
-        "customer",
+    crafted.write(
+        spark, tmp_path, "customer",
+        [(1, "c1"), (2, "c2")],
+        "c_custkey long, c_name string",
     )
-    _write(
-        spark.createDataFrame(
-            [(10, 1, "1-URGENT"), (11, 1, "1-URGENT"), (12, 2, "3-MEDIUM")],
-            "o_orderkey long, o_custkey long, o_orderpriority string",
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        [(10, 1, "1-URGENT"), (11, 1, "1-URGENT"), (12, 2, "3-MEDIUM")],
+        "o_orderkey long, o_custkey long, o_orderpriority string",
     )
     got = [
         (r["c_custkey"], r["c_name"])

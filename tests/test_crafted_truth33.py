@@ -26,9 +26,9 @@ from __future__ import annotations
 import datetime as dt
 import math
 
-import duckdb
 from pyspark.sql import functions as F
 
+import crafted
 from mapreduce_docker_spark.functions import texthash as th
 from mapreduce_docker_spark.functions.tokenize import tokens
 from mapreduce_docker_spark.operators.dedup_queries import (
@@ -43,27 +43,8 @@ from mapreduce_docker_spark.registry import all_specs
 from mapreduce_docker_spark.streaming.window_queries import events_tumbling_10m
 
 
-def _r(x: float, n: int) -> float:
-    return math.floor(x * 10**n + 0.5) / 10**n
-
-
-def _write(df, tmp_path, table):
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
-def _oracle(tmp_path, tables, sql):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
-    return sorted(
-        (tuple(r) for r in con.execute(sql).fetchall()),
-        key=lambda t: tuple((x is None, str(x)) for x in t),
-    )
+def _key(t):
+    return tuple((x is None, str(x)) for x in t)
 
 
 def test_zero_token_docs_have_no_shingles(spark, tmp_path):
@@ -94,18 +75,14 @@ def test_zero_token_docs_have_no_shingles(spark, tmp_path):
         (4, "alpha beta gamma delta"),
         (5, "omega psi chi"),
     ]
-    _write(
-        spark.createDataFrame(docs, "doc_id long, text string"),
-        tmp_path,
-        "documents",
-    )
+    crafted.write(spark, tmp_path, "documents", docs, "doc_id long, text string")
     got = sorted(
         (r["doc_id"], r["sig"])
         for r in dedup_minhash_signatures(spark, str(tmp_path)).collect()
     )
     assert [d for d, _ in got] == [4, 5]
     spec = all_specs()["dedup_minhash_signatures"]
-    assert got == _oracle(tmp_path, ["documents"], spec.sql)
+    assert got == sorted(crafted.oracle(tmp_path, ["documents"], spec.sql), key=_key)
 
 
 def test_null_event_time_outside_window_semantics(spark, tmp_path):
@@ -117,12 +94,10 @@ def test_null_event_time_outside_window_semantics(spark, tmp_path):
         (2, "a", None, 100.0),   # timeless: in no window
         (3, None, dt.datetime(2024, 1, 1, 10, 2), 3.0),  # NULL type groups
     ]
-    _write(
-        spark.createDataFrame(
-            rows, "event_id long, event_type string, ts timestamp, value double"
-        ),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        rows,
+        "event_id long, event_type string, ts timestamp, value double",
     )
     got = sorted(
         (
@@ -136,7 +111,7 @@ def test_null_event_time_outside_window_semantics(spark, tmp_path):
         ("2024-01-01 10:00:00", "a", 1, 2.0),
     ]
     spec = all_specs()["events_tumbling_10m"]
-    orows = _oracle(tmp_path, ["events"], spec.sql)
+    orows = sorted(crafted.oracle(tmp_path, ["events"], spec.sql), key=_key)
     # two rows, none of them the timeless event's NULL window
     assert len(orows) == 2 and all(r[0] is not None for r in orows)
 
@@ -147,20 +122,20 @@ def test_skew_rank_orders_null_key_last(spark, tmp_path):
     put it first)."""
     t = dt.datetime(2024, 1, 1)
     ev = [(1, 5, t), (2, 5, t), (3, 9, t), (4, 9, t), (5, None, t), (6, None, t)]
-    _write(
-        spark.createDataFrame(ev, "event_id long, user_id long, ts timestamp"),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        ev,
+        "event_id long, user_id long, ts timestamp",
     )
-    _write(
-        spark.createDataFrame([(1, 1)], "o_orderkey long, o_custkey long"),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        [(1, 1)],
+        "o_orderkey long, o_custkey long",
     )
-    _write(
-        spark.createDataFrame([(1, 1)], "l_orderkey long, l_partkey long"),
-        tmp_path,
-        "lineitem",
+    crafted.write(
+        spark, tmp_path, "lineitem",
+        [(1, 1)],
+        "l_orderkey long, l_partkey long",
     )
     got = {
         r["rnk"]: r["key"]
@@ -180,18 +155,16 @@ def test_geomean_positive_domain(spark, tmp_path):
         (4, "1-URGENT", None),   # out of domain
         (5, "5-LOW", 0.0),       # group vanishes
     ]
-    _write(
-        spark.createDataFrame(
-            orders, "o_orderkey long, o_orderpriority string, o_totalprice double"
-        ),
-        tmp_path,
-        "orders",
+    crafted.write(
+        spark, tmp_path, "orders",
+        orders,
+        "o_orderkey long, o_orderpriority string, o_totalprice double",
     )
     got = {
         r["o_orderpriority"]: r["geo_price"]
         for r in udf_pandas_udaf_geomean(spark, str(tmp_path)).collect()
     }
-    assert got == {"1-URGENT": _r(math.exp((math.log(4) + math.log(16)) / 2), 4)}
+    assert got == {"1-URGENT": crafted.r(math.exp((math.log(4) + math.log(16)) / 2), 4)}
 
 
 def test_string_part_null_propagation_and_cast_guard(spark, tmp_path):
@@ -203,14 +176,11 @@ def test_string_part_null_propagation_and_cast_guard(spark, tmp_path):
         (2, "gadget", "BrandX", None, 5, 2.0),       # no digits, NULL type
         (3, None, None, "LARGE", 6, 3.0),
     ]
-    _write(
-        spark.createDataFrame(
-            parts,
-            "p_partkey long, p_name string, p_brand string, p_type string, "
-            "p_size int, p_retailprice double",
-        ),
-        tmp_path,
-        "part",
+    crafted.write(
+        spark, tmp_path, "part",
+        parts,
+        "p_partkey long, p_name string, p_brand string, p_type string, "
+        "p_size int, p_retailprice double",
     )
     got = {
         r["p_partkey"]: (r["brand_num"], r["brand_type"])
@@ -220,7 +190,7 @@ def test_string_part_null_propagation_and_cast_guard(spark, tmp_path):
     assert got[2] == (None, None)  # digitless brand; NULL type propagates
     assert got[3] == (None, None)
     spec = all_specs()["scalar_string_part"]
-    orows = {r[0]: r for r in _oracle(tmp_path, ["part"], spec.sql)}
+    orows = {r[0]: r for r in sorted(crafted.oracle(tmp_path, ["part"], spec.sql), key=_key)}
     srows = {
         r["p_partkey"]: tuple(r) for r in scalar_string_part(spark, str(tmp_path)).collect()
     }
@@ -233,11 +203,7 @@ def test_fingerprint_contentless_docs_align(spark, tmp_path):
     array_to_string([]) is NULL and needed the coalesce; the engine's
     rolling fold over a NULL array needed the token coalesce)."""
     docs = [(1, None), (2, ""), (3, "   "), (4, "alpha beta")]
-    _write(
-        spark.createDataFrame(docs, "doc_id long, text string"),
-        tmp_path,
-        "documents",
-    )
+    crafted.write(spark, tmp_path, "documents", docs, "doc_id long, text string")
     got = sorted(tuple(r) for r in text_fingerprint(spark, str(tmp_path)).collect())
     md5_empty = "d41d8cd98f00b204e9800998ecf8427e"
     assert [(d, m, rf) for d, m, rf in got][:3] == [
@@ -246,7 +212,7 @@ def test_fingerprint_contentless_docs_align(spark, tmp_path):
         (3, md5_empty, 0),
     ]
     spec = all_specs()["text_fingerprint"]
-    assert got == _oracle(tmp_path, ["documents"], spec.sql)
+    assert got == sorted(crafted.oracle(tmp_path, ["documents"], spec.sql), key=_key)
 
 
 def test_survivorship_langs_null_set_vs_empty_string(spark, tmp_path):
@@ -262,12 +228,10 @@ def test_survivorship_langs_null_set_vs_empty_string(spark, tmp_path):
         (3, text_b, "", 25),
         (4, text_b, "", 25),
     ]
-    _write(
-        spark.createDataFrame(
-            docs, "doc_id long, text string, lang string, n_chars long"
-        ),
-        tmp_path,
-        "documents",
+    crafted.write(
+        spark, tmp_path, "documents",
+        docs,
+        "doc_id long, text string, lang string, n_chars long",
     )
     two_member = {
         r["rep_doc_id"]: r["langs"]

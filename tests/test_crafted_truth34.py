@@ -24,12 +24,11 @@ payloads; SCALING.md "Degenerate-input contracts"):
 from __future__ import annotations
 
 import datetime as dt
-import math
 import os
 
-import duckdb
 from pyspark.sql import functions as F
 
+import crafted
 from mapreduce_docker_spark.operators.funnel_queries import events_sessionize
 from mapreduce_docker_spark.operators.relational_queries import scalar_math_lineitem
 from mapreduce_docker_spark.operators.similarity_queries import (
@@ -40,23 +39,8 @@ from mapreduce_docker_spark.registry import all_specs
 from mapreduce_docker_spark.streaming import stream_demo as sd
 
 
-def _write(df, tmp_path, table):
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
-def _oracle(tmp_path, tables, sql):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
-    return sorted(
-        (tuple(r) for r in con.execute(sql).fetchall()),
-        key=lambda t: tuple((x is None, str(x)) for x in t),
-    )
+def _key(t):
+    return tuple((x is None, str(x)) for x in t)
 
 
 def test_event_sequence_law_timeless_event_has_no_position(spark, tmp_path):
@@ -70,10 +54,10 @@ def test_event_sequence_law_timeless_event_has_no_position(spark, tmp_path):
         (2, 1, None),                      # timeless: no position
         (3, 1, t0 + dt.timedelta(minutes=5)),
     ]
-    _write(
-        spark.createDataFrame(rows, "event_id long, user_id long, ts timestamp"),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        rows,
+        "event_id long, user_id long, ts timestamp",
     )
     got = [
         (r["user_id"], r["session_idx"], r["n_events"])
@@ -81,7 +65,7 @@ def test_event_sequence_law_timeless_event_has_no_position(spark, tmp_path):
     ]
     assert got == [(1, 1, 2)]
     spec = all_specs()["events_sessionize"]
-    orows = _oracle(tmp_path, ["events"], spec.sql)
+    orows = sorted(crafted.oracle(tmp_path, ["events"], spec.sql), key=_key)
     assert len(orows) == 1 and orows[0][2] == 2
 
 
@@ -97,12 +81,10 @@ def test_post_epoch_law_and_expiry_span_bound(spark, tmp_path):
         (2, t24, 8, "view"),
         (3, t24 + dt.timedelta(days=1), 8, "click"),
     ]
-    _write(
-        spark.createDataFrame(
-            rows, "event_id long, ts timestamp, user_id long, event_type string"
-        ),
-        tmp_path,
-        "events",
+    crafted.write(
+        spark, tmp_path, "events",
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string",
     )
     out = sd.run_dedup_native_keys_stream(
         spark, str(tmp_path), query_name="t_epoch_law"
@@ -110,7 +92,7 @@ def test_post_epoch_law_and_expiry_span_bound(spark, tmp_path):
     got = sorted((r["user_id"], r["event_type"]) for r in out.collect())
     assert got == [(8, "click"), (8, "view")]  # the 1969 view is out
     spec = all_specs()["streaming_dedup_native_keys"]
-    assert got == [tuple(r) for r in _oracle(tmp_path, ["events"], spec.sql)]
+    assert got == [tuple(r) for r in sorted(crafted.oracle(tmp_path, ["events"], spec.sql), key=_key)]
 
     stage = sd._stage_expiry_day_files(spark, str(tmp_path))
     n_days = len([d for d in os.listdir(stage) if d.startswith("day_key=")])
@@ -137,12 +119,10 @@ def test_finite_norm_law_rejects_nan_vector_on_both_engines(spark, tmp_path):
         (4, p64([float("inf"), 0.0, 0.0, 0.0]), 0),
         (5, p64([0.0, 0.0, 0.0, 0.0]), 0),  # zero-norm (standing law)
     ]
-    _write(
-        spark.createDataFrame(
-            vecs, "vec_id long, embedding array<float>, label int"
-        ),
-        tmp_path,
-        "embeddings",
+    crafted.write(
+        spark, tmp_path, "embeddings",
+        vecs,
+        "vec_id long, embedding array<float>, label int",
     )
     got = sorted(
         (r["query_id"], r["neighbor_id"])
@@ -150,7 +130,7 @@ def test_finite_norm_law_rejects_nan_vector_on_both_engines(spark, tmp_path):
     )
     assert got == [(1, 2), (2, 1)]
     spec = all_specs()["sim_cosine_topk"]
-    orows = _oracle(tmp_path, ["embeddings"], spec.sql)
+    orows = sorted(crafted.oracle(tmp_path, ["embeddings"], spec.sql), key=_key)
     assert sorted((r[0], r[1]) for r in orows) == got
 
 
@@ -163,12 +143,10 @@ def test_finite_scale_law_quantizer(spark, tmp_path):
         (1, [1.0, -0.5, 0.25, 0.0], 0),
         (2, [float("nan"), 1.0, 1.0, 1.0], 0),
     ]
-    _write(
-        spark.createDataFrame(
-            vecs, "vec_id long, embedding array<float>, label int"
-        ),
-        tmp_path,
-        "embeddings",
+    crafted.write(
+        spark, tmp_path, "embeddings",
+        vecs,
+        "vec_id long, embedding array<float>, label int",
     )
     got = sorted(tuple(r) for r in emb_quantize_int8(spark, str(tmp_path)).collect())
     assert [r[0] for r in got] == [1]
@@ -176,21 +154,18 @@ def test_finite_scale_law_quantizer(spark, tmp_path):
     # -0.5/s = -63.5 quantizes to -63, not -64
     assert got[0][2] == "127|-63|32|0"
     spec = all_specs()["emb_quantize_int8"]
-    assert got == [tuple(r) for r in _oracle(tmp_path, ["embeddings"], spec.sql)]
+    assert got == [tuple(r) for r in sorted(crafted.oracle(tmp_path, ["embeddings"], spec.sql), key=_key)]
 
 
 def test_sqrt_domain_guard(spark, tmp_path):
     """sqrt(-4) is NULL on both engines — not DuckDB's exception and not
     Spark's NaN (which floor-based rounding would silently print as 0)."""
     li = [(1, 1, -4.0, 100.0, 0.0625, 0.0), (2, 2, 9.0, 100.0, 0.0625, 0.0)]
-    _write(
-        spark.createDataFrame(
-            li,
-            "l_orderkey long, l_linenumber int, l_quantity double, "
-            "l_extendedprice double, l_discount double, l_tax double",
-        ),
-        tmp_path,
-        "lineitem",
+    crafted.write(
+        spark, tmp_path, "lineitem",
+        li,
+        "l_orderkey long, l_linenumber int, l_quantity double, "
+        "l_extendedprice double, l_discount double, l_tax double",
     )
     got = {
         r["l_orderkey"]: r["qty_sqrt"]
@@ -198,5 +173,5 @@ def test_sqrt_domain_guard(spark, tmp_path):
     }
     assert got == {1: None, 2: 3.0}
     spec = all_specs()["scalar_math_lineitem"]
-    orows = _oracle(tmp_path, ["lineitem"], spec.sql)
+    orows = sorted(crafted.oracle(tmp_path, ["lineitem"], spec.sql), key=_key)
     assert {r[0]: r[4] for r in orows} == got  # qty_sqrt is column 5

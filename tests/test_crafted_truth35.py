@@ -40,11 +40,10 @@
 from __future__ import annotations
 
 import datetime as dt
-import math
 
-import duckdb
 import pytest
 
+import crafted
 from mapreduce_docker_spark.operators.layout_queries import (
     ZORDER_BITS,
     _DAY_US,
@@ -62,40 +61,9 @@ from mapreduce_docker_spark.operators.tpch_queries import (
     q17_small_quantity_revenue,
     q20_potential_part_promotion,
 )
+from mapreduce_docker_spark.oracle import normalize
 from mapreduce_docker_spark.registry import all_specs
 from mapreduce_docker_spark.streaming.window_queries import events_tumbling_10m
-
-
-def _write(spark, tmp_path, table, rows, schema):
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
-def _oracle(tmp_path, tables, sql):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
-    return [tuple(r) for r in con.execute(sql).fetchall()]
-
-
-def _nan_canon(rows):
-    """NaN-aware canonical form (NaN != NaN under tuple equality)."""
-    return sorted(
-        tuple(
-            "NaN" if isinstance(v, float) and math.isnan(v) else v for v in r
-        )
-        for r in rows
-    )
-
-
-def _dround_py(x, n=2):
-    """Python mirror of functions.rounding.dround on in-range doubles."""
-    scale = float(10**n)
-    return math.floor(x * scale + 0.5) / scale
 
 
 # ---------------------------------------------------------------------------
@@ -103,7 +71,7 @@ def _dround_py(x, n=2):
 # ---------------------------------------------------------------------------
 
 def _q17_fixture(spark, tmp_path):
-    _write(
+    crafted.write(
         spark,
         tmp_path,
         "part",
@@ -115,7 +83,7 @@ def _q17_fixture(spark, tmp_path):
         ],
         "p_partkey long, p_brand string, p_size int",
     )
-    _write(
+    crafted.write(
         spark,
         tmp_path,
         "lineitem",
@@ -146,17 +114,17 @@ def test_q17_half_average_threshold_walk_both_engines(spark, tmp_path):
     got = [tuple(r) for r in q17_small_quantity_revenue(spark, str(tmp_path)).collect()]
     assert got == [(100.0,)]
     spec = all_specs()["q17_small_quantity_revenue"]
-    assert _oracle(tmp_path, ("part", "lineitem"), spec.sql) == [(100.0,)]
+    assert crafted.oracle(tmp_path, ("part", "lineitem"), spec.sql) == [(100.0,)]
 
 
 def test_q17_nothing_qualifies_is_null_both_engines(spark, tmp_path):
     """When every row sits at-or-above its half-average the sum is empty:
     avg_yearly is NULL on both engines (not 0.0, not zero rows)."""
-    _write(
+    crafted.write(
         spark, tmp_path, "part",
         [(1, "Brand#2", 5)], "p_partkey long, p_brand string, p_size int",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "lineitem",
         # avg = 2.0, half = 1.0; 2.0 and 2.0 are both >= 1.0
         [(1, 2.0, 100.0), (1, 2.0, 200.0)],
@@ -165,7 +133,7 @@ def test_q17_nothing_qualifies_is_null_both_engines(spark, tmp_path):
     got = [tuple(r) for r in q17_small_quantity_revenue(spark, str(tmp_path)).collect()]
     assert got == [(None,)]
     spec = all_specs()["q17_small_quantity_revenue"]
-    assert _oracle(tmp_path, ("part", "lineitem"), spec.sql) == [(None,)]
+    assert crafted.oracle(tmp_path, ("part", "lineitem"), spec.sql) == [(None,)]
 
 
 # ---------------------------------------------------------------------------
@@ -173,23 +141,23 @@ def test_q17_nothing_qualifies_is_null_both_engines(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 def test_q20_having_and_shipdate_boundaries_both_engines(spark, tmp_path):
-    _write(
+    crafted.write(
         spark, tmp_path, "part",
         [(1, "small green widget"), (2, "large brass nut")],
         "p_partkey long, p_name string",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "supplier",
         [(1, "s1", 10), (2, "s2", 10), (3, "s3", 10)],
         "s_suppkey long, s_name string, s_nationkey int",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "nation",
         [(10, "GERMANY", 1)],
         "n_nationkey int, n_name string, n_regionkey int",
     )
     d = dt.datetime
-    _write(
+    crafted.write(
         spark, tmp_path, "lineitem",
         [
             # s1: 60 + 40.5 = 100.5 > 100 -> qualifies (via TWO lines -> one row)
@@ -210,7 +178,7 @@ def test_q20_having_and_shipdate_boundaries_both_engines(spark, tmp_path):
     got = [tuple(r) for r in q20_potential_part_promotion(spark, str(tmp_path)).collect()]
     assert got == [("s1", "GERMANY")]
     spec = all_specs()["q20_potential_part_promotion"]
-    assert _oracle(
+    assert crafted.oracle(
         tmp_path, ("part", "supplier", "nation", "lineitem"), spec.sql
     ) == [("s1", "GERMANY")]
 
@@ -234,7 +202,7 @@ def test_merge_incremental_displaced_insert_three_way(spark, tmp_path):
         (100_000_101, 1, "F", 50.0, day, "3-MEDIUM"),   # DISPLACED by key-101 insert
         (5, 1, "F", 10.0, day, "3-MEDIUM"),             # untouched
     ]
-    _write(
+    crafted.write(
         spark, tmp_path, "orders", rows,
         "o_orderkey long, o_custkey long, o_orderstatus string, "
         "o_totalprice double, o_orderdate timestamp, o_orderpriority string",
@@ -242,10 +210,10 @@ def test_merge_incremental_displaced_insert_three_way(spark, tmp_path):
     # hand truth with python doubles (both engines do the same IEEE ops)
     want = sorted(
         [
-            ("F", 1, _dround_py(10.0)),
-            ("N", 2, _dround_py(200.0 + 300.0)),
-            ("O", 1, _dround_py(200.0)),
-            ("U", 2, _dround_py(100.0 * 1.05 + 300.0 * 1.05)),
+            ("F", 1, crafted.r(10.0, 2)),
+            ("N", 2, crafted.r(200.0 + 300.0, 2)),
+            ("O", 1, crafted.r(200.0, 2)),
+            ("U", 2, crafted.r(100.0 * 1.05 + 300.0 * 1.05, 2)),
             # P: its only row migrated to U -> no output row (n > 0)
         ]
     )
@@ -259,7 +227,7 @@ def test_merge_incremental_displaced_insert_three_way(spark, tmp_path):
     assert inc == want
     assert full == want
     spec = all_specs()["merge_upsert_orders_incremental"]
-    assert sorted(_oracle(tmp_path, ("orders",), spec.sql)) == want
+    assert sorted(crafted.oracle(tmp_path, ("orders",), spec.sql)) == want
 
 
 # ---------------------------------------------------------------------------
@@ -279,7 +247,7 @@ def test_profile_all_null_column_both_engines(spark, tmp_path):
         (2, None, "O", None, d, "P2"),
         (3, None, None, 10.0, None, "P1"),
     ]
-    _write(spark, tmp_path, "orders", rows, _ORDERS_SCHEMA)
+    crafted.write(spark, tmp_path, "orders", rows, _ORDERS_SCHEMA)
     want = {
         "o_orderkey": (0, 3),
         "o_custkey": (3, 0),      # the all-NULL column: distinct counts 0
@@ -295,12 +263,12 @@ def test_profile_all_null_column_both_engines(spark, tmp_path):
     assert got == want
     spec = all_specs()["profile_orders_columns"]
     assert {
-        c: (n, d_) for c, n, d_ in _oracle(tmp_path, ("orders",), spec.sql)
+        c: (n, d_) for c, n, d_ in crafted.oracle(tmp_path, ("orders",), spec.sql)
     } == want
 
 
 def test_profile_empty_table_both_engines(spark, tmp_path):
-    _write(spark, tmp_path, "orders", [], _ORDERS_SCHEMA)
+    crafted.write(spark, tmp_path, "orders", [], _ORDERS_SCHEMA)
     want = {
         c: (0, 0)
         for c in (
@@ -315,7 +283,7 @@ def test_profile_empty_table_both_engines(spark, tmp_path):
     assert got == want
     spec = all_specs()["profile_orders_columns"]
     assert {
-        c: (n, d_) for c, n, d_ in _oracle(tmp_path, ("orders",), spec.sql)
+        c: (n, d_) for c, n, d_ in crafted.oracle(tmp_path, ("orders",), spec.sql)
     } == want
 
 
@@ -363,19 +331,18 @@ def test_nan_measure_rounded_sum_joins_oracle_contract(spark, tmp_path):
         (2, dt.datetime(2024, 1, 1, 0, 2), "a", nan),
         (3, dt.datetime(2024, 1, 1, 0, 15), "b", 2.5),
     ]
-    _write(
+    crafted.write(
         spark, tmp_path, "events", rows,
         "event_id long, ts timestamp, event_type string, value double",
     )
-    got = _nan_canon(
-        tuple(r) for r in events_tumbling_10m(spark, str(tmp_path)).collect()
-    )
+    sdf = events_tumbling_10m(spark, str(tmp_path))
+    got = sdf.collect()
     spec = all_specs()["events_tumbling_10m"]
-    oracle = _nan_canon(_oracle(tmp_path, ("events",), spec.sql))
-    assert got == oracle
+    oracle = crafted.oracle(tmp_path, ("events",), spec.sql)
+    assert normalize(got, sdf.columns) == normalize(oracle, sdf.columns)
     # and the NaN really is where we say it is
-    by_type = {r[2]: (r[3], r[4]) for r in got}
-    assert by_type == {"a": (2, "NaN"), "b": (1, 2.5)}
+    by_type = {r[2]: (r[3], repr(r[4])) for r in got}
+    assert by_type == {"a": (2, "nan"), "b": (1, "2.5")}
 
 
 def test_nan_variance_family_joins_oracle_contract_via_finite_ingress(spark, tmp_path):
@@ -392,24 +359,24 @@ def test_nan_variance_family_joins_oracle_contract_via_finite_ingress(spark, tmp
     stddev_samp is NULL; stddev_samp({3,7}) = sqrt(8) = 2.8284...
     """
     nan, inf = float("nan"), float("inf")
-    _write(
+    crafted.write(
         spark, tmp_path, "customer",
         [("A", 1.0), ("A", nan), ("B", 2.0), ("C", inf), ("C", 3.0), ("C", 7.0)],
         "c_mktsegment string, c_acctbal double",
     )
-    want = _nan_canon(
+    sdf = agg_stats_by_segment(spark, str(tmp_path))
+    want = normalize(
         [
             ("A", 2, 1.0, 1.0, 1.0, 1.0, None),
             ("B", 1, 2.0, 2.0, 2.0, 2.0, None),
             ("C", 3, 10.0, 5.0, 3.0, 7.0, 2.8284),
-        ]
+        ],
+        sdf.columns,
     )
-    got = _nan_canon(
-        tuple(r) for r in agg_stats_by_segment(spark, str(tmp_path)).collect()
-    )
-    assert got == want
+    assert normalize(sdf.collect(), sdf.columns) == want
     spec = all_specs()["agg_stats_by_segment"]
-    assert _nan_canon(_oracle(tmp_path, ("customer",), spec.sql)) == want
+    orows = crafted.oracle(tmp_path, ("customer",), spec.sql)
+    assert normalize(orows, sdf.columns) == want
 
 
 def test_nan_variance_comoment_family_finite_ingress_both_engines(spark, tmp_path):
@@ -427,7 +394,7 @@ def test_nan_variance_comoment_family_finite_ingress_both_engines(spark, tmp_pat
         (3, "A", nan, 20.0),
         (4, "A", 4.0, inf),
     ]
-    _write(
+    crafted.write(
         spark, tmp_path, "lineitem", rows,
         "l_orderkey long, l_returnflag string, l_quantity double, l_extendedprice double",
     )
@@ -435,7 +402,7 @@ def test_nan_variance_comoment_family_finite_ingress_both_engines(spark, tmp_pat
     got = [tuple(r) for r in agg_stats_quantity_price(spark, str(tmp_path)).collect()]
     assert got == want
     spec = all_specs()["agg_stats_quantity_price"]
-    assert _oracle(tmp_path, ("lineitem",), spec.sql) == want
+    assert crafted.oracle(tmp_path, ("lineitem",), spec.sql) == want
 
 
 # ---------------------------------------------------------------------------
@@ -451,7 +418,7 @@ def test_map_hof_case_colliding_keys_both_engines(spark, tmp_path):
         (1, "a", '{"Amt": 60, "amt": 7}'),
         (2, "a", '{"x": 1}'),
     ]
-    _write(
+    crafted.write(
         spark, tmp_path, "events", rows,
         "event_id long, event_type string, props string",
     )
@@ -463,5 +430,5 @@ def test_map_hof_case_colliding_keys_both_engines(spark, tmp_path):
     assert got == want
     spec = all_specs()["map_hof_event_props"]
     assert sorted(
-        _oracle(tmp_path, ("events",), spec.sql), key=lambda t: t[0]
+        crafted.oracle(tmp_path, ("events",), spec.sql), key=lambda t: t[0]
     ) == want

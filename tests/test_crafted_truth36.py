@@ -27,8 +27,8 @@ from __future__ import annotations
 
 import datetime as dt
 
-import duckdb
 
+import crafted
 from mapreduce_docker_spark.operators.relational_queries import (
     join_full_outer_balances,
     q6_forecast_revenue,
@@ -37,22 +37,6 @@ from mapreduce_docker_spark.operators.relational_queries import (
     window_range_price_band,
 )
 from mapreduce_docker_spark.registry import all_specs
-
-
-def _write(spark, tmp_path, table, rows, schema):
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
-def _oracle(tmp_path, tables, sql):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
-    return [tuple(r) for r in con.execute(sql).fetchall()]
 
 
 _LI6 = "l_shipdate timestamp, l_discount double, l_quantity double, l_extendedprice double"
@@ -72,21 +56,21 @@ def test_q6_between_and_cut_boundaries_both_engines(spark, tmp_path):
         (d(1997, 6, 1), 0.06, 24.0, 1000.0),                # out: qty == 24
         (d(1997, 6, 1), None, 1.0, 1000.0),                 # out: NULL discount
     ]
-    _write(spark, tmp_path, "lineitem", rows, _LI6)
+    crafted.write(spark, tmp_path, "lineitem", rows, _LI6)
     want = [(19.0,)]  # 100*0.05 + 200*0.07
     got = [tuple(r) for r in q6_forecast_revenue(spark, str(tmp_path)).collect()]
     assert got == want
     spec = all_specs()["q6_forecast_revenue"]
-    assert _oracle(tmp_path, ("lineitem",), spec.sql) == want
+    assert crafted.oracle(tmp_path, ("lineitem",), spec.sql) == want
 
 
 def test_q18_having_boundary_and_null_qty_both_engines(spark, tmp_path):
-    _write(
+    crafted.write(
         spark, tmp_path, "orders",
         [(1, 10, "O"), (2, 10, "O"), (3, 20, "F")],
         "o_orderkey long, o_custkey long, o_orderstatus string",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "lineitem",
         [
             (1, 150.0), (1, 150.0),          # exactly 300 -> strict > excludes
@@ -99,7 +83,7 @@ def test_q18_having_boundary_and_null_qty_both_engines(spark, tmp_path):
     got = sorted(tuple(r) for r in q18_large_orders(spark, str(tmp_path)).collect())
     assert got == want
     spec = all_specs()["q18_large_orders"]
-    assert sorted(_oracle(tmp_path, ("orders", "lineitem"), spec.sql)) == want
+    assert sorted(crafted.oracle(tmp_path, ("orders", "lineitem"), spec.sql)) == want
 
 
 _LI14 = "l_partkey long, l_shipdate timestamp, l_extendedprice double, l_discount double"
@@ -111,16 +95,16 @@ def test_q14_zero_total_revenue_is_null_both_engines(spark, tmp_path):
     on Spark (ANSI) while DuckDB emitted its div-by-zero NULL. Contract:
     the promo share of a zero total is NULL on both engines."""
     d = dt.datetime
-    _write(
+    crafted.write(
         spark, tmp_path, "lineitem",
         [(1, d(1997, 9, 5), 0.0, 0.0), (2, d(1997, 9, 6), 0.0, 0.1)],
         _LI14,
     )
-    _write(spark, tmp_path, "part", [(1, "PROMO X"), (2, "STD Y")], _PART14)
+    crafted.write(spark, tmp_path, "part", [(1, "PROMO X"), (2, "STD Y")], _PART14)
     got = [tuple(r) for r in q14_promo_revenue_share(spark, str(tmp_path)).collect()]
     assert got == [(None,)]
     spec = all_specs()["q14_promo_revenue_share"]
-    assert _oracle(tmp_path, ("lineitem", "part"), spec.sql) == [(None,)]
+    assert crafted.oracle(tmp_path, ("lineitem", "part"), spec.sql) == [(None,)]
 
 
 def test_q14_share_and_empty_window_both_engines(spark, tmp_path):
@@ -128,7 +112,7 @@ def test_q14_share_and_empty_window_both_engines(spark, tmp_path):
     empty ship month (sum NULL) stays NULL rather than crashing or
     printing 0."""
     d = dt.datetime
-    _write(
+    crafted.write(
         spark, tmp_path, "lineitem",
         [
             (1, d(1997, 9, 10), 100.0, 0.1),   # promo: 90.0
@@ -138,22 +122,22 @@ def test_q14_share_and_empty_window_both_engines(spark, tmp_path):
         ],
         _LI14,
     )
-    _write(spark, tmp_path, "part", [(1, "PROMO X"), (2, "STD Y")], _PART14)
+    crafted.write(spark, tmp_path, "part", [(1, "PROMO X"), (2, "STD Y")], _PART14)
     want = [(37.5,)]  # floor(100*90/240*10000+0.5)/10000
     got = [tuple(r) for r in q14_promo_revenue_share(spark, str(tmp_path)).collect()]
     assert got == want
     spec = all_specs()["q14_promo_revenue_share"]
-    assert _oracle(tmp_path, ("lineitem", "part"), spec.sql) == want
+    assert crafted.oracle(tmp_path, ("lineitem", "part"), spec.sql) == want
 
     # empty window: nothing ships in 1997-09
-    _write(
+    crafted.write(
         spark, tmp_path, "lineitem",
         [(1, d(1990, 1, 1), 5.0, 0.0)],
         _LI14,
     )
     got = [tuple(r) for r in q14_promo_revenue_share(spark, str(tmp_path)).collect()]
     assert got == [(None,)]
-    assert _oracle(tmp_path, ("lineitem", "part"), spec.sql) == [(None,)]
+    assert crafted.oracle(tmp_path, ("lineitem", "part"), spec.sql) == [(None,)]
 
 
 def test_range_band_ties_and_null_peers_both_engines(spark, tmp_path):
@@ -168,7 +152,7 @@ def test_range_band_ties_and_null_peers_both_engines(spark, tmp_path):
         (6, 10, 20000.0),                    # band floor 10000: alone
         (7, 20, 50.0),                       # separate partition
     ]
-    _write(
+    crafted.write(
         spark, tmp_path, "orders", rows,
         "o_orderkey long, o_custkey long, o_totalprice double",
     )
@@ -183,7 +167,7 @@ def test_range_band_ties_and_null_peers_both_engines(spark, tmp_path):
     assert got == want
     spec = all_specs()["window_range_price_band"]
     assert sorted(
-        _oracle(tmp_path, ("orders",), spec.sql), key=lambda t: t[1]
+        crafted.oracle(tmp_path, ("orders",), spec.sql), key=lambda t: t[1]
     ) == want
 
 
@@ -196,31 +180,31 @@ def test_q8_zero_volume_year_is_null_both_engines(spark, tmp_path):
     from mapreduce_docker_spark.operators.tpch_queries import q8_market_share
 
     d = dt.datetime
-    _write(spark, tmp_path, "part", [(1, "ECONOMY")], "p_partkey long, p_type string")
-    _write(
+    crafted.write(spark, tmp_path, "part", [(1, "ECONOMY")], "p_partkey long, p_type string")
+    crafted.write(
         spark, tmp_path, "supplier",
         [(1, 3), (2, 4)],
         "s_suppkey long, s_nationkey int",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "customer", [(1, 5)], "c_custkey long, c_nationkey int"
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "nation",
         [(3, "NATION_3", 9), (4, "NATION_4", 9), (5, "NATION_5", 7)],
         "n_nationkey int, n_name string, n_regionkey int",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "region",
         [(7, "ASIA"), (9, "EUROPE")],
         "r_regionkey int, r_name string",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "orders",
         [(10, 1, d(1996, 6, 1)), (11, 1, d(1997, 6, 1))],
         "o_orderkey long, o_custkey long, o_orderdate timestamp",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "lineitem",
         [
             # 1996: all-zero volume -> NULL share
@@ -238,7 +222,7 @@ def test_q8_zero_volume_year_is_null_both_engines(spark, tmp_path):
     assert got == want
     spec = all_specs()["q8_market_share"]
     assert sorted(
-        _oracle(
+        crafted.oracle(
             tmp_path,
             ("part", "supplier", "customer", "nation", "region", "orders", "lineitem"),
             spec.sql,
@@ -247,7 +231,7 @@ def test_q8_zero_volume_year_is_null_both_engines(spark, tmp_path):
 
 
 def test_full_outer_balances_dangling_sides_both_engines(spark, tmp_path):
-    _write(
+    crafted.write(
         spark, tmp_path, "customer",
         [
             (1, 1, 10.0), (2, 1, 20.0), (3, 1, None),  # nation 1: 30.0 (NULL skipped)
@@ -256,12 +240,12 @@ def test_full_outer_balances_dangling_sides_both_engines(spark, tmp_path):
         ],
         "c_custkey long, c_nationkey int, c_acctbal double",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "supplier",
         [(1, 2, 5.0), (2, None, 77.0)],
         "s_suppkey long, s_nationkey int, s_acctbal double",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "nation",
         [(1, "A", 0), (2, "B", 0), (3, "C", 0)],
         "n_nationkey int, n_name string, n_regionkey int",
@@ -276,5 +260,5 @@ def test_full_outer_balances_dangling_sides_both_engines(spark, tmp_path):
     assert got == want
     spec = all_specs()["join_full_outer_balances"]
     assert sorted(
-        _oracle(tmp_path, ("customer", "supplier", "nation"), spec.sql)
+        crafted.oracle(tmp_path, ("customer", "supplier", "nation"), spec.sql)
     ) == want

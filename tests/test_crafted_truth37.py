@@ -26,8 +26,8 @@ from __future__ import annotations
 
 import datetime as dt
 
-import duckdb
 
+import crafted
 from mapreduce_docker_spark.operators.tpch_queries import (
     q13_customer_distribution,
     q15_top_supplier,
@@ -36,24 +36,8 @@ from mapreduce_docker_spark.operators.tpch_queries import (
 from mapreduce_docker_spark.registry import all_specs
 
 
-def _write(spark, tmp_path, table, rows, schema):
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
-def _oracle(tmp_path, tables, sql):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
-    return [tuple(r) for r in con.execute(sql).fetchall()]
-
-
 def test_q16_null_keys_excluded_both_engines(spark, tmp_path):
-    _write(
+    crafted.write(
         spark, tmp_path, "part",
         [
             (1, "Brand#2", "STD", 5),
@@ -64,12 +48,12 @@ def test_q16_null_keys_excluded_both_engines(spark, tmp_path):
         ],
         "p_partkey long, p_brand string, p_type string, p_size int",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "supplier",
         [(1, 10.0), (2, -5.0), (3, None), (None, -9.0)],
         "s_suppkey long, s_acctbal double",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "lineitem",
         [
             (1, 1),      # good supplier -> counted
@@ -86,17 +70,17 @@ def test_q16_null_keys_excluded_both_engines(spark, tmp_path):
     assert got == want
     spec = all_specs()["q16_parts_supplier"]
     assert sorted(
-        _oracle(tmp_path, ("part", "supplier", "lineitem"), spec.sql)
+        crafted.oracle(tmp_path, ("part", "supplier", "lineitem"), spec.sql)
     ) == want
 
 
 def test_q13_condition_filter_and_null_keys_both_engines(spark, tmp_path):
-    _write(
+    crafted.write(
         spark, tmp_path, "customer",
         [(1,), (2,), (3,), (None,)],
         "c_custkey long",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "orders",
         [
             (10, 1, "1-URGENT"),   # cust 1's ONLY order is urgent -> c_count 0
@@ -116,17 +100,17 @@ def test_q13_condition_filter_and_null_keys_both_engines(spark, tmp_path):
     )
     assert got == want
     spec = all_specs()["q13_customer_distribution"]
-    assert sorted(_oracle(tmp_path, ("customer", "orders"), spec.sql)) == want
+    assert sorted(crafted.oracle(tmp_path, ("customer", "orders"), spec.sql)) == want
 
 
 def test_q15_max_tie_returns_both_both_engines(spark, tmp_path):
     d = dt.datetime
-    _write(
+    crafted.write(
         spark, tmp_path, "supplier",
         [(1, "s1"), (2, "s2"), (3, "s3")],
         "s_suppkey long, s_name string",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "lineitem",
         [
             # s1 and s2 tie at rounded 100.00; s3 trails at 99.99
@@ -146,4 +130,4 @@ def test_q15_max_tie_returns_both_both_engines(spark, tmp_path):
     got = sorted(tuple(r) for r in q15_top_supplier(spark, str(tmp_path)).collect())
     assert got == want
     spec = all_specs()["q15_top_supplier"]
-    assert sorted(_oracle(tmp_path, ("supplier", "lineitem"), spec.sql)) == want
+    assert sorted(crafted.oracle(tmp_path, ("supplier", "lineitem"), spec.sql)) == want

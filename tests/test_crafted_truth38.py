@@ -42,8 +42,8 @@ from __future__ import annotations
 
 import datetime as dt
 
-import duckdb
 
+import crafted
 from mapreduce_docker_spark.operators.dedup_queries import (
     _SQL_UNIT,
     _unit_vectors,
@@ -62,22 +62,6 @@ from mapreduce_docker_spark.operators.relational_queries import (
 from mapreduce_docker_spark.operators.tpch_queries import q2_min_cost_supplier
 from mapreduce_docker_spark.registry import all_specs
 from mapreduce_docker_spark.streaming.window_queries import events_session_5m
-
-
-def _write(spark, tmp_path, table, rows, schema):
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
-def _oracle(tmp_path, tables, sql):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
-    return [tuple(r) for r in con.execute(sql).fetchall()]
 
 
 _ORDERS_NULLDATE = [
@@ -99,7 +83,7 @@ _ORDERS_SCHEMA = (
 def test_running_spend_null_dates_last_both_engines(spark, tmp_path):
     # running sums along 1,5,3,6,2,4: 10, 12, 19, 19 (NULL price adds
     # nothing), 24, 25; order_seq counts every row
-    _write(spark, tmp_path, "orders", _ORDERS_NULLDATE, _ORDERS_SCHEMA)
+    crafted.write(spark, tmp_path, "orders", _ORDERS_NULLDATE, _ORDERS_SCHEMA)
     want = sorted(
         [
             (1, 1, 10.0, 1),
@@ -113,20 +97,20 @@ def test_running_spend_null_dates_last_both_engines(spark, tmp_path):
     got = sorted(tuple(r) for r in window_running_spend(spark, str(tmp_path)).collect())
     assert got == want
     assert sorted(
-        _oracle(tmp_path, ("orders",), all_specs()["window_running_spend"].sql)
+        crafted.oracle(tmp_path, ("orders",), all_specs()["window_running_spend"].sql)
     ) == want
 
 
 def test_first_last_null_dates_last_both_engines(spark, tmp_path):
     # full-partition frame over the same order: first=1, last=4, second=5
-    _write(spark, tmp_path, "orders", _ORDERS_NULLDATE, _ORDERS_SCHEMA)
+    crafted.write(spark, tmp_path, "orders", _ORDERS_NULLDATE, _ORDERS_SCHEMA)
     want = sorted((1, k, 1, 4, 5) for k in (1, 2, 3, 4, 5, 6))
     got = sorted(
         tuple(r) for r in window_first_last_orders(spark, str(tmp_path)).collect()
     )
     assert got == want
     assert sorted(
-        _oracle(tmp_path, ("orders",), all_specs()["window_first_last_orders"].sql)
+        crafted.oracle(tmp_path, ("orders",), all_specs()["window_first_last_orders"].sql)
     ) == want
 
 
@@ -136,7 +120,7 @@ def test_distribution_ranks_null_price_last_both_engines(spark, tmp_path):
     # percent_rank = (rank-1)/3 = 0, 1/3, 2/3, 1; cume_dist = k/4;
     # ntile(10) with 4 rows = 1..4. A NULL price at rank 1 (the old Spark
     # default) shifted every percent_rank in the partition.
-    _write(
+    crafted.write(
         spark, tmp_path, "orders",
         [
             (1, "F", 10.0),
@@ -159,7 +143,7 @@ def test_distribution_ranks_null_price_last_both_engines(spark, tmp_path):
     )
     assert got == want
     assert sorted(
-        _oracle(tmp_path, ("orders",), all_specs()["window_distribution_ranks"].sql)
+        crafted.oracle(tmp_path, ("orders",), all_specs()["window_distribution_ranks"].sql)
     ) == want
 
 
@@ -167,7 +151,7 @@ def test_cohort_ltv_undated_orders_excluded_both_engines(spark, tmp_path):
     # cust 1 cohorts at 2020-01 (100.0), reorders at offset 2 (50.0); its
     # undated 999.0 order and cust 2 (whose ONLY order is undated) are
     # outside cohort-month semantics entirely
-    _write(
+    crafted.write(
         spark, tmp_path, "orders",
         [
             (1, 1, dt.datetime(2020, 1, 15), 100.0),
@@ -186,7 +170,7 @@ def test_cohort_ltv_undated_orders_excluded_both_engines(spark, tmp_path):
     got = sorted(tuple(r) for r in orders_cohort_ltv(spark, str(tmp_path)).collect())
     assert got == want
     assert sorted(
-        _oracle(tmp_path, ("orders",), all_specs()["orders_cohort_ltv"].sql)
+        crafted.oracle(tmp_path, ("orders",), all_specs()["orders_cohort_ltv"].sql)
     ) == want
 
 
@@ -194,23 +178,23 @@ def test_q2_zero_quantity_defines_no_unit_cost_both_engines(spark, tmp_path):
     # part 1's lines: qty 0 (no unit cost — the old raw division THREW
     # under ANSI), 90/3 = 30 (the min), NULL price and NULL qty (NULL).
     # part 2 has ONLY a zero-quantity line: no unit cost at all -> no row.
-    _write(spark, tmp_path, "region", [(1, "EUROPE")], "r_regionkey int, r_name string")
-    _write(
+    crafted.write(spark, tmp_path, "region", [(1, "EUROPE")], "r_regionkey int, r_name string")
+    crafted.write(
         spark, tmp_path, "nation",
         [(1, "NATION_1", 1)],
         "n_nationkey int, n_name string, n_regionkey int",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "supplier",
         [(1, "Supplier#1", 1, 100.0)],
         "s_suppkey long, s_name string, s_nationkey int, s_acctbal double",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "part",
         [(1, "alpha part", "LARGE", 12), (2, "beta part", "LARGE", 11)],
         "p_partkey long, p_name string, p_type string, p_size int",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "lineitem",
         [
             (1, 1, 100.0, 0.0),
@@ -224,7 +208,7 @@ def test_q2_zero_quantity_defines_no_unit_cost_both_engines(spark, tmp_path):
     want = [(100.0, "Supplier#1", "NATION_1", 1, "alpha part", 30.0)]
     got = [tuple(r) for r in q2_min_cost_supplier(spark, str(tmp_path)).collect()]
     assert got == want
-    assert _oracle(
+    assert crafted.oracle(
         tmp_path,
         ("region", "nation", "supplier", "part", "lineitem"),
         all_specs()["q2_min_cost_supplier"].sql,
@@ -235,7 +219,7 @@ def test_session_boundary_inclusive_merge_both_engines(spark, tmp_path):
     # user 1: 08:00:00 -> 08:05:00 (gap EXACTLY 300s: merges, measured
     # Spark semantics) -> 08:10:01 (gap 301s from the previous event:
     # splits). user 2: gap 299s merges. session_end = last event + 5 min.
-    _write(
+    crafted.write(
         spark, tmp_path, "events",
         [
             (1, 1, dt.datetime(2024, 1, 1, 8, 0, 0)),
@@ -256,14 +240,14 @@ def test_session_boundary_inclusive_merge_both_engines(spark, tmp_path):
     got = sorted(tuple(r) for r in events_session_5m(spark, str(tmp_path)).collect())
     assert got == want
     assert sorted(
-        _oracle(tmp_path, ("events",), all_specs()["events_session_5m"].sql)
+        crafted.oracle(tmp_path, ("events",), all_specs()["events_session_5m"].sql)
     ) == want
 
 
 def test_psapi_null_priority_group_kept_both_engines(spark, tmp_path):
     # NULL priority is a GROUP, not a dropped key: 2 orders, 2 customers,
     # 4500.0 revenue; the 500.0 order fails the >1000 filter
-    _write(
+    crafted.write(
         spark, tmp_path, "orders",
         [
             (1, 10, 2000.0, "1-URGENT"),
@@ -283,7 +267,7 @@ def test_psapi_null_priority_group_kept_both_engines(spark, tmp_path):
     )
     assert got == want
     assert sorted(
-        _oracle(tmp_path, ("orders",), all_specs()["psapi_priority_order_stats"].sql),
+        crafted.oracle(tmp_path, ("orders",), all_specs()["psapi_priority_order_stats"].sql),
         key=lambda t: (t[0] is None, str(t[0])),
     ) == want
 
@@ -297,7 +281,7 @@ def test_corr_pairwise_complete_both_engines(spark, tmp_path):
     # {1,2,3,10} = sqrt(12.5) -> 3.535534; var_pop of {2,4,6,100} = 1730.
     # Before the fix the reconstruction divided by the {1,2,3,10} stddev
     # and reported 0.016 where the pairwise corr is 1.0.
-    _write(
+    crafted.write(
         spark, tmp_path, "lineitem",
         [
             ("A", 1.0, 2.0),
@@ -311,7 +295,7 @@ def test_corr_pairwise_complete_both_engines(spark, tmp_path):
     want = [("A", 1.0, 1.3333, 3.535534, 1730.0)]
     got = [tuple(r) for r in agg_stats_quantity_price(spark, str(tmp_path)).collect()]
     assert got == want
-    assert _oracle(
+    assert crafted.oracle(
         tmp_path, ("lineitem",), all_specs()["agg_stats_quantity_price"].sql
     ) == want
 
@@ -322,7 +306,7 @@ def test_dimension_law_unit_vectors_both_engines(spark, tmp_path):
     # outside it by law (dim / zero-norm / finite-norm)
     dim64_a = [1.0] + [0.0] * 63
     dim64_b = [0.0, 1.0] + [0.0] * 62
-    _write(
+    crafted.write(
         spark, tmp_path, "embeddings",
         [
             (1, dim64_a, 0),
@@ -339,7 +323,7 @@ def test_dimension_law_unit_vectors_both_engines(spark, tmp_path):
         r["vec_id"] for r in _unit_vectors(spark, str(tmp_path)).collect()
     )
     assert got == [1, 2]
-    orows = _oracle(
+    orows = crafted.oracle(
         tmp_path, ("embeddings",), _SQL_UNIT + "SELECT vec_id FROM unit"
     )
     assert sorted(r[0] for r in orows) == [1, 2]
@@ -353,7 +337,7 @@ def test_mom_growth_undated_orders_excluded_both_engines(spark, tmp_path):
     excluded at ingress on BOTH engines, never ordered). Jan: prev NULL
     -> growth NULL; Feb: (150-100)/100 = 0.5; the undated 999.0 order is
     outside the series."""
-    _write(
+    crafted.write(
         spark, tmp_path, "orders",
         [
             (1, 1, dt.datetime(2020, 1, 15), 100.0),
@@ -379,7 +363,7 @@ def test_mom_growth_undated_orders_excluded_both_engines(spark, tmp_path):
     )
     assert got == want
     assert sorted(
-        _oracle(tmp_path, ("orders",), all_specs()["orders_mom_revenue_growth"].sql),
+        crafted.oracle(tmp_path, ("orders",), all_specs()["orders_mom_revenue_growth"].sql),
         key=str,
     ) == want
 
@@ -391,7 +375,7 @@ def test_retention_timeless_events_grant_no_cohort_both_engines(spark, tmp_path)
     0 actives = {1, 3}, offset 1 actives = {1} -> retention 1.0 then
     0.5."""
     w0, w1 = dt.datetime(2024, 1, 3, 10), dt.datetime(2024, 1, 10, 10)
-    _write(
+    crafted.write(
         spark, tmp_path, "events",
         [
             (1, 1, w0), (2, 1, w1),
@@ -415,7 +399,7 @@ def test_retention_timeless_events_grant_no_cohort_both_engines(spark, tmp_path)
     )
     assert got == want
     assert sorted(
-        _oracle(tmp_path, ("events",), all_specs()["events_retention_cohorts"].sql)
+        crafted.oracle(tmp_path, ("events",), all_specs()["events_retention_cohorts"].sql)
     ) == want
 
 
@@ -425,7 +409,7 @@ def test_enrichment_timeless_user_has_no_cohort_both_engines(spark, tmp_path):
     never enrich; user 1's two W0 'view' events count under their cohort
     week."""
     w0 = dt.datetime(2024, 1, 3, 10)
-    _write(
+    crafted.write(
         spark, tmp_path, "events",
         [
             (1, 1, w0, "view"),
@@ -444,7 +428,7 @@ def test_enrichment_timeless_user_has_no_cohort_both_engines(spark, tmp_path):
     )
     assert got == want
     assert sorted(
-        _oracle(tmp_path, ("events",), all_specs()["streaming_static_enrichment"].sql)
+        crafted.oracle(tmp_path, ("events",), all_specs()["streaming_static_enrichment"].sql)
     ) == want
 
 
@@ -468,7 +452,7 @@ def test_langid_unlabeled_is_not_a_class_both_engines(spark, tmp_path):
     """
     import math
 
-    _write(
+    crafted.write(
         spark, tmp_path, "documents",
         [(1, "aa bb", "en"), (2, "cc", "fr"), (3, "aa cc", None)],
         "doc_id long, text string, lang string",
@@ -492,7 +476,7 @@ def test_langid_unlabeled_is_not_a_class_both_engines(spark, tmp_path):
     got = sorted(tuple(r) for r in text_langid_nb(spark, str(tmp_path)).collect())
     assert got == want
     assert sorted(
-        _oracle(tmp_path, ("documents",), all_specs()["text_langid_nb"].sql)
+        crafted.oracle(tmp_path, ("documents",), all_specs()["text_langid_nb"].sql)
     ) == want
 
 
@@ -506,7 +490,7 @@ def test_malformed_props_are_no_properties_both_engines(spark, tmp_path):
     without the json_type = OBJECT guard. Hand truths: doc 1's doubled
     values are 120 + 2 = 122 with 120 > 100 large; '{}' is the EMPTY map
     (0,0,0), distinct from the unparseable rows (all-NULL)."""
-    _write(
+    crafted.write(
         spark, tmp_path, "events",
         [
             (1, "view", '{"k": 60, "j": 1}'),
@@ -529,7 +513,7 @@ def test_malformed_props_are_no_properties_both_engines(spark, tmp_path):
     # json_event_props: k values {60, 2} -> avg 31.0, max 60; all 6 count
     want = [("view", 6, 31.0, 60)]
     assert [tuple(r) for r in json_event_props(spark, str(tmp_path)).collect()] == want
-    assert _oracle(tmp_path, ("events",), specs["json_event_props"].sql) == want
+    assert crafted.oracle(tmp_path, ("events",), specs["json_event_props"].sql) == want
 
     # json_variant_events: only parsable OBJECT rows extract k
     want = sorted(
@@ -538,13 +522,13 @@ def test_malformed_props_are_no_properties_both_engines(spark, tmp_path):
     )
     got = sorted(tuple(r) for r in json_variant_events(spark, str(tmp_path)).collect())
     assert got == want
-    assert sorted(_oracle(tmp_path, ("events",), specs["json_variant_events"].sql)) == want
+    assert sorted(crafted.oracle(tmp_path, ("events",), specs["json_variant_events"].sql)) == want
 
     # json_map_entries: entries exist only for parsable objects with keys
     want = sorted([(1, "j", 1), (1, "k", 60), (6, "k", 2)])
     got = sorted(tuple(r) for r in json_map_entries(spark, str(tmp_path)).collect())
     assert got == want
-    assert sorted(_oracle(tmp_path, ("events",), specs["json_map_entries"].sql)) == want
+    assert sorted(crafted.oracle(tmp_path, ("events",), specs["json_map_entries"].sql)) == want
 
     # map_hof: empty map (0,0,0) vs no-properties (NULL,NULL,NULL)
     want = sorted(
@@ -553,14 +537,14 @@ def test_malformed_props_are_no_properties_both_engines(spark, tmp_path):
     )
     got = sorted(tuple(r) for r in map_hof_event_props(spark, str(tmp_path)).collect())
     assert got == want
-    assert sorted(_oracle(tmp_path, ("events",), specs["map_hof_event_props"].sql)) == want
+    assert sorted(crafted.oracle(tmp_path, ("events",), specs["map_hof_event_props"].sql)) == want
 
 
 def test_chain_null_key_components_excluded_both_engines(spark, tmp_path):
     # (user 1, 'view'): first kept, +1h dropped (within 24h), +25h kept.
     # The NULL-user and NULL-type events have no chain identity.
     t0 = dt.datetime(2024, 1, 1, 8, 0, 0)
-    _write(
+    crafted.write(
         spark, tmp_path, "events",
         [
             (1, 1, "view", t0),
@@ -579,5 +563,5 @@ def test_chain_null_key_components_excluded_both_engines(spark, tmp_path):
     )
     assert got == want
     assert sorted(
-        _oracle(tmp_path, ("events",), all_specs()["dedup_chain_within_delay"].sql)
+        crafted.oracle(tmp_path, ("events",), all_specs()["dedup_chain_within_delay"].sql)
     ) == want

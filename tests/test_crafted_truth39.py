@@ -25,8 +25,8 @@ from __future__ import annotations
 import datetime as dt
 import hashlib
 
-import duckdb
 
+import crafted
 from mapreduce_docker_spark.operators.relational_queries import (
     q4_order_priority_check,
     q12_shipmode_priority,
@@ -37,28 +37,12 @@ from mapreduce_docker_spark.operators.textanalysis_queries import (
 from mapreduce_docker_spark.registry import all_specs
 
 
-def _write(spark, tmp_path, table, rows, schema):
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
-def _oracle(tmp_path, tables, sql):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
-    return [tuple(r) for r in con.execute(sql).fetchall()]
-
-
 def _key(t):
     return tuple((x is None, str(x)) for x in t)
 
 
 def test_q4_exists_window_boundaries_both_engines(spark, tmp_path):
-    _write(
+    crafted.write(
         spark, tmp_path, "orders",
         [
             (1, dt.datetime(1997, 1, 1), "1-URGENT"),   # boundary IN
@@ -70,7 +54,7 @@ def test_q4_exists_window_boundaries_both_engines(spark, tmp_path):
         ],
         "o_orderkey long, o_orderdate timestamp, o_orderpriority string",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "lineitem",
         [
             (1, dt.datetime(1997, 1, 5)),
@@ -91,19 +75,19 @@ def test_q4_exists_window_boundaries_both_engines(spark, tmp_path):
     )
     assert got == want
     assert sorted(
-        _oracle(tmp_path, ("orders", "lineitem"),
-                all_specs()["q4_order_priority_check"].sql),
+        crafted.oracle(tmp_path, ("orders", "lineitem"),
+                       all_specs()["q4_order_priority_check"].sql),
         key=_key,
     ) == want
 
 
 def test_q12_null_priority_counts_neither_both_engines(spark, tmp_path):
-    _write(
+    crafted.write(
         spark, tmp_path, "orders",
         [(1, "1-URGENT"), (2, "3-MEDIUM"), (3, None), (4, "2-HIGH")],
         "o_orderkey long, o_orderpriority string",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "lineitem",
         [
             (1, dt.datetime(1997, 1, 1), "F"),    # boundary IN, high
@@ -124,8 +108,8 @@ def test_q12_null_priority_counts_neither_both_engines(spark, tmp_path):
     )
     assert got == want
     assert sorted(
-        _oracle(tmp_path, ("orders", "lineitem"),
-                all_specs()["q12_shipmode_priority"].sql),
+        crafted.oracle(tmp_path, ("orders", "lineitem"),
+                       all_specs()["q12_shipmode_priority"].sql),
         key=_key,
     ) == want
 
@@ -135,7 +119,7 @@ def test_split_band_edges_exact_both_engines(spark, tmp_path):
     # 66 -> 90 (first val), 12 -> 94 (last val), 43 -> 95 (first test),
     # 1 -> 79 (mid train), 2 -> 96 (mid test)
     ids = [17, 66, 12, 43, 1, 2]
-    _write(
+    crafted.write(
         spark, tmp_path, "documents",
         [(d, "en") for d in ids],
         "doc_id long, lang string",
@@ -152,5 +136,5 @@ def test_split_band_edges_exact_both_engines(spark, tmp_path):
     got = sorted(tuple(r) for r in text_train_val_split(spark, str(tmp_path)).collect())
     assert got == want
     assert sorted(
-        _oracle(tmp_path, ("documents",), all_specs()["text_train_val_split"].sql)
+        crafted.oracle(tmp_path, ("documents",), all_specs()["text_train_val_split"].sql)
     ) == want

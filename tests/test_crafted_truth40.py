@@ -24,8 +24,8 @@ from __future__ import annotations
 import math
 from decimal import ROUND_HALF_UP, Decimal
 
-import duckdb
 
+import crafted
 from mapreduce_docker_spark.operators.relational_queries import (
     q19_discounted_revenue,
 )
@@ -34,28 +34,12 @@ from mapreduce_docker_spark.operators.udf_queries import udf_pandas_saturation
 from mapreduce_docker_spark.registry import all_specs
 
 
-def _write(spark, tmp_path, table, rows, schema):
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
-def _oracle(tmp_path, tables, sql):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
-    return [tuple(r) for r in con.execute(sql).fetchall()]
-
-
 def test_q19_band_edges_and_null_predicates_both_engines(spark, tmp_path):
     # contributing lines: (1, qty 30) -> 100; (3, qty 10) -> 200*0.5 = 100;
     # (3, qty 40) -> 80*0.75 = 60; (4, qty 20) -> 40; (4, qty 50) -> 10;
     # everything else is an edge-out, a NULL predicate, or a NULL-discount
     # term that sum() skips. Total 310.00.
-    _write(
+    crafted.write(
         spark, tmp_path, "part",
         [
             (1, "Brand#11", 15),   # size edge IN for branch 1
@@ -66,7 +50,7 @@ def test_q19_band_edges_and_null_predicates_both_engines(spark, tmp_path):
         ],
         "p_partkey long, p_brand string, p_size int",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "lineitem",
         [
             (1, 30.0, 100.0, 0.0),    # qty edge IN (branch 1 max)
@@ -88,7 +72,7 @@ def test_q19_band_edges_and_null_predicates_both_engines(spark, tmp_path):
     )
     want = [(310.0,)]
     assert [tuple(r) for r in q19_discounted_revenue(spark, str(tmp_path)).collect()] == want
-    assert _oracle(
+    assert crafted.oracle(
         tmp_path, ("part", "lineitem"), all_specs()["q19_discounted_revenue"].sql
     ) == want
 
@@ -98,11 +82,11 @@ def test_q11_exact_threshold_boundary_both_engines(spark, tmp_path):
     # threshold 1000.00; strict > keeps ONLY part 101. Part 102 sits
     # EXACTLY on the cut. The foreign supplier and the NULL suppkey rows
     # are outside NATION_5's value entirely.
-    _write(spark, tmp_path, "nation", [(5, "NATION_5"), (6, "NATION_6")],
-           "n_nationkey int, n_name string")
-    _write(spark, tmp_path, "supplier", [(1, 5), (2, 6)],
-           "s_suppkey long, s_nationkey int")
-    _write(
+    crafted.write(spark, tmp_path, "nation", [(5, "NATION_5"), (6, "NATION_6")],
+                  "n_nationkey int, n_name string")
+    crafted.write(spark, tmp_path, "supplier", [(1, 5), (2, 6)],
+                  "s_suppkey long, s_nationkey int")
+    crafted.write(
         spark, tmp_path, "lineitem",
         [
             (101, 1, 998999.0, 1.0),
@@ -115,7 +99,7 @@ def test_q11_exact_threshold_boundary_both_engines(spark, tmp_path):
     )
     want = [(101, 998999.0)]
     assert [tuple(r) for r in q11_important_stock(spark, str(tmp_path)).collect()] == want
-    assert _oracle(
+    assert crafted.oracle(
         tmp_path, ("nation", "supplier", "lineitem"),
         all_specs()["q11_important_stock"].sql,
     ) == want
@@ -128,7 +112,7 @@ def test_saturation_tanh_recomputed_both_engines(spark, tmp_path):
         (3, "straße émoji \U0001f680"),  # 14 CODEPOINTS, 19 utf-8 bytes
         (4, None),                     # NULL text -> NULL
     ]
-    _write(spark, tmp_path, "documents", docs, "doc_id long, text string")
+    crafted.write(spark, tmp_path, "documents", docs, "doc_id long, text string")
 
     def truth(n):
         t = (math.exp(2 * n / 500.0) - 1) / (math.exp(2 * n / 500.0) + 1)
@@ -144,5 +128,5 @@ def test_saturation_tanh_recomputed_both_engines(spark, tmp_path):
     got = sorted(tuple(r) for r in udf_pandas_saturation(spark, str(tmp_path)).collect())
     assert got == want
     assert sorted(
-        _oracle(tmp_path, ("documents",), all_specs()["udf_pandas_saturation"].sql)
+        crafted.oracle(tmp_path, ("documents",), all_specs()["udf_pandas_saturation"].sql)
     ) == want

@@ -24,30 +24,14 @@ walked by hand here:
 
 from __future__ import annotations
 
-import duckdb
 
+import crafted
 from mapreduce_docker_spark.operators.textanalysis_queries import text_pii_scrub
 from mapreduce_docker_spark.registry import all_specs
 
 
-def _write(spark, tmp_path, table, rows, schema):
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
-def _oracle(tmp_path, tables, sql):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
-    return [tuple(r) for r in con.execute(sql).fetchall()]
-
-
 def test_pii_scrub_regex_boundaries_both_engines(spark, tmp_path):
-    _write(
+    crafted.write(
         spark, tmp_path, "documents",
         [
             (1, "contact user@x.com123456789 now"),
@@ -75,5 +59,5 @@ def test_pii_scrub_regex_boundaries_both_engines(spark, tmp_path):
     )
     assert got == want
     assert sorted(
-        _oracle(tmp_path, ("documents",), all_specs()["text_pii_scrub"].sql), key=str
+        crafted.oracle(tmp_path, ("documents",), all_specs()["text_pii_scrub"].sql), key=str
     ) == want

@@ -29,9 +29,9 @@ Hand total: S1 = 3, S3 = 1, ordered numwait DESC.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
+import crafted
 from mapreduce_docker_spark.operators.tpch_queries import (
     q21_waiting_suppliers,
     q21_waiting_suppliers_onepass,
@@ -39,37 +39,21 @@ from mapreduce_docker_spark.operators.tpch_queries import (
 from mapreduce_docker_spark.registry import all_specs
 
 
-def _write(spark, tmp_path, table, rows, schema):
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
-def _oracle(tmp_path, tables, sql):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
-    return [tuple(r) for r in con.execute(sql).fetchall()]
-
-
 def test_q7_symmetric_pair_and_year_boundaries_both_engines(spark, tmp_path):
     import datetime as dt
 
     from mapreduce_docker_spark.operators.tpch_queries import q7_volume_shipping
 
-    _write(spark, tmp_path, "nation",
-           [(1, "NATION_1"), (2, "NATION_2"), (3, "NATION_3")],
-           "n_nationkey int, n_name string")
-    _write(spark, tmp_path, "supplier", [(1, 1), (2, 2), (3, 3)],
-           "s_suppkey long, s_nationkey int")
-    _write(spark, tmp_path, "customer", [(10, 2), (11, 1), (12, 3)],
-           "c_custkey long, c_nationkey int")
-    _write(spark, tmp_path, "orders", [(100, 10), (101, 11), (102, 12)],
-           "o_orderkey long, o_custkey long")
-    _write(
+    crafted.write(spark, tmp_path, "nation",
+                  [(1, "NATION_1"), (2, "NATION_2"), (3, "NATION_3")],
+                  "n_nationkey int, n_name string")
+    crafted.write(spark, tmp_path, "supplier", [(1, 1), (2, 2), (3, 3)],
+                  "s_suppkey long, s_nationkey int")
+    crafted.write(spark, tmp_path, "customer", [(10, 2), (11, 1), (12, 3)],
+                  "c_custkey long, c_nationkey int")
+    crafted.write(spark, tmp_path, "orders", [(100, 10), (101, 11), (102, 12)],
+                  "o_orderkey long, o_custkey long")
+    crafted.write(
         spark, tmp_path, "lineitem",
         [
             (100, 1, dt.datetime(1996, 1, 1), 100.0, 0.0),    # boundary IN
@@ -94,7 +78,7 @@ def test_q7_symmetric_pair_and_year_boundaries_both_engines(spark, tmp_path):
     got = sorted(tuple(r) for r in q7_volume_shipping(spark, str(tmp_path)).collect())
     assert got == want
     assert sorted(
-        _oracle(
+        crafted.oracle(
             tmp_path,
             ("nation", "supplier", "customer", "orders", "lineitem"),
             all_specs()["q7_volume_shipping"].sql,
@@ -110,17 +94,17 @@ def test_q7_symmetric_pair_and_year_boundaries_both_engines(spark, tmp_path):
     ],
 )
 def test_q21_double_correlation_hand_walked_both_engines(spark, tmp_path, fn, name):
-    _write(
+    crafted.write(
         spark, tmp_path, "supplier",
         [(1, "S1"), (2, "S2"), (3, "S3")],
         "s_suppkey long, s_name string",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "orders",
         [(10, "F"), (20, "F"), (30, "O"), (40, "F"), (50, "F"), (60, "F")],
         "o_orderkey long, o_orderstatus string",
     )
-    _write(
+    crafted.write(
         spark, tmp_path, "lineitem",
         [
             (10, 1, "R"), (10, 2, "N"),
@@ -136,6 +120,6 @@ def test_q21_double_correlation_hand_walked_both_engines(spark, tmp_path, fn, na
     want = [("S1", 3), ("S3", 1)]
     got = [tuple(r) for r in fn(spark, str(tmp_path)).collect()]
     assert got == want
-    assert _oracle(
+    assert crafted.oracle(
         tmp_path, ("supplier", "orders", "lineitem"), all_specs()[name].sql
     ) == want

@@ -41,10 +41,9 @@ plus the round's own band-4/edge-grid finds), every value hand-derived.
 
 from __future__ import annotations
 
-import math
 
-import duckdb
 
+import crafted
 from mapreduce_docker_spark.operators.relational_queries import (
     json_event_props,
     json_map_entries,
@@ -53,36 +52,8 @@ from mapreduce_docker_spark.operators.relational_queries import (
     sql_interface_revenue_by_nation,
 )
 from mapreduce_docker_spark.operators.textanalysis_queries import text_langid_nb
+from mapreduce_docker_spark.oracle import normalize
 from mapreduce_docker_spark.registry import all_specs
-
-
-def _write(spark, tmp_path, table, rows, schema):
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
-def _oracle(tmp_path, tables, sql):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
-    return [tuple(r) for r in con.execute(sql).fetchall()]
-
-
-def _canon(rows):
-    """Sortable canonical rows; NaN -> 'NaN' so equality is by identity
-    (Inf compares equal to Inf natively)."""
-    out = []
-    for row in rows:
-        out.append(
-            tuple(
-                "NaN" if isinstance(x, float) and math.isnan(x) else x for x in row
-            )
-        )
-    return sorted(out, key=lambda t: tuple((x is None, str(x)) for x in t))
 
 
 # the shared JSON edge grid (event_id, event_type, props)
@@ -108,7 +79,7 @@ _GRID_SCHEMA = "event_id long, event_type string, props string"
 
 
 def _grid(spark, tmp_path):
-    _write(spark, tmp_path, "events", _GRID, _GRID_SCHEMA)
+    crafted.write(spark, tmp_path, "events", _GRID, _GRID_SCHEMA)
 
 
 def test_json_event_props_edge_grid_hand_truth(spark, tmp_path):
@@ -118,10 +89,12 @@ def test_json_event_props_edge_grid_hand_truth(spark, tmp_path):
     avg_b = (60+7)/2 = 33.5."""
     _grid(spark, tmp_path)
     want = [("a", 11, 2.3333, 7), ("b", 5, 33.5, 60)]
-    got = _canon(tuple(r) for r in json_event_props(spark, str(tmp_path)).collect())
-    assert got == _canon(want)
+    sdf = json_event_props(spark, str(tmp_path))
+    want = normalize(want, sdf.columns)
+    assert normalize(sdf.collect(), sdf.columns) == want
     spec = all_specs()["json_event_props"]
-    assert _canon(_oracle(tmp_path, ("events",), spec.sql)) == _canon(want)
+    orows = crafted.oracle(tmp_path, ("events",), spec.sql)
+    assert normalize(orows, sdf.columns) == want
 
 
 def test_json_variant_events_edge_grid_hand_truth(spark, tmp_path):
@@ -131,10 +104,12 @@ def test_json_variant_events_edge_grid_hand_truth(spark, tmp_path):
     _grid(spark, tmp_path)
     k = {1: 5, 3: 7, 10: -5, 13: 60, 16: 7}
     want = [(i, k.get(i), None) for i, _, _ in _GRID]
-    got = _canon(tuple(r) for r in json_variant_events(spark, str(tmp_path)).collect())
-    assert got == _canon(want)
+    sdf = json_variant_events(spark, str(tmp_path))
+    want = normalize(want, sdf.columns)
+    assert normalize(sdf.collect(), sdf.columns) == want
     spec = all_specs()["json_variant_events"]
-    assert _canon(_oracle(tmp_path, ("events",), spec.sql)) == _canon(want)
+    orows = crafted.oracle(tmp_path, ("events",), spec.sql)
+    assert normalize(orows, sdf.columns) == want
 
 
 def test_json_map_entries_edge_grid_hand_truth(spark, tmp_path):
@@ -160,10 +135,12 @@ def test_json_map_entries_edge_grid_hand_truth(spark, tmp_path):
         (16, "k", 7),
     ]
     want = [w for w in want if w[1] is not None]
-    got = _canon(tuple(r) for r in json_map_entries(spark, str(tmp_path)).collect())
-    assert got == _canon(want)
+    sdf = json_map_entries(spark, str(tmp_path))
+    want = normalize(want, sdf.columns)
+    assert normalize(sdf.collect(), sdf.columns) == want
     spec = all_specs()["json_map_entries"]
-    assert _canon(_oracle(tmp_path, ("events",), spec.sql)) == _canon(want)
+    orows = crafted.oracle(tmp_path, ("events",), spec.sql)
+    assert normalize(orows, sdf.columns) == want
 
 
 def test_map_hof_edge_grid_hand_truth(spark, tmp_path):
@@ -181,10 +158,12 @@ def test_map_hof_edge_grid_hand_truth(spark, tmp_path):
         14: (0, 0, 0),
     }
     want = [(i,) + vals.get(i, (None, None, None)) for i, _, _ in _GRID]
-    got = _canon(tuple(r) for r in map_hof_event_props(spark, str(tmp_path)).collect())
-    assert got == _canon(want)
+    sdf = map_hof_event_props(spark, str(tmp_path))
+    want = normalize(want, sdf.columns)
+    assert normalize(sdf.collect(), sdf.columns) == want
     spec = all_specs()["map_hof_event_props"]
-    assert _canon(_oracle(tmp_path, ("events",), spec.sql)) == _canon(want)
+    orows = crafted.oracle(tmp_path, ("events",), spec.sql)
+    assert normalize(orows, sdf.columns) == want
 
 
 def test_sql_interface_spark_floor_nonfinite_law(spark, tmp_path):
@@ -193,26 +172,24 @@ def test_sql_interface_spark_floor_nonfinite_law(spark, tmp_path):
     through the two-branch form — the bare Spark-SQL floor() returned
     LONG, clamping Inf to Long.MAX/100 = 9.22e16 and NaN to 0 (the r12
     band-4 differential find)."""
-    _write(spark, tmp_path, "nation",
-           [(1, "ALPHA"), (2, "BETA"), (3, "GAMMA")],
-           "n_nationkey int, n_name string")
-    _write(spark, tmp_path, "customer", [(10, 1), (11, 2), (12, 3)],
-           "c_custkey long, c_nationkey int")
-    _write(spark, tmp_path, "orders", [(100, 10), (101, 11), (102, 12)],
-           "o_orderkey long, o_custkey long")
-    _write(spark, tmp_path, "lineitem",
-           [(100, 10.0, 0.5), (101, float("inf"), 0.0), (102, float("nan"), 0.0)],
-           "l_orderkey long, l_extendedprice double, l_discount double")
-    want = [("ALPHA", 5.0), ("BETA", float("inf")), ("GAMMA", "NaN")]
-    got = _canon(
-        tuple(r)
-        for r in sql_interface_revenue_by_nation(spark, str(tmp_path)).collect()
-    )
-    assert got == _canon(want)
+    crafted.write(spark, tmp_path, "nation",
+                  [(1, "ALPHA"), (2, "BETA"), (3, "GAMMA")],
+                  "n_nationkey int, n_name string")
+    crafted.write(spark, tmp_path, "customer", [(10, 1), (11, 2), (12, 3)],
+                  "c_custkey long, c_nationkey int")
+    crafted.write(spark, tmp_path, "orders", [(100, 10), (101, 11), (102, 12)],
+                  "o_orderkey long, o_custkey long")
+    crafted.write(spark, tmp_path, "lineitem",
+                  [(100, 10.0, 0.5), (101, float("inf"), 0.0), (102, float("nan"), 0.0)],
+                  "l_orderkey long, l_extendedprice double, l_discount double")
+    want = [("ALPHA", 5.0), ("BETA", float("inf")), ("GAMMA", float("nan"))]
+    sdf = sql_interface_revenue_by_nation(spark, str(tmp_path))
+    want = normalize(want, sdf.columns)
+    assert normalize(sdf.collect(), sdf.columns) == want
     spec = all_specs()["sql_interface_revenue_by_nation"]
-    assert _canon(
-        _oracle(tmp_path, ("lineitem", "orders", "customer", "nation"), spec.sql)
-    ) == _canon(want)
+    tables = ("lineitem", "orders", "customer", "nation")
+    orows = crafted.oracle(tmp_path, tables, spec.sql)
+    assert normalize(orows, sdf.columns) == want
 
 
 def test_langid_unlabeled_class_boundary_hand_truth(spark, tmp_path):
@@ -234,17 +211,19 @@ def test_langid_unlabeled_class_boundary_hand_truth(spark, tmp_path):
         (2, "le chien", "fr", "s", 8),
         (3, "zz zz", None, "s", 5),
     ]
-    _write(spark, tmp_path, "documents", docs,
-           "doc_id long, text string, lang string, source string, length int")
+    crafted.write(spark, tmp_path, "documents", docs,
+                  "doc_id long, text string, lang string, source string, length int")
     want = [
         (1, "en", -3.604138, "en", True),
         (2, "fr", -3.604138, "fr", True),
         (3, "en", -4.990433, None, None),
     ]
-    got = _canon(tuple(r) for r in text_langid_nb(spark, str(tmp_path)).collect())
-    assert got == _canon(want)
+    sdf = text_langid_nb(spark, str(tmp_path))
+    want = normalize(want, sdf.columns)
+    assert normalize(sdf.collect(), sdf.columns) == want
     spec = all_specs()["text_langid_nb"]
-    assert _canon(_oracle(tmp_path, ("documents",), spec.sql)) == _canon(want)
+    orows = crafted.oracle(tmp_path, ("documents",), spec.sql)
+    assert normalize(orows, sdf.columns) == want
 
 
 def test_histogram_finite_ingress_hand_truth(spark, tmp_path):
@@ -262,7 +241,7 @@ def test_histogram_finite_ingress_hand_truth(spark, tmp_path):
     the NULL/NaN/Inf rows vanish."""
     nan, inf = float("nan"), float("inf")
     rows = [(1, None), (2, nan), (3, inf), (4, -inf), (5, 10.0), (6, 20.0), (7, 30.0)]
-    _write(spark, tmp_path, "orders", rows, "o_orderkey long, o_totalprice double")
+    crafted.write(spark, tmp_path, "orders", rows, "o_orderkey long, o_totalprice double")
     from mapreduce_docker_spark.operators.profile_queries import (
         agg_histogram_totalprice,
     )
@@ -272,9 +251,9 @@ def test_histogram_finite_ingress_hand_truth(spark, tmp_path):
         (5, 20.0, 22.0, 1),
         (9, 28.0, 30.0, 1),
     ]
-    got = _canon(
-        tuple(r) for r in agg_histogram_totalprice(spark, str(tmp_path)).collect()
-    )
-    assert got == _canon(want)
+    sdf = agg_histogram_totalprice(spark, str(tmp_path))
+    want = normalize(want, sdf.columns)
+    assert normalize(sdf.collect(), sdf.columns) == want
     spec = all_specs()["agg_histogram_totalprice"]
-    assert _canon(_oracle(tmp_path, ("orders",), spec.sql)) == _canon(want)
+    orows = crafted.oracle(tmp_path, ("orders",), spec.sql)
+    assert normalize(orows, sdf.columns) == want

@@ -21,29 +21,13 @@ from __future__ import annotations
 
 import re
 
-import duckdb
 
+import crafted
 from mapreduce_docker_spark.operators.wordcount_queries import (
     q_wordcount_strict_top20,
     q_wordcount_top20,
 )
 from mapreduce_docker_spark.registry import all_specs
-
-
-def _write(spark, tmp_path, table, rows, schema):
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
-def _oracle(tmp_path, tables, sql):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
-    return [tuple(r) for r in con.execute(sql).fetchall()]
 
 
 _NATO = (
@@ -63,14 +47,14 @@ def test_wordcount_top20_tie_cut_line_hand_truth(spark, tmp_path):
         (3, None, None, "s", None),
         (4, "", "en", "s", 0),
     ]
-    _write(spark, tmp_path, "documents", docs,
-           "doc_id long, text string, lang string, source string, length int")
+    crafted.write(spark, tmp_path, "documents", docs,
+                  "doc_id long, text string, lang string, source string, length int")
     singles = sorted(_NATO.split())[:18]
     want = [("the", 3), ("zebra", 2)] + [(w, 1) for w in singles]
     got = [tuple(r) for r in q_wordcount_top20(spark, str(tmp_path)).collect()]
     assert got == want
     spec = all_specs()["wordcount_top20"]
-    assert _oracle(tmp_path, ("documents",), spec.sql) == want
+    assert crafted.oracle(tmp_path, ("documents",), spec.sql) == want
 
 
 def test_wordcount_strict_top20_boundary_grid_hand_truth(spark, tmp_path):
@@ -87,8 +71,8 @@ def test_wordcount_strict_top20_boundary_grid_hand_truth(spark, tmp_path):
     docs = [
         (i, t, "en", "s", len(t) if t else None) for i, t in enumerate(texts, start=1)
     ]
-    _write(spark, tmp_path, "documents", docs,
-           "doc_id long, text string, lang string, source string, length int")
+    crafted.write(spark, tmp_path, "documents", docs,
+                  "doc_id long, text string, lang string, source string, length int")
     want = [("t", 2), ("zz", 2), ("can", 1), ("don", 1), ("naive", 1)]
     got = [
         tuple(r) for r in q_wordcount_strict_top20(spark, str(tmp_path)).collect()

@@ -38,8 +38,8 @@ percentiles are order statistics of the measure. Pinned here:
 
 from __future__ import annotations
 
-import duckdb
 
+import crafted
 from mapreduce_docker_spark.operators.relational_queries import (
     agg_percentiles_by_segment,
     agg_winsorized_value_stats,
@@ -54,22 +54,6 @@ NAN = float("nan")
 INF = float("inf")
 
 
-def _write(spark, tmp_path, table, rows, schema):
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
-def _oracle(tmp_path, tables, sql):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
-    return [tuple(r) for r in con.execute(sql).fetchall()]
-
-
 def test_percentiles_finite_ingress_nan_boundary_hand_truth(spark, tmp_path):
     """Hand truth per segment (the seed-429 class, fixed):
 
@@ -81,7 +65,7 @@ def test_percentiles_finite_ingress_nan_boundary_hand_truth(spark, tmp_path):
     C=[NaN,Inf]: finite pop empty -> (NULL, NULL) on both engines;
     D=[5]: non-finite-free -> bit-identical to the unnormalized form.
     """
-    _write(
+    crafted.write(
         spark, tmp_path, "customer",
         [("A", 1.0), ("A", 2.0), ("A", 3.0), ("A", NAN),
          ("B", 10.0), ("B", INF), ("B", 20.0),
@@ -100,7 +84,7 @@ def test_percentiles_finite_ingress_nan_boundary_hand_truth(spark, tmp_path):
     )
     assert got == want
     spec = all_specs()["agg_percentiles_by_segment"]
-    assert sorted(_oracle(tmp_path, ("customer",), spec.sql)) == want
+    assert sorted(crafted.oracle(tmp_path, ("customer",), spec.sql)) == want
 
 
 def test_winsorized_stats_finite_ingress_hand_truth(spark, tmp_path):
@@ -113,14 +97,14 @@ def test_winsorized_stats_finite_ingress_hand_truth(spark, tmp_path):
     engines, but still count in n = 13. winsorized_mean =
     (0.5 + 1+..+9 + 9.5)/11 = 55/11 = 5.0; min 0.5; max 9.5."""
     rows = [("c", float(v)) for v in range(11)] + [("c", NAN), ("c", None)]
-    _write(spark, tmp_path, "events", rows, "event_type string, value double")
+    crafted.write(spark, tmp_path, "events", rows, "event_type string, value double")
     want = [("c", 13, 2, 5.0, 0.5, 9.5)]
     got = sorted(
         tuple(r) for r in agg_winsorized_value_stats(spark, str(tmp_path)).collect()
     )
     assert got == want
     spec = all_specs()["agg_winsorized_value_stats"]
-    assert sorted(_oracle(tmp_path, ("events",), spec.sql)) == want
+    assert sorted(crafted.oracle(tmp_path, ("events",), spec.sql)) == want
 
 
 _NONFINITE_PRICES = [
@@ -135,7 +119,7 @@ def test_distribution_ranks_nonfinite_placement_measured_agreement(spark, tmp_pa
     need no finite() guard. Hand truth: rn k of 7 -> pct_rank
     (k-1)/6, cume k/7, decile=k (ntile(10) over 7 rows), each through
     the query's floor(x*10000+0.5)/10000 rounding."""
-    _write(
+    crafted.write(
         spark, tmp_path, "orders",
         [(k, "O", v) for k, v in _NONFINITE_PRICES],
         "o_orderkey long, o_orderstatus string, o_totalprice double",
@@ -154,7 +138,7 @@ def test_distribution_ranks_nonfinite_placement_measured_agreement(spark, tmp_pa
     )
     assert got == want
     spec = all_specs()["window_distribution_ranks"]
-    assert sorted(_oracle(tmp_path, ("orders",), spec.sql)) == want
+    assert sorted(crafted.oracle(tmp_path, ("orders",), spec.sql)) == want
 
 
 def test_range_frame_nonfinite_band_measured_agreement(spark, tmp_path):
@@ -164,7 +148,7 @@ def test_range_frame_nonfinite_band_measured_agreement(spark, tmp_path):
     ordering-key row is its own peer group — count() is invariant to
     the engines' opposite default NULL placement (Spark ASC NULLS
     FIRST vs DuckDB NULLS LAST)."""
-    _write(
+    crafted.write(
         spark, tmp_path, "orders",
         [(k, 1, v) for k, v in _NONFINITE_PRICES],
         "o_orderkey long, o_custkey long, o_totalprice double",
@@ -185,7 +169,7 @@ def test_range_frame_nonfinite_band_measured_agreement(spark, tmp_path):
     assert got == want
     spec = all_specs()["window_range_price_band"]
     assert (
-        sorted((c, k, n) for c, k, n in _oracle(tmp_path, ("orders",), spec.sql))
+        sorted((c, k, n) for c, k, n in crafted.oracle(tmp_path, ("orders",), spec.sql))
         == want
     )
 
@@ -207,13 +191,13 @@ def test_json_path_safety_law_hand_truth(spark, tmp_path):
         (3, '{"back\\\\slash":1}'),  # key back\slash -> dropped
         (4, '{"dot.key":60}'),
     ]
-    _write(spark, tmp_path, "events", rows, "event_id long, props string")
+    crafted.write(spark, tmp_path, "events", rows, "event_id long, props string")
 
     want_entries = [(1, "a", 1), (1, "b", 2), (4, "dot.key", 60)]
     got = sorted(tuple(r) for r in json_map_entries(spark, str(tmp_path)).collect())
     assert got == want_entries
     spec = all_specs()["json_map_entries"]
-    assert sorted(_oracle(tmp_path, ("events",), spec.sql)) == want_entries
+    assert sorted(crafted.oracle(tmp_path, ("events",), spec.sql)) == want_entries
 
     want_hof = [
         (1, 2, 6, 0),
@@ -226,4 +210,4 @@ def test_json_path_safety_law_hand_truth(spark, tmp_path):
     )
     assert got == want_hof
     spec = all_specs()["map_hof_event_props"]
-    assert sorted(_oracle(tmp_path, ("events",), spec.sql)) == want_hof
+    assert sorted(crafted.oracle(tmp_path, ("events",), spec.sql)) == want_hof

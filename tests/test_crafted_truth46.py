@@ -14,8 +14,8 @@ from __future__ import annotations
 import datetime as dt
 import math
 
-import duckdb
 
+import crafted
 from mapreduce_docker_spark.operators.funnel_queries import events_funnel_conversion
 from mapreduce_docker_spark.operators.multimodal_queries import (
     multimodal_meta_by_source,
@@ -25,22 +25,6 @@ from mapreduce_docker_spark.operators.textanalysis_queries import (
     text_symspell_vocab_pairs,
 )
 from mapreduce_docker_spark.registry import all_specs
-
-
-def _write(spark, tmp_path, table, rows, schema):
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
-
-
-def _oracle(tmp_path, tables, sql):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{tmp_path}/{t}.parquet/*.parquet')"
-        )
-    return [tuple(r) for r in con.execute(sql).fetchall()]
 
 
 def test_funnel_conversion_strict_order_hand_truth(spark, tmp_path):
@@ -80,7 +64,7 @@ def test_funnel_conversion_strict_order_hand_truth(spark, tmp_path):
         (10, h(3), 4, "click"),
         (11, h(1), None, "view"),
     ]
-    _write(
+    crafted.write(
         spark, tmp_path, "events", rows,
         "event_id long, ts timestamp, user_id long, event_type string",
     )
@@ -94,7 +78,7 @@ def test_funnel_conversion_strict_order_hand_truth(spark, tmp_path):
     )
     assert got == want
     spec = all_specs()["events_funnel_conversion"]
-    assert sorted(_oracle(tmp_path, ("events",), spec.sql)) == want
+    assert sorted(crafted.oracle(tmp_path, ("events",), spec.sql)) == want
 
 
 def test_symspell_vocab_pairs_hand_truth(spark, tmp_path):
@@ -117,7 +101,7 @@ def test_symspell_vocab_pairs_hand_truth(spark, tmp_path):
         (3, "Dog dig"),   # lowercase law: Dog -> dog
         (4, "cat xyz"),   # duplicate vocab word + an isolated word
     ]
-    _write(spark, tmp_path, "part", rows, "p_partkey long, p_name string")
+    crafted.write(spark, tmp_path, "part", rows, "p_partkey long, p_name string")
     want = [
         ("bat", "cat", 1),
         ("bat", "hat", 1),
@@ -130,7 +114,7 @@ def test_symspell_vocab_pairs_hand_truth(spark, tmp_path):
     )
     assert got == want
     spec = all_specs()["text_symspell_vocab_pairs"]
-    assert sorted(_oracle(tmp_path, ("part",), spec.sql)) == want
+    assert sorted(crafted.oracle(tmp_path, ("part",), spec.sql)) == want
 
 
 def test_multimodal_meta_by_source_hand_truth(spark, tmp_path):
@@ -151,7 +135,7 @@ def test_multimodal_meta_by_source_hand_truth(spark, tmp_path):
         (5, "x", None),
         (6, "", "s2"),
     ]
-    _write(spark, tmp_path, "documents", rows, "doc_id long, text string, source string")
+    crafted.write(spark, tmp_path, "documents", rows, "doc_id long, text string, source string")
     want = [
         (None, 1, 1, 1),
         ("s1", 3, 11, 2),
@@ -165,7 +149,7 @@ def test_multimodal_meta_by_source_hand_truth(spark, tmp_path):
     spec = all_specs()["multimodal_meta_by_source"]
     assert (
         sorted(
-            _oracle(tmp_path, ("documents",), spec.sql),
+            crafted.oracle(tmp_path, ("documents",), spec.sql),
             key=lambda r: (r[0] is not None, r[0] or ""),
         )
         == want
@@ -198,14 +182,14 @@ def test_simple_casing_fold_law_hand_truth(spark, tmp_path):
         (2, "ΣΟΦΟΣ the"),
         (3, "The THE the"),
     ]
-    _write(spark, tmp_path, "documents", rows, "doc_id long, text string")
+    crafted.write(spark, tmp_path, "documents", rows, "doc_id long, text string")
     from mapreduce_docker_spark.registry import all_specs as specs
 
     wc = specs()["wordcount"]
     want = [("istanbul", 2), ("the", 4)]
     got = sorted(tuple(r) for r in wc.fn(spark, str(tmp_path)).collect())
     assert got == want
-    assert sorted(_oracle(tmp_path, ("documents",), wc.sql)) == want
+    assert sorted(crafted.oracle(tmp_path, ("documents",), wc.sql)) == want
 
 
 def test_sim_label_cohesion_quantized_mean_boundary_hand_truth(spark, tmp_path):
@@ -231,7 +215,7 @@ def test_sim_label_cohesion_quantized_mean_boundary_hand_truth(spark, tmp_path):
     c = 0.6001
     v = [c, math.sqrt(1.0 - c * c)] + [0.0] * (dim - 2)
     rows = [(1, e1, 0), (2, e1, 0), (3, e1, 0), (4, v, 0)]
-    _write(
+    crafted.write(
         spark, tmp_path, "embeddings", rows,
         "vec_id long, embedding array<float>, label int",
     )
@@ -239,4 +223,4 @@ def test_sim_label_cohesion_quantized_mean_boundary_hand_truth(spark, tmp_path):
     got = sorted(tuple(r) for r in sim_label_cohesion(spark, str(tmp_path)).collect())
     assert got == want
     spec = all_specs()["sim_label_cohesion"]
-    assert sorted(_oracle(tmp_path, ("embeddings",), spec.sql)) == want
+    assert sorted(crafted.oracle(tmp_path, ("embeddings",), spec.sql)) == want

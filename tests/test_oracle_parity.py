@@ -1,11 +1,18 @@
-"""Local replica of the driver's DuckDB-oracle correctness gate.
+"""Local replica of the driver's DuckDB-oracle correctness gate, plus the
+plan audit, in one pass over the registry.
 
 For every registered query with an oracle: run the Spark plan and the DuckDB
-SQL on the same parquet fixtures and compare row count, column names, and an
-order-insensitive value comparison (columns sorted by name, rows sorted by
-their full value tuple). Floats are compared exactly — queries are expected
-to round on BOTH sides so cross-engine float drift cannot appear; a mismatch
-here predicts a mismatch in the driver's value-hash.
+SQL on the same parquet fixtures and compare them with
+``mapreduce_docker_spark.oracle.diff`` (column names, row count, rows with
+columns sorted by name and rows sorted by value, floats exact). Queries are
+expected to round on BOTH sides so cross-engine float drift cannot appear;
+a mismatch here predicts a mismatch in the driver's value-hash.
+
+Every registered query, rows-only and streaming included, also checks the
+executed plan of the DataFrame it is about to collect or count against
+``tools/plan_audit.KNOWN``: its flagged operators (row-Python, Arrow
+kernels, cartesian, nested-loop joins, pandas execs) must equal its
+allowlist entry exactly, and an unlisted query must raise none.
 
 Runs at sf0.001 for speed; the driver runs the same shape at sf0.01.
 Set ``ORACLE_SF_DIR`` to override.
@@ -13,76 +20,45 @@ Set ``ORACLE_SF_DIR`` to override.
 
 from __future__ import annotations
 
-import math
 import os
 
-import duckdb
 import pytest
 
+from mapreduce_docker_spark import oracle
 from mapreduce_docker_spark.registry import all_specs
-from mapreduce_docker_spark.sources.catalog import TABLES, register_views
+from mapreduce_docker_spark.sources.catalog import TABLES
+from tools.plan_audit import KNOWN, plan_flags
 
 SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = oracle.connect(SF_DIR, TABLES)
     yield con
     con.close()
-
-
-def _normalize(rows, columns):
-    """Sort columns by name, canonicalize values, sort rows."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-
-    def canon(v):
-        if v is None:
-            return ("\x00null",)
-        if isinstance(v, bool):
-            return ("b", int(v))
-        if isinstance(v, float):
-            if math.isnan(v):
-                return ("f", "nan")
-            # exact repr, mirroring the driver's exact value hash — queries
-            # are required to round identically on both sides themselves
-            return ("f", repr(v))
-        if isinstance(v, int):
-            return ("i", v)
-        if isinstance(v, (list, tuple)):
-            return ("l", tuple(canon(x) for x in v))
-        return ("s", str(v))
-
-    return sorted(tuple(canon(r[i]) for i in order) for r in rows)
 
 
 _SPECS = all_specs()
 _WITH_ORACLE = [name for name, s in _SPECS.items() if s.sql is not None]
 
 
+def _assert_known_flags(name, sdf):
+    flags = plan_flags(sdf._jdf.queryExecution().executedPlan().toString())
+    known = KNOWN[name][0] if name in KNOWN else frozenset()
+    assert flags == known, f"{name}: plan flags {sorted(flags)}, KNOWN {sorted(known)}"
+
+
 @pytest.mark.parametrize("name", _WITH_ORACLE)
 def test_oracle_parity(spark, duck, name):
     spec = _SPECS[name]
     sdf = spec.fn(spark, SF_DIR)
-    srows = sdf.collect()
-    scols = sdf.columns
-
+    _assert_known_flags(name, sdf)
     ores = duck.execute(spec.sql)
-    ocols = [d[0] for d in ores.description]
-    orows = ores.fetchall()
-
-    assert sorted(scols) == sorted(ocols), f"{name}: column names differ"
-    assert len(srows) == len(orows), f"{name}: row count {len(srows)} vs {len(orows)}"
-    got = _normalize([tuple(r) for r in srows], scols)
-    want = _normalize(orows, ocols)
-    mism = [i for i, (g, w) in enumerate(zip(got, want)) if g != w][:3]
-    assert got == want, f"{name}: first differing sorted rows at {mism}: " + "; ".join(
-        f"spark={got[i]} oracle={want[i]}" for i in mism
+    mismatch = oracle.diff(
+        sdf.columns, sdf.collect(), [d[0] for d in ores.description], ores.fetchall()
     )
+    assert mismatch is None, f"{name}: {mismatch}"
 
 
 @pytest.mark.parametrize(
@@ -92,5 +68,6 @@ def test_rows_only(spark, name):
     """Non-SQL-expressible ops: plan executes and returns a stable schema."""
     spec = _SPECS[name]
     sdf = spec.fn(spark, SF_DIR)
+    _assert_known_flags(name, sdf)
     assert sdf.columns
     assert sdf.count() >= 0

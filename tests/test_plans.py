@@ -159,16 +159,6 @@ def test_scatter_noop_when_scan_already_parallel(spark):
     assert "Exchange RoundRobinPartitioning" in plan, plan
 
 
-def test_no_python_udf_in_sql_oracle_paths(spark, specs):
-    """Queries with SQL oracles must stay JVM-side except the declared
-    Arrow-batched UDF demos (udf_*, multimodal_*)."""
-    for name, spec in specs.items():
-        if spec.sql is None or name.startswith(("udf_", "multimodal_")):
-            continue
-        plan = _plan(spark, specs, name)
-        assert "BatchEvalPython" not in plan, f"{name} fell back to row-Python"
-
-
 def test_embedding_lsh_single_embeddings_scan(spark, specs):
     """SRP-band near-dup must read `embeddings` ONCE: the unit vector and
     the 144-bit fingerprint come out of one scan (`_dedup_unit_fingerprints`),

@@ -9,37 +9,67 @@ the driver harness exactly: a subprocess builds a no-defaults
 oracle-carrying ones against DuckDB.
 
 Subprocess, not fixture: a Spark session is JVM-global per process, so an
-in-process "vanilla" session would inherit conftest's engine confs.
+in-process "vanilla" session would inherit conftest's engine confs. The
+subprocess is its own JVM, so conftest starts it at collection time when
+this test is selected (``start_gate``) and it runs beside the rest of the
+suite; the test joins it through conftest's ``vanilla_gate`` fixture.
 """
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
+
+from mapreduce_docker_spark.registry import all_specs
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("VANILLA_SF_DIR", "/root/testdata/sf0.001")
 
 
-def test_vanilla_session_full_gate(tmp_path):
+def start_gate() -> tuple[subprocess.Popen, str]:
+    """Launch tools/vanilla_gate.py; returns the process and its cwd, which
+    holds its stdout.txt and stderr.txt."""
     # cwd is a FOREIGN directory on purpose: round 2 found that pandas-UDF /
     # applyInPandas functions pickled by reference fail to deserialize in
     # Python workers when the harness cwd isn't the repo root (the package
     # isn't on the worker's sys.path); catalog._ship_package fixes it via
     # addPyFile and this cwd choice keeps that fixed.
-    proc = subprocess.run(
-        [sys.executable, os.path.join(REPO, "tools", "vanilla_gate.py"), SF_DIR],
-        capture_output=True,
-        text=True,
-        cwd=str(tmp_path),
-        timeout=1800,
-    )
+    cwd = tempfile.mkdtemp(prefix="vanilla_gate_")
+    with open(os.path.join(cwd, "stdout.txt"), "w") as out, open(
+        os.path.join(cwd, "stderr.txt"), "w"
+    ) as err:
+        proc = subprocess.Popen(
+            [sys.executable, os.path.join(REPO, "tools", "vanilla_gate.py"), SF_DIR],
+            stdout=out,
+            stderr=err,
+            cwd=cwd,
+        )
+    atexit.register(proc.kill)  # a no-op once the test has joined it
+    return proc, cwd
+
+
+def test_vanilla_session_full_gate(vanilla_gate):
+    proc, cwd = vanilla_gate
+    try:
+        proc.wait(timeout=1800)
+    finally:
+        proc.kill()
+    with open(os.path.join(cwd, "stdout.txt")) as f:
+        stdout = f.read()
+    with open(os.path.join(cwd, "stderr.txt")) as f:
+        stderr = f.read()
+    shutil.rmtree(cwd, ignore_errors=True)
     # last stdout line is the JSON summary (Spark may log above it)
-    lines = [ln for ln in proc.stdout.strip().splitlines() if ln.startswith("{")]
-    assert lines, f"no JSON summary; stdout={proc.stdout[-2000:]} stderr={proc.stderr[-2000:]}"
+    lines = [ln for ln in stdout.strip().splitlines() if ln.startswith("{")]
+    assert lines, f"no JSON summary; stdout={stdout[-2000:]} stderr={stderr[-2000:]}"
     summary = json.loads(lines[-1])
     assert summary["failures"] == {}, json.dumps(summary["failures"], indent=2)
-    assert summary["checked"] >= 109
+    specs = all_specs()
+    assert summary["checked"] == len(specs)
+    assert summary["oracle"] == sum(s.sql is not None for s in specs.values())
     assert proc.returncode == 0

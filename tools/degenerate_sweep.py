@@ -9,8 +9,10 @@ props; since r12 also NaN/Inf measures — legal once the finite-measure
 law made the variance family oracle-checkable — and the JSON edge-grid
 probes: exact-duplicate keys, non-integer-text values, nested values,
 whitespace-padded integer text), then runs EVERY full-oracle query on
-BOTH engines and compares
-canonicalized results. This closes the gap the per-query probe lists
+BOTH engines and compares the results with the suite's exact comparator
+(``mapreduce_docker_spark.oracle.diff``: column names, row count, and
+rows with floats compared by exact repr — no rounding, like the
+driver's value hash). This closes the gap the per-query probe lists
 cannot: tests/test_constant_inputs.py checks the ENGINE doesn't crash
 and oracle parity on a curated subset, but a divergence where both
 engines run happily and disagree only on degenerate VALUES — or where
@@ -37,15 +39,13 @@ Exit code 1 on any crash or mismatch, 0 when clean (CI-gateable).
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
-
+from mapreduce_docker_spark import oracle  # noqa: E402
 from mapreduce_docker_spark.registry import all_specs  # noqa: E402
 from mapreduce_docker_spark.session import get_spark  # noqa: E402
 
@@ -130,23 +130,6 @@ NASTY = {
 }
 
 
-def _canon(rows):
-    out = []
-    for r in rows:
-        row = []
-        for v in r:
-            if isinstance(v, float):
-                row.append("NaN" if math.isnan(v) else round(v, 7))
-            elif isinstance(v, list):
-                row.append(
-                    tuple(round(x, 7) if isinstance(x, float) else x for x in v)
-                )
-            else:
-                row.append(v)
-        out.append(tuple(row))
-    return sorted(out, key=lambda t: tuple((x is None, str(type(x)), str(x)) for x in t))
-
-
 def main() -> int:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     dst = os.path.join(tempfile.gettempdir(), "mds_nasty_sweep")
@@ -158,11 +141,7 @@ def main() -> int:
         head.unionByName(add).coalesce(1).write.mode("overwrite").parquet(
             f"{dst}/{t}.parquet"
         )
-    con = duckdb.connect()
-    for t in NASTY:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{dst}/{t}.parquet/*.parquet')"
-        )
+    con = oracle.connect(dst, NASTY)
 
     specs = all_specs()
     names = [n for n, s in specs.items() if s.sql is not None]
@@ -171,17 +150,20 @@ def main() -> int:
     for i, n in enumerate(names):
         s = specs[n]
         try:
-            srows = _canon([tuple(r) for r in s.fn(spark, dst).collect()])
+            sdf = s.fn(spark, dst)
+            scols, srows = sdf.columns, sdf.collect()
         except Exception as e:  # noqa: BLE001 — triage tool, report everything
             crash_s.append((n, f"{type(e).__name__}: {str(e)[:160]}"))
             continue
         try:
-            orows = _canon([tuple(r) for r in con.execute(s.sql).fetchall()])
+            ores = con.execute(s.sql)
+            ocols, orows = [d[0] for d in ores.description], ores.fetchall()
         except Exception as e:  # noqa: BLE001
             crash_o.append((n, f"{type(e).__name__}: {str(e)[:160]}"))
             continue
-        if srows != orows:
-            fails.append((n, len(srows), len(orows)))
+        mismatch = oracle.diff(scols, srows, ocols, orows)
+        if mismatch:
+            fails.append((n, mismatch))
         if (i + 1) % 25 == 0:
             print(f"...{i + 1}/{len(names)}", flush=True)
 
@@ -210,8 +192,8 @@ def main() -> int:
     for n, e in crash_o:
         print(" O!", n, "|", e)
     print(f"VALUE MISMATCHES: {len(fails)}")
-    for n, a, b in fails:
-        print(" V!", n, f"spark_rows={a} oracle_rows={b}")
+    for n, mismatch in fails:
+        print(" V!", n, "|", mismatch[:500])
     print(f"ROWS-ONLY CRASHES (crash-checked, no oracle by contract): {len(crash_ro)}")
     for n, e in crash_ro:
         print(" R!", n, "|", e)

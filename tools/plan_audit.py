@@ -1,36 +1,23 @@
-"""Anti-pattern sweep over registered query plans.
+"""Anti-pattern allowlist for registered query plans.
 
-For every (non-streaming) registered query, build the physical plan at a
-small fixture and flag the operators that are usually scale bugs:
-``BatchEvalPython`` (row-at-a-time Python), ``CartesianProduct``,
-``BroadcastNestedLoopJoin``, ``ArrowEvalPython``, and the grouped-pandas
-exec nodes. Every legitimate occurrence in this engine is a *documented
-bounded pattern* (1-row broadcast scalar injection, the rolling band join
-against a broadcast day list, the bounded dense-grid build, the UDTF /
-pandas-twin representatives) and is listed in ``KNOWN`` below with its
-reason — so the audit's pass condition is "flags == KNOWN", and any NEW
-flag is a regression to explain or fix, not noise to skim past.
+``plan_flags`` names the operators in an executed plan that are usually
+scale bugs: ``BatchEvalPython`` (row-at-a-time Python),
+``CartesianProduct``, ``BroadcastNestedLoopJoin``, ``ArrowEvalPython``,
+``MapInArrow`` (a Python kernel over Arrow batches) and the
+grouped-pandas exec nodes. Every legitimate occurrence in this engine is
+a *documented bounded pattern* (1-row broadcast scalar injection, the
+rolling band join against a broadcast day list, the bounded dense-grid
+build, the UDTF / pandas-twin representatives, the SRP band kernel) and
+is listed in ``KNOWN`` below with its reason. The pass condition is
+``plan_flags(plan) == KNOWN[name]`` (no flags for an unlisted name), so a
+NEW flag is a regression to explain or fix, and a flag that disappears
+means KNOWN must be updated to stay exact.
 
-Usage::
-
-    python tools/plan_audit.py [sf_dir] [--window-only]
-
-Exits 0 iff no UNEXPECTED flag appears (a flag beyond a name's KNOWN
-entry, or any flag on an unlisted name). Missing known flags are reported
-per-flag — including a name that keeps one allowlisted flag but silently
-drops another — and tolerated: an optimizer improvement can legitimately
-remove one; update KNOWN when that happens so the allowlist stays exact.
+tests/test_oracle_parity.py asserts it for every registered query, on
+the executed plan of the DataFrame it is about to collect or count.
 """
 
 from __future__ import annotations
-
-import os
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from mapreduce_docker_spark.registry import all_specs  # noqa: E402
-from mapreduce_docker_spark.session import get_spark  # noqa: E402
 
 # name -> (flags, why it is bounded / intentional)
 KNOWN: dict[str, tuple[frozenset[str], str]] = {
@@ -105,6 +92,10 @@ KNOWN: dict[str, tuple[frozenset[str], str]] = {
     ),
     "udf_applyinpandas_zscore": (frozenset({"pandas-grouped"}), "U6 surface"),
     "udf_cogroup_user_conversion": (frozenset({"pandas-grouped"}), "U6 surface"),
+    "udf_pandas_udaf_geomean": (
+        frozenset({"pandas-grouped"}),
+        "U6 grouped-agg pandas_udf (ArrowAggregatePython)",
+    ),
     "udf_udtf_bigrams": (frozenset({"row-python"}), "Python UDTF surface"),
     "dedup_jaccard_sample": (
         frozenset({"bnlj"}),
@@ -154,6 +145,12 @@ KNOWN: dict[str, tuple[frozenset[str], str]] = {
         "(Arrow-batched, one decode call per payload)",
     ),
     "udf_pandas_saturation": (frozenset({"arrow-scalar-udf"}), "U6 scalar pandas_udf"),
+    "sim_ann_srp_banded": (
+        frozenset({"map-in-arrow"}),
+        "the numpy SRP kernel: unit vector + 144-bit band string per row in "
+        "one Arrow batch pass (dedup_embedding_pairs runs the same kernel "
+        "behind a checkpoint, so its plan shows no Python node)",
+    ),
 }
 
 FLAG_NODES = {
@@ -161,68 +158,19 @@ FLAG_NODES = {
     "cartesian": "CartesianProduct",
     "bnlj": "BroadcastNestedLoopJoin",
     "arrow-scalar-udf": "ArrowEvalPython",
+    "map-in-arrow": "MapInArrow",
 }
+# ArrowAggregatePython is Spark 4's name for the grouped-agg pandas UDF
+# exec (AggregateInPandas before it)
 PANDAS_NODES = ("FlatMapGroupsInPandas", "MapInPandas", "FlatMapCoGroupsInPandas",
-                "AggregateInPandas")
+                "AggregateInPandas", "ArrowAggregatePython")
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") \
-        else "/root/testdata/sf0.001"
-    window_only = "--window-only" in sys.argv
-    specs = all_specs()
-    names = list(specs)[:50] if window_only else list(specs)
-    spark = get_spark(app_name="plan_audit")
-    flagged: dict[str, frozenset[str]] = {}
-    errors: dict[str, str] = {}
-    try:
-        for name in names:
-            if name.startswith("streaming_"):
-                continue  # streaming entries execute eagerly; audited in tests
-            try:
-                plan = (
-                    specs[name].fn(spark, sf_dir)
-                    ._jdf.queryExecution().executedPlan().toString()
-                )
-            except Exception as ex:  # noqa: BLE001 - report, don't die
-                errors[name] = str(ex)[:200]
-                continue
-            flags = {f for f, node in FLAG_NODES.items() if node in plan}
-            if any(n in plan for n in PANDAS_NODES):
-                flags.add("pandas-grouped")
-            # a UDTF plan also contains BatchEvalPython-like nodes; keep both
-            if flags:
-                flagged[name] = frozenset(flags)
-    finally:
-        spark.stop()
-
-    unexpected = {
-        n: sorted(f) for n, f in flagged.items()
-        if n not in KNOWN or not f <= KNOWN[n][0]
-    }
-    # per-FLAG drift, not per-name (judge-r5 ADVICE): a query allowlisted
-    # for {bnlj, row-python} that silently drops one flag is neither
-    # UNEXPECTED nor fully unflagged — report every expected flag that
-    # did not appear, whether the name vanished entirely or partially
-    audited = set(names)
-    missing = {
-        n: sorted(KNOWN[n][0] - flagged.get(n, frozenset()))
-        for n in KNOWN
-        if n in audited and KNOWN[n][0] - flagged.get(n, frozenset())
-    }
-    print(f"audited {len(names)} queries at {sf_dir}: "
-          f"{len(flagged)} flagged, all-known={not unexpected}")
-    for n, f in sorted(flagged.items()):
-        tag = "OK (known)" if n in KNOWN and f <= KNOWN[n][0] else "UNEXPECTED"
-        print(f"  [{tag}] {n}: {','.join(sorted(f))}")
-    if missing:
-        print("known flags not observed (optimizer improvement? update KNOWN):")
-        for n, f in sorted(missing.items()):
-            print(f"  [MISSING] {n}: {','.join(f)}")
-    for n, e in errors.items():
-        print(f"  [ERROR] {n}: {e}")
-    return 1 if unexpected or errors else 0
+def plan_flags(plan: str) -> frozenset[str]:
+    """The flags raised by an executed plan's ``toString()``."""
+    flags = {f for f, node in FLAG_NODES.items() if node in plan}
+    if any(n in plan for n in PANDAS_NODES):
+        flags.add("pandas-grouped")
+    return frozenset(flags)
 
 
-if __name__ == "__main__":
-    raise SystemExit(main())

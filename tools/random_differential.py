@@ -1,7 +1,7 @@
 """Seeded RANDOM-fixture differential gate — the combinatorial extension
 of tools/degenerate_sweep.py.
 
-Usage: python tools/random_differential.py [--skip-rows-only] [seed ...]
+Usage: python tools/random_differential.py [seed ...]
        (default seeds: 1 2 3)
 
 Seed bands select probe-diversity REGIMES (seed // 100): 0-99 balanced,
@@ -37,12 +37,16 @@ Determinism: everything flows from random.Random(seed); same seed ⇒
 byte-identical fixture ⇒ a finding is replayable with
 `python tools/random_differential.py <seed>`.
 
-Float policy: measures are quantized to 2 decimals and magnitudes kept
-small so cross-engine sum-order error stays far below the canonical
-round(7); if a strict compare still mismatches, a second-chance
-tolerant compare (sorted, cellwise isclose rel=abs=1e-6) distinguishes
-a float-association artifact (reported as "tol" — investigate, not
-fail) from a real divergence (exit 1). NaN/Inf enter measure columns
+Float policy: results are compared with the suite's exact comparator
+(``mapreduce_docker_spark.oracle.diff``: floats by exact repr, like the
+driver's value hash), so queries round on both sides themselves.
+Measures are quantized to 2 decimals and magnitudes kept small so
+cross-engine sum-order error stays far below every query's rounding
+step; if the exact compare still mismatches, a report-only second-chance
+tolerant compare (rows in the comparator's column order, sorted,
+cellwise isclose rel=abs=1e-6) distinguishes a float-association
+artifact (reported as "~tol" — investigate; it does not change the exit
+code) from a real divergence (exit 1). NaN/Inf enter measure columns
 ONLY in the band-4 nonfinite regime (seeds 400-499), opened in r12 when
 the finite-measure law brought the variance family into the oracle
 contract (SCALING.md "NaN frontier"); other bands keep measures finite
@@ -72,15 +76,12 @@ import random
 import sys
 import tempfile
 
-_TOOLS = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, os.path.dirname(_TOOLS))
-sys.path.insert(0, _TOOLS)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
 import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
 
-from degenerate_sweep import _canon  # noqa: E402 — shared canonicalizer
+from mapreduce_docker_spark import oracle  # noqa: E402
 from mapreduce_docker_spark.registry import all_specs  # noqa: E402
 from mapreduce_docker_spark.session import get_spark  # noqa: E402
 
@@ -185,7 +186,7 @@ def _money(r: random.Random, lo, hi, ties=None, p_null=0.05, p_zero=0.04, p_neg=
         # band 5: negative zero + subnormals. -0.0 probes agg-key
         # normalization and min/max sign selection; 5e-324 (the smallest
         # subnormal) and 1e-310 probe gradual-underflow arithmetic and
-        # the canonical round(7) floor; their negatives probe ordering.
+        # the queries' dround floor; their negatives probe ordering.
         return r.choice([-0.0, 5e-324, -5e-324, 1e-310, -1e-310])
     if x < nf_cut + _MODE["negzero_sub"] + p_zero:
         return 0.0
@@ -515,38 +516,42 @@ def _tolerant_eq(a, b) -> bool:
     return True
 
 
-def run_seed(spark, specs, seed: int, skip_rows_only: bool):
+def _by_name(rows, columns):
+    """Rows with their cells in column-name order (the comparator's)."""
+    order = sorted(range(len(columns)), key=lambda i: columns[i])
+    return [tuple(r[i] for i in order) for r in rows]
+
+
+def run_seed(spark, specs, seed: int):
     dst = os.path.join(tempfile.gettempdir(), f"mds_randdiff_{seed}")
     tables = build_fixture(seed)
     write_fixture(tables, dst)
-    con = duckdb.connect()
-    for name in tables:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{dst}/{name}.parquet')"
-        )
+    con = oracle.connect(dst, tables)
     full = [n for n, s in specs.items() if s.sql is not None]
-    rows_only = [] if skip_rows_only else [n for n, s in specs.items() if s.sql is None]
+    rows_only = [n for n, s in specs.items() if s.sql is None]
     crash_s, crash_o, fails, tol = [], [], [], []
     for i, n in enumerate(full):
         s = specs[n]
         try:
-            srows = _canon([tuple(r) for r in s.fn(spark, dst).collect()])
+            sdf = s.fn(spark, dst)
+            scols, srows = sdf.columns, sdf.collect()
         except Exception as e:  # noqa: BLE001 — triage tool, report everything
             crash_s.append((n, f"{type(e).__name__}: {str(e)[:160]}"))
             continue
         try:
-            orows = _canon([tuple(r) for r in con.execute(s.sql).fetchall()])
+            ores = con.execute(s.sql)
+            ocols, orows = [d[0] for d in ores.description], ores.fetchall()
         except Exception as e:  # noqa: BLE001
             crash_o.append((n, f"{type(e).__name__}: {str(e)[:160]}"))
             continue
-        if srows != orows:
-            if _tolerant_eq(srows, orows):
+        mismatch = oracle.diff(scols, srows, ocols, orows)
+        if mismatch:
+            if sorted(scols) == sorted(ocols) and _tolerant_eq(
+                _by_name(srows, scols), _by_name(orows, ocols)
+            ):
                 tol.append(n)
             else:
-                diff = [
-                    (a, b) for a, b in zip(srows, orows) if a != b
-                ][:6] or [(srows[:3], orows[:3])]
-                fails.append((n, len(srows), len(orows), diff))
+                fails.append((n, mismatch))
         if (i + 1) % 50 == 0:
             print(f"  ...seed {seed}: {i + 1}/{len(full)}", flush=True)
     crash_ro = []
@@ -561,14 +566,12 @@ def run_seed(spark, specs, seed: int, skip_rows_only: bool):
 
 
 def main() -> int:
-    argv = [a for a in sys.argv[1:]]
-    skip_ro = "--skip-rows-only" in argv
-    seeds = [int(a) for a in argv if not a.startswith("--")] or [1, 2, 3]
+    seeds = [int(a) for a in sys.argv[1:]] or [1, 2, 3]
     spark = get_spark()
     specs = all_specs()
     bad_total = 0
     for seed in seeds:
-        cs, co, fails, tol, cro, nfull, nro = run_seed(spark, specs, seed, skip_ro)
+        cs, co, fails, tol, cro, nfull, nro = run_seed(spark, specs, seed)
         bad = len(cs) + len(co) + len(fails) + len(cro)
         bad_total += bad
         print(f"\n== seed {seed}: {nfull + nro - bad}/{nfull + nro} clean "
@@ -577,11 +580,8 @@ def main() -> int:
             print("  S!", n, "|", e)
         for n, e in co:
             print("  O!", n, "|", e)
-        for n, a, b, diff in fails:
-            print("  V!", n, f"spark_rows={a} oracle_rows={b}")
-            for sa, ob in diff:
-                print("     S:", sa)
-                print("     O:", ob)
+        for n, mismatch in fails:
+            print("  V!", n, "|", mismatch[:2000])
         for n in tol:
             print("  ~tol", n, "(strict mismatch, tolerant pass — float association)")
         for n, e in cro:

@@ -6,11 +6,12 @@ a builder-time conf breaks there and nowhere else — exactly what happened
 in round 1 with ``spark.sql.legacy.parquet.nanosAsLong`` (VERDICT.md item
 1). This script reproduces the driver harness: a bare session, DuckDB
 views over the same parquet, full value-level compare for every
-oracle-carrying query, execution + schema check for rows-only ones.
+oracle-carrying query (``mapreduce_docker_spark.oracle.diff``, the
+suite's comparator), execution + schema check for rows-only ones.
 
 Usage::
 
-    python tools/vanilla_gate.py [sf_dir] [--limit N]
+    python tools/vanilla_gate.py [sf_dir]
 
 Exits 0 iff every checked query matches. Run from pytest via
 tests/test_vanilla_session.py (subprocess — a JVM session is
@@ -21,52 +22,15 @@ its confs into the "vanilla" one).
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def normalize(rows, columns):
-    """Sort columns by name, canonicalize values, sort rows.
-
-    Mirrors the driver's order-insensitive value-hash compare (and
-    tests/test_oracle_parity.py): a mismatch here predicts a driver
-    hash mismatch.
-    """
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-
-    def canon(v):
-        if v is None:
-            return ("\x00null",)
-        if isinstance(v, bool):
-            return ("b", int(v))
-        if isinstance(v, float):
-            if math.isnan(v):
-                return ("f", "nan")
-            # EXACT repr, no rounding: the driver's gate is an exact value
-            # hash, so any tolerance here would let the gate pass on drift
-            # the driver flags — queries must round on BOTH sides themselves
-            return ("f", repr(v))
-        if isinstance(v, int):
-            return ("i", v)
-        if isinstance(v, (list, tuple)):
-            return ("l", tuple(canon(x) for x in v))
-        return ("s", str(v))
-
-    return sorted(tuple(canon(r[i]) for i in order) for r in rows)
-
-
 def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sf_dir = args[0] if args else "/root/testdata/sf0.001"
-    limit = None
-    for a in sys.argv[1:]:
-        if a.startswith("--limit="):
-            limit = int(a.split("=", 1)[1])
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
-    import duckdb
     from pyspark.sql import SparkSession
 
     # deliberately NO engine defaults — this is the whole point
@@ -75,21 +39,15 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    from mapreduce_docker_spark import oracle
     from mapreduce_docker_spark.registry import all_specs
     from mapreduce_docker_spark.sources.catalog import TABLES
 
-    duck = duckdb.connect()
-    for t in TABLES:
-        duck.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
+    duck = oracle.connect(sf_dir, TABLES)
     specs = all_specs()
-    names = list(specs)[:limit] if limit else list(specs)
     failures: dict[str, str] = {}
     n_oracle = n_rows_only = 0
-    for name in names:
-        spec = specs[name]
+    for name, spec in specs.items():
         try:
             sdf = spec.fn(spark, sf_dir)
             if spec.sql is None:
@@ -98,14 +56,14 @@ def main() -> int:
                 assert sdf.count() >= 0
                 continue
             n_oracle += 1
-            srows = [tuple(r) for r in sdf.collect()]
-            scols = sdf.columns
             ores = duck.execute(spec.sql)
-            ocols = [d[0] for d in ores.description]
-            orows = ores.fetchall()
-            assert sorted(scols) == sorted(ocols), f"columns {scols} vs {ocols}"
-            assert len(srows) == len(orows), f"rows {len(srows)} vs {len(orows)}"
-            assert normalize(srows, scols) == normalize(orows, ocols), "values differ"
+            mismatch = oracle.diff(
+                sdf.columns,
+                sdf.collect(),
+                [d[0] for d in ores.description],
+                ores.fetchall(),
+            )
+            assert mismatch is None, mismatch
         except Exception as e:  # noqa: BLE001 - gate must report, not crash
             failures[name] = f"{type(e).__name__}: {e}"[:500]
 
@@ -113,7 +71,7 @@ def main() -> int:
         json.dumps(
             {
                 "sf_dir": sf_dir,
-                "checked": len(names),
+                "checked": len(specs),
                 "oracle": n_oracle,
                 "rows_only": n_rows_only,
                 "failures": failures,
