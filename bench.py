@@ -266,10 +266,12 @@ def _dedup_scaling_probe(spark) -> dict:
     return out
 
 
-def _graph_scaling_probe(spark) -> dict:
+def _graph_scaling_probe(spark, heap: str) -> dict:
     """Triangle census + PageRank cost at x1/x4/x16(/x64) synthetic edge
     growth (VERDICT r4 #4 — the dedup_lsh_scaling pattern applied to the
-    graph family; r5 #4 extended the top points).
+    graph family; r5 #4 extended the top points). ``heap`` is the JVM's
+    heap; the x64 PageRank point is skipped, with its reason, when that
+    heap cannot hold it.
 
     Edge growth = disjoint replicas (node ids offset per replica), so edge
     count scales by the multiplier while per-node degree stays constant —
@@ -475,9 +477,13 @@ def _graph_scaling_probe(spark) -> dict:
         # min-of-3 up to x16; the x64 point runs min-of-2 (each rep is
         # already 3 internally-sequenced shuffle rounds over 64x edges — 3
         # reps would put the whole subprocess near its timeout). The top
-        # point degrades to an error note rather than killing the whole
-        # probe if the ladder outgrows the JVM.
+        # point is skipped when the heap is below what it needs, and
+        # degrades to an error note rather than killing the whole probe if
+        # the ladder still outgrows the JVM.
         for m, reps_n in ((1, 3), (4, 3), (16, 3), (64, 2)):
+            if m == 64 and (skip := _x64_skip_reason(heap)):
+                out["pagerank3_x64_skipped"] = skip
+                break
             _release_checkpoints()
             try:
                 out[f"pagerank3_x{m}"] = _min_of(lambda m=m: pr_once(m), reps_n)
@@ -515,6 +521,18 @@ def _graph_heap() -> str:
     return f"{max(1, min(48, int(phys_gb * 0.6)))}g"
 
 
+# live heap the x64 PageRank point needs (see _graph_scaling_main)
+_X64_HEAP_GB = 24
+
+
+def _x64_skip_reason(heap: str) -> str | None:
+    """Why a ``heap``-sized JVM (``_graph_heap``'s "<n>g") cannot run the
+    x64 PageRank point, or None when it can."""
+    if int(heap.removesuffix("g")) < _X64_HEAP_GB:
+        return f"heap {heap} < the ~{_X64_HEAP_GB}g of live heap the x64 point needs"
+    return None
+
+
 def _graph_scaling_main() -> None:
     """Run the graph probe in its own JVM with a bigger heap: the x64
     PageRank point replicates the symmetrized purchase graph to ~100M
@@ -527,11 +545,10 @@ def _graph_scaling_main() -> None:
     their localCheckpoint blocks measured ~>24g of live heap; on a real
     cluster this is ~50 executor-GBs of perfectly partitioned state, but
     a single local JVM pays it all at once."""
-    spark = get_spark(
-        app_name="bench_graph", extra_conf={"spark.driver.memory": _graph_heap()}
-    )
+    heap = _graph_heap()
+    spark = get_spark(app_name="bench_graph", extra_conf={"spark.driver.memory": heap})
     try:
-        print("GRAPH_JSON:" + json.dumps(_graph_scaling_probe(spark)))
+        print("GRAPH_JSON:" + json.dumps(_graph_scaling_probe(spark, heap)))
     finally:
         spark.stop()
 

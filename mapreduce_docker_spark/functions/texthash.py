@@ -136,10 +136,7 @@ def shingle_hash_rows(df, cols: list[str], text_col: str = "text"):
     and builds ``md5(concat_ws(' ', slice(toks, i, k)))`` as ordinary
     projected expressions — tokenize still runs ONCE per doc (the named
     ``_toks`` projection feeds the generator), while the per-shingle work
-    (slice/concat/md5/mod) compiles into the generate stage. Quiet
-    same-session A/B at sf0.1 (OPTIMIZATION_r15.md A/B 2, guide §4.1
-    "prefer built-ins", judge-r14 next-round #5): signature stage
-    0.583 -> 0.189 s min; dedup_minhash_pairs 0.993 -> 0.723 s.
+    (slice/concat/md5/mod) compiles into the generate stage.
 
     SEMANTICS CAVEAT — duplicates are KEPT (the array path dedups grams
     per doc): use ONLY under duplicate-insensitive consumers — the MinHash

@@ -255,9 +255,8 @@ def _sig_with_hashset_df(docs: DataFrame) -> DataFrame:
     r15: shingle hashing rides the codegen generator path
     (th.shingle_hash_rows): duplicate gram occurrences are kept, which
     neither the min aggregates nor collect_set can see — outputs
-    bit-identical (A/B 2 + oracle; quiet same-session minhash-pairs A/B
-    0.993 -> 0.723 s min at sf0.1 and 5.89 -> 2.92 s at a x10 replica
-    corpus, where the per-gram interpreted work dominates).
+    bit-identical (tests/test_texthash.py::
+    test_shingle_hash_rows_matches_array_path, and the oracle).
     """
     ex = th.shingle_hash_rows(docs, ["doc_id"])
     return ex.groupBy("doc_id").agg(
@@ -778,15 +777,9 @@ def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Measured at sf0.1 (min-of-3, noop): 1.864 s -> 1.644 s, output sets
     # bit-identical; at corpus scale the band-shuffle bytes drop ~16x.
     #
-    # r15: the r14 driver run read this rewrite as a 24% REGRESSION while
-    # the builder's A/Bs said the opposite; settled on a probe-quiet host
-    # (judge-r14 next-round #1) with an interleaved same-session A/B:
-    # lean 1.348 s vs payload-bands 1.910 s min at sf0.1 — and at a x10
-    # (circular-shift-replicated) corpus, where oversized buckets route
-    # through the salt cells, lean 15.06 s vs payload-bands 195.0 s: the
-    # 64-double payload through the quadratic in-cell pair emission is
-    # catastrophic exactly where it matters. The lean shape STAYS
-    # (OPTIMIZATION_r15.md A/B 1).
+    # The lean shape stays over carrying the 64-double payload in the
+    # bands: where oversized buckets route through the salt cells, the
+    # payload goes through the quadratic in-cell pair emission.
     unit = _dedup_unit_fingerprints(spark, sf_dir).localCheckpoint(eager=False)
     bands = unit.select(
         F.struct("vec_id", "f0", "f1", "f2").alias("m"),
@@ -957,11 +950,9 @@ def _dedup_unit_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     next-round #3): the 144x64 = 9,216 multiply-adds per row used to run
     as interpreted higher-order-function lambdas (transform/aggregate are
     never codegen'd); they now run as one numpy stage inside mapInArrow
-    with order-preserving summation, so outputs stay BIT-IDENTICAL (quiet
-    same-session A/B: derivation alone 1.450 -> 0.421 s at x10 corpus
-    [3.4x]; full dedup_embedding_pairs 15.06 -> 13.07 s at x10, ~wash at
-    sf0.1 where the Arrow boundary offsets the HOF savings; oracle + two
-    fresh differential seeds bit-clean — OPTIMIZATION_r15.md). The select
+    with order-preserving summation, so outputs stay BIT-IDENTICAL
+    (tests/test_dedup.py::
+    test_fingerprint_kernel_matches_jvm_expression_path). The select
     BEFORE mapInArrow prunes the scan to the two columns the kernel
     reads (§4.2's column-pruning caveat: opaque nodes defeat pruning
     without it)."""
@@ -1207,8 +1198,7 @@ def dedup_span_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # concat_ws(slice(toks, i*k+1, k)) keeps the per-tile work inside the
     # generate stage's codegen. tile_idx = the exploded index — identical
     # to posexplode's pos by construction; BOTH corpus passes (winner
-    # election + marking) get the cheaper derivation. Quiet same-session
-    # A/B at sf0.1: 0.914 -> 0.634 s min, outputs identical (A/B 2).
+    # election + marking) get the cheaper derivation.
     tiled = d.select(
         "doc_id", "toks", F.explode(F.sequence(F.lit(0), nt - 1)).alias("tile_idx")
     ).select(

@@ -331,14 +331,14 @@ def sim_ann_srp_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 144-bit band string come from the SAME numpy mapInArrow kernel
     # the near-dup pipeline uses (_dedup_unit_fingerprints — the 9,216
     # interpreted-HOF multiply-adds per row were this query's map cost;
-    # bit-identical by the order-preserving fold, quiet A/B 1.016 -> 0.915 s
-    # min at sf0.1). Blocking stays provably identical to the dedup path
-    # because it IS the dedup derivation; f0..f2 are dropped here (the
-    # banded ANN reranks on exact cosine, no Hamming gate).
-    # NOTE kept from r14 (re-validated on a quiet host this round): the
-    # lean-bands+join-back rewrite LOSES locally for this query (1.643 vs
-    # 1.016 s min — only pairs surviving query_id < 50 are scored, so the
-    # payload relief cannot pay for two joins); bands keep carrying u.
+    # bit-identical by the order-preserving fold, pinned by
+    # tests/test_dedup.py::test_fingerprint_kernel_matches_jvm_expression_path).
+    # Blocking stays provably identical to the dedup path because it IS
+    # the dedup derivation; f0..f2 are dropped here (the banded ANN
+    # reranks on exact cosine, no Hamming gate). Bands keep carrying u
+    # rather than lean bands + a join back: only pairs surviving
+    # query_id < 50 are scored, so the payload relief cannot pay for two
+    # joins.
     unit = _dedup_unit_fingerprints(spark, sf_dir).drop("f0", "f1", "f2")
     bands = unit.select(
         F.struct("vec_id", "u").alias("m"),

@@ -15,6 +15,18 @@ casting TIMESTAMP_NS -> TIMESTAMP), and timestamps written as plain
 inference; cast to TIMESTAMP under the pinned-UTC session tz, the same
 instant DuckDB's naive read yields). Either way engine and oracle see
 identical values.
+
+Schema law: each fixture's parquet schema is inferred once per process and
+content. Without a schema, ``spark.read.parquet`` runs a footer-inference
+job on every call, even for a one-file table that has not changed.
+:func:`table_schema` memoizes the inferred ``StructType`` under
+``(abspath, fixture_digest, the parquet inference confs)``, so an in-place
+rewrite or a toggled inference conf is inferred again, and
+:func:`load_table` reads with that schema, which runs no job. Only the
+schema is cached, never a DataFrame: every read still gets fresh attribute
+ids, so two loads of one table self-join correctly. A path that cannot be
+stat'ed (missing, non-local) bypasses the memo, and the plain read raises
+Spark's own error.
 """
 
 from __future__ import annotations
@@ -23,6 +35,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TABLES = (
     "region",
@@ -140,13 +153,53 @@ def fixture_digest(sf_dir: str, name: str) -> str:
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
 
 
+# Confs that change what parquet schema inference returns for the same
+# file bytes. Each is read with its own conf.get, since getAll copies every
+# conf across the gateway.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (abspath, fixture_digest, inference conf values) -> inferred schema
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The inferred schema of one fixture table, inferred once per content.
+
+    A miss infers exactly as ``spark.read.parquet(path).schema`` does. A
+    path ``fixture_digest`` cannot stat is never memoized. The returned
+    schema is shared by every caller with the same key: do not mutate it.
+    """
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        digest = fixture_digest(sf_dir, name)
+    except OSError:
+        return spark.read.parquet(path).schema
+    key = (
+        os.path.abspath(path),
+        digest,
+        *(spark.conf.get(k) for k in _INFERENCE_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table, normalizing physical-type quirks."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     ensure_runtime_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+    schema = table_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    types = {f.name: f.dataType for f in schema.fields}
+    if name == "events" and isinstance(types.get("ts"), LongType):
         # ns -> µs truncation via INTEGER division (DIV): float division here
         # would lose low bits at ~1.7e18 ns and drift ±1µs from DuckDB's
         # parquet reader, which truncates exactly.
@@ -159,8 +212,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # pinned UTC (_RUNTIME_CONFS), so the cast reinterprets the same wall
     # clock as the same UTC instant — values identical to DuckDB's naive
     # TIMESTAMP read of the same file.
-    for fname, ftype in df.dtypes:
-        if ftype == "timestamp_ntz":
+    for fname, ftype in types.items():
+        if isinstance(ftype, TimestampNTZType):
             df = df.withColumn(fname, F.col(fname).cast("timestamp"))
     return df
 
@@ -190,8 +243,6 @@ def scatter(df: DataFrame, key: str | None = None) -> DataFrame:
     (guide §2.5: never rand-derived) and ~unique per row so balance
     matches round-robin; at scale this path no-ops like the keyless one.
     """
-    if os.environ.get("SPARK_GRAFT_NO_SCATTER"):
-        return df
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728").lower()

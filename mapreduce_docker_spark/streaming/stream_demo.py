@@ -38,13 +38,16 @@ def _path_digest(path: str) -> str:
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream of the events table (schema from a batch peek).
+    """File-source stream of the events table (schema from the catalog memo).
 
     The fixture's TIMESTAMP(NANOS) column arrives as a raw ns LongType
     (session.py sets nanosAsLong) and is converted to µs exactly as the
     batch catalog does.
     """
-    from mapreduce_docker_spark.sources.catalog import ensure_runtime_confs
+    from mapreduce_docker_spark.sources.catalog import (
+        ensure_runtime_confs,
+        table_schema,
+    )
 
     ensure_runtime_confs(spark)  # vanilla-session nanos/tz/py-files setup
     path = f"{sf_dir}/events.parquet"
@@ -57,7 +60,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     link = os.path.join(stage, "events.parquet")
     if not os.path.exists(link):
         os.symlink(os.path.abspath(path), link)
-    schema = spark.read.parquet(path).schema
+    schema = table_schema(spark, sf_dir, "events")
     # recursiveFileLookup: the fixture may be a single file OR a
     # Spark-written DIRECTORY (part-files one level down the symlink);
     # without it the file-stream source lists zero files on the directory
@@ -541,6 +544,7 @@ def run_streaming_wordcount(
     equals the batch flagship exactly.
     """
     from mapreduce_docker_spark.functions.tokenize import tokens
+    from mapreduce_docker_spark.sources.catalog import table_schema
 
     path = f"{sf_dir}/documents.parquet"
     stage = os.path.join(
@@ -550,7 +554,7 @@ def run_streaming_wordcount(
     link = os.path.join(stage, "documents.parquet")
     if not os.path.exists(link):
         os.symlink(os.path.abspath(path), link)
-    schema = spark.read.parquet(path).schema
+    schema = table_schema(spark, sf_dir, "documents")
     # recursiveFileLookup: accept file- and directory-shaped fixtures alike
     # (see read_events_stream)
     docs = (

@@ -1,6 +1,7 @@
 """The config stamp bench.py records beside its numbers must describe the
 session the numbers came from: a record taken on another core count has to
-be recognisable as such from the summary alone."""
+be recognisable as such from the summary alone. A ladder point the host
+cannot hold is recorded as skipped, with its reason."""
 
 from __future__ import annotations
 
@@ -27,3 +28,11 @@ def test_config_stamp_describes_the_session(spark):
         "sf",
         "git_rev",
     }
+
+
+def test_x64_pagerank_is_skipped_below_its_heap():
+    # the x64 point needs ~24g of live heap; a smaller JVM dies in it
+    for heap in ("1g", "9g", "23g"):
+        assert "24g" in bench._x64_skip_reason(heap)
+    for heap in ("24g", "48g"):
+        assert bench._x64_skip_reason(heap) is None

@@ -27,6 +27,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import threading
 import time
 import uuid
 
@@ -38,22 +39,47 @@ from mapreduce_docker_spark.session import get_spark  # noqa: E402
 
 
 class _ProgressTap(StreamingQueryListener):
-    """Collects every micro-batch progress event (async, engine-pushed)."""
+    """Collects every micro-batch progress event per run (engine-pushed).
+
+    Progress and termination events arrive asynchronously on the listener
+    bus, in the order they were posted; a run's start event arrives before
+    ``start()`` returns. So a timed run's events are selected by its
+    ``runId``, and are complete once its termination event has arrived.
+    """
 
     def __init__(self) -> None:
-        self.progress: list[dict] = []
+        self.started: list[tuple[str, str | None]] = []  # (runId, name)
+        self.progress: dict[str, list[dict]] = {}
+        self.terminated: set[str] = set()
+        self._done = threading.Condition()
 
     def onQueryStarted(self, event) -> None:  # noqa: N802
-        pass
+        self.started.append((str(event.runId), event.name))
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
-        self.progress.append(json.loads(event.progress.json))
+        p = json.loads(event.progress.json)
+        self.progress.setdefault(p["runId"], []).append(p)
 
     def onQueryIdle(self, event) -> None:  # noqa: N802
         pass
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass
+        with self._done:
+            self.terminated.add(str(event.runId))
+            self._done.notify_all()
+
+    def timed(self, run, name: str | None = None) -> tuple[float, list[dict]]:
+        """(seconds, progress events) of ``run()``'s streaming runs, or of
+        only those named ``name``; waits for each run's termination event."""
+        mark = len(self.started)
+        t0 = time.perf_counter()
+        run()
+        sec = round(time.perf_counter() - t0, 3)
+        ids = [r for r, n in self.started[mark:] if name is None or n == name]
+        with self._done:
+            if not self._done.wait_for(lambda: self.terminated.issuperset(ids), 60):
+                raise TimeoutError(f"no termination event for runs {ids}")
+        return sec, [p for r in ids for p in self.progress.get(r, [])]
 
 
 def _state_summary(progress: list[dict]) -> dict:
@@ -94,32 +120,31 @@ def main() -> None:
         # warm-up: JVM + codegen on the smallest sibling would not exercise
         # the same staged chunk files; instead run each query once untimed
         run_streaming_wordcount(spark, sf_dir, query_name="sb_wc_warm")
-        tap.progress.clear()
-        t0 = time.perf_counter()
-        run_streaming_wordcount(spark, sf_dir, query_name="sb_wc")
-        out["streaming_wordcount_sec"] = round(time.perf_counter() - t0, 3)
-        time.sleep(1)
-        out["streaming_wordcount_state"] = _state_summary(tap.progress)
+        sec, progress = tap.timed(
+            lambda: run_streaming_wordcount(spark, sf_dir, query_name="sb_wc"), "sb_wc"
+        )
+        out["streaming_wordcount_sec"] = sec
+        out["streaming_wordcount_state"] = _state_summary(progress)
 
-        tap.progress.clear()
         run_stream_stream_join(spark, sf_dir, query_name="sb_ssj_warm")
-        tap.progress.clear()
-        t0 = time.perf_counter()
-        run_stream_stream_join(spark, sf_dir, query_name="sb_ssj")
-        out["stream_stream_join_sec"] = round(time.perf_counter() - t0, 3)
-        time.sleep(1)
-        out["stream_stream_join_state"] = _state_summary(tap.progress)
+        sec, progress = tap.timed(
+            lambda: run_stream_stream_join(spark, sf_dir, query_name="sb_ssj"), "sb_ssj"
+        )
+        out["stream_stream_join_sec"] = sec
+        out["stream_stream_join_state"] = _state_summary(progress)
 
-        tap.progress.clear()
-        t0 = time.perf_counter()
-        run_incremental_minhash_dedup(spark, sf_dir, run_id=uuid.uuid4().hex[:8])
-        out["incremental_minhash_sec"] = round(time.perf_counter() - t0, 3)
-        time.sleep(1)
+        # its foreachBatch stream is unnamed: take every run it starts
+        sec, progress = tap.timed(
+            lambda: run_incremental_minhash_dedup(
+                spark, sf_dir, run_id=uuid.uuid4().hex[:8]
+            )
+        )
+        out["incremental_minhash_sec"] = sec
         # foreachBatch drives batch jobs, so state lives in the signature
         # store files, not the state store; record the batch count instead
-        out["incremental_minhash_progress_batches"] = _state_summary(
-            tap.progress
-        )["n_batches"]
+        out["incremental_minhash_progress_batches"] = _state_summary(progress)[
+            "n_batches"
+        ]
         print(json.dumps(out, indent=1))
     finally:
         spark.stop()
