@@ -28,7 +28,6 @@ import json
 import os
 import re
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -109,36 +108,35 @@ _VOCAB = [
 ]
 
 
-def _ensure_text_corpus(path: str, total_mb: int) -> int:
+def _ensure_text_corpus(total_mb: int) -> tuple[str, int]:
     """Deterministic pseudo-text corpus (reference workload shape: enwik9,
-    README.md:160-162). Zipf-ish draws from a fixed vocab, 8 files, cached
-    across bench runs. Returns total bytes."""
+    README.md:160-162). Zipf-ish draws from a fixed vocab, 8 files, staged
+    once per content across bench runs. Returns (directory, total bytes)."""
+    import hashlib
     import random
 
-    done = os.path.join(path, ".complete")
-    if os.path.exists(done):
-        return sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path)
-            if f.endswith(".txt")
-        )
-    os.makedirs(path, exist_ok=True)
-    rng = random.Random(42)
-    weights = [1.0 / (i + 1) for i in range(len(_VOCAB))]
-    per_file = total_mb * 1_000_000 // 8
-    total = 0
-    for i in range(8):
-        fp = os.path.join(path, f"part{i}.txt")
-        with open(fp, "w") as fh:
-            n = 0
-            while n < per_file:
-                line = " ".join(rng.choices(_VOCAB, weights, k=12)) + "\n"
-                fh.write(line)
-                n += len(line)
-            total += n
-    with open(done, "w") as fh:
-        fh.write("ok")
-    return total
+    from mapreduce_docker_spark.sources.staging import stage_once
+
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
+        rng = random.Random(42)
+        weights = [1.0 / (i + 1) for i in range(len(_VOCAB))]
+        per_file = total_mb * 1_000_000 // 8
+        for i in range(8):
+            with open(os.path.join(tmp, f"part{i}.txt"), "w") as fh:
+                n = 0
+                while n < per_file:
+                    line = " ".join(rng.choices(_VOCAB, weights, k=12)) + "\n"
+                    fh.write(line)
+                    n += len(line)
+
+    digest = hashlib.md5(repr((42, _VOCAB, total_mb)).encode()).hexdigest()[:12]
+    path = stage_once("textbench", digest, write)
+    return path, sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if f.endswith(".txt")
+    )
 
 
 def _text_throughput(spark, total_mb: int) -> dict:
@@ -147,8 +145,7 @@ def _text_throughput(spark, total_mb: int) -> dict:
     from mapreduce_docker_spark.operators.wordcount import word_counts
     from mapreduce_docker_spark.sources.text import read_text_corpus
 
-    corpus = os.path.join(tempfile.gettempdir(), f"spark_graft_textbench_{total_mb}mb")
-    n_bytes = _ensure_text_corpus(corpus, total_mb)
+    corpus, n_bytes = _ensure_text_corpus(total_mb)
     df = word_counts(read_text_corpus(spark, corpus + "/*.txt"), "value")
     # min-of-2: the headline suite is large enough to evict this plan's
     # generated code from the JVM codegen cache, so the first run re-JITs

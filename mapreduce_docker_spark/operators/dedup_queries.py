@@ -225,7 +225,7 @@ def _sig_cols_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r15: shingle hashing rides the codegen generator path
     (th.shingle_hash_rows — duplicate occurrences are kept, which the min
-    aggregates cannot see; see the helper's caveat + A/B numbers)."""
+    aggregates cannot see; see the helper's caveat)."""
     ex = th.shingle_hash_rows(
         scatter(load_table(spark, sf_dir, "documents"), key="doc_id"), ["doc_id"]
     )

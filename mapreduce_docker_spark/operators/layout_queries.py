@@ -37,9 +37,6 @@ round's bytes while the oracle reads the fresh table (ADVICE.md r3).
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,6 +46,7 @@ from mapreduce_docker_spark.registry import register
 from mapreduce_docker_spark.sources.catalog import fixture_digest, load_table
 from mapreduce_docker_spark.sources.formats import read_ndjson, read_orc, write_ndjson, write_orc
 from mapreduce_docker_spark.sources.sinks import read_bucketed, write_bucketed, write_partitioned
+from mapreduce_docker_spark.sources.staging import stage_once
 
 
 def merge_upsert(target: DataFrame, source: DataFrame, key: str) -> DataFrame:
@@ -81,108 +79,6 @@ def merge_upsert(target: DataFrame, source: DataFrame, key: str) -> DataFrame:
     )
 
 
-def _staging_dir(kind: str, digest: str) -> str:
-    return os.path.join(tempfile.gettempdir(), f"mds_{kind}_{digest}")
-
-
-def _write_once(kind: str, digest: str, write) -> str:
-    """Write a digest-keyed layout exactly once per fixture content.
-
-    The _SUCCESS marker gates re-writes: repeated invocations in one
-    process (bench warm runs, plan tests) and across processes reuse the
-    staged layout; a regenerated fixture changes the digest and stages a
-    fresh directory. Writes go to a PROCESS-UNIQUE tmp dir (the old
-    shared ``out + ".tmp"`` path let two cold processes racing the same
-    digest overwrite each other's tmp mid-write), and the PROMOTE section
-    is serialized by a digest-keyed ``flock`` — rename-based recovery
-    alone had a window where one promoter could move a concurrently
-    promoted dir aside (judge-r8 review). Under the lock the invariant is
-    unconditional: a dir carrying ``_SUCCESS`` is never deleted or moved
-    (content-addressed immutability — readers never lock), and a
-    half-written corpse from a killed pre-fix writer is cleared safely.
-    The slow parquet write itself stays OUTSIDE the lock: concurrent cold
-    stagers waste work writing byte-equivalent tmps, but never block on
-    each other's I/O. The staging root is process-local tempdir, where
-    flock is reliable; a multi-node deployment would stage through an
-    object store's atomic commit instead.
-
-    Orphan hygiene (judge-r8 ADVICE): the tmp dir is removed in a
-    ``finally`` even when ``write`` raises or the promote loses, and every
-    lock acquisition sweeps sibling ``{out}.tmp-<pid>-*`` corpses whose
-    writer pid is dead — a crashed stager's half-written tmp is reclaimed
-    by the next invocation instead of accumulating forever. The 0-byte
-    ``.lock`` file itself is retained deliberately: unlinking a file other
-    processes may flock reintroduces the two-inode race the lock exists to
-    close.
-    """
-    out = _staging_dir(kind, digest)
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        _sweep_dead_stager_tmps(out)
-        return out
-    import fcntl
-    import shutil
-    import uuid
-
-    tmp = f"{out}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    try:
-        write(tmp)
-        # Spark's own commit protocol wrote tmp/_SUCCESS; promote under lock
-        with open(f"{out}.lock", "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            if os.path.exists(os.path.join(out, "_SUCCESS")):
-                # a concurrent writer promoted first; its layout is complete
-                # and byte-equivalent (same digest) — keep it, discard ours
-                # (the finally below removes our tmp)
-                pass
-            else:
-                shutil.rmtree(out, ignore_errors=True)  # pre-fix corpse, if any
-                os.replace(tmp, out)
-            _sweep_dead_stager_tmps(out, locked=True)
-    finally:
-        # no-op when our tmp was promoted (os.replace moved it away)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def _sweep_dead_stager_tmps(out: str, locked: bool = False) -> None:
-    """Reclaim ``{out}.tmp-<pid>-<hex>`` corpses left by dead stagers.
-
-    Only dirs whose embedded pid no longer exists are removed — a live
-    concurrent stager's in-progress tmp is never touched (a recycled pid
-    merely defers the sweep to a later call). Runs under the digest's
-    flock so two sweepers never race a half-removed corpse; when called
-    on the fast path (``_SUCCESS`` already present) the lock is taken
-    only if a candidate corpse actually exists.
-    """
-    import fcntl
-    import glob as _glob
-    import shutil
-
-    corpses = []
-    for path in _glob.glob(f"{out}.tmp-*"):
-        try:
-            pid = int(os.path.basename(path).rsplit("-", 2)[1])
-            os.kill(pid, 0)  # raises if no such process
-        except (ValueError, IndexError):
-            continue  # unrecognized name: not ours to delete
-        except ProcessLookupError:
-            corpses.append(path)
-        except PermissionError:
-            pass  # pid exists (owned by another user): alive
-    if not corpses:
-        return
-    if locked:
-        for path in corpses:
-            shutil.rmtree(path, ignore_errors=True)
-        return
-    with open(f"{out}.lock", "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
-        for path in corpses:
-            # re-check under the lock: the owner may have finished+cleaned
-            if os.path.exists(path):
-                shutil.rmtree(path, ignore_errors=True)
-
-
 def _stage_bucketed_once(
     spark: SparkSession, sf_dir: str, name: str, tbl: str, col: str, digest: str
 ) -> None:
@@ -194,15 +90,12 @@ def _stage_bucketed_once(
     across processes: a second process whose catalog didn't know the table
     deleted the directory out from under the first process's scan
     (judge-r7 "what's wrong" #1, reproduced with pytest ∥ vanilla_gate).
-    This applies the exact ``_write_once`` discipline instead:
+    This stages through :func:`sources.staging.stage_once` instead:
 
     * files live at a digest-keyed dir; ``_SUCCESS`` gates re-writes;
     * writers write to a process-unique tmp dir (an EXTERNAL stage table,
       dropped after the write — files stay, names carry the bucket id),
-      then promote through ``_write_once``'s flock-serialized section —
-      one protocol, not two diverging copies (judge-r8 review: this copy
-      lacked the corpse recovery, so a half-deleted dir at ``final``
-      failed permanently where ``_write_once`` self-heals);
+      then promote through ``stage_once``'s flock-serialized section;
     * the catalog entry is per-session and external: ``CREATE TABLE ...
       CLUSTERED BY ... LOCATION promoted`` re-attaches the bucket spec
       (datasource tables carry it in the catalog, not the files).
@@ -216,7 +109,7 @@ def _stage_bucketed_once(
         )
         spark.sql(f"DROP TABLE IF EXISTS {stage_tbl}")
 
-    final = _write_once(f"bkt_{name}", digest, write)
+    final = stage_once(f"bkt_{name}", digest, write)
     if not spark.catalog.tableExists(tbl):
         ddl = ", ".join(
             f"{f.name} {f.dataType.simpleString()}"
@@ -293,7 +186,7 @@ def q_layout_partition_pruned_events(spark: SparkSession, sf_dir: str) -> DataFr
     ev = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.col("ts").cast("date")
     )
-    out = _write_once(
+    out = stage_once(
         "events_by_date", digest, lambda p: write_partitioned(ev, p, "event_date")
     )
     # explicit schema: inference needs at least one data file, and a
@@ -331,7 +224,7 @@ def q_layout_partition_pruned_events(spark: SparkSession, sf_dir: str) -> DataFr
 def q_docs_ndjson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest = fixture_digest(sf_dir, "documents")
     docs = load_table(spark, sf_dir, "documents")
-    out = _write_once("docs_ndjson", digest, lambda p: write_ndjson(docs, p))
+    out = stage_once("docs_ndjson", digest, lambda p: write_ndjson(docs, p))
     back = read_ndjson(
         spark, out, "doc_id bigint, text string, lang string, source string, n_chars bigint"
     )
@@ -366,7 +259,7 @@ def q_docs_ndjson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_events_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest = fixture_digest(sf_dir, "events")
     ev = load_table(spark, sf_dir, "events")
-    out = _write_once("events_orc", digest, lambda p: write_orc(ev, p))
+    out = stage_once("events_orc", digest, lambda p: write_orc(ev, p))
     back = read_orc(spark, out)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -612,7 +505,7 @@ def q_layout_zorder_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(path)
         )
 
-    out = _write_once("events_zorder", digest, write)
+    out = stage_once("events_zorder", digest, write)
     back = spark.read.parquet(out)
     return back.groupBy(
         (F.col("user_id") % 16).cast("long").alias("user_bucket"), "event_type"

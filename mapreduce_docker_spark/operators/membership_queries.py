@@ -102,8 +102,7 @@ def _bench_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The explode is applied DIRECTLY to the shingle expression — an
     intermediate named projection before a generator blocks Catalyst's
-    project collapse and re-evaluates the tokenize+shingle chain (measured
-    ~9x on the corpus-side twin of this pipeline).
+    project collapse and re-evaluates the tokenize+shingle chain.
     """
     return (
         load_table(spark, sf_dir, "documents")
@@ -252,7 +251,8 @@ def q_text_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-row-group fixture file would otherwise run it on one core.
     # r15: shingle hashing rides the codegen generator path
     # (th.shingle_hash_rows — duplicate occurrences are invisible behind
-    # the distinct; quiet A/B 0.621 -> 0.530 s min, outputs identical)
+    # the distinct; the equivalence is pinned by
+    # tests/test_texthash.py::test_shingle_hash_rows_matches_array_path)
     return (
         th.shingle_hash_rows(
             scatter(load_table(spark, sf_dir, "documents"), key="doc_id").filter(

@@ -99,20 +99,19 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stage_bmp_assets(spark: SparkSession, sf_dir: str) -> str:
     """Stage generated 24-bit BMP payloads beside the fixture, once per
-    fixture content (``_write_once`` flock-promote protocol).
+    fixture content (:func:`sources.staging.stage_once`).
 
     One ``.bmp`` file per selected document (the 64 lowest doc_ids — a
     bounded, documented staging collect, not a data-path materialization),
     pixels from :func:`bmp_codec.synth_pixels` so tests can recompute the
     expected channel sums WITHOUT the codec. Dimensions vary per doc and
-    cover all four row-padding residues. ``_SUCCESS`` is written by hand
-    (no Spark commit protocol here — plain binary files).
+    cover all four row-padding residues.
     """
     import os
 
     from mapreduce_docker_spark.operators import bmp_codec as bc
-    from mapreduce_docker_spark.operators.layout_queries import _write_once
     from mapreduce_docker_spark.sources.catalog import fixture_digest
+    from mapreduce_docker_spark.sources.staging import stage_once
 
     digest = fixture_digest(sf_dir, "documents")
 
@@ -134,9 +133,8 @@ def _stage_bmp_assets(spark: SparkSession, sf_dir: str) -> str:
             w, h = bc.synth_dims(d)
             with open(os.path.join(tmp, f"doc_{d:08d}.bmp"), "wb") as fh:
                 fh.write(bc.encode_bmp24(bc.synth_pixels(d, w, h)))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-    return _write_once("bmp_assets", digest, write)
+    return stage_once("bmp_assets", digest, write)
 
 
 @register(

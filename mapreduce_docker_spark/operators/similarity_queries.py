@@ -807,30 +807,19 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sim_ann_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
     from mapreduce_docker_spark.sources.catalog import fixture_digest
+    from mapreduce_docker_spark.sources.staging import stage_once
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"ivf_index_{fixture_digest(sf_dir, 'embeddings')}"
-    )
-    if not os.path.isdir(base):
+    def write(tmp: str) -> None:
         unit = _unit_vectors(spark, sf_dir).select("vec_id", "u")
-        cent = _ivf_centroids(unit)
-        tmp = f"{base}.tmp.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        cent.write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
+        _ivf_centroids(unit).write.parquet(os.path.join(tmp, "centroids"))
         # assign against the STORED centroids so the index is self-consistent
         # even if an engine change ever altered in-memory float folding
         cells = _assign_best(unit, spark.read.parquet(os.path.join(tmp, "centroids")))
-        cells.write.mode("overwrite").partitionBy("cent_id").parquet(
-            os.path.join(tmp, "cells")
-        )
-        try:
-            os.replace(tmp, base)
-        except OSError:  # a concurrent session won the build race
-            shutil.rmtree(tmp, ignore_errors=True)
+        cells.write.partitionBy("cent_id").parquet(os.path.join(tmp, "cells"))
+
+    base = stage_once("ivf_index", fixture_digest(sf_dir, "embeddings"), write)
     # explicit read schemas, derived lazily from the builder plans (pure
     # analysis, no execution): inference needs at least one data file, and
     # a filtered-to-empty corpus legitimately writes none

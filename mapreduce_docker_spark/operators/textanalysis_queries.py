@@ -1330,9 +1330,9 @@ def text_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode applied DIRECTLY to the shingle expression: routing it through
     # a named intermediate projection blocks Catalyst's project collapse
-    # before a generator and re-evaluates the tokenize+shingle chain
-    # (measured ~6x on this query at sf0.1); shingles() already emits a
-    # distinct array, so per-doc distinctness is preserved
+    # before a generator and re-evaluates the tokenize+shingle chain;
+    # shingles() already emits a distinct array, so per-doc distinctness is
+    # preserved
     bench = (
         _docs(spark, sf_dir)
         .filter(F.col("doc_id") < DECON_BENCH_MAX_DOC)

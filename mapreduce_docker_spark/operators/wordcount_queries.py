@@ -172,19 +172,23 @@ def q_wordcount_rdd(spark: SparkSession, sf_dir: str) -> DataFrame:
     note="TSV sink round-trip as a driver-checkable query: word counts written frequency-descending to a headerless tab-separated file (reference coordinator.py:131-134) and read back typed; same oracle as wordcount, so the sink is proven value-preserving under the hash",
 )
 def q_wordcount_tsv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import tempfile
 
     from mapreduce_docker_spark.sources.text import write_tsv
 
     counts = wc.ranked(wc.word_counts(load_table(spark, sf_dir, "documents"), "text"))
-    # stable digest, NOT hash(): PYTHONHASHSEED salts hash() per process,
-    # which would mint a fresh /tmp dir every run instead of reusing one
-    h = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"wc_tsv_{h}")
-    write_tsv(counts, out)
-    return spark.read.schema("word string, cnt bigint").option("sep", "\t").csv(out)
+    # the sink runs on every build, into a directory of this build only;
+    # the read-back is materialized before that directory goes
+    with tempfile.TemporaryDirectory(prefix="wc_tsv_") as tmp:
+        out = os.path.join(tmp, "tsv")
+        write_tsv(counts, out)
+        return (
+            spark.read.schema("word string, cnt bigint")
+            .option("sep", "\t")
+            .csv(out)
+            .localCheckpoint()
+        )
 
 
 @register(
@@ -201,23 +205,14 @@ def q_wordcount_tsv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_bootstrap_zip_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
     import zipfile
 
     from mapreduce_docker_spark.sources.bootstrap import fetch_corpus
     from mapreduce_docker_spark.sources.catalog import fixture_digest
+    from mapreduce_docker_spark.sources.staging import stage_once
     from mapreduce_docker_spark.sources.text import read_text_corpus
 
-    # digest keyed on fixture CONTENT, not just path: the test-data
-    # generator rewrites documents.parquet in place between rounds, and a
-    # path-keyed cache would keep answering from the stale zip while the
-    # oracle reads the fresh fixture (hash() is PYTHONHASHSEED-salted,
-    # hence the md5 inside fixture_digest)
-    h = fixture_digest(sf_dir, "documents")
-    zip_path = os.path.join(tempfile.gettempdir(), f"bootstrap_{h}.zip")
-    corpus_dir = os.path.join(tempfile.gettempdir(), f"bootstrap_corpus_{h}")
-    if not os.path.exists(zip_path):
+    def write(tmp: str) -> None:
         rows = (
             load_table(spark, sf_dir, "documents")
             .filter("doc_id < 100")
@@ -229,12 +224,17 @@ def q_bootstrap_zip_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
         txt = "\n".join(
             (r["text"] or "").replace("\n", " ") for r in sorted(rows)
         )
-        # process-unique tmp + atomic replace: the _write_once discipline
-        # (a shared .tmp would interleave two cold stagers' writes)
-        tmp = f"{zip_path}.tmp-{os.getpid()}"
-        with zipfile.ZipFile(tmp, "w") as zf:
+        os.makedirs(tmp)
+        zip_path = os.path.join(tmp, "bootstrap.zip")
+        with zipfile.ZipFile(zip_path, "w") as zf:
             zf.writestr("corpus_part0.txt", txt)
-        os.replace(tmp, zip_path)
-        shutil.rmtree(corpus_dir, ignore_errors=True)
-    fetch_corpus(f"file://{zip_path}", corpus_dir)
-    return wc.word_counts(read_text_corpus(spark, corpus_dir + "/*.txt"), "value")
+        fetch_corpus(f"file://{zip_path}", os.path.join(tmp, "corpus"))
+
+    # keyed on fixture CONTENT, not just path: the test-data generator
+    # rewrites documents.parquet in place between rounds, and a path-keyed
+    # cache would keep answering from the stale corpus while the oracle
+    # reads the fresh fixture
+    stage = stage_once("bootstrap", fixture_digest(sf_dir, "documents"), write)
+    return wc.word_counts(
+        read_text_corpus(spark, os.path.join(stage, "corpus", "*.txt")), "value"
+    )

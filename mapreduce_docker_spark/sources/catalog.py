@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
+from mapreduce_docker_spark.sources.staging import stage_once, stat_digest
+
 TABLES = (
     "region",
     "nation",
@@ -90,25 +92,35 @@ def _ship_package(spark: SparkSession) -> None:
     app_id = spark.sparkContext.applicationId
     if app_id in _SHIPPED_APPS:
         return
-    import tempfile
-    import zipfile
-
     import mapreduce_docker_spark as pkg
 
-    pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
-    zpath = os.path.join(tempfile.gettempdir(), f"mds_pkg_{os.getpid()}.zip")
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for root, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in root:
-                    continue
-                for fname in files:
-                    if fname.endswith(".py"):
-                        full = os.path.join(root, fname)
-                        rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                        z.write(full, rel)
-    spark.sparkContext.addPyFile(zpath)
+    spark.sparkContext.addPyFile(
+        _package_zip(os.path.dirname(os.path.abspath(pkg.__file__)))
+    )
     _SHIPPED_APPS.add(app_id)
+
+
+def _package_zip(pkg_dir: str) -> str:
+    """The zip of ``pkg_dir``'s ``.py`` files, staged once per content:
+    keyed by their (relpath, size, mtime_ns), the law of ``fixture_digest``."""
+    import zipfile
+
+    sources = [
+        os.path.join(root, fname)
+        for root, _dirs, files in os.walk(pkg_dir)
+        if "__pycache__" not in root
+        for fname in files
+        if fname.endswith(".py")
+    ]
+
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
+        with zipfile.ZipFile(os.path.join(tmp, "mds_pkg.zip"), "w") as z:
+            for full in sources:
+                z.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
+
+    out = stage_once("pkg", stat_digest(pkg_dir, sources), write)
+    return os.path.join(out, "mds_pkg.zip")
 
 
 def ensure_runtime_confs(spark: SparkSession) -> None:
@@ -134,23 +146,17 @@ def fixture_digest(sf_dir: str, name: str) -> str:
     the previous round's data. Stat-level hashing detects a rewrite without
     reading file bytes; works for single-file and directory-style parquet.
     """
-    import hashlib
-
     src = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
     paths = (
         [
             os.path.join(dirpath, f)
             for dirpath, _, files in os.walk(src)
-            for f in sorted(files)
+            for f in files
         ]
         if os.path.isdir(src)
         else [src]
     )
-    parts = [src]
-    for p in sorted(paths):
-        st = os.stat(p)
-        parts.append(f"{os.path.relpath(p, src)}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
+    return stat_digest(src, paths)
 
 
 # Confs that change what parquet schema inference returns for the same
@@ -198,6 +204,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_runtime_confs(spark)
     schema = table_schema(spark, sf_dir, name)
     df = spark.read.schema(schema).parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return normalize_types(df, name, schema)
+
+
+def normalize_types(df: DataFrame, name: str, schema: StructType) -> DataFrame:
+    """Normalize the physical-type quirks of table ``name``, read with
+    ``schema``, for batch and streaming reads alike."""
     types = {f.name: f.dataType for f in schema.fields}
     if name == "events" and isinstance(types.get("ts"), LongType):
         # ns -> µs truncation via INTEGER division (DIV): float division here
@@ -236,12 +248,12 @@ def scatter(df: DataFrame, key: str | None = None) -> DataFrame:
     all key on ``doc_id``) pass it here, so the parallelism shuffle IS the
     aggregation exchange — hashpartitioning(key) satisfies the
     ClusteredDistribution of every downstream groupBy whose keys are a
-    superset, removing one Exchange per pipeline (measured at sf0.1:
-    dedup_minhash_pairs 1.509 -> 1.102 s, bloom probe 0.853 -> 0.758 s,
-    outputs bit-identical). It also skips round-robin's
-    sortBeforeRepartition local sort. The key must be deterministic
-    (guide §2.5: never rand-derived) and ~unique per row so balance
-    matches round-robin; at scale this path no-ops like the keyless one.
+    superset, removing one Exchange per pipeline (sf0.1 timings and the
+    outputs check: OPTIMIZATION_r14.md, the scatter entries at lines 152
+    and 198). It also skips round-robin's sortBeforeRepartition local
+    sort. The key must be deterministic (guide §2.5: never rand-derived)
+    and ~unique per row so balance matches round-robin; at scale this path
+    no-ops like the keyless one.
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism

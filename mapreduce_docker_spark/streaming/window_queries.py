@@ -15,8 +15,6 @@ with the oracle's integer arithmetic exactly.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -211,8 +209,9 @@ def events_session_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so a fresh uuid per invocation pinned every prior run's rows in driver
 # memory for the session's lifetime; a fixed name is replaced on rerun
 # (the stream itself is never still active — availableNow + await).
-# uuid stays only where it isolates ON-DISK state between invocations
-# (incremental-minhash run stores, the foreachBatch sink dir).
+# On-disk state of one invocation (the incremental-minhash stores, the
+# foreachBatch sink dir) lives in a temporary directory removed before the
+# query returns (sources/staging.py).
 
 
 @register(
@@ -366,7 +365,7 @@ def streaming_incremental_minhash_dedup(
         run_incremental_minhash_dedup,
     )
 
-    return run_incremental_minhash_dedup(spark, sf_dir, run_id=uuid.uuid4().hex[:8])
+    return run_incremental_minhash_dedup(spark, sf_dir)
 
 
 @register(
@@ -484,10 +483,10 @@ def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_foreachbatch_partitioned_sink,
     )
 
-    out = os.path.join(tempfile.gettempdir(), f"fb_sink_{uuid.uuid4().hex[:8]}")
-    return run_foreachbatch_partitioned_sink(
-        spark, sf_dir, out, query_name="q_stream_fb"
-    )
+    with tempfile.TemporaryDirectory(prefix="fb_sink_") as out:
+        return run_foreachbatch_partitioned_sink(
+            spark, sf_dir, os.path.join(out, "sink"), query_name="q_stream_fb"
+        ).localCheckpoint()
 
 
 @register(
@@ -569,8 +568,6 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from mapreduce_docker_spark.streaming.stream_demo import (
         run_stream_static_enrichment,
     )

@@ -13,12 +13,12 @@ import os
 from pyspark.sql import functions as F
 
 from mapreduce_docker_spark.operators.layout_queries import (
-    _staging_dir,
     merge_upsert,
     q_layout_bucketed_join_revenue,
     q_layout_partition_pruned_events,
 )
 from mapreduce_docker_spark.sources.catalog import fixture_digest, load_table
+from mapreduce_docker_spark.sources.staging import staging_dir
 
 SF = "/root/testdata/sf0.001"
 
@@ -48,7 +48,7 @@ def test_bucketed_join_query_is_exchange_free(spark):
 def test_partitioned_layout_prunes_and_types_partition_column(spark):
     # materialize the layout via the registered query, then read it directly
     q_layout_partition_pruned_events(spark, SF).collect()
-    out = _staging_dir("events_by_date", fixture_digest(SF, "events"))
+    out = staging_dir("events_by_date", fixture_digest(SF, "events"))
     back = spark.read.parquet(out)
     # the partition column came back typed DATE from the directory names
     assert dict(back.dtypes)["event_date"] == "date"
@@ -118,14 +118,9 @@ def test_partitioned_layout_enables_dynamic_partition_pruning(spark):
     the partition directories the filtered dim reaches — the join-driven
     complement of the static pruning pinned above. At 100 TB this is the
     difference between scanning 3 days and scanning the table."""
-    from mapreduce_docker_spark.operators.layout_queries import (
-        q_layout_partition_pruned_events,
-        _staging_dir,
-    )
-
     q_layout_partition_pruned_events(spark, SF).collect()  # stage the layout
     fact = spark.read.parquet(
-        _staging_dir("events_by_date", fixture_digest(SF, "events"))
+        staging_dir("events_by_date", fixture_digest(SF, "events"))
     )
     # a FILTERED dim scan is what DPP's planner keys on (a bare limit/local
     # relation is not considered a pruning source)
@@ -227,7 +222,7 @@ def test_staged_layouts_key_on_fixture_content(tmp_path, spark):
     shutil.copytree(SF, src, dirs_exist_ok=True)
     d1 = fixture_digest(src, "events")
     q_layout_partition_pruned_events(spark, src).collect()
-    assert os.path.exists(os.path.join(_staging_dir("events_by_date", d1), "_SUCCESS"))
+    assert os.path.exists(os.path.join(staging_dir("events_by_date", d1), "_SUCCESS"))
     # rewrite events.parquet in place (drop half the rows)
     ev = load_table(spark, src, "events").filter(F.col("event_id") % 2 == 0)
     tmp_out = os.path.join(str(tmp_path), "events_new.parquet")
@@ -326,11 +321,11 @@ def test_bucketed_staging_safe_across_concurrent_processes(tmp_path):
     ``tableExists`` guard + non-atomic rmtree/rewrite in the shared
     warehouse) let a second PROCESS delete the bucketed directory out from
     under the first process's scan — reproduced by running pytest and
-    vanilla_gate concurrently. The r8 staging uses the ``_write_once``
+    vanilla_gate concurrently. The r8 staging uses the ``stage_once``
     tmp + _SUCCESS + atomic os.replace discipline, so two cold processes
     racing to stage the same digest must BOTH succeed and agree. This test
     runs two bare-session subprocesses concurrently against a PRIVATE
-    staging root (TMPDIR override — _staging_dir honors it), so both start
+    staging root (TMPDIR override — staging_dir honors it), so both start
     cold and race the stage step without touching the shared /tmp staged
     dirs. Deleting the shared dirs instead would violate the engine's
     content-addressed-immutability invariant (a promoted digest dir is
@@ -382,118 +377,3 @@ spark.stop()
         assert payload, out[-2000:]
         results.append(payload[0])
     assert results[0] == results[1], results
-
-
-def test_write_once_staging_safe_across_concurrent_processes(tmp_path):
-    """The r8 queue item behind the bucketed fix: ``_write_once`` wrote to
-    a SHARED tmp path (``out + ".tmp"``), so two cold processes racing the
-    same digest overwrote each other's tmp mid-write (mode=overwrite)
-    before the promote. It now uses the same process-unique-nonce +
-    _SUCCESS-verified promote protocol as ``_stage_bucketed_once``; two
-    cold processes staging the hive-partitioned events layout concurrently
-    must BOTH succeed and agree, against a PRIVATE staging root (TMPDIR
-    override) so the shared promoted dirs are never touched."""
-    import subprocess
-    import sys as _sys
-
-    env = dict(os.environ, TMPDIR=str(tmp_path / "stage"))
-    (tmp_path / "stage").mkdir()
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    script = r"""
-import json, sys
-sys.path.insert(0, %r)
-from pyspark.sql import SparkSession
-
-spark = (
-    SparkSession.builder.master("local[4]")
-    .appName("writeonce-race-proc")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
-from mapreduce_docker_spark.operators.layout_queries import (
-    q_layout_partition_pruned_events,
-)
-
-rows = (
-    q_layout_partition_pruned_events(spark, %r)
-    .orderBy("event_date", "event_type")
-    .collect()
-)
-print("ROWS_JSON:" + json.dumps([[str(r[0]), r[1], r[2], r[3], float(r[4])] for r in rows]))
-spark.stop()
-""" % (repo, SF)
-    procs = [
-        subprocess.Popen(
-            [_sys.executable, "-c", script],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-            text=True,
-            cwd=str(tmp_path),
-            env=env,
-        )
-        for _ in range(2)
-    ]
-    results = []
-    for p in procs:
-        out, err = p.communicate(timeout=600)
-        assert p.returncode == 0, f"stdout={out[-2000:]}\nstderr={err[-2000:]}"
-        payload = [ln for ln in out.splitlines() if ln.startswith("ROWS_JSON:")]
-        assert payload, out[-2000:]
-        results.append(payload[0])
-    assert results[0] == results[1], results
-
-
-def test_write_once_cleans_tmp_on_failure_and_sweeps_dead_corpses(tmp_path, monkeypatch):
-    """Orphan hygiene (judge-r8 ADVICE): a raising ``write`` must not leak
-    its process-unique tmp dir, and tmp corpses left by DEAD stager pids
-    are swept on the next invocation — while a LIVE process's tmp is
-    never touched."""
-    import pytest
-
-    from mapreduce_docker_spark.operators.layout_queries import (
-        _staging_dir,
-        _write_once,
-    )
-
-    monkeypatch.setenv("TMPDIR", str(tmp_path))
-    import tempfile as _tf
-
-    monkeypatch.setattr(_tf, "tempdir", None)  # re-read TMPDIR
-    out = _staging_dir("orphantest", "d1gest")
-
-    # 1. write() raises -> tmp removed, nothing promoted
-    def bad_write(tmp):
-        os.makedirs(tmp)
-        (open(os.path.join(tmp, "junk"), "w")).close()
-        raise RuntimeError("simulated writer crash")
-
-    with pytest.raises(RuntimeError):
-        _write_once("orphantest", "d1gest", bad_write)
-    leftovers = [p for p in os.listdir(tmp_path) if p.startswith("mds_orphantest")]
-    assert leftovers == [], leftovers
-
-    # 2. corpses: dead-pid swept, live-pid (ours) kept, unparsable kept
-    dead = f"{out}.tmp-999999999-deadbeef"
-    live = f"{out}.tmp-{os.getpid()}-cafecafe"
-    weird = f"{out}.tmp-notapid-aa"
-    for d in (dead, live, weird):
-        os.makedirs(d)
-
-    def good_write(tmp):
-        os.makedirs(tmp)
-        (open(os.path.join(tmp, "_SUCCESS"), "w")).close()
-
-    got = _write_once("orphantest", "d1gest", good_write)
-    assert os.path.exists(os.path.join(got, "_SUCCESS"))
-    assert not os.path.exists(dead), "dead-pid corpse not swept"
-    assert os.path.exists(live), "live process tmp must never be touched"
-    assert os.path.exists(weird), "unrecognized names are not ours to delete"
-
-    # 3. fast path (_SUCCESS present) also sweeps newly-dead corpses
-    os.makedirs(dead)
-    assert _write_once("orphantest", "d1gest", good_write) == got
-    assert not os.path.exists(dead)

@@ -258,8 +258,6 @@ def test_incremental_minhash_dedup_equals_batch(spark):
     larger doc_id, so the flagged union is arrival-order invariant. This is
     the grow-only-corpus dedup pattern (new crawl batches vs history) and
     the reason the streaming query can carry a full SQL oracle."""
-    import uuid
-
     from mapreduce_docker_spark.operators.dedup_queries import (
         dedup_minhash_survivors,
     )
@@ -270,9 +268,7 @@ def test_incremental_minhash_dedup_equals_batch(spark):
     sf = "/root/testdata/sf0.001"
     streamed = {
         r["doc_id"]
-        for r in run_incremental_minhash_dedup(
-            spark, sf, run_id=f"t_{uuid.uuid4().hex[:8]}"
-        ).collect()
+        for r in run_incremental_minhash_dedup(spark, sf).collect()
     }
     batch = {r["doc_id"] for r in dedup_minhash_survivors(spark, sf).collect()}
     assert streamed == batch

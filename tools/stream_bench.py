@@ -29,7 +29,6 @@ import os
 import sys
 import threading
 import time
-import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -135,9 +134,7 @@ def main() -> None:
 
         # its foreachBatch stream is unnamed: take every run it starts
         sec, progress = tap.timed(
-            lambda: run_incremental_minhash_dedup(
-                spark, sf_dir, run_id=uuid.uuid4().hex[:8]
-            )
+            lambda: run_incremental_minhash_dedup(spark, sf_dir)
         )
         out["incremental_minhash_sec"] = sec
         # foreachBatch drives batch jobs, so state lives in the signature
