@@ -96,7 +96,10 @@ _R7_ADDITIONS = frozenset(
 # deployment builds the benchmark filter once and probes many corpora, so
 # the headline number is the steady per-corpus PROBE cost; the build cost
 # is visible separately as the bloom_benchmark_filter driver query.)
-EAGER_BUILD = {"graph_triangle_stats"}
+# text_curation_pipeline checkpoints its per-doc base inside fn(): under
+# AQE the checkpoint runs the base's map stage (scan, tokenize, partial
+# aggregation) before fn() returns.
+EAGER_BUILD = {"graph_triangle_stats", "text_curation_pipeline"}
 
 
 TEXT_CORPUS_MB = int(os.environ.get("SPARK_GRAFT_TEXT_MB", "256"))
@@ -148,9 +151,9 @@ def _text_throughput(spark, total_mb: int) -> dict:
     corpus, n_bytes = _ensure_text_corpus(total_mb)
     df = word_counts(read_text_corpus(spark, corpus + "/*.txt"), "value")
     # min-of-2: the headline suite is large enough to evict this plan's
-    # generated code from the JVM codegen cache, so the first run re-JITs
-    # (measured 3.7s -> 1.4s on the 256 MB corpus); the second run is the
-    # steady-state scan cost, consistent with the per-query min-of-3 above
+    # generated code from the JVM codegen cache, so the first run re-JITs;
+    # the second run is the steady-state scan cost, consistent with the
+    # per-query min-of-3 above
     sec = None
     for _ in range(2):
         t0 = time.perf_counter()
@@ -679,22 +682,21 @@ def main() -> None:
         timings = {n: round(min(r), 3) for n, r in runs.items()}
         medians = {n: round(sorted(r)[REPS // 2], 3) for n, r in runs.items()}
 
-        # the curation pipeline persists its per-doc base, so iterations 2-3
-        # above measure warm-cache reads (the steady-state a signature store
-        # gives). Record the cold cost separately for transparency: clear
-        # the cache and run once.
-        spark.catalog.clearCache()
-        df = specs["text_curation_pipeline"].fn(spark, SF_DIR)
+        # the curation pipeline checkpoints its per-doc base within each
+        # build and caches nothing across builds, so every iteration above
+        # is a full run. One more timed build + run, after the suite, is
+        # kept as the cold number (build included, like EAGER_BUILD).
         t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
+        specs["text_curation_pipeline"].fn(spark, SF_DIR).write.format("noop").mode(
+            "overwrite"
+        ).save()
         curation_cold = round(time.perf_counter() - t0, 3)
 
         # the bloom probe's headline number deliberately excludes the
         # filter BUILD (the bounded bitmap collect runs inside fn() before
         # the timer — a deployment builds the benchmark filter once and
         # probes many corpora). Record the COLD cost — build + probe under
-        # one timer — alongside it (judge-r14 next-round #7: both warm-path
-        # exclusions now report their cold number; curation's is above).
+        # one timer — alongside it, as a warm-path exclusion should.
         t0 = time.perf_counter()
         specs["text_decontaminate_bloom"].fn(spark, SF_DIR).write.format(
             "noop"

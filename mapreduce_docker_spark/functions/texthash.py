@@ -1,10 +1,15 @@
 """Deterministic text-hashing primitives: shingles, MinHash, SimHash, rolling hash.
 
-Each primitive is defined TWICE — as a Spark Column builder and as a DuckDB
-SQL-fragment builder — from the same constants, so the engine and the oracle
-compute bit-identical values. All hashing routes through ``md5`` (identical
-lowercase-hex output on both engines); no engine-specific hash (Spark
-``hash``/xxhash, DuckDB ``hash``) is ever used in an oracle-checked path.
+Each primitive is defined ONCE per engine — one Spark Column expression and its
+DuckDB SQL-fragment twin — from the same constants, so the engine and the
+oracle compute bit-identical values. Shingles have one Spark derivation,
+the codegen index-explode :func:`shingle_rows` (one row per gram
+occurrence), twinned by :func:`sql_shingles` (the per-doc distinct gram
+list); MinHash and band signatures are aggregate/column expressions over
+its rows (:func:`minhash_min_exprs`, :func:`band_signature_exprs`). All
+hashing routes through ``md5`` (identical lowercase-hex output on both
+engines); no engine-specific hash (Spark ``hash``/xxhash, DuckDB ``hash``)
+is ever used in an oracle-checked path.
 
 Scale notes: every primitive here is a per-row expression (no shuffle); the
 MinHash path costs ONE md5 per shingle (31-bit hash) plus NUM_HASHES integer
@@ -36,43 +41,66 @@ FP_BASE = 31
 # The fixture vocabulary is tiny (~31 words), so token-SET similarity
 # saturates; k-gram shingles over the token SEQUENCE discriminate real
 # near-duplicates (same word order) from coincidental vocab overlap.
+#
+# Gram law: a doc of n >= k tokens has the n-k+1 contiguous k-grams; a
+# short-but-nonempty doc (0 < n < k) has ONE whole-doc gram; a ZERO-token
+# doc (empty, whitespace-only, or NULL text) has NO grams — not the single
+# empty-string gram ``concat_ws`` would make of an empty array (r10
+# degenerate sweep: all contentless docs then band-matched each other as
+# jaccard-1.0 near-duplicates). Contentless duplicates belong to EXACT
+# dedup upstream; the near-dup relation is defined over docs with at least
+# one token, identically on both engines.
 
 
-def shingles(tokens_col: Column, k: int = SHINGLE_K) -> Column:
-    """Distinct k-word shingles of a token array (guards short docs).
+def gram_count(toks: Column, k: int = SHINGLE_K) -> Column:
+    """Number of grams of a token array under the gram law (0 for NULL)."""
+    n = F.size(toks)
+    return F.when(n >= k, n - (k - 1)).when(n > 0, F.lit(1)).otherwise(F.lit(0))
 
-    ZERO-token docs (empty, whitespace-only, or NULL text) have NO
-    shingles — an empty list, not ``['']`` (r10 degenerate sweep). The
-    old ``otherwise(whole)`` branch gave every contentless doc the same
-    single empty-string shingle via ``concat_ws`` (which turns even a
-    NULL array into ``''``), so all of them band-matched each other as
-    jaccard-1.0 "near-duplicates" — while the oracle's
-    ``list_distinct([NULL])`` accidentally dropped them. The contract is
-    the one this module's bucket-cap note already states: contentless
-    duplicates belong to EXACT dedup upstream; the near-dup relation is
-    defined over docs with at least one token, identically on both
-    engines (the SQL twin now spells its empty branch explicitly).
-    Short-but-nonempty docs (1..k-1 tokens) keep the whole-doc shingle.
+
+def gram(toks: Column, i: Column, k: int = SHINGLE_K) -> Column:
+    """The i-th (1-based) gram: ``slice`` past the end truncates, so i=1 of
+    a short doc is the whole-doc gram."""
+    return F.concat_ws(" ", F.slice(toks, i, k))
+
+
+def positions(m: Column) -> Column:
+    """array<int> [1..m], empty for m < 1 (``sequence(1, 0)`` would be the
+    DESCENDING [1, 0], not an empty array)."""
+    return F.when(m >= 1, F.sequence(F.lit(1), m)).otherwise(
+        F.array().cast("array<int>")
+    )
+
+
+def shingle_rows(df, cols: list[str], text_col: str = "text"):
+    """(*cols, s): one row per gram OCCURRENCE of ``tokens(text_col)``.
+
+    The one Spark shingle derivation, fully inside whole-stage codegen: the
+    tokens are projected ONCE (the named ``_toks`` projection feeds the
+    generator), the generator explodes the gram INDEX sequence, and each
+    gram is an ordinary projected ``concat_ws(' ', slice(toks, i, k))`` —
+    no lambda-bearing higher-order function, which Spark never codegens.
+
+    Duplicates are KEPT: a doc repeating a gram yields one row per
+    occurrence. Set consumers say so explicitly (``distinct()``,
+    ``collect_set``); the MinHash ``min`` aggregates cannot see them.
+    tests/test_texthash.py pins the rows against a pure-Python reference
+    on the fixture and the degenerate corners.
     """
-    n = F.size(tokens_col)
-    grams = F.transform(
-        F.sequence(F.lit(1), n - (k - 1)),
-        lambda i: F.concat_ws(" ", F.slice(tokens_col, i, k)),
-    )
-    whole = F.array(F.concat_ws(" ", tokens_col))
-    empty = F.array().cast("array<string>")
-    return F.array_distinct(
-        F.when(n >= k, grams).when(n > 0, whole).otherwise(empty)
-    )
+    from mapreduce_docker_spark.functions.tokenize import tokens
+
+    d = df.select(*cols, tokens(text_col).alias("_toks"))
+    toks = F.col("_toks")
+    d = d.select(*cols, "_toks", F.explode(positions(gram_count(toks))).alias("_i"))
+    return d.select(*cols, gram(toks, F.col("_i")).alias("s"))
 
 
 def sql_shingles(tokens_expr: str, k: int = SHINGLE_K) -> str:
-    """DuckDB twin of :func:`shingles` (1-based inclusive list slicing).
+    """DuckDB twin of :func:`shingle_rows`, as the per-doc DISTINCT gram
+    list (1-based inclusive list slicing).
 
     The zero-token branch is explicit: ``len(NULL)`` is NULL so both
-    WHENs fall through and NULL/empty token arrays yield ``[]`` — the
-    same result the old spelling reached only by the accident of
-    ``list_distinct`` dropping the ``[NULL]`` element."""
+    WHENs fall through and NULL/empty token arrays yield ``[]``."""
     return (
         f"list_distinct(CASE WHEN len({tokens_expr}) >= {k} THEN "
         f"list_transform(generate_series(1, len({tokens_expr}) - {k - 1}), "
@@ -88,11 +116,9 @@ def sql_shingles(tokens_expr: str, k: int = SHINGLE_K) -> str:
 # ---------------------------------------------------------------------------
 # P is the Mersenne prime 2^31-1, so every affine map with a_i != 0 is a
 # bijection on [0, P) and min-over-affine-hash is a valid uniform min-hash.
-# The hot path computes this with EXPLODE + a codegen'd groupBy(min(...)) —
-# interpreted higher-order-function lambdas (transform/array_min) are ~10x
-# slower per element and must stay out of corpus-scale plans; the array
-# formulation below exists for small inputs and as the equivalence witness
-# the tests check against the explode path.
+# Spark computes it with EXPLODE + a codegen'd groupBy(min(...)): interpreted
+# higher-order-function lambdas (transform/array_min) stay out of
+# corpus-scale plans.
 
 MINHASH_P = 2_147_483_647  # 2^31 - 1
 MINHASH_A = tuple((1_103_515_245 * (i + 1) + 12_345) % MINHASH_P or 1 for i in range(NUM_HASHES))
@@ -126,40 +152,12 @@ def minhash_min_exprs(h_col: Column) -> list[Column]:
 
 
 def shingle_hash_rows(df, cols: list[str], text_col: str = "text"):
-    """(*cols, h): one 31-bit shingle-hash row per shingle OCCURRENCE — the
-    corpus-scale map path, fully inside whole-stage codegen.
-
-    ``explode(shingles(tokens(text)))`` routes every gram through an
-    interpreted higher-order ``transform`` (lambda-bearing HOFs are never
-    codegen'd) plus an ``array_distinct`` and a per-doc array
-    materialization. This helper instead explodes the GRAM INDEX sequence
-    and builds ``md5(concat_ws(' ', slice(toks, i, k)))`` as ordinary
-    projected expressions — tokenize still runs ONCE per doc (the named
-    ``_toks`` projection feeds the generator), while the per-shingle work
-    (slice/concat/md5/mod) compiles into the generate stage.
-
-    SEMANTICS CAVEAT — duplicates are KEPT (the array path dedups grams
-    per doc): use ONLY under duplicate-insensitive consumers — the MinHash
-    ``min`` aggregates, ``collect_set``, or an explicit ``distinct()``.
-    The branch structure mirrors :func:`shingles` exactly (n >= k: the
-    n-k+1 grams; 0 < n < k: the single whole-doc gram — ``slice`` past the
-    end truncates, so i=1/len k gives it; n == 0 or NULL: no rows), and
-    tests/test_texthash.py pins per-doc hash-SET equality against the
-    array path on the fixture plus the degenerate corners.
-    """
-    from mapreduce_docker_spark.functions.tokenize import tokens
-
-    k = SHINGLE_K
-    d = df.select(*cols, tokens(text_col).alias("_toks"))
-    n = F.size("_toks")
-    m = F.when(n >= k, n - (k - 1)).when(n > 0, F.lit(1)).otherwise(F.lit(0))
-    # guard: sequence(1, 0) yields a DESCENDING [1, 0], not an empty array
-    idx = F.when(m >= 1, F.sequence(F.lit(1), m)).otherwise(
-        F.array().cast("array<int>")
+    """(*cols, h): :func:`shingle_rows` with each gram hashed by
+    :func:`shingle_hash` — one 31-bit hash row per gram OCCURRENCE
+    (duplicates kept, see :func:`shingle_rows`)."""
+    return shingle_rows(df, cols, text_col).select(
+        *cols, shingle_hash(F.col("s")).alias("h")
     )
-    d = d.select(*cols, "_toks", F.explode(idx).alias("_i"))
-    gram = F.concat_ws(" ", F.slice("_toks", F.col("_i"), k))
-    return d.select(*cols, shingle_hash(gram).alias("h"))
 
 
 def sql_minhash_min_exprs(h_expr: str) -> list[str]:
@@ -167,48 +165,6 @@ def sql_minhash_min_exprs(h_expr: str) -> list[str]:
         f"min(({a} * {h_expr} + {b}) % {MINHASH_P})"
         for a, b in zip(MINHASH_A, MINHASH_B)
     ]
-
-
-def minhash_signature(shingles_col: Column, num_hashes: int = NUM_HASHES) -> Column:
-    """array<long>(num_hashes) MinHash signature of a shingle array.
-
-    Higher-order-function formulation for small inputs / tests; corpus-scale
-    plans use :func:`minhash_min_exprs` over an explode instead. Implemented
-    as ONE nested transform (outer over seeds, inner over shingles): building
-    16 separate ``array_min(transform(...))`` branches inside one ``F.array``
-    silently corrupts results in Spark 4.1 — per-branch lambda variables
-    collide during analysis — so do NOT refactor to a per-seed comprehension.
-    """
-    ab = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in zip(MINHASH_A, MINHASH_B)
-        ][:num_hashes]
-    )
-    return F.transform(
-        ab,
-        lambda s: F.array_min(
-            F.transform(
-                shingles_col,
-                lambda sh: (s["a"] * shingle_hash(sh) + s["b"]) % F.lit(MINHASH_P),
-            )
-        ),
-    )
-
-
-def band_signatures(sig_col: Column, bands: int = BANDS) -> Column:
-    """array<string>(bands): md5 of each contiguous r-row slice of the signature."""
-    r = NUM_HASHES // bands
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|", F.transform(F.slice(sig_col, b * r + 1, r), lambda x: x.cast("string"))
-                )
-            )
-            for b in range(bands)
-        ]
-    )
 
 
 def band_signature_exprs(sig_cols: list[Column], bands: int = BANDS) -> list[Column]:

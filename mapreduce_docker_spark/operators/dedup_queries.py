@@ -63,9 +63,9 @@ _N_DEDUP_PLANES = DEDUP_SRP_BITS * DEDUP_SRP_BANDS
 # cosine, candidate pairs must agree on >= this many of the 144 fingerprint
 # bits — a codegen'd bit_count(xor) over three packed 48-bit longs. At
 # cos 0.40 the expected agreement is ~91 bits vs ~72 for random collisions
-# (sd ~6), so 80 keeps ~99.5% of true pairs while dropping ~2/3 of the
-# candidate set (measured at sf0.1: verify set 656k -> 230k, recall
-# 83.2% -> 82.8%). The expensive exact dot then runs only on survivors.
+# (sd ~6), so 80 sits well below the true pairs' agreement and well above
+# most random collisions' — true pairs pass, most of the candidate set
+# does not. The expensive exact dot then runs only on survivors.
 DEDUP_SRP_AGREE_MIN = 80
 
 
@@ -104,10 +104,13 @@ def _jaccard(a, b):
 
 
 def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, sh): each doc's distinct gram set; zero-token docs have no row."""
     return (
-        scatter(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", tokens("text").alias("toks"))
-        .select("doc_id", th.shingles(F.col("toks")).alias("sh"))
+        th.shingle_rows(
+            scatter(load_table(spark, sf_dir, "documents"), key="doc_id"), ["doc_id"]
+        )
+        .groupBy("doc_id")
+        .agg(F.collect_set("s").alias("sh"))
     )
 
 
@@ -160,8 +163,7 @@ def dedup_exact_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # plain column exprs, then ONE shuffle on (band_idx, band_sig) grouping
 # (doc_id, sh) structs into buckets; in-bucket pair emission verifies exact
 # Jaccard inline — no self-join and no second tokenize pass anywhere.
-# Interpreted higher-order functions are kept out of the per-shingle path
-# (~10x slower).
+# Interpreted higher-order functions are kept out of the per-shingle path.
 
 _SIG_COLS = [f"s{i}" for i in range(th.NUM_HASHES)]
 
@@ -221,11 +223,8 @@ _SQL_SIG_CTE = f"""
 
 
 def _sig_cols_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, s0..s15): MinHash signature via explode + codegen min-agg.
-
-    r15: shingle hashing rides the codegen generator path
-    (th.shingle_hash_rows — duplicate occurrences are kept, which the min
-    aggregates cannot see; see the helper's caveat)."""
+    """(doc_id, s0..s15): MinHash signature via explode + codegen min-agg
+    (duplicate gram occurrences are invisible to the min aggregates)."""
     ex = th.shingle_hash_rows(
         scatter(load_table(spark, sf_dir, "documents"), key="doc_id"), ["doc_id"]
     )
@@ -251,12 +250,8 @@ def _sig_with_hashset_df(docs: DataFrame) -> DataFrame:
     first attempt) made the bucket shuffle itself the bottleneck.
     Parameterized on the input relation so the bench harness can run the
     same pipeline against replica corpora the fixture catalog doesn't know.
-
-    r15: shingle hashing rides the codegen generator path
-    (th.shingle_hash_rows): duplicate gram occurrences are kept, which
-    neither the min aggregates nor collect_set can see — outputs
-    bit-identical (tests/test_texthash.py::
-    test_shingle_hash_rows_matches_array_path, and the oracle).
+    Duplicate gram occurrences are invisible to the min aggregates and to
+    ``collect_set``.
     """
     ex = th.shingle_hash_rows(docs, ["doc_id"])
     return ex.groupBy("doc_id").agg(
@@ -297,7 +292,7 @@ def _all_bucket_pairs(
 
     Why collect-then-explode rather than a count window: sizing buckets via
     ``count() OVER (PARTITION BY band)`` forces WindowExec's sort on every
-    band member (measured ~20% slower at sf0.1); this shape reuses the one
+    band member; this shape reuses the one
     bucket shuffle for both the size and the re-grouping (all keys
     downstream of the first groupBy are supersets of its partitioning, so
     Catalyst adds NO second exchange). The cost is that an oversized bucket
@@ -533,7 +528,7 @@ def dedup_simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_jaccard_sample",
     f"""
     WITH d AS (
-      -- len(sh) > 0: the zero-shingle law (texthash.shingles) removes
+      -- len(sh) > 0: the zero-shingle law (texthash gram law) removes
       -- contentless docs from the near-dup relation; without the filter a
       -- pair of them is a 0/0 Jaccard (ANSI DIVIDE_BY_ZERO on the engine)
       SELECT doc_id, sh FROM (
@@ -549,13 +544,10 @@ def dedup_simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     note="bounded exact-quadratic verification sample (doc_id < 300); the LSH path is the scale path",
 )
 def dedup_jaccard_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # size(sh) > 0: contentless docs are outside the near-dup relation
-    # (zero-shingle law) and a pair of empty shingle sets is a 0/0 Jaccard
-    d = (
-        _shingled(spark, sf_dir)
-        .filter(F.col("doc_id") < 300)
-        .filter(F.size("sh") > 0)
-    )
+    # contentless docs are outside the near-dup relation (zero-shingle law;
+    # _shingled yields no row for them): a pair of empty shingle sets
+    # would be a 0/0 Jaccard
+    d = _shingled(spark, sf_dir).filter(F.col("doc_id") < 300)
     a = d.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = d.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     return (

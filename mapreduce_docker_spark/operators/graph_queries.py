@@ -124,12 +124,11 @@ def triangle_census(e: DataFrame) -> DataFrame:
     # (lazy persist + 6 aggregate branches + an eager checkpoint of the
     # 1-row output) made the single materializing job race its branch
     # stages into the not-yet-populated cache, re-deriving the LSH edge
-    # lineage several times: measured at sf0.1 (r14 opt round, min-of-3,
-    # noop sink) the full query cost 3.11 s while dedup_minhash_pairs alone
-    # is 1.16 s and the census over pre-checkpointed edges is 0.021 s —
-    # ~1.9 s of pure branch-recompute overhead (guide §2.4/§5: cut lineage,
-    # don't re-derive). n_nodes/n_edges/n_wedges now also come out of ONE
-    # aggregate over deg (sum(d) = 2|E| exactly, every edge contributing
+    # lineage several times: at sf0.1 the full query cost far more than
+    # dedup_minhash_pairs plus the census over pre-checkpointed edges
+    # (OPTIMIZATION_r14.md line 194) — pure branch-recompute overhead: cut
+    # lineage, don't re-derive. n_nodes/n_edges/n_wedges now also come out
+    # of ONE aggregate over deg (sum(d) = 2|E| exactly, every edge contributing
     # one lo and one hi) instead of three separate branch scans.
     e = e.localCheckpoint(eager=True)
     deg = (

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from mapreduce_docker_spark.functions import texthash as th
 from mapreduce_docker_spark.functions.rounding import dround
 from mapreduce_docker_spark.functions.rounding import sql as rsql
-from mapreduce_docker_spark.functions.tokenize import SQL_TOKENS, tokens
+from mapreduce_docker_spark.functions.tokenize import SQL_TOKENS
 from mapreduce_docker_spark.registry import register
 from mapreduce_docker_spark.sources.catalog import load_table, scatter
 
@@ -97,20 +97,20 @@ _SQL_BITS_CTE = f"""
 """
 
 
-def _bench_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct Bloom bit indexes set by the benchmark shingles (<= M rows).
+def _bench_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct 31-bit hashes of the benchmark shingles (the filter's keys)."""
+    return th.shingle_hash_rows(
+        load_table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") < BENCH_MAX_DOC
+        ),
+        [],
+    ).distinct()
 
-    The explode is applied DIRECTLY to the shingle expression — an
-    intermediate named projection before a generator blocks Catalyst's
-    project collapse and re-evaluates the tokenize+shingle chain.
-    """
+
+def _bench_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct Bloom bit indexes set by the benchmark shingles (<= M rows)."""
     return (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < BENCH_MAX_DOC)
-        .select(F.explode(th.shingles(tokens("text"))).alias("s"))
-        .distinct()
-        .select(th.shingle_hash(F.col("s")).alias("h"))
-        .distinct()
+        _bench_keys(spark, sf_dir)
         .select(F.explode(bloom_positions(F.col("h"))).alias("bit"))
         .distinct()
     )
@@ -143,14 +143,7 @@ def _bench_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_bloom_benchmark_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    keys = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < BENCH_MAX_DOC)
-        .select(F.explode(th.shingles(tokens("text"))).alias("s"))
-        .distinct()
-        .select(th.shingle_hash(F.col("s")).alias("h"))
-        .distinct()
-    )
+    keys = _bench_keys(spark, sf_dir)
     n_keys = keys.agg(F.count(F.lit(1)).alias("n_keys"))
     n_bits = (
         keys.select(F.explode(bloom_positions(F.col("h"))).alias("bit"))
@@ -222,8 +215,8 @@ def q_text_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # substring(bitmap, pos, 1) — but UTF8String.substringSQL re-counts
     # chars from the start of the 16 KB literal on EVERY probe, an O(M)
     # byte scan per probe that dominated the whole query (guide §1.2
-    # per-task work: measured 1.366 s -> 0.881 s at sf0.1, min-of-3, noop
-    # sink, outputs bit-identical). getbit(long, pos) is O(1).
+    # per-task work; sf0.1 timing and the outputs check: OPTIMIZATION_r14.md
+    # line 195). getbit(long, pos) is O(1).
     set_bits = {r["bit"] for r in _bench_bits(spark, sf_dir).collect()}
     words = []
     for w in range(BLOOM_M // 64):
@@ -249,10 +242,7 @@ def q_text_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         member = probe if member is None else (member & probe)
     # scatter: the corpus-side tokenize+md5 is the map-heavy hot path, and a
     # single-row-group fixture file would otherwise run it on one core.
-    # r15: shingle hashing rides the codegen generator path
-    # (th.shingle_hash_rows — duplicate occurrences are invisible behind
-    # the distinct; the equivalence is pinned by
-    # tests/test_texthash.py::test_shingle_hash_rows_matches_array_path)
+    # Duplicate gram occurrences are invisible behind the distinct.
     return (
         th.shingle_hash_rows(
             scatter(load_table(spark, sf_dir, "documents"), key="doc_id").filter(

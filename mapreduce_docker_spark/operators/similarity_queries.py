@@ -154,8 +154,7 @@ def _srp_bucket_col() -> "F.Column":
 
     ONE nested transform over an array<array<double>> plane literal —
     building SRP_BITS separate aggregate() branches in one select trips
-    the Spark 4.1 per-branch lambda-variable collision (functions/
-    texthash.py:minhash_signature documents the same constraint).
+    the Spark 4.1 per-branch lambda-variable collision.
     """
     planes = F.array(*[F.array(*[F.lit(v) for v in p]) for p in SRP_PLANES])
     bits = F.transform(

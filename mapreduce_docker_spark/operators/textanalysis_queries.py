@@ -27,7 +27,7 @@ from mapreduce_docker_spark.functions.tokenize import SQL_TOKENS, fold, tokens
 from mapreduce_docker_spark.registry import register
 from mapreduce_docker_spark.sources.catalog import load_table, scatter
 
-# DuckDB twin of texthash.shingles(tokens(...)) (3-gram word shingles)
+# DuckDB twin of texthash.shingle_rows (per-doc distinct 3-gram word shingles)
 _SQL_SHINGLES_TA = th.sql_shingles(SQL_TOKENS)
 
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "for", "on")
@@ -385,7 +385,7 @@ TFIDF_PAIR_MIN_COS = 0.5
 )
 def text_tfidf_pair_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    ex = docs.select("doc_id", F.explode(th.shingles(tokens("text"))).alias("s"))
+    ex = th.shingle_rows(docs, ["doc_id"]).distinct()
     n = docs.agg(F.count(F.lit(1)).cast("double").alias("n"))
     df_w = F.count(F.lit(1)).over(Window.partitionBy("s"))
     kept = (
@@ -929,13 +929,13 @@ def text_symspell_vocab_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tokenized `documents` twice (its own token-frequency pass + the MinHash
 # signature pass inside dedup_minhash_pairs) — at 100 TB tokenize is the
 # dominant map cost and this is the flagship composition, so round 3 fuses
-# them: ONE scan tokenizes once, a combined token+shingle explode feeds a
+# them: ONE scan tokenizes once, a combined token+gram explode feeds a
 # single two-level partial aggregation producing per-doc metrics AND the
-# MinHash signature + hashed-shingle set together, and that per-doc base
+# MinHash signature + hashed-gram set together, and that per-doc base
 # relation (post-aggregation data: scalars + an int array per doc, NOT
-# corpus rows) is persisted so the gate side and the near-dup drop side
-# both read it without re-deriving the corpus. All gates are WHEREs on the
-# aggregated rows; the only joins are doc_id-keyed.
+# corpus rows) is checkpointed within the build so the gate side and the
+# near-dup drop side both read it without re-deriving the corpus. All gates
+# are WHEREs on the aggregated rows; the only joins are doc_id-keyed.
 
 CURATION_MIN_QUALITY = 0.62
 CURATION_MAX_REPETITION = 0.2
@@ -988,7 +988,7 @@ from mapreduce_docker_spark.operators.dedup_queries import (  # noqa: E402
       AND doc_id NOT IN (SELECT doc_b FROM dropped)
     """,
     section="U1,U2,U4",
-    note=f"end-to-end curation: quality >= {CURATION_MIN_QUALITY} AND top-token ratio <= {CURATION_MAX_REPETITION} AND not the dropped side of a verified MinHash near-dup pair; gates compare ROUNDED metrics so the cut line is engine-exact; ONE documents scan feeds metrics AND signatures via a persisted per-doc base",
+    note=f"end-to-end curation: quality >= {CURATION_MIN_QUALITY} AND top-token ratio <= {CURATION_MAX_REPETITION} AND not the dropped side of a verified MinHash near-dup pair; gates compare ROUNDED metrics so the cut line is engine-exact; ONE documents scan feeds metrics AND signatures via a per-doc base checkpointed within the build",
 )
 def text_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _curation_base(spark, sf_dir)
@@ -1016,73 +1016,52 @@ def text_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# persisted per-doc base, memoized per (application, fixture dir): repeated
-# invocations in one session (bench runs the pipeline several times, plan
-# tests build it again) must reuse ONE cache entry, not stack a new persist
-# per call that only LRU eviction would free. The digest in the key detects
-# the driver rewriting the fixture in place (fresh entry, stale unpersisted).
-_CURATION_BASE_MEMO: dict[tuple[str, str], tuple[str, DataFrame]] = {}
+def _token_gram_items(docs: DataFrame) -> DataFrame:
+    """(doc_id, lang, kind, v) from (doc_id, lang, toks): every token
+    occurrence (kind 0) and every gram occurrence (kind 1), one index
+    explode over ``size(toks) + gram_count(toks)``."""
+    toks, i = F.col("toks"), F.col("_i")
+    n = F.size(toks)
+    return docs.select(
+        "doc_id",
+        "lang",
+        "toks",
+        F.explode(th.positions(n + th.gram_count(toks))).alias("_i"),
+    ).select(
+        "doc_id",
+        "lang",
+        F.when(i <= n, F.lit(0)).otherwise(F.lit(1)).alias("kind"),
+        F.when(i <= n, F.element_at(toks, i)).otherwise(th.gram(toks, i - n)).alias("v"),
+    )
 
 
 def _curation_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc metrics AND MinHash state from ONE tokenize of ``documents``.
 
-    A combined explode emits every token (kind=0) and every shingle
-    (kind=1) of a doc from the same ``tokens()`` array; the first groupBy
-    collapses to distinct (doc, kind, value) with counts (map-side partial
-    agg — the reference's combiner move), shingle values are md5-hashed
-    AFTER that collapse (one hash per distinct shingle, not per
+    ``_token_gram_items`` emits every token (kind=0) and every gram
+    occurrence (kind=1) of a doc from the same ``tokens()`` array; the first
+    groupBy collapses to distinct (doc, kind, value) with counts (map-side
+    partial agg — the reference's combiner move), gram values are
+    md5-hashed AFTER that collapse (one hash per distinct gram, not per
     occurrence), and the second groupBy folds everything to one row per
     doc: token metrics (nt/nd/ns/topc) via kind-conditional aggregates,
-    the hashed-shingle set and the MinHash mins via null-skipping
-    aggregates over ``h``. The result is persisted: it is post-aggregation
-    data (a handful of scalars + the int hash-set per doc), and both the
-    quality-gate side and the near-dup drop side of the curation pipeline
-    consume it — without the persist, Catalyst would prune the two
-    branches differently and re-derive the corpus twice (round 2's double
-    tokenize, VERDICT.md r2 What's-wrong #2). At cluster scale this
-    relation is exactly the signature/metrics store you would materialize
-    anyway; swap persist() for a parquet checkpoint there.
+    the hashed-gram set and the MinHash mins via null-skipping aggregates
+    over ``h``. The result is materialized by a localCheckpoint inside
+    this build (under AQE its map stage runs before the build returns): it is post-aggregation data (a handful of scalars +
+    the int hash-set per doc), and both the quality-gate side and the
+    near-dup drop side of the curation pipeline consume it — without it,
+    Catalyst would prune the two branches differently and re-derive the
+    corpus twice (round 2's double tokenize, VERDICT.md r2 What's-wrong
+    #2). Nothing is cached across builds. At cluster scale this relation
+    is exactly the signature/metrics store you would materialize anyway;
+    swap the local checkpoint for a parquet one there.
     """
-    import os
-
     from mapreduce_docker_spark.operators.dedup_queries import _SIG_COLS
-    from mapreduce_docker_spark.sources.catalog import fixture_digest, scatter
-
-    memo_key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    digest = fixture_digest(sf_dir, "documents")
-    hit = _CURATION_BASE_MEMO.get(memo_key)
-    if hit is not None:
-        if hit[0] == digest:
-            lvl = hit[1].storageLevel  # is_cached is a stale local flag;
-            if not (lvl.useMemory or lvl.useDisk):  # clearCache dropped it
-                hit[1].persist()
-            return hit[1]
-        try:  # fixture rewritten in place: drop the stale cache entry
-            hit[1].unpersist()
-        except Exception:  # pragma: no cover - session already stopped
-            pass
 
     docs = scatter(_docs(spark, sf_dir), key="doc_id").select(
         "doc_id", "lang", tokens("text").alias("toks")
     )
-    items = docs.select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.concat(
-                F.transform(
-                    F.col("toks"),
-                    lambda t: F.struct(F.lit(0).alias("kind"), t.alias("v")),
-                ),
-                F.transform(
-                    th.shingles(F.col("toks")),
-                    lambda s: F.struct(F.lit(1).alias("kind"), s.alias("v")),
-                ),
-            )
-        ).alias("it"),
-    ).select("doc_id", "lang", F.col("it.kind").alias("kind"), F.col("it.v").alias("v"))
-    counted = items.groupBy("doc_id", "lang", "kind", "v").agg(
+    counted = _token_gram_items(docs).groupBy("doc_id", "lang", "kind", "v").agg(
         F.count(F.lit(1)).alias("c")
     )
     hashed = counted.withColumn(
@@ -1104,9 +1083,7 @@ def _curation_base(spark: SparkSession, sf_dir: str) -> DataFrame:
             for c, e in zip(_SIG_COLS, th.minhash_min_exprs(F.col("h")))
         ],
     )
-    persisted = base.persist()
-    _CURATION_BASE_MEMO[memo_key] = (digest, persisted)
-    return persisted
+    return base.localCheckpoint(eager=False)
 
 
 def _curation_dropped(base: DataFrame) -> DataFrame:
@@ -1114,11 +1091,11 @@ def _curation_dropped(base: DataFrame) -> DataFrame:
 
     The dedup_minhash_pairs band/bucket/verify pipeline re-expressed over
     the shared curation base (same band exprs, same salted bucket routing,
-    same rounded-Jaccard threshold). Every doc in ``base`` carries at least one
-    shingle — ``th.shingles`` falls back to a single whole-text shingle
-    for docs shorter than SHINGLE_K tokens — so the signature columns are
-    never null and all docs enter banding, exactly as in the standalone
-    pipeline and its oracle.
+    same rounded-Jaccard threshold). Every doc in ``base`` with at least one
+    token carries at least one gram (the gram law's whole-doc gram for docs
+    shorter than SHINGLE_K tokens), so its signature columns are non-null
+    and it enters banding, exactly as in the standalone pipeline and its
+    oracle.
     """
     from mapreduce_docker_spark.operators.dedup_queries import (
         _SIG_COLS,
@@ -1328,22 +1305,15 @@ def text_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     note=f"n-gram decontamination: corpus docs sharing any 3-token shingle with the benchmark set (doc_id < {DECON_BENCH_MAX_DOC} stands in for the eval set) are flagged with their distinct-shingle hit count; benchmark shingles broadcast (eval sets are bounded), corpus pays one scan + a broadcast hash join — no corpus-x-corpus shuffle",
 )
 def text_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # explode applied DIRECTLY to the shingle expression: routing it through
-    # a named intermediate projection blocks Catalyst's project collapse
-    # before a generator and re-evaluates the tokenize+shingle chain;
-    # shingles() already emits a distinct array, so per-doc distinctness is
-    # preserved
-    bench = (
-        _docs(spark, sf_dir)
-        .filter(F.col("doc_id") < DECON_BENCH_MAX_DOC)
-        .select(F.explode(th.shingles(tokens("text"))).alias("s"))
-        .distinct()
-    )
-    corp = (
-        scatter(_docs(spark, sf_dir), key="doc_id")
-        .filter(F.col("doc_id") >= DECON_BENCH_MAX_DOC)
-        .select("doc_id", F.explode(th.shingles(tokens("text"))).alias("s"))
-    )
+    bench = th.shingle_rows(
+        _docs(spark, sf_dir).filter(F.col("doc_id") < DECON_BENCH_MAX_DOC), []
+    ).distinct()
+    corp = th.shingle_rows(
+        scatter(_docs(spark, sf_dir), key="doc_id").filter(
+            F.col("doc_id") >= DECON_BENCH_MAX_DOC
+        ),
+        ["doc_id"],
+    ).distinct()
     return (
         corp.join(F.broadcast(bench), "s")
         .groupBy("doc_id")
@@ -1397,7 +1367,7 @@ def _sql_training_shards() -> str:
     "drop) -> benchmark exclusion + n-gram decontamination -> deterministic "
     "train-split membership -> per-lang sequence packing. The oracle nests "
     "the stage SQLs verbatim so it cannot drift from them; the engine path "
-    "reuses the stage functions (ONE tokenize via the persisted curation "
+    "reuses the stage functions (ONE tokenize via the checkpointed curation "
     "base + the broadcast decontamination join + the packing window)",
 )
 def text_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -675,7 +675,8 @@ def run_incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     semantics are identical.
 
     The input chunking is content-digest-keyed fixture staging (4 parquet
-    chunks by doc_id range => 4 micro-batches with maxFilesPerTrigger=1).
+    chunks by ``pmod(doc_id, 4)``, NULL ids in chunk 0 => 4 micro-batches
+    with maxFilesPerTrigger=1); the arrival order cannot change the answer.
     The stores and the checkpoint belong to one invocation: they live in a
     temporary directory, removed before returning, so the flagged set is
     checkpointed first.
@@ -695,17 +696,17 @@ def run_incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
 
     def write_chunks(tmp: str) -> None:
-        hi = docs.agg(F.max("doc_id")).collect()[0][0] + 1
+        # every row lands in exactly one chunk, NULL and negative ids too
+        chunk = F.coalesce(F.pmod(F.col("doc_id"), F.lit(4)), F.lit(0))
         for k in range(4):
-            lo_k, hi_k = k * hi // 4, (k + 1) * hi // 4
-            docs.filter(
-                (F.col("doc_id") >= lo_k) & (F.col("doc_id") < hi_k)
-            ).coalesce(1).write.parquet(os.path.join(tmp, f"chunk_{k}"))
+            docs.filter(chunk == k).coalesce(1).write.parquet(
+                os.path.join(tmp, f"chunk_{k}")
+            )
 
     # content-digest keyed, so a driver rewrite of documents.parquet
-    # re-stages (advisor r3)
+    # re-stages (advisor r3); the kind names the chunking recipe
     stage = stage_once(
-        "incdedup_src", fixture_digest(sf_dir, "documents"), write_chunks
+        "incdedup_pmod4", fixture_digest(sf_dir, "documents"), write_chunks
     )
     stream = (
         spark.readStream.schema(docs.schema)

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 import crafted
 from mapreduce_docker_spark.functions import texthash as th
-from mapreduce_docker_spark.functions.tokenize import tokens
 from mapreduce_docker_spark.operators.dedup_queries import (
     dedup_cluster_survivorship,
     dedup_minhash_signatures,
@@ -53,20 +52,13 @@ def test_zero_token_docs_have_no_shingles(spark, tmp_path):
     the engine emitted a signature for '' / '   ' / NULL text (all
     sharing the [''] shingle) and the oracle did not."""
     df = spark.createDataFrame(
-        [("",), ("   ",), (None,), ("one",), ("one two three four",)],
-        "text string",
+        [(1, ""), (2, "   "), (3, None), (4, "one"), (5, "one two three four")],
+        "id int, text string",
     )
-    sh = [
-        list(r["sh"])
-        for r in df.select(th.shingles(tokens("text")).alias("sh")).collect()
-    ]
-    assert sh == [
-        [],                       # empty text
-        [],                       # whitespace only
-        [],                       # NULL text
-        ["one"],                  # short doc keeps the whole-doc shingle
-        ["one two three", "two three four"],
-    ]
+    sh = sorted((r["id"], r["s"]) for r in th.shingle_rows(df, ["id"]).collect())
+    # empty, whitespace-only and NULL text have no shingles; a short doc
+    # keeps the whole-doc shingle
+    assert sh == [(4, "one"), (5, "one two three"), (5, "two three four")]
 
     docs = [
         (1, ""),

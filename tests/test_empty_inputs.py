@@ -50,6 +50,8 @@ PROBE = [
     # r10: empty documents -> zero staged BMPs -> binaryFile over a dir
     # holding only _SUCCESS must yield a typed empty relation, not throw
     "multimodal_bmp_decode_stats",
+    # empty documents -> four empty staged chunks -> no flagged docs
+    "streaming_incremental_minhash_dedup",
 ]
 
 
@@ -81,3 +83,38 @@ def test_runs_on_empty_tables(spark, empty_dir, name):
         )
     else:
         assert rows == []
+
+
+def test_incremental_minhash_dedup_streams_negative_ids(spark, tmp_path):
+    """Every document reaches the incremental dedup stream, negative ids
+    included: a near-dup pair between two negative ids and one between a
+    negative and a positive id are both flagged, as in the oracle."""
+    import crafted
+    from mapreduce_docker_spark import oracle
+
+    fox = "the quick brown fox jumps over the lazy dog"
+    docs = [
+        (-7, fox, "en"),
+        (-4, "completely different words are here now", "en"),
+        (-2, fox, "en"),
+        (3, "another unrelated sentence about sleepy cats", "en"),
+        (5, fox, "en"),
+    ]
+    crafted.write(
+        spark, tmp_path, "documents", docs, "doc_id long, text string, lang string"
+    )
+    spec = all_specs()["streaming_incremental_minhash_dedup"]
+    sdf = spec.fn(spark, str(tmp_path))
+    rows = sdf.collect()
+    assert sorted(r["doc_id"] for r in rows) == [-7, -4, 3]
+    con = oracle.connect(str(tmp_path), ["documents"])
+    try:
+        ores = con.execute(spec.sql)
+        assert (
+            oracle.diff(
+                sdf.columns, rows, [d[0] for d in ores.description], ores.fetchall()
+            )
+            is None
+        )
+    finally:
+        con.close()

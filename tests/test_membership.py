@@ -50,21 +50,18 @@ def test_bloom_filter_is_mergeable_by_bit_union(spark):
     """Per-shard builds union to the global filter: bits(bench) ==
     bits(shard1) ∪ bits(shard2) for any split of the benchmark docs."""
     from mapreduce_docker_spark.functions import texthash as th
-    from mapreduce_docker_spark.functions.tokenize import tokens
     from mapreduce_docker_spark.operators.membership_queries import BENCH_MAX_DOC
     from mapreduce_docker_spark.sources.catalog import load_table
 
-    d = (
-        load_table(spark, SF, "documents")
-        .filter(F.col("doc_id") < BENCH_MAX_DOC)
-        .select("doc_id", th.shingles(tokens("text")).alias("sh"))
+    d = th.shingle_rows(
+        load_table(spark, SF, "documents").filter(F.col("doc_id") < BENCH_MAX_DOC),
+        ["doc_id"],
     )
 
     def bits_of(df):
         return {
             r["bit"]
-            for r in df.select(F.explode("sh").alias("s"))
-            .select(th.shingle_hash(F.col("s")).alias("h"))
+            for r in df.select(th.shingle_hash(F.col("s")).alias("h"))
             .select(F.explode(bloom_positions(F.col("h"))).alias("bit"))
             .distinct()
             .collect()

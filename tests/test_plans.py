@@ -181,28 +181,30 @@ def test_embedding_lsh_single_embeddings_scan(spark, specs):
 
 
 def test_curation_single_documents_scan(spark, specs):
-    """The curation pipeline must tokenize `documents` ONCE.
+    """The curation pipeline must tokenize `documents` ONCE per build.
 
     Round 2 tokenized twice (its own metrics pass + the MinHash signature
     pass); round 3 computes metrics AND signatures in one combined-explode
-    aggregation and persists the per-doc base, so both the gate side and
-    the near-dup drop side read the SAME materialized relation. The plan
-    therefore shows the documents scan only inside the cached-plan
-    description (one textual occurrence per InMemoryTableScan branch), and
-    execution computes it once (mirrors
-    test_minhash_pipeline_single_documents_scan's scale rationale).
-
-    The cache is cleared first: a cached relation MATERIALIZED by an
-    earlier test prints its stored adaptive plan twice (Final + Initial),
-    which would double the textual scan count without any extra physical
-    scan.
+    aggregation, and the build checkpoints that per-doc base, so both the
+    gate side and the near-dup drop side read the SAME materialized
+    relation. The plan therefore scans `documents` nowhere directly: its
+    two leaves are one checkpointed RDD, whose lineage holds exactly one
+    file scan (mirrors test_minhash_pipeline_single_documents_scan's scale
+    rationale). A second base — a second tokenize — would be a second RDD.
     """
-    spark.catalog.clearCache()
-    plan = _plan(spark, specs, "text_curation_pipeline")
-    assert plan.count("InMemoryTableScan") == 2, plan
-    assert plan.count("documents.parquet") <= 2, plan
-    # tokenization stays JVM-side in the shared base
+    qe = specs["text_curation_pipeline"].fn(spark, SF)._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
+    assert "documents.parquet" not in plan, plan
+    # tokenization stays JVM-side
     assert "BatchEvalPython" not in plan
+    leaves = qe.optimizedPlan().collectLeaves().iterator()
+    rdds = []
+    while leaves.hasNext():
+        leaf = leaves.next()
+        assert leaf.nodeName() == "LogicalRDD", leaf.toString()
+        rdds.append(leaf.rdd())
+    assert len(rdds) == 2 and len({r.id() for r in rdds}) == 1, plan
+    assert rdds[0].toDebugString().count("FileScanRDD") == 1
 
 
 def test_salted_lsh_adds_no_exchange(spark, specs):

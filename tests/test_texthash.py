@@ -1,19 +1,20 @@
 """Pin texthash primitives to pure-Python reference implementations.
 
-Guards against silent expression-level corruption (e.g. the Spark 4.1
-nested-lambda variable collision that broke the per-seed MinHash
-comprehension — see functions/texthash.py:minhash_signature).
+The Spark side is the production path: ``shingle_rows`` ->
+``shingle_hash`` -> ``minhash_min_exprs`` -> ``band_signature_exprs``, on
+the fixture documents plus the degenerate corners.
 """
 
 from __future__ import annotations
 
 import hashlib
 import re
+from collections import Counter
 
 from pyspark.sql import functions as F
 
 from mapreduce_docker_spark.functions import texthash as th
-from mapreduce_docker_spark.functions.tokenize import tokens
+from mapreduce_docker_spark.functions.tokenize import WORD_PATTERN, py_fold, tokens
 from mapreduce_docker_spark.sources.catalog import load_table
 from tests.conftest import SF_ORACLE
 
@@ -24,17 +25,32 @@ TEXTS = [
     "one two three one two three one two",  # repeated shingles
 ]
 
+# empty and NULL text (no grams), 1, 2 and exactly 3 tokens, repeated grams
+# (9 tokens -> 7 gram rows, 3 distinct), and no letters at all
+CORNERS = [
+    (-1, ""),
+    (-2, None),
+    (-3, "Word"),
+    (-4, "two words"),
+    (-5, "exactly three tokens"),
+    (-6, "a b c a b c a b c"),
+    (-7, "  42 !! "),
+]
 
-def _py_tokens(t: str) -> list[str]:
-    return re.findall(r"[a-z]+", t.lower())
+
+def _py_tokens(t: str | None) -> list[str]:
+    return [] if t is None else re.findall(WORD_PATTERN, py_fold(t))
 
 
-def _py_shingles(toks: list[str], k: int = 3) -> list[str]:
+def _py_grams(toks: list[str], k: int = 3) -> list[str]:
+    """Every gram occurrence under the gram law."""
     if len(toks) >= k:
-        grams = [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
-    else:
-        grams = [" ".join(toks)]
-    return list(dict.fromkeys(grams))
+        return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
+    return [" ".join(toks)] if toks else []
+
+
+def _py_shingles(toks: list[str]) -> list[str]:
+    return list(dict.fromkeys(_py_grams(toks)))
 
 
 def _py_shingle_hash(s: str) -> int:
@@ -74,88 +90,105 @@ def _py_fingerprint(toks: list[str]) -> int:
     return acc
 
 
+def _corpus(spark):
+    """(doc_id, text): the sf0.01 documents plus the degenerate corners."""
+    docs = load_table(spark, SF_ORACLE, "documents").select("doc_id", "text")
+    return docs.unionByName(spark.createDataFrame(CORNERS, "doc_id bigint, text string"))
+
+
 def test_shingles_minhash_bands_fingerprint(spark):
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(TEXTS)], "id int, text string")
-    sh = th.shingles(tokens("text"))
-    sig = th.minhash_signature(sh)
+    """shingle_rows -> shingle_hash -> minhash_min_exprs ->
+    band_signature_exprs, and the rolling fingerprint, equal their Python
+    references; a zero-token doc has no signature row."""
+    texts = [(i, t) for i, t in enumerate(TEXTS)] + CORNERS
+    df = spark.createDataFrame(texts, "id int, text string")
+    sig_cols = [f"s{i}" for i in range(th.NUM_HASHES)]
+    sigs = th.shingle_hash_rows(df, ["id"]).groupBy("id").agg(
+        *[e.alias(c) for c, e in zip(sig_cols, th.minhash_min_exprs(F.col("h")))]
+    )
     rows = {
         r["id"]: r
-        for r in df.select(
+        for r in sigs.select(
             "id",
-            sh.alias("sh"),
-            sig.alias("sig"),
-            th.band_signatures(sig).alias("bands"),
-            th.rolling_fingerprint(tokens("text")).alias("fp"),
+            F.array(*sig_cols).alias("sig"),
+            F.array(*th.band_signature_exprs([F.col(c) for c in sig_cols])).alias(
+                "bands"
+            ),
         ).collect()
     }
-    for i, t in enumerate(TEXTS):
-        toks = _py_tokens(t)
-        exp_sh = _py_shingles(toks)
-        assert sorted(rows[i]["sh"]) == sorted(exp_sh), f"shingles differ for {t!r}"
-        exp_sig = _py_minhash(exp_sh)
-        assert list(rows[i]["sig"]) == exp_sig, f"minhash differs for {t!r}"
-        assert list(rows[i]["bands"]) == _py_bands(exp_sig), f"bands differ for {t!r}"
-        assert rows[i]["fp"] == _py_fingerprint(toks), f"fingerprint differs for {t!r}"
-
-
-def test_minhash_explode_path_matches_hof(spark):
-    """The corpus-scale explode+min-agg formulation must equal the array one."""
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(TEXTS)], "id int, text string"
-    )
-    ex = df.select(
-        "id", F.explode(th.shingles(tokens("text"))).alias("s")
-    ).select("id", th.shingle_hash(F.col("s")).alias("h"))
-    agg = ex.groupBy("id").agg(
-        *[e.alias(f"s{i}") for i, e in enumerate(th.minhash_min_exprs(F.col("h")))]
-    )
-    got = {
-        r["id"]: [r[f"s{i}"] for i in range(th.NUM_HASHES)] for r in agg.collect()
+    fps = {
+        r["id"]: r["fp"]
+        for r in df.select("id", th.rolling_fingerprint(tokens("text")).alias("fp")).collect()
     }
-    for i, t in enumerate(TEXTS):
-        assert got[i] == _py_minhash(_py_shingles(_py_tokens(t))), f"explode path differs for {t!r}"
+    assert set(rows) == {i for i, t in texts if _py_tokens(t)}
+    for i, t in texts:
+        toks = _py_tokens(t)
+        if toks:
+            exp_sig = _py_minhash(_py_shingles(toks))
+            assert list(rows[i]["sig"]) == exp_sig, f"minhash differs for {t!r}"
+            assert list(rows[i]["bands"]) == _py_bands(exp_sig), f"bands differ for {t!r}"
+        if t is not None:
+            assert fps[i] == _py_fingerprint(toks), f"fingerprint differs for {t!r}"
 
 
 def test_shingle_hash_rows_matches_array_path(spark):
-    """The codegen ``shingle_hash_rows`` and the array path
-    ``shingle_hash(explode(shingles(tokens(text))))`` give every doc the
-    same SET of shingle hashes, on the fixture documents and on the
-    degenerate corners: empty and NULL text (no rows), 1, 2 and exactly 3
-    tokens, and repeated grams (kept as duplicate rows by the codegen path,
-    collapsed by the array path)."""
-    crafted = [
-        (-1, ""),
-        (-2, None),
-        (-3, "Word"),
-        (-4, "two words"),
-        (-5, "exactly three tokens"),
-        (-6, "a b c a b c a b c"),
-        (-7, "  42 !! "),
-    ]
-    docs = load_table(spark, SF_ORACLE, "documents").select("doc_id", "text")
-    docs = docs.unionByName(
-        spark.createDataFrame(crafted, "doc_id bigint, text string")
-    )
-
-    def hash_sets(df):
-        return {
-            r["doc_id"]: set(r["hs"])
-            for r in df.groupBy("doc_id").agg(F.collect_list("h").alias("hs")).collect()
-        }
-
+    """``shingle_hash_rows`` gives every doc the hash SET of its distinct
+    Python shingles (the array formulation), and one row per gram
+    occurrence: 7 rows for the 3 distinct grams of ``a b c a b c a b c``."""
+    docs = _corpus(spark)
     rows = th.shingle_hash_rows(docs, ["doc_id"])
-    got = hash_sets(rows)
-    want = hash_sets(
-        docs.select("doc_id", F.explode(th.shingles(tokens("text"))).alias("s"))
-        .select("doc_id", th.shingle_hash(F.col("s")).alias("h"))
-    )
-    assert len(got) > 400  # the fixture docs have shingles
+    got = {
+        r["doc_id"]: set(r["hs"])
+        for r in rows.groupBy("doc_id").agg(F.collect_list("h").alias("hs")).collect()
+    }
+    want = {
+        r["doc_id"]: {_py_shingle_hash(s) for s in _py_shingles(_py_tokens(r["text"]))}
+        for r in docs.collect()
+        if _py_tokens(r["text"])
+    }
     assert {d for d in got if d < 0} == {-3, -4, -5, -6}
     assert got == want
     for i, t in [(-3, "word"), (-4, "two words"), (-5, "exactly three tokens")]:
         assert got[i] == {_py_shingle_hash(t)}
-    assert got[-6] == {_py_shingle_hash(s) for s in ("a b c", "b c a", "c a b")}
     assert rows.filter(F.col("doc_id") == -6).count() == 7  # 9 - 3 + 1 grams
+
+
+def test_curation_generator_emits_tokens_and_grams(spark):
+    """The curation base's two-kind index explode gives, per doc, the token
+    multiset of ``tokens`` (kind 0) and the gram occurrences of
+    ``shingle_rows`` (kind 1), both equal to the Python references; a
+    zero-token doc emits nothing."""
+    from mapreduce_docker_spark.operators.textanalysis_queries import (
+        _token_gram_items,
+    )
+
+    docs = _corpus(spark)
+    items = _token_gram_items(
+        docs.select("doc_id", F.lit("en").alias("lang"), tokens("text").alias("toks"))
+    )
+
+    def per_doc(pairs):
+        out: dict[tuple[int, int], Counter] = {}
+        for key, v in pairs:
+            out.setdefault(key, Counter())[v] += 1
+        return out
+
+    got = per_doc(((r["doc_id"], r["kind"]), r["v"]) for r in items.collect())
+    spark_side = per_doc(
+        [
+            ((r["doc_id"], 0), r["w"])
+            for r in docs.select("doc_id", F.explode(tokens("text")).alias("w")).collect()
+        ]
+        + [((r["doc_id"], 1), r["s"]) for r in th.shingle_rows(docs, ["doc_id"]).collect()]
+    )
+    py_side = {}
+    for r in docs.collect():
+        toks = _py_tokens(r["text"])
+        if toks:
+            py_side[(r["doc_id"], 0)] = Counter(toks)
+            py_side[(r["doc_id"], 1)] = Counter(_py_grams(toks))
+    assert {d for d, _ in got if d < 0} == {-3, -4, -5, -6}
+    assert got == spark_side == py_side
 
 
 def test_simhash(spark):
