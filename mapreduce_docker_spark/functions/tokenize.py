@@ -40,9 +40,12 @@ SQL_TOKENS = f"regexp_extract_all(lower(text), '{WORD_PATTERN}')"
 STRICT_PATTERN = r"(?U)\b[a-z]+\b"
 
 # Simple-casing fold law (r14 band-6 differential find, seed 615;
-# SCALING.md "Simple-casing fold"): Java/Python FULL lowercase differs
-# from RE2/utf8proc SIMPLE (per-codepoint) lowercase on exactly two
-# non-locale code points — İ U+0130, Unicode's only EXPANDING lowercase
+# SCALING.md "Simple-casing fold"): FULL lowercase, as Spark's lower()
+# computes it with the JDK 17 mapper (Unicode 13.0; the engine turns ICU
+# case mapping off, SCALING.md "Case mapper") and as Python str.lower
+# does, differs from DuckDB 1.0.0's utf8proc and RE2 SIMPLE
+# (per-codepoint) lowercase on exactly two non-locale code points —
+# İ U+0130, Unicode's only EXPANDING lowercase
 # (Java: 'i' + combining dot U+0307, which then SPLITS an [a-z]+ token
 # run: 'İstanbul' -> ['i','stanbul']), and Σ U+03A3, the only
 # CONTEXT-SENSITIVE one (Java: final sigma ς word-finally; utf8proc: σ

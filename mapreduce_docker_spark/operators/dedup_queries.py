@@ -428,19 +428,35 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_minhash_survivors",
-    _SQL_SIG_CTE
-    + f""",
+# the larger doc_id of every verified near-dup pair (never NULL: a pair
+# needs doc_a < doc_b); shared by the survivors, incremental-dedup and
+# curation oracles
+SQL_DROPPED_CTE = f""",
     dropped AS (
       SELECT DISTINCT c.doc_b
       FROM cand c JOIN hs da ON da.doc_id = c.doc_a JOIN hs db ON db.doc_id = c.doc_b
       WHERE {rsql(_sql_jaccard('da.hs', 'db.hs'), 4)} >= {JACCARD_THRESHOLD}
-    )
-    SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_b FROM dropped)
-    """,
+    )"""
+
+SQL_SURVIVORS = (
+    _SQL_SIG_CTE
+    + SQL_DROPPED_CTE
+    + """
+    -- the NULL-key law: NOT IN drops a NULL doc_id only when some doc was
+    -- dropped, where an anti join always keeps it; a NULL id names no
+    -- document, so both engines exclude it explicitly
+    SELECT doc_id FROM documents
+    WHERE doc_id IS NOT NULL AND doc_id NOT IN (SELECT doc_b FROM dropped)
+    """
+)
+
+
+@register(
+    "dedup_minhash_survivors",
+    SQL_SURVIVORS,
     section="U2",
-    note="greedy min-id survivor pick: a doc is dropped iff it is the larger id in a verified near-dup pair",
+    note="greedy min-id survivor pick: a doc is dropped iff it is the larger "
+    "id in a verified near-dup pair; a NULL doc_id is excluded on both engines",
 )
 def dedup_minhash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 opt note: rewriting this to skip dedup_minhash_pairs' full-width
@@ -451,6 +467,7 @@ def dedup_minhash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc_b aggregate (plans/r14/dedup_minhash_survivors_{before,after}.txt
     # differ only in expression ids).
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    docs = docs.filter(F.col("doc_id").isNotNull())  # NULL-key law (SQL_SURVIVORS)
     pairs = dedup_minhash_pairs(spark, sf_dir)
     return docs.join(
         pairs.select(F.col("doc_b").alias("doc_id")).distinct(), "doc_id", "left_anti"

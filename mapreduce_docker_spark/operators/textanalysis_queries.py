@@ -947,23 +947,16 @@ _SQL_CURATION_QUALITY = (
 )
 
 from mapreduce_docker_spark.operators.dedup_queries import (  # noqa: E402
-    JACCARD_THRESHOLD as _JACCARD_THRESHOLD,
+    SQL_DROPPED_CTE as _SQL_MINHASH_DROPPED,
     _SQL_SIG_CTE as _SQL_MINHASH_CTE,
-    _sql_jaccard as _sql_minhash_jaccard,
 )
 
 
 @register(
     "text_curation_pipeline",
     _SQL_MINHASH_CTE
+    + _SQL_MINHASH_DROPPED
     + f""",
-    dropped AS (
-      SELECT DISTINCT c.doc_b
-      FROM cand c
-      JOIN hs da ON da.doc_id = c.doc_a
-      JOIN hs db ON db.doc_id = c.doc_b
-      WHERE {rsql(_sql_minhash_jaccard('da.hs', 'db.hs'), 4)} >= {_JACCARD_THRESHOLD}
-    ),
     tok AS (
       SELECT doc_id, lang, unnest({SQL_TOKENS}) AS w FROM documents
     ),
@@ -985,10 +978,11 @@ from mapreduce_docker_spark.operators.dedup_queries import (  # noqa: E402
     FROM m
     WHERE {rsql(_SQL_CURATION_QUALITY, 4)} >= {CURATION_MIN_QUALITY}
       AND {rsql("topc / CAST(nt AS DOUBLE)", 4)} <= {CURATION_MAX_REPETITION}
-      AND doc_id NOT IN (SELECT doc_b FROM dropped)
+      -- the NULL-key law of dedup_minhash_survivors
+      AND doc_id IS NOT NULL AND doc_id NOT IN (SELECT doc_b FROM dropped)
     """,
     section="U1,U2,U4",
-    note=f"end-to-end curation: quality >= {CURATION_MIN_QUALITY} AND top-token ratio <= {CURATION_MAX_REPETITION} AND not the dropped side of a verified MinHash near-dup pair; gates compare ROUNDED metrics so the cut line is engine-exact; ONE documents scan feeds metrics AND signatures via a per-doc base checkpointed within the build",
+    note=f"end-to-end curation: quality >= {CURATION_MIN_QUALITY} AND top-token ratio <= {CURATION_MAX_REPETITION} AND not the dropped side of a verified MinHash near-dup pair (a NULL doc_id is excluded on both engines); gates compare ROUNDED metrics so the cut line is engine-exact; ONE documents scan feeds metrics AND signatures via a per-doc base checkpointed within the build",
 )
 def text_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _curation_base(spark, sf_dir)
@@ -1011,6 +1005,7 @@ def text_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(
             (F.col("quality_score") >= CURATION_MIN_QUALITY)
             & (F.col("top_token_ratio") <= CURATION_MAX_REPETITION)
+            & F.col("doc_id").isNotNull()
         )
         .join(_curation_dropped(base), "doc_id", "left_anti")
     )

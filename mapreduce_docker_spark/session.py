@@ -11,13 +11,39 @@ onto declarative Spark configuration here:
 * AQE is on for the 100 TB design point: runtime shuffle-partition coalescing
   and skew-join splitting replace any hand-sized reduce phase.
 
-``spark.sql.session.timeZone=UTC`` pins timestamp semantics so results match
-the DuckDB oracle (naive UTC timestamps) bit-for-bit.
+The runtime laws every engine session needs, whoever built it, are declared
+once in ``sources/catalog.py:_RUNTIME_CONFS`` and copied into the builder
+defaults here:
 
-``spark.sql.legacy.parquet.nanosAsLong=true`` lets Spark scan the driver
-fixtures' ``events.parquet`` (TIMESTAMP(NANOS) physical type, which Spark
-has no native reader type for); the catalog layer converts ns -> µs on load
-(see sources/catalog.py), matching DuckDB's ns->µs truncation.
+* ``spark.sql.session.timeZone=UTC`` pins timestamp semantics so results
+  match the DuckDB oracle (naive UTC timestamps) bit-for-bit;
+* ``spark.sql.legacy.parquet.nanosAsLong=true`` lets Spark scan the driver
+  fixtures' ``events.parquet`` (TIMESTAMP(NANOS) physical type, which Spark
+  has no native reader type for); the catalog layer converts ns -> µs on
+  load, matching DuckDB's ns->µs truncation;
+* ``spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS`` keeps min/max
+  statistics on written timestamps;
+* ``spark.sql.icu.caseMappings.enabled=false`` makes ``lower()``/``upper()``
+  use the JDK's case mapping instead of ICU's. The ICU mapper's first use
+  in a JVM costs seconds of class loading and table initialization, even on
+  ASCII rows, and every fresh session pays it on its first ``tokens()``;
+  later calls cost the same on either mapper (both take the same ASCII fast
+  path). It gives up nothing the engine uses: no difference between the
+  mappers adds or removes an ASCII letter, so ``tokens()`` is unchanged,
+  and on the code points where they differ (ICU 77 implements Unicode 16,
+  the JDK 17 mapper Unicode 13) the JDK mapper agrees with the oracle's
+  utf8proc (DuckDB 1.0.0), which also predates those letters.
+
+One conf is static and lives only here:
+``spark.python.sql.dataFrameDebugging.enabled=false``. With it on (Spark's
+default), every ``pyspark.sql.functions`` and ``Column`` call walks the
+Python stack to capture its call site and makes several py4j round trips to
+hand it to the JVM, a large share of the driver's time to build each query.
+PySpark reads it once per process, at its first API call with an active
+session (``pyspark.errors.utils.is_debugging_enabled``), so setting it on an
+existing session has no effect, and it cannot be a runtime conf. What it
+gives up: an analysis error no longer carries the Python call-site block;
+its error class and message stay the same.
 """
 
 from __future__ import annotations
@@ -27,18 +53,18 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+from mapreduce_docker_spark.sources.catalog import _RUNTIME_CONFS
+
 # sized for the local[32] harness; a real cluster deployment overrides these
 _DEFAULTS = {
-    "spark.sql.session.timeZone": "UTC",
+    **_RUNTIME_CONFS,
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.files.maxPartitionBytes": "50m",
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # write TIMESTAMP as INT64 µs, not legacy INT96: INT96 carries no
-    # min/max statistics, so range-partitioned layouts would lose rowgroup
-    # pruning on timestamp keys (tests/test_layout.py pins this)
-    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # static: PySpark caches it per process at the first API call, so it
+    # must be set before the session exists (module docstring)
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.sql.autoBroadcastJoinThreshold": "64m",

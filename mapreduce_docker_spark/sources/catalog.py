@@ -70,7 +70,12 @@ _RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     # TIMESTAMP (ltz) columns otherwise write as legacy INT96, which has no
     # min/max stats — sinks would silently lose rowgroup/range pruning
+    # (tests/test_layout.py pins this)
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # JDK case mapping for lower()/upper(): the ICU mapper's first use costs
+    # a fresh JVM seconds, and the JDK mapper is the closer one to the
+    # oracle's (session.py docstring; tests/test_session.py pins both)
+    "spark.sql.icu.caseMappings.enabled": "false",
 }
 
 

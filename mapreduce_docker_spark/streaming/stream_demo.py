@@ -751,11 +751,13 @@ def run_incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
             .start()
             .awaitTermination()
         )
+        # NULL-key law of dedup_minhash_survivors: a NULL doc_id is excluded
+        survivors = docs.select("doc_id").filter(F.col("doc_id").isNotNull())
         try:
             flagged = spark.read.parquet(drop_store).distinct().localCheckpoint()
         except Exception:  # no near-dups at all: drop store never created
-            return docs.select("doc_id")
-    return docs.select("doc_id").join(flagged, "doc_id", "left_anti")
+            return survivors
+    return survivors.join(flagged, "doc_id", "left_anti")
 
 
 _SESS_STATE_SCHEMA = "last_us bigint, session_idx bigint, start_us bigint, n bigint"

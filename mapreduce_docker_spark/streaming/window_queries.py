@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_docker_spark.functions.rounding import dround
 from mapreduce_docker_spark.functions.rounding import sql as rsql
+from mapreduce_docker_spark.operators.dedup_queries import SQL_SURVIVORS
 from mapreduce_docker_spark.registry import register
 from mapreduce_docker_spark.sources.catalog import load_table
 
@@ -320,34 +321,13 @@ def streaming_dedup_expiry_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_dedup_expiry_keys_stream(spark, sf_dir, query_name="q_stream_ddx")
 
 
-def _sql_incremental_dedup() -> str:
+@register(
+    "streaming_incremental_minhash_dedup",
     # the streaming flagged set provably equals the batch pipeline's
     # dropped set (every verified pair is emitted in the batch where its
     # later member arrives, and always flags the larger id), so the oracle
     # is literally dedup_minhash_survivors' SQL
-    from mapreduce_docker_spark.functions.rounding import sql as rsql
-    from mapreduce_docker_spark.operators.dedup_queries import (
-        _SQL_SIG_CTE,
-        _sql_jaccard,
-        JACCARD_THRESHOLD,
-    )
-
-    return (
-        _SQL_SIG_CTE
-        + f""",
-    dropped AS (
-      SELECT DISTINCT c.doc_b
-      FROM cand c JOIN hs da ON da.doc_id = c.doc_a JOIN hs db ON db.doc_id = c.doc_b
-      WHERE {rsql(_sql_jaccard('da.hs', 'db.hs'), 4)} >= {JACCARD_THRESHOLD}
-    )
-    SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_b FROM dropped)
-    """
-    )
-
-
-@register(
-    "streaming_incremental_minhash_dedup",
-    _sql_incremental_dedup(),
+    SQL_SURVIVORS,
     section="ST6,U2",
     note="incremental near-dedup: documents arrive in 4 micro-batches "
     "(file stream, maxFilesPerTrigger=1); each batch's MinHash signatures "
