@@ -56,7 +56,7 @@ COSINE_DUP_THRESHOLD = 0.40
 # scales with the threshold, band count with the recall target.
 DEDUP_SRP_BITS = 6
 DEDUP_SRP_BANDS = 24
-DEDUP_EMB_DIM = 64  # fixture embedding dimensionality (TESTDATA.md)
+EMB_DIM = 64  # fixture embedding dimensionality (TESTDATA.md)
 _N_DEDUP_PLANES = DEDUP_SRP_BITS * DEDUP_SRP_BANDS
 
 # Coarse-to-fine verification cascade: before the exact (interpreted-HOF)
@@ -86,7 +86,7 @@ def _dedup_srp_planes() -> list[list[float]]:
             int(hashlib.md5(f"srpdedup:{j}:{k}".encode()).hexdigest()[:8], 16)
             / float(1 << 31)
             - 1.0
-            for k in range(DEDUP_EMB_DIM)
+            for k in range(EMB_DIM)
         ]
         for j in range(_N_DEDUP_PLANES)
     ]
@@ -578,32 +578,17 @@ def dedup_jaccard_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_UNIT = f"""
-    WITH unit AS (
-      SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(x AS DOUBLE) /
-               sqrt(list_reduce(list_prepend(0.0,
-                 list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))),
-                 (a, b) -> a + b))) AS u
-      FROM embeddings
-      -- dimension law (r11 random-differential probe, seed 1): the index's
-      -- cosine space has a FIXED dimensionality; a vector of any other
-      -- length is outside it by contract. Without this, a short vector's
-      -- dot products read past its end — Spark's zip_with pads with NULL
-      -- (NULL cosine) while DuckDB's e[i] indexing yields a DIFFERENT
-      -- partial sum, a measured value divergence on random fixtures
-      WHERE len(embedding) = {DEDUP_EMB_DIM}
-      -- finite-norm law (r10 extended probe): a NaN/Inf component defines
-      -- the vector out of cosine space; DuckDB's NaN-is-greatest ordering
-      -- would otherwise PASS the > 0 guard that must reject it
-        AND isfinite(list_reduce(list_prepend(0.0,
-              list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))),
-              (a, b) -> a + b))
-        AND list_reduce(list_prepend(0.0,
-              list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))),
-              (a, b) -> a + b) > 0
+def _sql_sq_sum(expr: str) -> str:
+    """Squared L2 norm of a DOUBLE list as a sequential left fold — the
+    one SQL spelling of the norm every cosine-space guard reads."""
+    return (
+        f"list_reduce(list_prepend(0.0, list_transform({expr}, y -> y * y)), "
+        f"(a, b) -> a + b)"
     )
-"""
+
+
+def _sql_unit_norm(expr: str) -> str:
+    return f"list_transform({expr}, x -> x / sqrt({_sql_sq_sum(expr)}))"
 
 
 def _sql_dot(a: str, b: str) -> str:
@@ -614,31 +599,62 @@ def _sql_dot(a: str, b: str) -> str:
     )
 
 
-def _unit_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, label, u): unit-normalized embeddings, zero-norm rows
-    DEFINED OUT — a zero vector has no direction, so cosine semantics
-    exclude it (and under ANSI mode the unguarded x/sqrt(0) THROWS
-    DIVIDE_BY_ZERO — r8 constant-input probe). The oracle's _SQL_UNIT
-    carries the identical WHERE, so both engines drop the same rows."""
-    emb = scatter(load_table(spark, sf_dir, "embeddings"))
-    sq_sum = F.aggregate(
-        F.transform(F.col("embedding"), lambda y: y.cast("double") * y.cast("double")),
+# The cosine-space law: a vector is in the index's cosine space iff it has
+# exactly EMB_DIM components and a finite, nonzero norm.
+# * dimension law (r11 random-differential probe, seed 1): without it a
+#   short vector's dot products read past its end — Spark's zip_with pads
+#   with NULL (NULL cosine) while DuckDB's e[i] indexing yields a DIFFERENT
+#   partial sum, a measured value divergence on random fixtures;
+# * finite-norm law (r10 extended probe): a NaN/Inf component defines the
+#   vector out; DuckDB's NaN-is-greatest ordering would otherwise PASS the
+#   > 0 guard that must reject it;
+# * zero-norm law (r8 constant-input probe): a zero vector has no
+#   direction, and the unguarded x / sqrt(0) throws under ANSI.
+# _SQL_UNIT is the only oracle CTE that applies it and _unit_vectors its
+# only engine twin; every embedding oracle starts from `unit`
+# (tests/test_registry.py rejects a hand copy of this WHERE).
+_SQL_IN_COSINE_SPACE = (
+    f"len(e) = {EMB_DIM} AND isfinite({_sql_sq_sum('e')}) AND {_sql_sq_sum('e')} > 0"
+)
+
+_SQL_UNIT = f"""
+    WITH unit AS (
+      SELECT vec_id, label, e, {_sql_unit_norm('e')} AS u
+      FROM (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+            FROM embeddings)
+      WHERE {_SQL_IN_COSINE_SPACE}
+    )
+"""
+
+
+def _sq_sum(v):
+    """Squared L2 norm of an array column as a sequential left fold over its
+    doubles — the engine twin of _sql_sq_sum."""
+    return F.aggregate(
+        F.transform(v, lambda y: y.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda a, b: a + b,
     )
+
+
+def _unit_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, label, embedding, u): the embeddings inside cosine space
+    with their unit vectors — the one engine place the cosine-space law
+    (see _SQL_UNIT) is applied. The raw ``embedding`` rides along for
+    callers that hash it (the SRP bucket of sim_ann_srp)."""
+    emb = scatter(load_table(spark, sf_dir, "embeddings"))
+    sq_sum = _sq_sum(F.col("embedding"))
     norm = F.sqrt(sq_sum)
-    # dimension law (r11): wrong-length vectors are outside the fixed-dim
-    # cosine space — zip_with pads the short side with NULL (NULL cosine)
-    # while DuckDB e[i] indexing yields a different partial sum
-    # finite-norm law (r10): sq_sum < inf rejects NaN (NaN sorts greatest
-    # in Spark, so NaN < inf is false) and +Inf alike — oracle isfinite twin
+    # sq_sum < inf rejects NaN (NaN sorts greatest in Spark, so NaN < inf
+    # is false) and +Inf alike — the oracle's isfinite twin
     return emb.filter(
-        (F.size("embedding") == DEDUP_EMB_DIM)
+        (F.size("embedding") == EMB_DIM)
         & (sq_sum > 0)
         & (sq_sum < F.lit(float("inf")))
     ).select(
         "vec_id",
         "label",
+        "embedding",
         F.transform(F.col("embedding"), lambda x: x.cast("double") / norm).alias("u"),
     )
 
@@ -652,40 +668,20 @@ def _dot(a, b):
 # planes/bits/bands/bucket-count CTEs shared by the SRP near-dup pipeline
 # and the banded-ANN query (similarity_queries.py): same seeded geometry,
 # same band keys, so the two oracles provably block identically.
-_SQL_SRP_COMMON = f"""
-    WITH planes AS (
+_SQL_SRP_COMMON = _SQL_UNIT + f""",
+    planes AS (
       SELECT j, list(w ORDER BY k) AS p FROM (
         SELECT js.j AS j, ks.k AS k,
                ('0x' || substr(md5('srpdedup:' || js.j || ':' || ks.k), 1, 8))::UBIGINT
                  / 2147483648.0 - 1.0 AS w
         FROM (SELECT unnest(generate_series(0, {_N_DEDUP_PLANES - 1})) AS j) js,
-             (SELECT unnest(generate_series(0, {DEDUP_EMB_DIM - 1})) AS k) ks
+             (SELECT unnest(generate_series(0, {EMB_DIM - 1})) AS k) ks
       ) t GROUP BY j
     ),
-    ed AS (
-      -- zero-norm vectors are defined out of cosine semantics (see _SQL_UNIT)
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      FROM embeddings
-      -- dimension law (r11, see _SQL_UNIT): a wrong-length vector reads
-      -- past its end in the plane dot below (e[i] NULL on DuckDB vs
-      -- zip_with NULL-pad on Spark — divergent buckets on random fixtures)
-      WHERE len(embedding) = {DEDUP_EMB_DIM}
-      -- finite-norm law (r10 extended probe): a NaN/Inf component defines
-      -- the vector out of cosine space; DuckDB's NaN-is-greatest ordering
-      -- would otherwise PASS the > 0 guard that must reject it
-        AND isfinite(list_reduce(list_prepend(0.0,
-              list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))),
-              (a, b) -> a + b))
-        AND list_reduce(list_prepend(0.0,
-              list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))),
-              (a, b) -> a + b) > 0
-    ),
     bits AS (
-      SELECT ed.vec_id, p.j,
-             CASE WHEN list_reduce(list_prepend(0.0,
-               list_transform(generate_series(1, {DEDUP_EMB_DIM}), i -> ed.e[i] * p.p[i])),
-               (x, y) -> x + y) >= 0 THEN '1' ELSE '0' END AS bit
-      FROM ed, planes p
+      SELECT unit.vec_id, p.j,
+             CASE WHEN {_sql_dot('unit.e', 'p.p')} >= 0 THEN '1' ELSE '0' END AS bit
+      FROM unit, planes p
     ),
     bands AS (
       SELECT vec_id, j // {DEDUP_SRP_BITS} AS band_idx,
@@ -723,26 +719,31 @@ _SQL_DEDUP_SRP = _SQL_SRP_COMMON + f""",
       JOIN fpw fb ON fb.vec_id = b.vec_id
       WHERE 144 - (bit_count(xor(fa.f0, fb.f0)) + bit_count(xor(fa.f1, fb.f1))
                    + bit_count(xor(fa.f2, fb.f2))) >= {DEDUP_SRP_AGREE_MIN}
-    ),
-    unit AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE) /
-        sqrt(list_reduce(list_prepend(0.0,
-          list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))),
-          (a, b) -> a + b))) AS u
-      FROM embeddings
-      -- dimension law (r11, see _SQL_UNIT) + finite-norm law (r10): a
-      -- wrong-length / NaN / Inf vector is outside the fixed-dim cosine
-      -- space; DuckDB's NaN-is-greatest ordering would otherwise PASS the
-      -- > 0 guard that must reject it
-      WHERE len(embedding) = {DEDUP_EMB_DIM}
-        AND isfinite(list_reduce(list_prepend(0.0,
-              list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))),
-              (a, b) -> a + b))
-        AND list_reduce(list_prepend(0.0,
-              list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))),
-              (a, b) -> a + b) > 0
     )
 """
+
+
+def _srp_bucket_pairs(fp: DataFrame, members: list[str], observation=None) -> DataFrame:
+    """In-bucket pairs ``(a, b)`` over the SRP bands of fingerprinted vectors.
+
+    ``fp`` carries the 144-bit band string ``bits`` (see
+    _dedup_unit_fingerprints); each vector explodes to its DEDUP_SRP_BANDS
+    (band_idx, band_sig) keys with ``members`` riding in the struct that
+    _all_bucket_pairs pairs up — the one band explode of the near-dup
+    pipeline and the banded ANN.
+    """
+    bands = fp.select(
+        F.struct(*members).alias("m"),
+        F.posexplode(
+            F.array(
+                *[
+                    F.substring("bits", j * DEDUP_SRP_BITS + 1, DEDUP_SRP_BITS)
+                    for j in range(DEDUP_SRP_BANDS)
+                ]
+            )
+        ).alias("band_idx", "band_sig"),
+    )
+    return _all_bucket_pairs(bands, "vec_id", observation)
 
 
 @register(
@@ -783,31 +784,20 @@ def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relation for the exact-cosine verify. The single embeddings scan is
     # preserved by the eager-free localCheckpoint of `unit` (the scan
     # materializes once, bands and both join sides read the checkpoint).
-    # Measured at sf0.1 (min-of-3, noop): 1.864 s -> 1.644 s, output sets
-    # bit-identical; at corpus scale the band-shuffle bytes drop ~16x.
+    # The band shuffle moves ~16x fewer bytes per vector, and the pair set
+    # does not depend on what the band rows carry.
     #
     # The lean shape stays over carrying the 64-double payload in the
     # bands: where oversized buckets route through the salt cells, the
     # payload goes through the quadratic in-cell pair emission.
     unit = _dedup_unit_fingerprints(spark, sf_dir).localCheckpoint(eager=False)
-    bands = unit.select(
-        F.struct("vec_id", "f0", "f1", "f2").alias("m"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.substring("bits", j * DEDUP_SRP_BITS + 1, DEDUP_SRP_BITS)
-                    for j in range(DEDUP_SRP_BANDS)
-                ]
-            )
-        ).alias("band_idx", "band_sig"),
-    )
     agreement = F.lit(144) - (
         F.bit_count(F.col("a.f0").bitwiseXOR(F.col("b.f0")))
         + F.bit_count(F.col("a.f1").bitwiseXOR(F.col("b.f1")))
         + F.bit_count(F.col("a.f2").bitwiseXOR(F.col("b.f2")))
     )
     cand = (
-        _all_bucket_pairs(bands, "vec_id")
+        _srp_bucket_pairs(unit, ["vec_id", "f0", "f1", "f2"])
         .filter(agreement >= DEDUP_SRP_AGREE_MIN)
         .select(
             F.col("a.vec_id").alias("vec_a"),
@@ -885,7 +875,7 @@ def _fingerprint_batches(batches):
             continue
         arr = b.column(1)
         offs = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-        valid = np.diff(offs) == DEDUP_EMB_DIM
+        valid = np.diff(offs) == EMB_DIM
         is_valid = arr.is_valid()
         if arr.null_count:
             valid &= is_valid.to_numpy(zero_copy_only=False)
@@ -895,12 +885,12 @@ def _fingerprint_batches(batches):
         flat = vals.to_numpy(zero_copy_only=False).astype(np.float64)
         starts = offs[:-1][valid]
         mat = (
-            flat[starts[:, None] + np.arange(DEDUP_EMB_DIM)[None, :]]
+            flat[starts[:, None] + np.arange(EMB_DIM)[None, :]]
             if len(starts)
-            else np.empty((0, DEDUP_EMB_DIM))
+            else np.empty((0, EMB_DIM))
         )
         sq = np.zeros(mat.shape[0])
-        for k in range(DEDUP_EMB_DIM):
+        for k in range(EMB_DIM):
             sq += mat[:, k] * mat[:, k]
         keep = (sq > 0) & np.isfinite(sq)
         full_keep = np.zeros(n, dtype=bool)
@@ -910,7 +900,7 @@ def _fingerprint_batches(batches):
         if m == 0:
             continue
         acc = np.zeros((m, n_planes))
-        for k in range(DEDUP_EMB_DIM):
+        for k in range(EMB_DIM):
             acc += mat[:, k : k + 1] * planes_t[k][None, :]
         bitbool = acc >= 0.0
         chars = np.where(bitbool, np.uint8(49), np.uint8(48))  # '1' / '0'
@@ -924,7 +914,7 @@ def _fingerprint_batches(batches):
         unit = mat / np.sqrt(sq)[:, None]
         u_arr = pa.ListArray.from_arrays(
             pa.array(
-                np.arange(0, (m + 1) * DEDUP_EMB_DIM, DEDUP_EMB_DIM, dtype=np.int32)
+                np.arange(0, (m + 1) * EMB_DIM, EMB_DIM, dtype=np.int32)
             ),
             pa.array(unit.ravel(), type=pa.float64()),
         )

@@ -1721,8 +1721,16 @@ def scalar_interval_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     SELECT vec_id,
            CAST(len(list_filter(embedding, x -> x > 0)) AS INTEGER) AS n_positive,
-           (len(list_filter(embedding, x -> abs(x) > 0.29)) > 0)    AS has_extreme,
-           (len(list_filter(embedding, x -> abs(x) <= 1.0)) = len(embedding)) AS all_bounded,
+           -- exists/forall are three-valued over a NULL component: an
+           -- undecided predicate is NULL unless another element decides
+           -- it (a true for exists, a false for forall)
+           CASE WHEN list_count(embedding) < len(embedding)
+                 AND len(list_filter(embedding, x -> abs(x) > 0.29)) = 0 THEN NULL
+                ELSE len(list_filter(embedding, x -> abs(x) > 0.29)) > 0 END AS has_extreme,
+           CASE WHEN list_count(embedding) < len(embedding)
+                 AND len(list_filter(embedding, x -> NOT (abs(x) <= 1.0))) = 0 THEN NULL
+                ELSE len(list_filter(embedding, x -> abs(x) <= 1.0)) = len(embedding) END
+             AS all_bounded,
            -- CASE keeps a NULL array NULL (list_prepend would fold the
            -- seed alone -> 0.0, diverging from every other NULL-in
            -- column); generate_series(1, 0) is empty so a zero-length

@@ -37,10 +37,16 @@ from pyspark.sql.window import Window
 from mapreduce_docker_spark.functions.rounding import dround
 from mapreduce_docker_spark.functions.rounding import sql as rsql
 from mapreduce_docker_spark.operators.dedup_queries import (
+    EMB_DIM,
     _SQL_SRP_COMMON,
     _SQL_UNIT,
+    _dedup_unit_fingerprints,
     _dot,
+    _sq_sum,
     _sql_dot,
+    _sql_sq_sum,
+    _sql_unit_norm,
+    _srp_bucket_pairs,
     _unit_vectors,
 )
 from mapreduce_docker_spark.registry import register
@@ -52,7 +58,6 @@ N_QUERIES_ANN = 50
 ANN_TOPK = 3
 IVF_NPROBE = 2
 SRP_BITS = 4  # 2^4 = 16 buckets; more bits over-partitions small corpora (recall collapse)
-EMB_DIM = 64  # fixture embedding dimensionality (TESTDATA.md)
 
 
 def _srp_hyperplanes(bits: int = SRP_BITS, dim: int = EMB_DIM) -> list[list[float]]:
@@ -87,6 +92,24 @@ def _srp_hyperplanes(bits: int = SRP_BITS, dim: int = EMB_DIM) -> list[list[floa
 SRP_PLANES = _srp_hyperplanes()
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The k best neighbors per query_id, ranked on the rounded cos_sim with
+    a neighbor_id tiebreak, as a ``rank`` column appended to ``scored``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _sql_top_k(cols: str, k: int) -> str:
+    """The oracle twin of _top_k over a ``scored`` CTE."""
+    return f"""
+    SELECT {cols}, rank FROM (
+      SELECT *, row_number() OVER (
+        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
+      FROM scored
+    ) WHERE rank <= {k}
+    """
+
+
 @register(
     "sim_cosine_topk",
     _SQL_UNIT
@@ -96,13 +119,8 @@ SRP_PLANES = _srp_hyperplanes()
              {rsql(_sql_dot('q.u', 'c.u'), 4)} AS cos_sim
       FROM unit q JOIN unit c ON c.vec_id <> q.vec_id
       WHERE q.vec_id < {N_QUERIES_TOPK}
-    )
-    SELECT query_id, neighbor_id, neighbor_label, cos_sim, rank FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-      FROM scored
-    ) WHERE rank <= {TOPK}
-    """,
+    )"""
+    + _sql_top_k("query_id, neighbor_id, neighbor_label, cos_sim", TOPK),
     section="U3",
     note=f"exact cosine top-{TOPK} for query vectors vec_id < {N_QUERIES_TOPK}; broadcast query side, streaming candidate scan",
 )
@@ -126,12 +144,7 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             dround(_dot(F.col("qu"), F.col("cu")), 4).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOPK)
-        .select("query_id", "neighbor_id", "neighbor_label", "cos_sim", "rank")
-    )
+    return _top_k(scored, TOPK)
 
 
 def _sql_plane_literal(plane: list[float]) -> str:
@@ -140,11 +153,9 @@ def _sql_plane_literal(plane: list[float]) -> str:
 
 # bit j = sign(embedding · plane_j), folded left in index order on BOTH
 # engines so the doubles (and therefore the sign at the boundary) are
-# bit-identical
+# bit-identical; `e` is the embedding's DOUBLE list from _SQL_UNIT
 _SQL_BUCKET = "concat(" + ", ".join(
-    "CASE WHEN "
-    + _sql_dot("list_transform(embedding, x -> CAST(x AS DOUBLE))", _sql_plane_literal(p))
-    + " >= 0 THEN '1' ELSE '0' END"
+    "CASE WHEN " + _sql_dot("e", _sql_plane_literal(p)) + " >= 0 THEN '1' ELSE '0' END"
     for p in SRP_PLANES
 ) + ")"
 
@@ -174,62 +185,22 @@ def _srp_bucket_col() -> "F.Column":
 
 @register(
     "sim_ann_srp",
-    f"""
-    WITH unit AS (
-      SELECT vec_id, label,
-             {_SQL_BUCKET} AS bucket,
-             list_transform(embedding, x -> CAST(x AS DOUBLE) /
-               sqrt(list_reduce(list_prepend(0.0,
-                 list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))),
-                 (a, b) -> a + b))) AS u
-      FROM embeddings
-      -- dimension law (r11 random-differential probe) + finite-norm law
-      -- (r10): wrong-length / NaN / Inf vectors are outside the fixed-dim
-      -- cosine space (a short vector's plane dot reads past its end —
-      -- divergent buckets vs Spark's zip_with NULL-pad)
-      WHERE len(embedding) = {EMB_DIM}
-        AND isfinite(list_reduce(list_prepend(0.0,
-              list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))),
-              (a, b) -> a + b))
-        AND list_reduce(list_prepend(0.0,
-              list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))),
-              (a, b) -> a + b) > 0
-    ),
+    _SQL_UNIT
+    + f""",
+    srp AS (SELECT vec_id, {_SQL_BUCKET} AS bucket, u FROM unit),
     scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.bucket AS bucket,
              {rsql(_sql_dot('q.u', 'c.u'), 4)} AS cos_sim
-      FROM unit q JOIN unit c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
+      FROM srp q JOIN srp c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
       WHERE q.vec_id < {N_QUERIES_ANN}
-    )
-    SELECT query_id, neighbor_id, bucket, cos_sim, rank FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-      FROM scored
-    ) WHERE rank <= {ANN_TOPK}
-    """,
+    )"""
+    + _sql_top_k("query_id, neighbor_id, bucket, cos_sim", ANN_TOPK),
     section="U3,J5",
     note=f"ANN via sign-random-projection bucketing ({SRP_BITS} seeded md5-derived hyperplanes over all {EMB_DIM} dims -> {2**SRP_BITS} buckets) + exact rerank within bucket; deterministic so fully oracle-checked",
 )
 def sim_ann_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = scatter(load_table(spark, sf_dir, "embeddings"))
-    bucket = _srp_bucket_col()
-    sq_sum = F.aggregate(
-        F.transform(F.col("embedding"), lambda y: y.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    # zero-norm rows defined out (ANSI divide guard; oracle WHERE matches)
-    # dimension law (r11) + finite-norm law (r10): see _unit_vectors
-    unit = emb.filter(
-        (F.size("embedding") == EMB_DIM)
-        & (sq_sum > 0)
-        & (sq_sum < F.lit(float("inf")))
-    ).select(
-        "vec_id",
-        bucket.alias("bucket"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double") / F.sqrt(sq_sum)).alias(
-            "u"
-        ),
+    unit = _unit_vectors(spark, sf_dir).select(
+        "vec_id", _srp_bucket_col().alias("bucket"), "u"
     )
     q = unit.filter(F.col("vec_id") < N_QUERIES_ANN).select(
         F.col("vec_id").alias("query_id"), F.col("bucket"), F.col("u").alias("qu")
@@ -252,12 +223,7 @@ def sim_ann_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
             dround(_dot(F.col("qu"), F.col("cu")), 4).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_TOPK)
-        .select("query_id", "neighbor_id", "bucket", "cos_sim", "rank")
-    )
+    return _top_k(scored, ANN_TOPK)
 
 
 @register(
@@ -279,23 +245,6 @@ def sim_ann_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
       UNION ALL
       SELECT vb AS query_id, va AS neighbor_id FROM cand
     ),
-    unit AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE) /
-        sqrt(list_reduce(list_prepend(0.0,
-          list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))),
-          (a, b) -> a + b))) AS u
-      FROM embeddings
-      -- dimension law (r11, see sim_ann_srp) + finite-norm law (r10):
-      -- wrong-length / NaN / Inf vectors are outside the fixed-dim
-      -- cosine space
-      WHERE len(embedding) = {EMB_DIM}
-        AND isfinite(list_reduce(list_prepend(0.0,
-              list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))),
-              (a, b) -> a + b))
-        AND list_reduce(list_prepend(0.0,
-              list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))),
-              (a, b) -> a + b) > 0
-    ),
     scored AS (
       SELECT d.query_id, d.neighbor_id,
              {rsql(_sql_dot('q.u', 'c.u'), 4)} AS cos_sim
@@ -303,13 +252,8 @@ def sim_ann_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN unit q ON q.vec_id = d.query_id
       JOIN unit c ON c.vec_id = d.neighbor_id
       WHERE d.query_id < {N_QUERIES_ANN}
-    )
-    SELECT query_id, neighbor_id, cos_sim, rank FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-      FROM scored
-    ) WHERE rank <= {ANN_TOPK}
-    """,
+    )"""
+    + _sql_top_k("query_id, neighbor_id, cos_sim", ANN_TOPK),
     section="U3,J5",
     note="banded ANN: 24 bands x 6 bits of the SAME seeded SRP geometry as "
     "embedding near-dup (judge-r3 polish: higher candidate recall at equal "
@@ -319,13 +263,6 @@ def sim_ann_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fully oracle-checked",
 )
 def sim_ann_srp_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreduce_docker_spark.operators.dedup_queries import (
-        DEDUP_SRP_BANDS,
-        DEDUP_SRP_BITS,
-        _all_bucket_pairs,
-        _dedup_unit_fingerprints,
-    )
-
     # r15 opt (guide §4.2, judge-r14 next-round #3): the unit vector and
     # the 144-bit band string come from the SAME numpy mapInArrow kernel
     # the near-dup pipeline uses (_dedup_unit_fingerprints — the 9,216
@@ -333,24 +270,14 @@ def sim_ann_srp_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit-identical by the order-preserving fold, pinned by
     # tests/test_dedup.py::test_fingerprint_kernel_matches_jvm_expression_path).
     # Blocking stays provably identical to the dedup path because it IS
-    # the dedup derivation; f0..f2 are dropped here (the banded ANN
-    # reranks on exact cosine, no Hamming gate). Bands keep carrying u
+    # the dedup derivation; f0..f2 stay out of the band members (the banded
+    # ANN reranks on exact cosine, no Hamming gate). Bands keep carrying u
     # rather than lean bands + a join back: only pairs surviving
     # query_id < 50 are scored, so the payload relief cannot pay for two
     # joins.
-    unit = _dedup_unit_fingerprints(spark, sf_dir).drop("f0", "f1", "f2")
-    bands = unit.select(
-        F.struct("vec_id", "u").alias("m"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.substring("bits", j * DEDUP_SRP_BITS + 1, DEDUP_SRP_BITS)
-                    for j in range(DEDUP_SRP_BANDS)
-                ]
-            )
-        ).alias("band_idx", "band_sig"),
+    pairs = _srp_bucket_pairs(
+        _dedup_unit_fingerprints(spark, sf_dir), ["vec_id", "u"], "ann_banded_route"
     )
-    pairs = _all_bucket_pairs(bands, "vec_id", "ann_banded_route")
     directed = pairs.select(
         F.explode(
             F.array(
@@ -374,12 +301,7 @@ def sim_ann_srp_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_id",
         dround(_dot(F.col("qu"), F.col("nu")), 4).alias("cos_sim"),
     ).distinct()  # the same pair can surface from up to 24 bands
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_TOPK)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _top_k(scored, ANN_TOPK)
 
 
 @register(
@@ -611,27 +533,27 @@ def _renormalized_centroids(best: DataFrame) -> DataFrame:
             F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
         ).alias("craw")
     )
-    sq = F.aggregate(
-        F.transform(F.col("craw"), lambda y: y * y), F.lit(0.0), lambda a, b: a + b
-    )
+    sq = _sq_sum(F.col("craw"))
     norm = F.sqrt(sq)
     # a centroid whose assigned vectors average to the zero vector has no
     # direction: defined out, like zero-norm inputs (ANSI divide guard);
-    # the oracle's cent CTEs carry the identical filter (_sql_unit_norm)
+    # the oracle's cent CTEs carry the identical filter (_sql_sq_sum > 0)
     return raw.filter(sq > 0).select(
         "cent_id", F.transform(F.col("craw"), lambda x: x / norm).alias("cu")
     )
 
 
-def _assign_best(vectors: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment on the rounded score (cent_id tiebreak)."""
+def _assign_best(vectors: DataFrame, cent: DataFrame, n: int = 1) -> DataFrame:
+    """(vec_id, u, cent_id) for each vector's ``n`` nearest centroids, ranked
+    on the rounded score (cent_id tiebreak): n = 1 is the cell assignment,
+    n = IVF_NPROBE the multi-probe set of a query."""
     scored = vectors.crossJoin(F.broadcast(cent)).select(
         "vec_id", "u", "cent_id", dround(_dot(F.col("u"), F.col("cu")), 4).alias("score")
     )
     wa = Window.partitionBy("vec_id").orderBy(F.desc("score"), F.asc("cent_id"))
     return (
         scored.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") == 1)
+        .filter(F.col("rn") <= n)
         .select("vec_id", "u", "cent_id")
     )
 
@@ -650,32 +572,23 @@ def _ivf_centroids(unit: DataFrame) -> DataFrame:
     return cent
 
 
-def _sql_unit_norm(expr: str) -> str:
-    return (
-        f"list_transform({expr}, x -> x / sqrt(list_reduce("
-        f"list_prepend(0.0, list_transform({expr}, y -> y * y)), (a, b) -> a + b)))"
-    )
-
-
-def _sql_sq_sum(expr: str) -> str:
-    """Squared L2 norm — the zero-direction guard predicate (see
-    _renormalized_centroids / _unit_vectors)."""
-    return (
-        f"list_reduce(list_prepend(0.0, list_transform({expr}, y -> y * y)), "
-        f"(a, b) -> a + b)"
-    )
+def _sql_assign(name: str, vectors: str, cent: str) -> str:
+    """CTE ``name``: every (vector, centroid) pair of ``vectors`` x ``cent``
+    with its rank ``rn`` — the oracle twin of _assign_best before its rank
+    filter."""
+    return f"""
+    {name} AS (
+      SELECT v.vec_id, v.u, c.cent_id,
+             row_number() OVER (
+               PARTITION BY v.vec_id
+               ORDER BY {rsql(_sql_dot('v.u', 'c.cu'), 4)} DESC, c.cent_id ASC) AS rn
+      FROM {vectors} v JOIN {cent} c ON true
+    )"""
 
 
 def _sql_kmeans_iter(i: int, prev: str) -> str:
     """One assign -> mean -> renormalize round as DuckDB CTEs."""
-    return f"""
-    assign{i} AS (
-      SELECT s.vec_id, s.u, c.cent_id,
-             row_number() OVER (
-               PARTITION BY s.vec_id
-               ORDER BY {rsql(_sql_dot('s.u', 'c.cu'), 4)} DESC, c.cent_id ASC) AS rn
-      FROM sample s JOIN {prev} c ON true
-    ),
+    return _sql_assign(f"assign{i}", "sample", prev) + f""",
     comp{i} AS (
       SELECT a.cent_id, t.i, {rsql('avg(a.u[t.i])', 6)} AS m
       FROM assign{i} a, unnest(generate_series(1, len(a.u))) AS t(i)
@@ -704,21 +617,16 @@ _SQL_IVF_CENT = (
 )
 
 
+# the quantizer and every vector's ranked cells; `assign WHERE rn = 1` is
+# the cell assignment (the IVF queries and the vector-store build)
+_SQL_IVF_ASSIGN = _SQL_UNIT + "," + _SQL_IVF_CENT + "," + _sql_assign("assign", "unit", "cent")
+
 # shared by sim_ann_ivf and sim_ann_ivf_stored: the stored-index variant
 # materializes centroids+cells to parquet, which round-trips the doubles
 # bit-exactly, so both paths provably produce this same relation
 _SQL_IVF_QUERY = (
-    _SQL_UNIT
-    + ","
-    + _SQL_IVF_CENT
+    _SQL_IVF_ASSIGN
     + f""",
-    assign AS (
-      SELECT v.vec_id, v.u, c.cent_id,
-             row_number() OVER (
-               PARTITION BY v.vec_id
-               ORDER BY {rsql(_sql_dot('v.u', 'c.cu'), 4)} DESC, c.cent_id ASC) AS rn
-      FROM unit v JOIN cent c ON true
-    ),
     cells AS (SELECT vec_id, u, cent_id FROM assign WHERE rn = 1),
     probes AS (SELECT vec_id, u, cent_id FROM assign
                WHERE rn <= {IVF_NPROBE} AND vec_id < {N_QUERIES_ANN}),
@@ -727,14 +635,37 @@ _SQL_IVF_QUERY = (
              CAST(n.cent_id AS INTEGER) AS cell,
              {rsql(_sql_dot('q.u', 'n.u'), 4)} AS cos_sim
       FROM probes q JOIN cells n ON n.cent_id = q.cent_id AND n.vec_id <> q.vec_id
-    )
-    SELECT query_id, neighbor_id, cell, cos_sim, rank FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-      FROM scored
-    ) WHERE rank <= {ANN_TOPK}
-    """
+    )"""
+    + _sql_top_k("query_id, neighbor_id, cell, cos_sim", ANN_TOPK)
 )
+
+
+def _ivf_top_k(queries: DataFrame, cent: DataFrame, cells: DataFrame) -> DataFrame:
+    """probe -> cell join -> exact score -> top-k, the query side of both IVF
+    variants: each query vector (vec_id, u) probes its IVF_NPROBE nearest
+    centroids of ``cent`` and reranks the vectors of ``cells`` (vec_id, u,
+    cent_id) assigned to them."""
+    q = _assign_best(queries, cent, IVF_NPROBE).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("cent_id").alias("cell"),
+        F.col("u").alias("qu"),
+    )
+    n = cells.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("cent_id").alias("n_cell"),
+        F.col("u").alias("nu"),
+    )
+    scored = q.join(
+        n,
+        (F.col("n_cell") == F.col("cell"))
+        & (F.col("neighbor_id") != F.col("query_id")),
+    ).select(
+        "query_id",
+        "neighbor_id",
+        F.col("n_cell").cast("int").alias("cell"),
+        dround(_dot(F.col("qu"), F.col("nu")), 4).alias("cos_sim"),
+    )
+    return _top_k(scored, ANN_TOPK)
 
 
 @register(
@@ -746,48 +677,9 @@ _SQL_IVF_QUERY = (
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit = _unit_vectors(spark, sf_dir).select("vec_id", "u")
     cent = _ivf_centroids(unit)
-    scored_cent = unit.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "u",
-        "cent_id",
-        dround(_dot(F.col("u"), F.col("cu")), 4).alias("cscore"),
-    )
-    wa = Window.partitionBy("vec_id").orderBy(F.desc("cscore"), F.asc("cent_id"))
-    ranked = scored_cent.withColumn("rn", F.row_number().over(wa))
     # index side: each vector lives in exactly its nearest cell
-    cells = ranked.filter(F.col("rn") == 1).select("vec_id", "u", "cent_id")
-    # query side: probe the IVF_NPROBE nearest cells (multi-probe)
-    q = (
-        ranked.filter((F.col("rn") <= IVF_NPROBE) & (F.col("vec_id") < N_QUERIES_ANN))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("cent_id").alias("cell"),
-            F.col("u").alias("qu"),
-        )
-    )
-    n = cells.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("cent_id").alias("n_cell"),
-        F.col("u").alias("nu"),
-    )
-    scored = (
-        q.join(
-            n,
-            (F.col("n_cell") == F.col("cell"))
-            & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("n_cell").cast("int").alias("cell"),
-            dround(_dot(F.col("qu"), F.col("nu")), 4).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_TOPK)
-        .select("query_id", "neighbor_id", "cell", "cos_sim", "rank")
+    return _ivf_top_k(
+        unit.filter(F.col("vec_id") < N_QUERIES_ANN), cent, _assign_best(unit, cent)
     )
 
 
@@ -810,8 +702,9 @@ def sim_ann_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_docker_spark.sources.catalog import fixture_digest
     from mapreduce_docker_spark.sources.staging import stage_once
 
+    unit = _unit_vectors(spark, sf_dir).select("vec_id", "u")
+
     def write(tmp: str) -> None:
-        unit = _unit_vectors(spark, sf_dir).select("vec_id", "u")
         _ivf_centroids(unit).write.parquet(os.path.join(tmp, "centroids"))
         # assign against the STORED centroids so the index is self-consistent
         # even if an engine change ever altered in-memory float folding
@@ -822,64 +715,18 @@ def sim_ann_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explicit read schemas, derived lazily from the builder plans (pure
     # analysis, no execution): inference needs at least one data file, and
     # a filtered-to-empty corpus legitimately writes none
-    unit0 = _unit_vectors(spark, sf_dir).select("vec_id", "u")
-    cent = spark.read.schema(_ivf_centroids(unit0).schema).parquet(
+    cent = spark.read.schema(_ivf_centroids(unit).schema).parquet(
         os.path.join(base, "centroids")
     )
     from pyspark.sql.types import LongType, StructField, StructType
 
     cells_schema = StructType(
-        list(unit0.schema.fields) + [StructField("cent_id", LongType())]
+        list(unit.schema.fields) + [StructField("cent_id", LongType())]
     )
-    cells = spark.read.schema(cells_schema).parquet(
-        os.path.join(base, "cells")
-    ).withColumn(
-        "cent_id", F.col("cent_id").cast("long")  # no-op under the explicit schema
-    )
+    cells = spark.read.schema(cells_schema).parquet(os.path.join(base, "cells"))
     # probe side: only the bounded query set ranks cells — at 100 TB the
     # corpus never re-scores against centroids at query time
-    qunit = (
-        _unit_vectors(spark, sf_dir)
-        .filter(F.col("vec_id") < N_QUERIES_ANN)
-        .select("vec_id", "u")
-    )
-    scored_cent = qunit.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "u",
-        "cent_id",
-        dround(_dot(F.col("u"), F.col("cu")), 4).alias("cscore"),
-    )
-    wa = Window.partitionBy("vec_id").orderBy(F.desc("cscore"), F.asc("cent_id"))
-    probes = (
-        scored_cent.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") <= IVF_NPROBE)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("cent_id").alias("cell"),
-            F.col("u").alias("qu"),
-        )
-    )
-    n = cells.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("cent_id").alias("n_cell"),
-        F.col("u").alias("nu"),
-    )
-    scored = probes.join(
-        n,
-        (F.col("n_cell") == F.col("cell"))
-        & (F.col("neighbor_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.col("n_cell").cast("int").alias("cell"),
-        dround(_dot(F.col("qu"), F.col("nu")), 4).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_TOPK)
-        .select("query_id", "neighbor_id", "cell", "cos_sim", "rank")
-    )
+    return _ivf_top_k(unit.filter(F.col("vec_id") < N_QUERIES_ANN), cent, cells)
 
 
 @register(
@@ -964,12 +811,7 @@ def sim_cosine_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.concat(frames, ignore_index=True)
 
     scored = unit.select("vec_id", "label", "u").mapInPandas(score_batches, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOPK)
-        .select("query_id", "neighbor_id", "neighbor_label", "cos_sim", "rank")
-    )
+    return _top_k(scored, TOPK)
 
 
 # ---------------------------------------------------------------------------
@@ -984,21 +826,7 @@ def _sql_vector_store_build() -> str:
 
     clusters_sql = _REGISTRY["dedup_embedding_clusters"].sql
     quant_sql = _REGISTRY["emb_quantize_int8"].sql
-    cells_sql = (
-        _SQL_UNIT
-        + ","
-        + _SQL_IVF_CENT
-        + f""",
-    assign AS (
-      SELECT v.vec_id, c.cent_id,
-             row_number() OVER (
-               PARTITION BY v.vec_id
-               ORDER BY {rsql(_sql_dot('v.u', 'c.cu'), 4)} DESC, c.cent_id ASC) AS rn
-      FROM unit v JOIN cent c ON true
-    )
-    SELECT vec_id, cent_id FROM assign WHERE rn = 1
-"""
-    )
+    cells_sql = _SQL_IVF_ASSIGN + "\n    SELECT vec_id, cent_id FROM assign WHERE rn = 1\n"
     return f"""
     WITH surv AS (
       SELECT vec_id FROM ( {clusters_sql} ) cl WHERE vec_id = cluster_id
@@ -1067,10 +895,8 @@ def emb_vector_store_build(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- sweep; the engine's unseeded-input fold is NULL there)
       SELECT label, len(embedding) AS dims,
              CASE WHEN embedding IS NULL THEN NULL ELSE
-             sqrt(list_reduce(
-               list_prepend(0.0, list_transform(embedding,
-                                                x -> CAST(x AS DOUBLE) * x)),
-               (a, b) -> a + b)) END AS nrm
+             sqrt({_sql_sq_sum("list_transform(embedding, x -> CAST(x AS DOUBLE))")})
+             END AS nrm
       FROM embeddings
     )
     SELECT label,
@@ -1097,15 +923,10 @@ def emb_vector_store_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_norm_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = scatter(load_table(spark, sf_dir, "embeddings"))
-    sq_sum = F.aggregate(
-        F.transform(F.col("embedding"), lambda y: y.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
     n = emb.select(
         "label",
         F.size("embedding").alias("dims"),
-        F.sqrt(sq_sum).alias("nrm"),
+        F.sqrt(_sq_sum(F.col("embedding"))).alias("nrm"),
     )
     return n.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vecs"),

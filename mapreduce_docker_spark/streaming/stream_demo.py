@@ -649,6 +649,15 @@ def run_late_data_demo(
     return _drain(agg, query_name, "append")
 
 
+def _read_store(spark: SparkSession, path: str, schema) -> DataFrame | None:
+    """The local parquet store at ``path`` read with its known ``schema``,
+    or None while no batch has created it. A store that exists but cannot
+    be read raises when the read runs."""
+    if not os.path.isdir(path):
+        return None
+    return spark.read.schema(schema).parquet(path)
+
+
 def run_incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dedup: new batches vs an accumulating signature store.
 
@@ -714,17 +723,20 @@ def run_incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         .option("recursiveFileLookup", "true")
         .parquet(stage)
     )
+    # the stores' schemas, from the plans that write them (no execution)
+    sig_schema = _sig_with_hashset_df(docs).schema
+    drop_schema = docs.select("doc_id").schema
     with tempfile.TemporaryDirectory(prefix="incdedup_run_") as base:
         sig_store = os.path.join(base, "signatures")
         drop_store = os.path.join(base, "dropped")
 
         def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
             sig_new = _sig_with_hashset_df(batch_df).withColumn("is_new", F.lit(True))
-            try:
-                old = spark.read.parquet(sig_store).withColumn("is_new", F.lit(False))
-                all_sigs = old.unionByName(sig_new)
-            except Exception:  # first batch: store does not exist yet
+            old = _read_store(spark, sig_store, sig_schema)
+            if old is None:  # first batch: nothing stored yet
                 all_sigs = sig_new
+            else:
+                all_sigs = old.withColumn("is_new", F.lit(False)).unionByName(sig_new)
             bands = all_sigs.select(
                 F.struct("doc_id", "hs", "is_new").alias("m"),
                 F.posexplode(
@@ -753,10 +765,10 @@ def run_incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         # NULL-key law of dedup_minhash_survivors: a NULL doc_id is excluded
         survivors = docs.select("doc_id").filter(F.col("doc_id").isNotNull())
-        try:
-            flagged = spark.read.parquet(drop_store).distinct().localCheckpoint()
-        except Exception:  # no near-dups at all: drop store never created
+        flagged = _read_store(spark, drop_store, drop_schema)
+        if flagged is None:  # no batch ran, so nothing was flagged
             return survivors
+        flagged = flagged.distinct().localCheckpoint()
     return survivors.join(flagged, "doc_id", "left_anti")
 
 

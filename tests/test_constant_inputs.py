@@ -16,10 +16,11 @@ fixed and pinned here:
   ANSI mode (Spark 4 default) in every cosine-path query. Contract now:
   a zero vector has no direction, so it is DEFINED OUT of the unit-vector
   relation, identically in the Spark scan (``filter(sq_sum > 0)``) and
-  the DuckDB oracle CTEs (``WHERE ... > 0``) — dedup_queries._unit_vectors
-  / _SQL_UNIT / _SQL_DEDUP_SRP / _SQL_SRP_COMMON, the inline unit scans in
-  similarity_queries, and the k-means renormalized centroids (a centroid
-  whose members average to zero is dropped the same way on both engines).
+  the DuckDB oracle (``WHERE ... > 0``) — dedup_queries._unit_vectors and
+  its one oracle twin, the ``unit`` CTE of _SQL_UNIT, which every cosine,
+  SRP and IVF oracle starts from; and the k-means renormalized centroids
+  (a centroid whose members average to zero is dropped the same way on
+  both engines).
 * ``agg_stats_quantity_price``: Spark 4's ``corr`` aggregate itself
   throws DIVIDE_BY_ZERO under ANSI on a zero-variance group, where the
   SQL standard (and DuckDB) return NULL — rebuilt from its co-moment

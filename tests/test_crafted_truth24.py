@@ -23,10 +23,10 @@ import numpy as np
 import crafted
 from mapreduce_docker_spark.operators.dedup_queries import (
     COSINE_DUP_THRESHOLD,
-    DEDUP_EMB_DIM,
     DEDUP_SRP_AGREE_MIN,
     DEDUP_SRP_BANDS,
     DEDUP_SRP_BITS,
+    EMB_DIM,
     dedup_embedding_pairs,
 )
 
@@ -41,7 +41,7 @@ def _planes() -> list[list[float]]:
             int(hashlib.md5(f"srpdedup:{j}:{k}".encode()).hexdigest()[:8], 16)
             / float(1 << 31)
             - 1.0
-            for k in range(DEDUP_EMB_DIM)
+            for k in range(EMB_DIM)
         ]
         for j in range(N_PLANES)
     ]
@@ -96,7 +96,7 @@ def _gen(seed: int) -> list[float]:
     return _as_f32(
         [
             ((((k * 2654435761 + seed * 40503 + 12345) >> 7) % 33) - 16) / 16.0
-            for k in range(DEDUP_EMB_DIM)
+            for k in range(EMB_DIM)
         ]
     )
 
@@ -164,7 +164,7 @@ def test_srp_embedding_pairs_recomputed_in_python(spark, tmp_path):
         2: list(base),                     # identical twin: cos exactly 1
         3: near,                           # the verified non-trivial pair
         4: [-x for x in base],             # every bit flips: never blocked
-        5: [0.0] * DEDUP_EMB_DIM,          # zero-norm: defined out
+        5: [0.0] * EMB_DIM,          # zero-norm: defined out
         6: no_ham,                         # band hit, Hamming rejection
         7: no_cos,                         # Hamming hit, cosine rejection
     }

@@ -32,7 +32,9 @@ engines:
   non-NULL, the population corr itself uses;
 * dimension law — a vector whose length differs from the index's
   fixed dimensionality is outside cosine space on both engines
-  (``_unit_vectors`` / ``_SQL_UNIT`` and every SRP/IVF ingress);
+  (``_unit_vectors`` / ``_SQL_UNIT``, the one ingress every cosine,
+  SRP and IVF query starts from), checked engine-vs-oracle on every
+  registered query that reads ``embeddings``;
 * NULL-key chain law — ``dedup_chain_within_delay`` keys have no
   identity with a NULL component (the Q15/Q16 NULL-join-key precedent
   applied to the dedup key).
@@ -41,9 +43,12 @@ engines:
 from __future__ import annotations
 
 import datetime as dt
+import math
 
+import pytest
 
 import crafted
+from mapreduce_docker_spark import oracle
 from mapreduce_docker_spark.operators.dedup_queries import (
     _SQL_UNIT,
     _unit_vectors,
@@ -300,33 +305,73 @@ def test_corr_pairwise_complete_both_engines(spark, tmp_path):
     ) == want
 
 
-def test_dimension_law_unit_vectors_both_engines(spark, tmp_path):
-    # only the two well-formed 64-dim vectors survive the cosine-space
-    # ingress; the dim-4, empty, NULL, zero and NaN vectors are all
-    # outside it by law (dim / zero-norm / finite-norm)
-    dim64_a = [1.0] + [0.0] * 63
-    dim64_b = [0.0, 1.0] + [0.0] * 62
+# sixteen well-formed 64-dim vectors (0..15; 0/1, 2/3 and 4/5 are
+# near-duplicate pairs) and every way to be outside cosine space (16..24)
+def _vec(i: int) -> list[float]:
+    base, eps = (i // 2, 0.05 * (i % 2)) if i < 6 else (i, 0.0)
+    return [round(math.sin(7 * base + 3.1 * k) + eps * math.cos(k), 3) for k in range(64)]
+
+
+_LAW_EMBEDDINGS = (
+    [(i, _vec(i), i % 3) for i in range(16)]
+    + [
+        (16, [0.5] * 4, 0),                              # dim 4
+        (17, [], 1),                                     # dim 0
+        (18, None, 2),                                   # NULL vector
+        (19, [0.0] * 64, 0),                             # zero norm
+        (20, [float("nan")] * 64, 1),                    # NaN norm
+        (21, [float("inf")] + [0.5] * 63, 2),            # +Inf component
+        (22, [0.5] * 63 + [float("-inf")], 0),           # -Inf component
+        (23, [0.5] * 31 + [None] + [0.5] * 32, 1),       # NULL component
+        (24, [0.5] * 65, 2),                             # dim 65
+    ]
+)
+_EMBEDDING_ORACLE_QUERIES = sorted(
+    name
+    for name, spec in all_specs().items()
+    if spec.sql is not None and "embeddings" in spec.sql
+)
+
+
+def _write_law_embeddings(spark, tmp_path):
     crafted.write(
-        spark, tmp_path, "embeddings",
-        [
-            (1, dim64_a, 0),
-            (2, dim64_b, 1),
-            (3, [0.5] * 4, 2),
-            (4, [], 3),
-            (5, None, 4),
-            (6, [0.0] * 64, 5),
-            (7, [float("nan")] * 64, 6),
-        ],
+        spark, tmp_path, "embeddings", _LAW_EMBEDDINGS,
         "vec_id long, embedding array<float>, label int",
     )
+
+
+def test_dimension_law_unit_vectors_both_engines(spark, tmp_path):
+    # only the sixteen well-formed 64-dim vectors survive the cosine-space
+    # ingress; the dim-4, empty, NULL, zero, NaN, +/-Inf, NULL-element
+    # and dim-65 vectors are all outside it by law (dim / zero-norm /
+    # finite-norm)
+    _write_law_embeddings(spark, tmp_path)
     got = sorted(
         r["vec_id"] for r in _unit_vectors(spark, str(tmp_path)).collect()
     )
-    assert got == [1, 2]
+    assert got == list(range(16))
     orows = crafted.oracle(
         tmp_path, ("embeddings",), _SQL_UNIT + "SELECT vec_id FROM unit"
     )
-    assert sorted(r[0] for r in orows) == [1, 2]
+    assert sorted(r[0] for r in orows) == list(range(16))
+
+
+@pytest.mark.parametrize("name", _EMBEDDING_ORACLE_QUERIES)
+def test_cosine_space_law_every_embedding_query(spark, tmp_path, name):
+    """Every oracle-checked query over ``embeddings`` agrees with its
+    oracle on the degenerate vectors above: one law for every ingress."""
+    _write_law_embeddings(spark, tmp_path)
+    spec = all_specs()[name]
+    sdf = spec.fn(spark, str(tmp_path))
+    con = oracle.connect(tmp_path, ("embeddings",))
+    try:
+        ores = con.execute(spec.sql)
+        mismatch = oracle.diff(
+            sdf.columns, sdf.collect(), [d[0] for d in ores.description], ores.fetchall()
+        )
+    finally:
+        con.close()
+    assert mismatch is None, f"{name}: {mismatch}"
 
 
 def test_mom_growth_undated_orders_excluded_both_engines(spark, tmp_path):

@@ -343,7 +343,7 @@ def _dedup_unit_fingerprints_jvm(emb: DataFrame) -> DataFrame:
     """The pure-expression twin of ``dq._fingerprint_batches``: the
     interpreted-HOF plan the Arrow kernel replaced, kept here as its
     equivalence witness (no query uses it)."""
-    dim = dq.DEDUP_EMB_DIM
+    dim = dq.EMB_DIM
     bit_arr = F.transform(
         _dedup_planes_expr(),
         lambda p: F.when(
@@ -390,7 +390,7 @@ def test_fingerprint_kernel_matches_jvm_expression_path(spark):
     bit-identical (u, bits, f0..f2) on the fixture embeddings, and drop the
     same degenerate rows: a NULL element, a wrong length, a NULL vector, a
     zero norm and +/-Inf or NaN components."""
-    dim = dq.DEDUP_EMB_DIM
+    dim = dq.EMB_DIM
     ok = [((-1.0) ** k) * (k + 1) / 7.0 for k in range(dim)]
     crafted = [
         (-1, ok),

@@ -166,6 +166,34 @@ def test_rowsonly_pins_declared():
             assert not spec.pin, f"{name}: pin= is for rows-only queries only"
 
 
+def test_cosine_space_filter_only_in_sql_unit():
+    """The cosine-space law has one oracle home, the ``unit`` CTE of
+    ``_SQL_UNIT``: once every embedded copy of that CTE is cut out, no
+    registered oracle may still filter on the law (verbatim, re-spaced, or
+    as a hand-written finite-norm fold)."""
+    from mapreduce_docker_spark.operators.dedup_queries import (
+        _SQL_IN_COSINE_SPACE,
+        _SQL_UNIT,
+    )
+
+    def squash(sql):
+        return "".join(sql.split())
+
+    law = squash(_SQL_IN_COSINE_SPACE)
+    assert law in squash(_SQL_UNIT)
+    n_unit = 0
+    for name, spec in registry.all_specs().items():
+        if spec.sql is None:
+            continue
+        n_unit += spec.sql.count(_SQL_UNIT)
+        rest = squash(spec.sql.replace(_SQL_UNIT, ""))
+        assert law not in rest, f"{name}: cosine-space filter outside _SQL_UNIT"
+        assert "isfinite(list_reduce" not in rest, (
+            f"{name}: hand-written finite-norm fold outside _SQL_UNIT"
+        )
+    assert n_unit > 0
+
+
 def _tool(name):
     import importlib
     import os

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_docker_spark.sources.catalog import load_table
@@ -273,6 +274,19 @@ def test_incremental_minhash_dedup_equals_batch(spark):
     batch = {r["doc_id"] for r in dedup_minhash_survivors(spark, sf).collect()}
     assert streamed == batch
     assert len(batch) < 500  # fixture plants near-dups: something was dropped
+
+
+def test_incremental_dedup_store_read_missing_vs_corrupt(spark, tmp_path):
+    """A store no batch has written reads as absent (first batch, no
+    drops); a store that exists but holds a corrupt part file raises
+    instead of passing for an empty history."""
+    schema = "doc_id bigint"
+    store = tmp_path / "dropped"
+    assert sd._read_store(spark, str(store), schema) is None
+    store.mkdir()
+    (store / "part-00000-corrupt.snappy.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        sd._read_store(spark, str(store), schema).collect()
 
 
 def test_streaming_sessionize_equals_batch_minus_open_sessions(spark):
